@@ -206,7 +206,8 @@ def main() -> None:
     # name set.  All 167 queries are still timed and summed into
     # ``value``; the full map lives in the sidecar.  If the fixed set
     # ever outgrows the line, display precision degrades 4->3->2->1
-    # decimals before any name is sacrificed (sidecar keeps 4).
+    # decimals before any name is sacrificed (sidecar keeps 4); a line
+    # still too long at 1 decimal fails the run rather than be cut.
     def payload_for(line_queries: dict[str, float]) -> dict:
         return {
             "metric": "total_query_sec",
@@ -222,10 +223,17 @@ def main() -> None:
 
     shown = [n for n in DISPLAY_QUERIES if n in timings]
     for decimals in (4, 3, 2, 1):
-        line_queries = {n: round(timings[n], decimals) for n in shown}
-        if len(json.dumps(payload_for(line_queries))) <= 1900:
+        line = json.dumps(
+            payload_for({n: round(timings[n], decimals) for n in shown})
+        )
+        if len(line) <= 1900:
             break
-    print(json.dumps(payload_for(line_queries)))
+    else:
+        raise SystemExit(
+            f"bench stdout line is {len(line)} chars at 1 decimal "
+            "(limit 1900)"
+        )
+    print(line)
     spark.stop()
 
 

@@ -60,6 +60,7 @@ import hashlib
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 from pyspark.sql.utils import AnalysisException
 
 from financial_data_ingestion_pipeline_spark.functions.vectorized import (
@@ -88,14 +89,6 @@ def _lit_vec(values: list[float]) -> Column:
     """Literal array<double> built from ONE parsed expression string —
     ~1000x fewer py4j round-trips than ``F.array(*map(F.lit, ...))``."""
     return F.expr("array(" + ",".join(_sql_double(v) for v in values) + ")")
-
-
-def _lit_matrix(rows: list[list[float]]) -> Column:
-    """Literal array<array<double>> from one parsed expression string."""
-    inner = (
-        "array(" + ",".join(_sql_double(v) for v in row) + ")" for row in rows
-    )
-    return F.expr("array(" + ",".join(inner) + ")")
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -538,19 +531,6 @@ def _nearest_cell(
     return F.array_max(_scored_cells(vec_col, centroids, sq_col))["cell"]
 
 
-def _probe_cells(
-    vec_col: Column,
-    centroids: list[list[float]],
-    n_probe: int,
-    sq_col: Column | None = None,
-) -> Column:
-    """Array of the ``n_probe`` highest-cosine centroid indices
-    (score desc, cell desc — matches :func:`_nearest_cell` ties)."""
-    scored = _scored_cells(vec_col, centroids, sq_col)
-    top = F.slice(F.reverse(F.array_sort(scored)), 1, n_probe)
-    return F.transform(top, lambda x: x["cell"])
-
-
 def ivf_cells_auto(n: int, floor: int = DEFAULT_N_CELLS) -> int:
     """Auto-size the IVF cell count to the corpus: the power-of-two
     ~sqrt(n/2) ladder (min ``floor``) — the cells-∝-sqrt(n)
@@ -902,6 +882,18 @@ def lsh_auto_bits(
     return b
 
 
+def _require_integral_ids(df: DataFrame, id_col: str) -> None:
+    """Driver-side check that ``id_col`` is integral: the block kernel
+    reads ids as an int64 vector, so anything else would otherwise
+    fail only inside an executor, after jobs have run."""
+    dtype = df.schema[id_col].dataType
+    if not isinstance(dtype, IntegralType):
+        raise ValueError(
+            f"id column {id_col!r} must be an integral type, "
+            f"got {dtype.simpleString()}"
+        )
+
+
 def _exact_block_pairs(
     embeddings: DataFrame,
     threshold: float,
@@ -935,6 +927,9 @@ def _exact_block_pairs(
     ``n x dim`` float64 matrix plus a ``row_chunk x n`` dot tile —
     size cells/blocks so that fits a task (the same contract every
     IVF-blocked operator here has).
+
+    ``id_col`` must be integral; public callers check it with
+    :func:`_require_integral_ids` before running any job.
     """
     from .vectorized import np_seq_sqnorm
 
@@ -1040,6 +1035,8 @@ def embedding_near_duplicates(
     (memoized via :func:`...session.cached_count`: repeated calls over
     the same session-pinned table size the ladder without re-counting).
     """
+    if block_col or not exact:  # both paths run the block kernel
+        _require_integral_ids(embeddings, id_col)
     if auto_bits and not exact:
         from financial_data_ingestion_pipeline_spark.session import cached_count
 
@@ -1377,6 +1374,7 @@ def semantic_dedup(
     Output: the surviving rows — ``id, cell`` (+ a ``kept_of`` count
     of how many duplicates the survivor absorbed, 0 for singletons).
     """
+    _require_integral_ids(embeddings, id_col)
     if isinstance(centroids, str):
         if centroids != "auto":
             raise ValueError(f"centroids: list or 'auto', got {centroids!r}")

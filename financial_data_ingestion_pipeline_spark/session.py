@@ -22,38 +22,6 @@ import zipfile
 
 from pyspark.sql import SparkSession
 
-_VENDOR_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "vendor"
-)
-
-
-def _ensure_protobuf_on_path() -> None:
-    """Make ``google.protobuf`` importable for driver AND python workers.
-
-    ``transformWithStateInPandas`` serializes its worker/state protocol
-    over protobuf.  Where the environment lacks the package, fall back
-    to the repo-vendored pure-python runtime (``vendor/google/``, BSD
-    licensed, see vendor/README.md).  PYTHONPATH must be extended
-    BEFORE the JVM spawns python workers — they inherit the driver
-    process env, not the driver's ``sys.path``.
-    """
-    import sys
-
-    try:
-        import google.protobuf  # noqa: F401
-        return
-    except ImportError:
-        pass
-    if not os.path.isdir(os.path.join(_VENDOR_DIR, "google")):
-        return  # vendor tree absent: TWS users see the stock ImportError
-    if _VENDOR_DIR not in sys.path:
-        sys.path.insert(0, _VENDOR_DIR)
-    existing = os.environ.get("PYTHONPATH", "")
-    if _VENDOR_DIR not in existing.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            _VENDOR_DIR + (os.pathsep + existing if existing else "")
-        )
-
 
 ENGINE_CONF: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
@@ -88,7 +56,6 @@ def get_spark(
     coalesces downward at runtime, so on a big cluster pass a large
     value (e.g. 2-3x total cores) and let AQE trim.
     """
-    _ensure_protobuf_on_path()
     builder = SparkSession.builder.appName(app_name)
     if master:
         builder = builder.master(master)

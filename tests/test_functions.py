@@ -152,6 +152,32 @@ def test_embedding_neardup_lsh_matches_candidate_join_reference(emb):
     assert got == expected
 
 
+def test_block_kernel_rejects_non_integral_ids_before_any_job(spark, emb):
+    """Every path into the block-local kernel (LSH, exact+block,
+    semantic_dedup) rejects a non-integral id column on the driver at
+    call time, naming the column and type, before any job runs."""
+    str_ids = emb.withColumn("vec_id", F.col("vec_id").cast("string"))
+    calls = (
+        lambda: similarity.embedding_near_duplicates(str_ids, 0.9),
+        lambda: similarity.embedding_near_duplicates(
+            str_ids, 0.9, auto_bits=True
+        ),
+        lambda: similarity.embedding_near_duplicates(
+            str_ids, 0.9, exact=True, block_col="label"
+        ),
+        lambda: similarity.semantic_dedup(str_ids, "auto"),
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("non_integral_ids", "must run no job")
+    try:
+        for call in calls:
+            with pytest.raises(ValueError, match="'vec_id'.*string"):
+                call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("non_integral_ids") == []
+
+
 def test_minhash_finds_injected_duplicates(spark, docs):
     # copy 5 docs under new ids: near-dup pairs (jaccard 1.0) must surface
     copies = docs.filter(F.col("doc_id") < 5).withColumn(

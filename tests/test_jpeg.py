@@ -18,7 +18,6 @@ import pytest
 # slow tier (round 12): pure-python DCT roundtrips + a 90 s RSS-budget
 # decode — run with `-m slow`
 pytestmark = pytest.mark.slow
-import pytest
 
 from financial_data_ingestion_pipeline_spark.functions import jpeg_codec as J
 

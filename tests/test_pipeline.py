@@ -965,6 +965,20 @@ def test_ensure_runtime_conf_idempotent_and_effective(spark):
     assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
 
 
+def test_get_spark_leaves_import_paths_alone(spark):
+    """Building the session must not put a repo ``vendor`` directory on
+    the driver's ``sys.path`` or on the ``PYTHONPATH`` that every
+    Python worker inherits."""
+    import sys
+
+    vendor = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "vendor"
+    )
+    pythonpath = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    assert vendor not in sys.path
+    assert vendor not in pythonpath
+
+
 class TestSpanPipelineWiring:
     # slow tier: full corpus build with the span stage on (~180 s)
     @pytest.mark.slow

@@ -3,7 +3,6 @@ bounded-state dedup, driven with availableNow one-shot triggers."""
 
 from __future__ import annotations
 
-import datetime as dt
 import os
 
 import pytest
@@ -22,26 +21,7 @@ from financial_data_ingestion_pipeline_spark.streaming.ohlc_stream import (
     stream_ticks,
     streaming_sessions,
 )
-
-
-def _tick(sym: str, ts: str, price: float):
-    t = dt.datetime.fromisoformat(ts)
-    return (sym, t, price, 5.0, 1000.0, price - 0.5, 10.0, price + 0.5, 12.0)
-
-
-@pytest.fixture(scope="module")
-def landing(spark, tmp_path_factory):
-    """Warehouse-schema parquet landing dir with duplicate ticks."""
-    root = tmp_path_factory.mktemp("stream_landing")
-    rows = []
-    for sym, base in (("ALPHA", 100.0), ("BETA", 50.0)):
-        for h in (9, 10):
-            for i in range(6):
-                rows.append(_tick(sym, f"2022-04-04 {h:02d}:{i*7:02d}:00", base + h + i))
-    dup = _tick("ALPHA", "2022-04-04 09:00:00", 109.0)  # exact key duplicate
-    df = spark.createDataFrame(rows + [dup, dup], schema=WAREHOUSE_SCHEMA)
-    df.coalesce(2).write.mode("overwrite").parquet(str(root))
-    return str(root)
+from tests.conftest import tick
 
 
 def test_streaming_ohlc_matches_batch(spark, landing, tmp_path_factory):
@@ -102,7 +82,7 @@ def test_multi_batch_backfill_keeps_all_windows(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("multibatch_landing")
     for h in (9, 10):
         rows = [
-            _tick(sym, f"2022-04-04 {h:02d}:{i*7:02d}:00", base + h + i)
+            tick(sym, f"2022-04-04 {h:02d}:{i*7:02d}:00", base + h + i)
             for sym, base in (("ALPHA", 100.0), ("BETA", 50.0))
             for i in range(6)
         ]
@@ -142,15 +122,15 @@ def test_streaming_sessions_match_batch(spark, tmp_path_factory):
 
     root = tmp_path_factory.mktemp("sess_landing")
     rows = [
-        _tick("ALPHA", "2022-04-04 09:00:00", 100.0),
-        _tick("ALPHA", "2022-04-04 09:05:00", 101.0),
-        _tick("ALPHA", "2022-04-04 09:10:00", 102.0),
-        _tick("ALPHA", "2022-04-04 11:00:00", 110.0),
-        _tick("BETA", "2022-04-04 09:30:00", 50.0),
+        tick("ALPHA", "2022-04-04 09:00:00", 100.0),
+        tick("ALPHA", "2022-04-04 09:05:00", 101.0),
+        tick("ALPHA", "2022-04-04 09:10:00", 102.0),
+        tick("ALPHA", "2022-04-04 11:00:00", 110.0),
+        tick("BETA", "2022-04-04 09:30:00", 50.0),
         # far-future flush: advances the watermark past both real
         # sessions so append mode finalizes them
-        _tick("ALPHA", "2022-04-04 23:00:00", 1.0),
-        _tick("BETA", "2022-04-04 23:00:00", 1.0),
+        tick("ALPHA", "2022-04-04 23:00:00", 1.0),
+        tick("BETA", "2022-04-04 23:00:00", 1.0),
     ]
     df = spark.createDataFrame(rows, schema=WAREHOUSE_SCHEMA)
     df.coalesce(1).write.mode("overwrite").parquet(str(root))
@@ -182,28 +162,6 @@ def test_streaming_sessions_match_batch(spark, tmp_path_factory):
     assert len(streamed) == 3  # ALPHA morning, ALPHA 11:00, BETA 09:30
 
 
-def test_streaming_dedup_then_ohlc(spark, landing, tmp_path_factory):
-    """Chained stateful operators: dedup feeding the windowed aggregate."""
-    out = tmp_path_factory.mktemp("chain_out")
-    run_ohlc_stream_once(
-        spark,
-        landing,
-        os.path.join(str(out), "ohlc"),
-        os.path.join(str(out), "ckpt"),
-        freq="hour",
-        watermark="1 minute",
-        schema=WAREHOUSE_SCHEMA,
-        dedup=True,
-    )
-    streamed = spark.read.parquet(os.path.join(str(out), "ohlc"))
-    rows = {(r.symbol, str(r.bucket_start)): r for r in streamed.collect()}
-    assert len(rows) == 4
-    # the duplicated 09:00 ALPHA tick counts once
-    alpha9 = rows[("ALPHA", "2022-04-04 09:00:00")]
-    assert alpha9.n_ticks == 6
-    assert alpha9.open == 109.0 and alpha9.close == 114.0
-
-
 def test_streaming_hist_sketch_matches_batch(spark, tmp_path_factory):
     """The streaming histogram's finalized quantiles equal the batch
     sketch over the same closed windows, and streaming state is
@@ -221,11 +179,11 @@ def test_streaming_hist_sketch_matches_batch(spark, tmp_path_factory):
     for sym in ("ALPHA", "BETA"):
         for i in range(200):
             rows.append(
-                _tick(sym, f"2022-04-04 09:{i % 60:02d}:{i % 50:02d}", float((i * 13) % 100))
+                tick(sym, f"2022-04-04 09:{i % 60:02d}:{i % 50:02d}", float((i * 13) % 100))
             )
     # watermark flush row far in the future closes the 09:00 window
-    rows.append(_tick("ALPHA", "2022-04-04 23:00:00", 1.0))
-    rows.append(_tick("BETA", "2022-04-04 23:00:00", 1.0))
+    rows.append(tick("ALPHA", "2022-04-04 23:00:00", 1.0))
+    rows.append(tick("BETA", "2022-04-04 23:00:00", 1.0))
     df = spark.createDataFrame(rows, schema=WAREHOUSE_SCHEMA)
     df.coalesce(1).write.mode("overwrite").parquet(str(root))
 
@@ -519,8 +477,8 @@ def test_streaming_countmin_matches_batch(spark, tmp_path_factory):
     # zipf-ish symbol stream inside the 09:00 window
     for i in range(300):
         sym = f"SYM{i % (1 + i % 7)}"
-        rows.append(_tick(sym, f"2022-04-04 09:{i % 60:02d}:{i % 50:02d}", 1.0))
-    rows.append(_tick("FLUSH", "2022-04-04 23:00:00", 1.0))  # closes 09:00
+        rows.append(tick(sym, f"2022-04-04 09:{i % 60:02d}:{i % 50:02d}", 1.0))
+    rows.append(tick("FLUSH", "2022-04-04 23:00:00", 1.0))  # closes 09:00
     df = spark.createDataFrame(rows, schema=WAREHOUSE_SCHEMA)
     df.coalesce(1).write.mode("overwrite").parquet(str(root))
 
@@ -616,8 +574,8 @@ def test_streaming_bloom_matches_batch(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("bloom_landing")
     rows = []
     for i in range(200):
-        rows.append(_tick(f"SYM{i % 23}", f"2022-04-04 09:{i % 60:02d}:00", 1.0))
-    rows.append(_tick("FLUSH", "2022-04-04 23:00:00", 1.0))
+        rows.append(tick(f"SYM{i % 23}", f"2022-04-04 09:{i % 60:02d}:00", 1.0))
+    rows.append(tick("FLUSH", "2022-04-04 23:00:00", 1.0))
     df = spark.createDataFrame(rows, schema=WAREHOUSE_SCHEMA)
     df.coalesce(1).write.mode("overwrite").parquet(str(root))
 
@@ -659,7 +617,7 @@ def test_snapshot_stream_commits_atomically(spark, tmp_path_factory):
 
     root = tmp_path_factory.mktemp("snap_landing")
     rows = [
-        _tick(f"S{i % 3}", f"2022-04-04 09:{i % 60:02d}:00", 100.0 + i)
+        tick(f"S{i % 3}", f"2022-04-04 09:{i % 60:02d}:00", 100.0 + i)
         for i in range(30)
     ]
     df = spark.createDataFrame(rows, schema=WAREHOUSE_SCHEMA)
@@ -695,7 +653,7 @@ def test_snapshot_stream_restart_is_exactly_once(spark, tmp_path_factory):
 
     root = tmp_path_factory.mktemp("snap2_landing")
     df1 = spark.createDataFrame(
-        [_tick("A", "2022-04-04 09:00:00", 1.0)], schema=WAREHOUSE_SCHEMA
+        [tick("A", "2022-04-04 09:00:00", 1.0)], schema=WAREHOUSE_SCHEMA
     )
     df1.coalesce(1).write.mode("overwrite").parquet(str(root))
     out = tmp_path_factory.mktemp("snap2_out")
@@ -711,7 +669,7 @@ def test_snapshot_stream_restart_is_exactly_once(spark, tmp_path_factory):
     assert warehouse.read_snapshot(spark, t).count() == 1
 
     df2 = spark.createDataFrame(
-        [_tick("B", "2022-04-04 10:00:00", 2.0)], schema=WAREHOUSE_SCHEMA
+        [tick("B", "2022-04-04 10:00:00", 2.0)], schema=WAREHOUSE_SCHEMA
     )
     df2.coalesce(1).write.mode("append").parquet(str(root))
     q = write_snapshot_stream(
@@ -745,7 +703,7 @@ def test_stream_ingest_plus_incremental_mv(spark, tmp_path_factory):
         warehouse.maintain_ohlc_mv(spark, t, mv)
 
     rows1 = [
-        _tick("A", f"2022-04-04 09:{i:02d}:00", 100.0 + i) for i in range(10)
+        tick("A", f"2022-04-04 09:{i:02d}:00", 100.0 + i) for i in range(10)
     ]
     spark.createDataFrame(rows1, schema=WAREHOUSE_SCHEMA).coalesce(1).write.mode(
         "overwrite"
@@ -753,7 +711,7 @@ def test_stream_ingest_plus_incremental_mv(spark, tmp_path_factory):
     drain()
     # late batch extends the same hour (merge must fix open/close)
     rows2 = [
-        _tick("A", f"2022-04-04 09:{i:02d}:30", 50.0 + i) for i in range(10)
+        tick("A", f"2022-04-04 09:{i:02d}:30", 50.0 + i) for i in range(10)
     ]
     spark.createDataFrame(rows2, schema=WAREHOUSE_SCHEMA).coalesce(1).write.mode(
         "append"
@@ -891,166 +849,6 @@ def test_streaming_upsert_merges_into_snapshot_table(spark, tmp_path_factory):
     final = warehouse._load_manifest(t, None)
     # the low-range seed directory was never rewritten
     assert seeded["data_dirs"][0] in final["data_dirs"]
-
-
-def test_transform_with_state_running_extremes(spark, tmp_path_factory):
-    """Spark 4 transformWithStateInPandas (RocksDB state store):
-    per-key running min/max/count must equal the batch aggregate over
-    all processed data after a forced multi-micro-batch run."""
-    # The TWS worker protocol serializes state over protobuf; where the
-    # environment lacks it, session.get_spark falls back to the
-    # repo-vendored pure-python runtime (vendor/README.md), so this
-    # test runs everywhere — no skip.
-    import google.protobuf  # noqa: F401
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from financial_data_ingestion_pipeline_spark.streaming.tws_stats import (
-        running_extremes,
-    )
-
-    base = dt.datetime(2024, 5, 1, 9, 0, 0)
-    rows = [
-        (sym, base + dt.timedelta(seconds=i), float((i * 13 + j * 7) % 50))
-        for j, sym in enumerate(("AA", "BB"))
-        for i in range(30)
-    ]
-    schema = "event_type string, ts timestamp, value double"
-    land = tmp_path_factory.mktemp("tws_landing")
-    for lo, hi in ((0, 10), (10, 20), (20, 30)):
-        chunk = [r for r in rows if lo <= (r[1] - base).seconds < hi]
-        spark.createDataFrame(chunk, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(land))
-
-    out = tmp_path_factory.mktemp("tws_out")
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        src = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(land))
-        )
-        q = (
-            running_extremes(src)
-            .writeStream.format("parquet")
-            .option("path", os.path.join(str(out), "data"))
-            .option("checkpointLocation", os.path.join(str(out), "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-
-    emitted = spark.read.parquet(os.path.join(str(out), "data"))
-    # one row per key per micro-batch; the LAST (max n_ticks) row per
-    # key must equal the batch aggregate over everything
-    final = {
-        r.symbol: (r.run_min, r.run_max, r.n_ticks)
-        for r in emitted.orderBy("n_ticks").collect()
-    }
-    want = {
-        r.event_type: (r.mn, r.mx, r.n)
-        for r in spark.createDataFrame(rows, schema)
-        .groupBy("event_type")
-        .agg(
-            F.min("value").alias("mn"),
-            F.max("value").alias("mx"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .collect()
-    }
-    assert final == want
-    assert emitted.count() == 6  # 2 keys x 3 micro-batches
-
-
-def test_pattern_alerts_matches_batch(spark, tmp_path_factory):
-    """Streaming CEP-with-negation emits exactly the batch
-    pattern_match pairs across multiple micro-batches, and event-time
-    timeouts free expired state without emitting."""
-    import datetime as dt
-
-    from financial_data_ingestion_pipeline_spark.operators.analytics import (
-        pattern_match,
-    )
-    from financial_data_ingestion_pipeline_spark.streaming.stateful import (
-        pattern_alerts,
-    )
-
-    t = lambda h, m, s=0: dt.datetime(2024, 1, 1, h, m, s)  # noqa: E731
-    schema = "event_id long, user_id long, ts timestamp, kind string"
-    rows_b1 = [
-        (1, 1, t(9, 0), "click"),
-        (2, 1, t(9, 10), "purchase"),     # match (600 s)
-        (3, 2, t(9, 0), "click"),
-        (4, 2, t(9, 5), "error"),
-    ]
-    rows_b2 = [
-        (5, 2, t(9, 10), "purchase"),     # blocked by the error
-        (6, 3, t(9, 0), "click"),
-        (7, 1, t(9, 20), "purchase"),     # second match off the same click
-        (8, 99, t(11, 0), "click"),       # watermark carrier
-    ]
-    rows_b3 = [
-        (9, 3, t(12, 0), "purchase"),     # outside gap (state timed out)
-        (10, 99, t(13, 0), "click"),      # watermark carrier
-    ]
-    root = tmp_path_factory.mktemp("cep_landing")
-    for rows in (rows_b1, rows_b2, rows_b3):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(root))
-
-    out = tmp_path_factory.mktemp("cep_out")
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(root))
-        .withWatermark("ts", "10 minutes")
-    )
-    q = (
-        pattern_alerts(src, first="click", second="purchase",
-                       without="error", gap_seconds=3600)
-        .writeStream.format("parquet")
-        .option("path", os.path.join(str(out), "data"))
-        .option("checkpointLocation", os.path.join(str(out), "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    streamed = {
-        (r.user_id, str(r.first_ts), str(r.second_ts), r.wait_seconds)
-        for r in spark.read.parquet(os.path.join(str(out), "data")).collect()
-    }
-
-    batch_df = spark.createDataFrame(
-        rows_b1 + rows_b2 + rows_b3, schema
-    ).withColumnRenamed("kind", "event_type")
-    batch = {
-        (r.user_id, str(r.first_ts), str(r.second_ts), r.wait_seconds)
-        for r in pattern_match(
-            batch_df, first="click", second="purchase",
-            without="error", gap="1 hour",
-        ).collect()
-    }
-    assert streamed == batch
-    assert len(streamed) == 2  # user 1 twice; user 2 blocked; user 3 expired
 
 
 def test_streaming_drift_matches_batch(spark, sf_dir, tmp_path_factory):
