@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .text import hash64, tokens, word_ngrams
+from ..operators.warehouse import write_batch_partition
 from ..session import fan_out
 
 DEFAULT_NUM_PERM = 12
@@ -1814,7 +1815,6 @@ def build_span_index(
     min_len: int = 16,
     id_col: str = "doc_id",
     text_col: str = "text",
-    mode: str = "overwrite",
 ) -> None:
     """Materialize the corpus's DISTINCT ExactSubstr anchor hashes —
     the standing index :func:`span_probe_index` semi-joins each ingest
@@ -1838,14 +1838,9 @@ def build_span_index(
     (``streaming/span_stream.py``) lands each micro-batch as its own
     idempotent partition; the batch builder writes batch_id=0.
     """
-    (
-        _span_anchors(corpus, min_len, id_col, text_col)
-        .select("h")
-        .distinct()
-        .withColumn("batch_id", F.lit(0).cast("long"))
-        .write.mode(mode)
-        .partitionBy("batch_id")
-        .parquet(f"{path}/anchors")
+    write_batch_partition(
+        _span_anchors(corpus, min_len, id_col, text_col).select("h").distinct(),
+        f"{path}/anchors", 0, rebuild=True,
     )
 
 
@@ -1865,15 +1860,9 @@ def append_to_span_index(
     same layout.  Duplicate hashes ACROSS partitions are harmless
     (the probe is a semi-join); pick ``batch_id`` above the index's
     current max when appending to prior history."""
-    (
-        _span_anchors(batch, min_len, id_col, text_col)
-        .select("h")
-        .distinct()
-        .withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{path}/anchors")
+    write_batch_partition(
+        _span_anchors(batch, min_len, id_col, text_col).select("h").distinct(),
+        f"{path}/anchors", batch_id,
     )
 
 
@@ -2028,7 +2017,6 @@ def build_overlap_index(
     n: int = SHINGLE_N,
     text_col: str = "text",
     source_col: str = "source",
-    mode: str = "overwrite",
 ) -> None:
     """Materialize the per-source distinct shingle sets that
     :func:`source_overlap` derives on the fly, so a daily-ingest user
@@ -2041,12 +2029,9 @@ def build_overlap_index(
 
     Layout: ``{path}/postings`` parquet ``(src, gram, batch_id)``.
     """
-    (
-        _source_posting(corpus, n, text_col, source_col)
-        .withColumn("batch_id", F.lit(0).cast("long"))
-        .write.mode(mode)
-        .partitionBy("batch_id")
-        .parquet(f"{path}/postings")
+    write_batch_partition(
+        _source_posting(corpus, n, text_col, source_col),
+        f"{path}/postings", 0, rebuild=True,
     )
 
 
@@ -2063,13 +2048,9 @@ def append_to_overlap_index(
     :func:`build_overlap_index` layout (dynamic partition overwrite: a
     replay rewrites only its own partition, so at-least-once delivery
     never inflates set sizes beyond the read-time re-distinct)."""
-    (
-        _source_posting(batch, n, text_col, source_col)
-        .withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{path}/postings")
+    write_batch_partition(
+        _source_posting(batch, n, text_col, source_col),
+        f"{path}/postings", batch_id,
     )
 
 
@@ -2107,12 +2088,7 @@ def _compact_posting_table(
     df = spark.read.parquet(f"{src_path}/{subdir}").select(*cols)
     if distinct:
         df = df.distinct()
-    (
-        df.withColumn("batch_id", F.lit(0).cast("long"))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(f"{dst_path}/{subdir}")
-    )
+    write_batch_partition(df, f"{dst_path}/{subdir}", 0, rebuild=True)
 
 
 def compact_span_index(spark, src_path: str, dst_path: str) -> None:

@@ -13,6 +13,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.warehouse import write_batch_partition
+
 #: Tiny function-word profiles for the language-ID heuristic.  The
 #: point is a deterministic, vectorizable n-gram/stopword scorer with
 #: the shape of a real LID pass (fastText/CLD-style), not linguistic
@@ -1367,7 +1369,6 @@ def build_winnow_index(
     w: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    mode: str = "overwrite",
 ) -> None:
     """Materialize the corpus-side winnow posting table that
     :func:`winnow_overlap_pairs` derives on the fly — the MOSS member
@@ -1389,19 +1390,41 @@ def build_winnow_index(
     from the postings instead would disagree at cap boundaries
     whenever the corpus contains fingerprint-less docs.
     """
-    (
-        _winnow_posting(corpus, k, w, id_col, text_col)
-        .withColumn("batch_id", F.lit(0).cast("long"))
-        .write.mode(mode)
-        .partitionBy("batch_id")
-        .parquet(f"{path}/fingerprints")
+    _write_winnow_partition(corpus, path, 0, k, w, id_col, text_col, True)
+
+
+def append_to_winnow_index(
+    batch: DataFrame,
+    path: str,
+    batch_id: int,
+    k: int = 5,
+    w: int = 8,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> None:
+    """Land one ingest batch's posting rows and document count as its
+    own idempotent ``batch_id`` partition of a
+    :func:`build_winnow_index` layout (dynamic partition overwrite: a
+    replay rewrites only its own partition, so posting rows never
+    duplicate — duplicates would inflate every pair's ``n_shared`` and
+    the probe cap's df counts).  The batch-mode sibling of the
+    streaming maintainer (``streaming/winnow_stream.py``)."""
+    _write_winnow_partition(batch, path, batch_id, k, w, id_col, text_col)
+
+
+def _write_winnow_partition(
+    docs: DataFrame, path: str, batch_id: int, k: int, w: int,
+    id_col: str, text_col: str, rebuild: bool = False,
+) -> None:
+    """Both halves of one winnow index partition, in lockstep: the
+    posting rows and the meta doc count (see :func:`build_winnow_index`)."""
+    write_batch_partition(
+        _winnow_posting(docs, k, w, id_col, text_col),
+        f"{path}/fingerprints", batch_id, rebuild,
     )
-    (
-        corpus.select(F.count(F.lit(1)).alias("n_docs"))
-        .withColumn("batch_id", F.lit(0).cast("long"))
-        .write.mode(mode)
-        .partitionBy("batch_id")
-        .parquet(f"{path}/meta")
+    write_batch_partition(
+        docs.select(F.count(F.lit(1)).alias("n_docs")),
+        f"{path}/meta", batch_id, rebuild,
     )
 
 
@@ -2695,12 +2718,9 @@ def compact_winnow_index(spark, src_path: str, dst_path: str) -> None:
         spark, src_path, dst_path, "fingerprints", ("doc", "fp"),
         "compact_winnow_index", distinct=False,
     )
-    (
+    write_batch_partition(
         spark.read.parquet(f"{src_path}/meta")
         .select(F.sum("n_docs").cast("long").alias("n_docs"))
-        .withColumn("batch_id", F.lit(0).cast("long"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(f"{dst_path}/meta")
+        .coalesce(1),
+        f"{dst_path}/meta", 0, rebuild=True,
     )

@@ -21,7 +21,6 @@ shows up as a ``Scan ExistingRDD`` leaf (no exchanges/scans below it).
 """
 from __future__ import annotations
 
-import os
 import re
 from contextlib import contextmanager
 from typing import Iterator
@@ -38,8 +37,7 @@ def pin(df: DataFrame, eager: bool = True, mode: str = "ckpt") -> DataFrame:
     ``persist(DISK_ONLY)`` (+ a count when ``eager``): lineage KEPT, so
     a lost partition recomputes instead of failing the query, and the
     subtree stays visible to the plan-budget audit; the cost is plan
-    growth proportional to loop depth.  ``FDIP_LOOP_MAT`` overrides the
-    call-site default for A/B runs.
+    growth proportional to loop depth.
 
     Round-7 A/B — fresh sessions per variant, 3 reps with caches
     cleared between reps, two alternating session pairs (an
@@ -71,7 +69,6 @@ def pin(df: DataFrame, eager: bool = True, mode: str = "ckpt") -> DataFrame:
     ``session.register_persisted`` so long-lived sessions evict at job
     boundaries (safe: lineage is kept).
     """
-    mode = os.environ.get("FDIP_LOOP_MAT", mode)
     if mode == "persist":  # noqa: SIM108 - branch bodies differ below
         from pyspark import StorageLevel
 
@@ -106,14 +103,7 @@ class Pinned:
     def __init__(self, df: DataFrame, eager: bool = True,
                  mode: str = "ckpt") -> None:
         self._spark = df.sparkSession
-        # the EFFECTIVE mode is what pin() will actually do — the
-        # FDIP_LOOP_MAT env override applies inside pin(), so basing
-        # the block-id diff on the requested mode would leak the
-        # checkpoint blocks whenever the override flips persist→ckpt
-        # (release() would see ids=None and fall back to the no-op
-        # DataFrame.unpersist)
-        effective = os.environ.get("FDIP_LOOP_MAT", mode)
-        pre = persistent_rdd_ids(self._spark) if effective == "ckpt" else None
+        pre = persistent_rdd_ids(self._spark) if mode == "ckpt" else None
         self.df = pin(df, eager=eager, mode=mode)
         self.ids = (
             persistent_rdd_ids(self._spark) - pre if pre is not None else None

@@ -26,6 +26,7 @@ SQLAlchemy ``to_sql(if_exists='append')`` (S7, dp:249-250).
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -151,6 +152,56 @@ def compact_partition(
     fs.delete(hpath, True)
     fs.rename(jvm.org.apache.hadoop.fs.Path(tmp_dir), hpath)
     return n_files
+
+
+def is_missing_path(e: AnalysisException) -> bool:
+    """True iff the AnalysisException is the missing-input-path case.
+
+    Matches the structured error class first (``PATH_NOT_FOUND`` since
+    Spark 3.4; ``getCondition`` is the 4.x accessor name, ``getErrorClass``
+    the 3.x one) and falls back to both known message phrasings — the
+    engine-version-specific substring match alone would mis-fail the
+    bootstrap batch on older Sparks that say 'Path does not exist'."""
+    for acc in ("getCondition", "getErrorClass"):
+        try:
+            cond = getattr(e, acc)()
+        except Exception:
+            cond = None
+        if cond:
+            return "PATH_NOT_FOUND" in cond
+    msg = str(e)
+    return "PATH_NOT_FOUND" in msg or "Path does not exist" in msg
+
+
+def write_batch_partition(
+    df: DataFrame, path: str, batch_id: int, rebuild: bool = False
+) -> None:
+    """Land ``df`` as the ``batch_id=N`` partition of a batch-partitioned
+    parquet table — the one layout every incrementally maintained index
+    here shares (span anchors, overlap postings, winnow fingerprints,
+    drift partials, span quarantine).
+
+    By default only this batch's partition is replaced (dynamic
+    partition overwrite, set per write so it never leaks into other
+    writes on the session): a replayed batch rewrites the same files,
+    so at-least-once delivery stays idempotent.  ``rebuild=True`` is
+    the builders' full static overwrite — every existing partition is
+    dropped and ``df`` becomes the whole table.
+
+    Streaming maintainers pass ``partition_base + batch_id``.  Spark
+    restarts batch ids at 0 for a NEW checkpoint, so a fresh stream
+    attached to prior history must raise ``partition_base`` above the
+    table's current max ``batch_id``; otherwise its dynamic overwrites
+    replace the old stream's partitions.  The default base of 1 keeps
+    streamed batches clear of the builders' ``batch_id=0``.
+    """
+    (
+        df.withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "static" if rebuild else "dynamic")
+        .partitionBy("batch_id")
+        .parquet(path)
+    )
 
 
 def jdbc_append(
@@ -616,15 +667,17 @@ def _ohlc_partial(
     extra state that makes two partials combinable (open follows the
     smaller first_ts, close the larger last_ts, high/low/n are plain
     max/min/sum) — the same algebra Spark's partial aggregation uses
-    internally, lifted to the table level."""
+    internally, lifted to the table level.  Ticks tied on the timestamp
+    are ordered by price inside the ordering key (lowest opens, highest
+    closes), so every merge order picks the same tick."""
     hour = F.date_trunc("hour", F.col(ts_col))
     return rows.groupBy(
         F.col(symbol_col).alias("symbol"), hour.alias("bucket_start")
     ).agg(
-        F.min_by(price_col, ts_col).alias("open"),
+        F.min_by(price_col, F.struct(ts_col, price_col)).alias("open"),
         F.max(price_col).alias("high"),
         F.min(price_col).alias("low"),
-        F.max_by(price_col, ts_col).alias("close"),
+        F.max_by(price_col, F.struct(ts_col, price_col)).alias("close"),
         F.min(ts_col).alias("first_ts"),
         F.max(ts_col).alias("last_ts"),
         F.count(F.lit(1)).alias("n_ticks"),
@@ -635,10 +688,10 @@ def _ohlc_merge(partials: DataFrame) -> DataFrame:
     """Combine OHLC partials per (symbol, bucket): associative, so any
     number of increments merge in any order."""
     return partials.groupBy("symbol", "bucket_start").agg(
-        F.min_by("open", "first_ts").alias("open"),
+        F.min_by("open", F.struct("first_ts", "open")).alias("open"),
         F.max("high").alias("high"),
         F.min("low").alias("low"),
-        F.max_by("close", "last_ts").alias("close"),
+        F.max_by("close", F.struct("last_ts", "close")).alias("close"),
         F.min("first_ts").alias("first_ts"),
         F.max("last_ts").alias("last_ts"),
         F.sum("n_ticks").alias("n_ticks"),

@@ -247,21 +247,10 @@ def run_incremental_ingest(
     #   mid-commit now fail-stops the batch instead — the idempotent
     #   dynamic-overwrite partitions and snapshot versioning make the
     #   rerun safe (the same fail-stop-over-silent-corruption trade as
-    #   the streaming merge sinks, ohlc_stream.py).
+    #   the streaming keyed-merge sink, streaming/sink.py).
     survivors = gated.join(
         flags.filter(F.col("keep")).select(id_col), id_col, "left_semi"
     )
-    # Pinned captures the checkpoint's RDD block ids so the batch
-    # boundary can actually free them — DataFrame.unpersist is a
-    # no-op on checkpointed frames, and without an explicit
-    # release the blocks accumulate per batch in a long-lived
-    # daily-ingest session until the ContextCleaner gets around
-    # to them.  BOTH branches go through Pinned (not bare pin):
-    # Pinned resolves the FDIP_LOOP_MAT override itself, so
-    # release() frees the right handle even when the env flips a
-    # persist call-site to ckpt (a bare persist-branch pin would
-    # silently become a checkpoint whose unpersist is a no-op —
-    # exactly the per-batch block leak this path exists to prevent).
     survivors_pin = Pinned(
         survivors, mode="ckpt" if span_index_dir is not None else "persist"
     )
@@ -317,7 +306,7 @@ def _span_contamination_probe_and_cut(
 
     from ..functions.dedup import cut_spans, span_probe_index
     from ..materialize import pin
-    from ..streaming.span_stream import _is_missing_path
+    from ..operators.warehouse import is_missing_path, write_batch_partition
 
     try:
         existing_max = (
@@ -326,7 +315,7 @@ def _span_contamination_probe_and_cut(
             .first()[0]
         )
     except AnalysisException as e:
-        if not _is_missing_path(e):
+        if not is_missing_path(e):
             raise
         existing_max = None
     batch_id = 0 if existing_max is None else int(existing_max) + 1
@@ -346,13 +335,7 @@ def _span_contamination_probe_and_cut(
         mode="persist",
     )
     counts["span_contaminated_docs"] = spans.select(id_col).distinct().count()
-    (
-        spans.withColumn("batch_id", F.lit(batch_id).cast("long"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{span_index_dir}/quarantine")
-    )
+    write_batch_partition(spans, f"{span_index_dir}/quarantine", batch_id)
     cols = gated.columns
     cut = cut_spans(gated, spans, id_col=id_col, text_col=text_col)
     gated = (

@@ -32,13 +32,18 @@ from financial_data_ingestion_pipeline_spark.functions.similarity import (
     drift_metrics,
     drift_partial_stats,
 )
+from financial_data_ingestion_pipeline_spark.operators.warehouse import (
+    write_batch_partition,
+)
+from financial_data_ingestion_pipeline_spark.streaming.sink import (
+    start_batch_sink,
+)
 
 
 def maintain_drift_partials(
     embedding_stream: DataFrame,
     out_path: str,
     checkpoint: str,
-    available_now: bool = True,
     **drift_kwargs,
 ) -> StreamingQuery:
     """Maintain per-batch drift partials from a streaming embeddings
@@ -46,26 +51,12 @@ def maintain_drift_partials(
     :func:`similarity.drift_partial_stats` (splits, grid, seed)."""
 
     def write_partial(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        (
-            drift_partial_stats(batch, **drift_kwargs)
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path)
+        write_batch_partition(
+            drift_partial_stats(batch, **drift_kwargs).coalesce(1),
+            out_path, batch_id,
         )
 
-    writer = (
-        embedding_stream.writeStream.foreachBatch(write_partial)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batch_sink(embedding_stream, write_partial, checkpoint)
 
 
 def drift_report(spark: SparkSession, partials_path: str) -> DataFrame:

@@ -30,6 +30,9 @@ from pyspark.sql.streaming import StreamingQuery
 from financial_data_ingestion_pipeline_spark.functions.vectorized import (
     pq_encode_local,
 )
+from financial_data_ingestion_pipeline_spark.streaming.sink import (
+    start_batch_sink,
+)
 
 
 def maintain_pq_index(
@@ -40,7 +43,6 @@ def maintain_pq_index(
     codebooks: list[list[list[float]]] | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Encode each micro-batch with the frozen quantizer/codebooks and
     land it in the PQ index under an idempotent batch partition."""
@@ -61,8 +63,6 @@ def maintain_pq_index(
     )
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         (
             batch.select(id_col, vec_col)
             .mapInPandas(encode, "vec_id long, cell int, code long")
@@ -74,11 +74,4 @@ def maintain_pq_index(
             .parquet(out_path)
         )
 
-    writer = (
-        embedding_stream.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batch_sink(embedding_stream, write_batch, checkpoint)

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..operators import warehouse
+from .sink import start_batch_sink
 
 
 def upsert_stream(
@@ -56,8 +57,6 @@ def upsert_stream(
     ]
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         if value_cols:
             latest = (
@@ -76,10 +75,4 @@ def upsert_stream(
                 latest, table_dir, stats_col=stats_col or key_cols[0]
             )
 
-    return (
-        updates.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_sink(updates, _merge, checkpoint_dir)

@@ -19,23 +19,23 @@ Design for scale:
 - **Dedup is ``dropDuplicatesWithinWatermark``** on the natural tick key
   (symbol, timestamp): state expires with the watermark instead of
   growing forever like plain ``dropDuplicates`` would.
-- **The MV is maintained via ``foreachBatch``** overwriting only the
-  date partitions present in each micro-batch
-  (``partitionOverwriteMode=dynamic``) — an incremental materialized
-  view without rewriting history.
+- **The MV is maintained via ``foreachBatch``** as a keyed merge that
+  rewrites only the date partitions present in each micro-batch — an
+  incremental materialized view without rewriting history.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.ohlc import FREQ_MAP, ohlc_aggs
+from ..operators.warehouse import snapshot_commit
 from ..schemas import TICK_CLEAN_SCHEMA, WAREHOUSE_SCHEMA
+from .sink import merge_by_keys, start_batch_sink
 
 
 def stream_ticks(
@@ -168,76 +168,26 @@ def write_ohlc_table(
     ohlc_stream: DataFrame,
     out_path: str,
     checkpoint: str,
-    available_now: bool = True,
     key_cols: Sequence[str] = ("symbol", "bucket_start"),
 ) -> StreamingQuery:
     """Maintain the OHLC table as date-partitioned parquet via a keyed
-    ``foreachBatch`` MERGE: each micro-batch rewrites only the dates it
-    touches, and rows it does NOT update within those dates are carried
-    over (anti-join on ``key_cols`` + union) — so a multi-batch backfill
-    or a scheduled re-run never drops previously-written windows.  A
-    plain dynamic-partition overwrite would: update-mode batches contain
-    only the windows changed in that batch, so overwriting the whole
-    date partition deletes that date's other hours.
-
-    The merged frame is ``localCheckpoint``-ed before the write so its
-    lineage no longer references the files being overwritten.  This is
-    deliberately NOT the ``materialize.pin`` persist default (round-8
-    A/B, fresh alternating sessions, 2M-row base / 100k-row batch
-    merge-then-overwrite: persist 1.32 s vs ckpt 1.60 s median):
-    persist KEEPS lineage into the very files the write truncates, so
-    a cached block lost mid-overwrite on a real cluster would
-    recompute from a half-rewritten path — silent-corruption class —
-    where the checkpoint fail-stops the batch and the streaming
-    checkpoint replays it.  The ~17% per-micro-batch cost buys
-    fail-stop semantics; the risk window (micro-batch write) is also
-    bounded, unlike the loop operators where persist won.  On a
-    transactional table format (Delta/Iceberg) this whole function
-    collapses to ``MERGE INTO`` on ``key_cols`` — swap the body, keep
-    the contract.  ``partitionOverwriteMode`` is set per-write (a
-    session-wide mutation inside foreachBatch would leak into unrelated
-    writes on the shared session).
-
-    ``available_now=True`` drains the backlog then stops — batch-like
-    runs on a schedule; ``False`` runs continuously.
+    ``foreachBatch`` MERGE (:func:`sink.merge_by_keys`): each
+    micro-batch rewrites only the dates it touches, and rows it does
+    NOT update within those dates are carried over — so a multi-batch
+    backfill or a scheduled re-run never drops previously-written
+    windows.  A plain dynamic-partition overwrite would: update-mode
+    batches contain only the windows changed in that batch, so
+    overwriting the whole date partition deletes that date's other
+    hours.
     """
-    keys = list(key_cols)
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        batch = batch.withColumn("trade_date", F.to_date("bucket_start"))
-        merged = batch
-        try:
-            touched = [
-                r.trade_date
-                for r in batch.select("trade_date").distinct().collect()
-            ]
-            existing = spark.read.parquet(out_path).filter(
-                F.col("trade_date").isin(touched)
-            )
-            carried = existing.join(batch.select(*keys), keys, "left_anti")
-            merged = batch.unionByName(carried.select(*batch.columns))
-        except AnalysisException:
-            pass  # first batch: nothing on disk yet
-        (
-            merged.localCheckpoint(eager=True)
-            .repartition("trade_date")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("trade_date")
-            .parquet(out_path)
+        merge_by_keys(
+            batch.withColumn("trade_date", F.to_date("bucket_start")),
+            out_path, key_cols, partition_col="trade_date",
         )
 
-    writer = (
-        ohlc_stream.writeStream.foreachBatch(upsert)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batch_sink(ohlc_stream, upsert, checkpoint)
 
 
 def run_ohlc_stream_once(
@@ -278,7 +228,7 @@ def run_ohlc_stream_once(
         price_col=price_col,
         tie_cols=tie_cols,
     )
-    q = write_ohlc_table(agg, out_path, checkpoint, available_now=True)
+    q = write_ohlc_table(agg, out_path, checkpoint)
     q.awaitTermination()
 
 
@@ -286,8 +236,7 @@ def write_snapshot_stream(
     stream: DataFrame,
     table_dir: str,
     checkpoint: str,
-    available_now: bool = True,
-):
+) -> StreamingQuery:
     """Stream -> snapshot table: every micro-batch lands as ONE atomic
     manifest commit (``warehouse.snapshot_commit``), so downstream
     batch readers always see whole micro-batches — never a partially
@@ -303,19 +252,8 @@ def write_snapshot_stream(
     ``vacuum_snapshots`` reclaims and a batch the restarted query
     simply re-commits.
     """
-    from financial_data_ingestion_pipeline_spark.operators.warehouse import (
-        snapshot_commit,
-    )
 
     def commit(batch: DataFrame, batch_id: int) -> None:
-        if not batch.isEmpty():
-            snapshot_commit(batch, table_dir, mode="append")
+        snapshot_commit(batch, table_dir, mode="append")
 
-    writer = (
-        stream.writeStream.foreachBatch(commit)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batch_sink(stream, commit, checkpoint)

@@ -20,8 +20,11 @@ merge, matrix, decide BEFORE committing to a full cross-dump dedup.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from financial_data_ingestion_pipeline_spark.streaming.sink import (
+    start_batch_sink,
+)
 
 __all__ = ["maintain_overlap_index"]
 
@@ -33,43 +36,22 @@ def maintain_overlap_index(
     n: int = 3,
     text_col: str = "text",
     source_col: str = "source",
-    available_now: bool = True,
     partition_base: int = 1,
 ) -> StreamingQuery:
     """Shingle each micro-batch and land its distinct ``(src, gram)``
-    posting under an idempotent ``batch_id`` partition
-    (layout-compatible with
-    ``functions/dedup.py::build_overlap_index``).  Partition ids are
-    ``partition_base + batch_id``: Spark restarts batch ids at 0 for a
-    NEW checkpoint, so raise ``partition_base`` above the index's
-    current max ``batch_id`` when attaching to prior history (else the
-    new stream's dynamic overwrites would delete the old stream's
-    partitions)."""
+    posting under an idempotent ``batch_id`` partition via
+    ``functions/dedup.py::append_to_overlap_index`` (layout-compatible
+    with ``build_overlap_index``).  Partition ids are
+    ``partition_base + batch_id``; see
+    ``operators.warehouse.write_batch_partition`` for when to raise
+    ``partition_base``."""
     from financial_data_ingestion_pipeline_spark.functions.dedup import (
-        _source_posting,
+        append_to_overlap_index,
     )
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        (
-            _source_posting(batch, n, text_col, source_col)
-            # partition_base offsets past batch_id=0 (the batch
-            # builder's bootstrap) and any prior stream's partitions
-            .withColumn(
-                "batch_id", F.lit(partition_base + batch_id).cast("long")
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{out_path}/postings")
+        append_to_overlap_index(
+            batch, out_path, partition_base + batch_id, n, text_col, source_col
         )
 
-    writer = (
-        doc_stream.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batch_sink(doc_stream, write_batch, checkpoint)

@@ -26,10 +26,13 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.utils import AnalysisException
 
 from financial_data_ingestion_pipeline_spark.streaming.ohlc_stream import (
     _as_event_time,
+)
+from financial_data_ingestion_pipeline_spark.streaming.sink import (
+    merge_by_keys,
+    start_batch_sink,
 )
 
 __all__ = ["streaming_current_state", "write_current_state"]
@@ -69,46 +72,14 @@ def write_current_state(
     out_path: str,
     checkpoint: str,
     key_cols: Sequence[str] = ("event_type", "user_id"),
-    available_now: bool = True,
 ) -> StreamingQuery:
-    """Keyed merge sink for :func:`streaming_current_state`: per
-    micro-batch, rows for updated keys replace their old versions and
-    all untouched keys carry over (anti-join + union), then the table
-    rewrites from a ``localCheckpoint`` so lineage never reads the
-    files being replaced.  The table stays one row per key — its size
-    is key cardinality, not stream length.
-
-    Kept on ``localCheckpoint`` after the round-8 persist A/B (persist
-    1.32 s vs ckpt 1.60 s median on the merge-then-overwrite shape) —
-    see ``ohlc_stream.py``'s maintainer docstring for the full
-    rationale: persist keeps lineage into the files the write
-    truncates, trading ~17% speed for a silent-corruption class on
-    block loss; the checkpoint fail-stops and the streaming checkpoint
-    replays the batch."""
-    keys = list(key_cols)
+    """Keyed merge sink for :func:`streaming_current_state`
+    (:func:`sink.merge_by_keys`): per micro-batch, rows for updated
+    keys replace their old versions and all untouched keys carry over.
+    The table stays one row per key — its size is key cardinality, not
+    stream length."""
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        merged = batch
-        try:
-            existing = spark.read.parquet(out_path)
-            carried = existing.join(batch.select(*keys), keys, "left_anti")
-            merged = batch.unionByName(carried.select(*batch.columns))
-        except AnalysisException:
-            pass  # first batch: nothing on disk yet
-        (
-            merged.localCheckpoint(eager=True)
-            .write.mode("overwrite")
-            .parquet(out_path)
-        )
+        merge_by_keys(batch, out_path, key_cols)
 
-    writer = (
-        cur_stream.writeStream.foreachBatch(upsert)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batch_sink(cur_stream, upsert, checkpoint)

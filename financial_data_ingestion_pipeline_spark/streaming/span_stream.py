@@ -16,7 +16,7 @@ which duplicate build keys are harmless, and deduplicating history on
 every append would turn an O(batch) maintenance step into an O(index)
 one.
 
-Idempotence: a replayed micro-batch dynamic-overwrites ONLY its own
+Idempotence: a replayed micro-batch overwrites ONLY its own
 ``batch_id`` partition, so at-least-once delivery never grows the
 index beyond one partition per batch.  This is the contamination
 guard at ingest: anchor the arrivals in-flight, probe them against
@@ -26,10 +26,18 @@ verbatim), append the keepers.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.utils import AnalysisException
+
+from financial_data_ingestion_pipeline_spark.operators.warehouse import (
+    is_missing_path,
+    write_batch_partition,
+)
+from financial_data_ingestion_pipeline_spark.streaming.sink import (
+    start_batch_sink,
+)
 
 __all__ = [
     "maintain_span_index",
@@ -38,23 +46,34 @@ __all__ = [
 ]
 
 
-def _is_missing_path(e: AnalysisException) -> bool:
-    """True iff the AnalysisException is the missing-input-path case.
+def _probe_or_bootstrap(
+    batch: DataFrame, index_path: str, min_len: int, id_col: str, text_col: str
+) -> DataFrame:
+    """Probe ``batch`` against the standing anchor index.  ONLY a
+    missing index is the clean "no corpus yet" bootstrap (no spans) —
+    any other analysis error (bad columns, schema drift) and every IO
+    error fails the batch loudly, or contamination in it would be
+    silently missed forever."""
+    from financial_data_ingestion_pipeline_spark.functions.dedup import (
+        span_probe_index,
+    )
 
-    Matches the structured error class first (``PATH_NOT_FOUND`` since
-    Spark 3.4; ``getCondition`` is the 4.x accessor name, ``getErrorClass``
-    the 3.x one) and falls back to both known message phrasings — the
-    engine-version-specific substring match alone would mis-fail the
-    bootstrap batch on older Sparks that say 'Path does not exist'."""
-    for acc in ("getCondition", "getErrorClass"):
-        try:
-            cond = getattr(e, acc)()
-        except Exception:
-            cond = None
-        if cond:
-            return "PATH_NOT_FOUND" in cond
-    msg = str(e)
-    return "PATH_NOT_FOUND" in msg or "Path does not exist" in msg
+    spark = batch.sparkSession
+    try:
+        return span_probe_index(
+            batch, spark, index_path,
+            min_len=min_len, id_col=id_col, text_col=text_col,
+        )
+    except AnalysisException as e:
+        if not is_missing_path(e):
+            raise
+    # the id type comes from the BATCH schema so the bootstrap
+    # partition's parquet schema matches later batches' spans (a
+    # hardcoded `long` diverged for string doc ids)
+    id_type = batch.schema[id_col].dataType.simpleString()
+    return spark.createDataFrame(
+        [], f"{id_col} {id_type}, span_start long, span_len long"
+    )
 
 
 def maintain_span_index(
@@ -64,53 +83,27 @@ def maintain_span_index(
     min_len: int = 16,
     id_col: str = "doc_id",
     text_col: str = "text",
-    available_now: bool = True,
     partition_base: int = 1,
 ) -> StreamingQuery:
     """Anchor each micro-batch and land its distinct hashes in the
-    index under an idempotent ``batch_id`` partition
-    (layout-compatible with ``functions/dedup.py::build_span_index``).
-
-    Partition ids are ``partition_base + foreachBatch batch_id``:
-    idempotence holds WITHIN one streaming checkpoint (a replay
-    rewrites only its own partition), but Spark restarts batch ids at
-    0 for a NEW checkpoint — re-attaching a fresh stream to an
-    existing index with the default base would dynamic-overwrite the
-    old stream's partitions.  Pass ``partition_base`` above the
-    index's current max ``batch_id`` when attaching to prior history
-    (the same rule applies to every batch_id-partitioned maintainer
-    in this package).
+    index under an idempotent ``batch_id`` partition via
+    ``functions/dedup.py::append_to_span_index`` (layout-compatible
+    with ``build_span_index``).  Partition ids are
+    ``partition_base + batch_id``; see
+    ``operators.warehouse.write_batch_partition`` for when to raise
+    ``partition_base``.
     """
     from financial_data_ingestion_pipeline_spark.functions.dedup import (
-        _span_anchors,
+        append_to_span_index,
     )
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        (
-            _span_anchors(batch, min_len, id_col, text_col)
-            .select("h")
-            .distinct()
-            # partition_base offsets past batch_id=0 (the batch
-            # builder's bootstrap) and any prior stream's partitions
-            .withColumn(
-                "batch_id", F.lit(partition_base + batch_id).cast("long")
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{out_path}/anchors")
+        append_to_span_index(
+            batch, out_path, partition_base + batch_id,
+            min_len, id_col, text_col,
         )
 
-    writer = (
-        doc_stream.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batch_sink(doc_stream, write_batch, checkpoint)
 
 
 def cut_and_maintain_span_index(
@@ -122,7 +115,6 @@ def cut_and_maintain_span_index(
     min_len: int = 16,
     id_col: str = "doc_id",
     text_col: str = "text",
-    available_now: bool = True,
     partition_base: int = 1,
 ) -> StreamingQuery:
     """The streaming ingest-with-cut loop — the stream sibling of
@@ -135,42 +127,21 @@ def cut_and_maintain_span_index(
     Anchors come from the CLEAN text — what actually landed — so the
     index never advertises spans the cut removed.
 
-    All three writes are dynamic overwrites of the batch's own
-    ``batch_id`` partition (idempotent under at-least-once replay);
+    All three writes replace only the batch's own ``batch_id``
+    partition (idempotent under at-least-once replay);
     ``partition_base``: see :func:`maintain_span_index`.  A missing
     index is the first-batch bootstrap (nothing to probe; anchors
     still land).
     """
     from financial_data_ingestion_pipeline_spark.functions.dedup import (
-        _span_anchors,
+        append_to_span_index,
         cut_spans,
-        span_probe_index,
     )
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        pid = F.lit(partition_base + batch_id).cast("long")
-        try:
-            spans = span_probe_index(
-                batch, spark, index_path,
-                min_len=min_len, id_col=id_col, text_col=text_col,
-            )
-        except AnalysisException as e:
-            if not _is_missing_path(e):
-                raise
-            id_type = batch.schema[id_col].dataType.simpleString()
-            spans = spark.createDataFrame(
-                [], f"{id_col} {id_type}, span_start long, span_len long"
-            )
-        (
-            spans.withColumn("batch_id", pid)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(spans_out)
-        )
+        pid = partition_base + batch_id
+        spans = _probe_or_bootstrap(batch, index_path, min_len, id_col, text_col)
+        write_batch_partition(spans, spans_out, pid)
         cut = cut_spans(batch, spans, id_col=id_col, text_col=text_col)
         cols = batch.columns
         cleaned = (
@@ -183,40 +154,20 @@ def cut_and_maintain_span_index(
             )
             .select(*cols, "n_cut")
         )
-        (
-            cleaned.withColumn("batch_id", pid)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(clean_out)
-        )
+        write_batch_partition(cleaned, clean_out, pid)
         # anchors of the CLEAN text (read back from the committed
         # partition — lineage through the pre-cut batch would re-read
         # the index this very function appends to below, the
         # silent-recompute hazard class run_incremental_ingest
         # checkpoints around)
-        landed = spark.read.parquet(clean_out).filter(
-            F.col("batch_id") == partition_base + batch_id
+        landed = batch.sparkSession.read.parquet(clean_out).filter(
+            F.col("batch_id") == pid
         )
-        (
-            _span_anchors(landed, min_len, id_col, text_col)
-            .select("h")
-            .distinct()
-            .withColumn("batch_id", pid)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{index_path}/anchors")
+        append_to_span_index(
+            landed, index_path, pid, min_len, id_col, text_col
         )
 
-    writer = (
-        doc_stream.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batch_sink(doc_stream, write_batch, checkpoint)
 
 
 def probe_and_maintain_span_index(
@@ -227,7 +178,6 @@ def probe_and_maintain_span_index(
     min_len: int = 16,
     id_col: str = "doc_id",
     text_col: str = "text",
-    available_now: bool = True,
     partition_base: int = 1,
 ) -> StreamingQuery:
     """The full contamination loop at ingest: each micro-batch is
@@ -239,8 +189,8 @@ def probe_and_maintain_span_index(
     batch never matches itself — the same batch-vs-standing semantics
     as ``span_cross_spans``, day over day.
 
-    Replay safety: both writes are dynamic overwrites of the replayed
-    ``batch_id`` partition, and the probe re-run sees exactly the
+    Replay safety: both writes replace only the replayed ``batch_id``
+    partition, and the probe re-run sees exactly the
     pre-append index for that batch only if replay happens before the
     append committed — if the anchors landed but the span write did
     not, the re-probe ALSO matches the batch's own anchors, adding
@@ -248,65 +198,16 @@ def probe_and_maintain_span_index(
     span-cut treats them as harmless over-marking (the doc equals the
     corpus copy of itself); exactly-once consumers needing the strict
     pre-append answer should key on span length < document length.
-    ``partition_base``: see :func:`maintain_span_index` — raise it
-    above the index's current max ``batch_id`` when attaching a NEW
-    checkpoint to prior history.
+    ``partition_base``: see :func:`maintain_span_index`.
     """
     from financial_data_ingestion_pipeline_spark.functions.dedup import (
-        _span_anchors,
-        span_probe_index,
+        append_to_span_index,
     )
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        try:
-            spans = span_probe_index(
-                batch, spark, index_path,
-                min_len=min_len, id_col=id_col, text_col=text_col,
-            )
-        except AnalysisException as e:
-            # ONLY the missing-index bootstrap is a clean "no corpus
-            # yet" — any other analysis error (bad columns, schema
-            # drift) and every IO error must fail the batch loudly,
-            # or contamination in it would be silently missed forever
-            if not _is_missing_path(e):
-                raise
-            # derive the id type from the BATCH schema so the bootstrap
-            # partition's parquet schema matches later batches' spans
-            # (a hardcoded `long` diverged for string doc ids)
-            id_type = batch.schema[id_col].dataType.simpleString()
-            spans = batch.sparkSession.createDataFrame(
-                [], f"{id_col} {id_type}, span_start long, span_len long"
-            )
-        (
-            spans.withColumn(
-                "batch_id", F.lit(partition_base + batch_id).cast("long")
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(spans_out)
-        )
-        (
-            _span_anchors(batch, min_len, id_col, text_col)
-            .select("h")
-            .distinct()
-            .withColumn(
-                "batch_id", F.lit(partition_base + batch_id).cast("long")
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{index_path}/anchors")
-        )
+        pid = partition_base + batch_id
+        spans = _probe_or_bootstrap(batch, index_path, min_len, id_col, text_col)
+        write_batch_partition(spans, spans_out, pid)
+        append_to_span_index(batch, index_path, pid, min_len, id_col, text_col)
 
-    writer = (
-        doc_stream.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batch_sink(doc_stream, write_batch, checkpoint)

@@ -22,8 +22,11 @@ the standing index, append the keepers.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from financial_data_ingestion_pipeline_spark.streaming.sink import (
+    start_batch_sink,
+)
 
 __all__ = ["maintain_winnow_index"]
 
@@ -36,57 +39,23 @@ def maintain_winnow_index(
     w: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    available_now: bool = True,
     partition_base: int = 1,
 ) -> StreamingQuery:
-    """Winnow each micro-batch and land it in the index under an
-    idempotent ``batch_id`` partition (layout-compatible with
-    ``functions/text.py::build_winnow_index``).  Partition ids are
-    ``partition_base + batch_id``: Spark restarts batch ids at 0 for a
-    NEW checkpoint, so raise ``partition_base`` above the index's
-    current max ``batch_id`` when attaching to prior history (else the
-    new stream's dynamic overwrites would delete the old stream's
-    partitions — both fingerprints AND the meta doc counts the probe
-    cap depends on)."""
+    """Winnow each micro-batch and land it in the index — fingerprints
+    AND the meta doc count the probe cap depends on — under an
+    idempotent ``batch_id`` partition via
+    ``functions/text.py::append_to_winnow_index`` (layout-compatible
+    with ``build_winnow_index``).  Partition ids are
+    ``partition_base + batch_id``; see
+    ``operators.warehouse.write_batch_partition`` for when to raise
+    ``partition_base``."""
     from financial_data_ingestion_pipeline_spark.functions.text import (
-        _winnow_posting,
+        append_to_winnow_index,
     )
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        (
-            _winnow_posting(batch, k, w, id_col, text_col)
-            # partition_base offsets past batch_id=0 (the batch
-            # builder's bootstrap) and any prior stream's partitions
-            .withColumn(
-                "batch_id", F.lit(partition_base + batch_id).cast("long")
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{out_path}/fingerprints")
-        )
-        # keep the meta doc-count partition in lockstep (same
-        # idempotent dynamic overwrite): the probe's df cap N counts
-        # ALL corpus docs, fingerprint-less ones included, to stay
-        # bit-identical to winnow_cross_pairs' corpus.count()
-        (
-            batch.select(F.count(F.lit(1)).alias("n_docs"))
-            .withColumn(
-                "batch_id", F.lit(partition_base + batch_id).cast("long")
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{out_path}/meta")
+        append_to_winnow_index(
+            batch, out_path, partition_base + batch_id, k, w, id_col, text_col
         )
 
-    writer = (
-        doc_stream.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batch_sink(doc_stream, write_batch, checkpoint)

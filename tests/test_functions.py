@@ -1360,7 +1360,7 @@ def test_persisted_cache_registry_evicts(spark):
 def test_pinned_release_frees_both_modes(spark):
     """materialize.Pinned releases storage for persist AND ckpt mode
     (DataFrame.unpersist is a no-op for checkpoints — Pinned tracks
-    the block ids instead), and FDIP_LOOP_MAT overrides the mode."""
+    the block ids instead)."""
     from financial_data_ingestion_pipeline_spark import materialize as mat
 
     df = spark.range(1000).selectExpr("id", "id * 2 AS v")
