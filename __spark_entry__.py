@@ -536,7 +536,6 @@ def _q_association_rules(spark, sf_dir):
 
     bounded = pin(
         analytics.bounded_baskets(li, max_basket=32),
-        mode="persist",
         eager=False,
     )
     item_support = (
@@ -2152,7 +2151,6 @@ def _q_span_cut_probe(spark, sf_dir):
         dedup.span_cross_spans(
             batch, docs.filter(F.col("doc_id") % 10 != 7), min_len=16
         ),
-        mode="persist",
     )
     return dedup.cut_spans(batch, spans)
 

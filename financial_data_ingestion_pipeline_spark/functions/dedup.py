@@ -801,7 +801,7 @@ def simhash_pairs(
     if pin_sigs:
         from financial_data_ingestion_pipeline_spark.materialize import pin
 
-        sigs = pin(sigs, mode="persist")
+        sigs = pin(sigs)
     exploded = sigs.select(
         F.col(id_col).alias("doc"),
         F.col(sig_col).alias("sig"),
@@ -1224,12 +1224,11 @@ def dedup_incremental_split(
     is_batch = batch_pred(F.col("doc"))
     hashed = pin(
         docs.select(F.col(id_col).alias("doc"), F.md5(F.col(text_col)).alias("h")),
-        mode="persist",
     )
     posting = docs.select(
         F.col(id_col).alias("doc"), F.explode(shingles(text_col)).alias("gram")
     )
-    sigs = pin(minhash_signatures(posting, num_perm), mode="persist")
+    sigs = pin(minhash_signatures(posting, num_perm))
     banded = sigs.select(
         "doc", F.explode(minhash_band_keys(num_perm, bands)).alias("band_key")
     )
@@ -1383,7 +1382,6 @@ def repeated_spans(
         .agg(F.count(F.lit(1)).alias("__df"))
         .filter(F.col("__df") >= 2)
         .select("h"),
-        mode="persist",
     )
     kept = occ.join(repeated, "h", "left_semi").select("doc", "pos")
     spans = _anchor_spans(kept, min_len, id_col)
@@ -1667,7 +1665,6 @@ def cut_repeated_spans(
             docs, min_len=min_len, id_col=id_col, text_col=text_col,
             with_key=(policy == "keep_first"),
         ),
-        mode="persist",
     )
     if policy == "keep_first":
         firsts = spans.groupBy("span_key").agg(
@@ -1952,7 +1949,7 @@ def _overlap_matrix(posting: DataFrame) -> DataFrame:
     index, so caching it is the intended working set, not a leak."""
     from financial_data_ingestion_pipeline_spark.materialize import pin
 
-    posting = pin(posting.select("src", "gram"), mode="persist")
+    posting = pin(posting.select("src", "gram"))
     sizes = posting.groupBy("src").agg(F.count(F.lit(1)).alias("sz"))
     inter = (
         posting.select(F.col("src").alias("src_a"), "gram")

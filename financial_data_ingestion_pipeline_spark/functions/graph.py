@@ -72,11 +72,8 @@ def pagerank(
     # loop entirely, so an iteration is exactly one join + one agg
     edges_deg = pin(
         directed.join(degrees, "src").select("src", "dst", "deg"),
-        mode="persist",
     )
-    degrees = pin(
-        edges_deg.select("src", "deg").distinct(), mode="persist"
-    )
+    degrees = pin(edges_deg.select("src", "deg").distinct())
     ranks = degrees.select(
         F.col("src").alias("node"), F.lit(SCALE).cast("long").alias("rank")
     )
@@ -101,7 +98,7 @@ def pagerank(
                 )
             ).cast("long").alias("rank"),
         )
-        ranks = pin(ranks, eager=False, mode="persist")
+        ranks = pin(ranks, eager=False)
     return ranks
 
 
@@ -144,7 +141,6 @@ def triangle_count(
         )
         .filter(F.col("u") != F.col("v"))
         .distinct(),
-        mode="persist",
     )
     deg = (
         e.select(F.col("u").alias("n"))
@@ -164,7 +160,6 @@ def triangle_count(
             F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
             F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("ddst"),
         ),
-        mode="persist",
     )
     a1 = directed.select(
         F.col("src").alias("a"),
@@ -235,7 +230,7 @@ def tree_depths(
         .cast("long")
         .alias("depth"),
     )
-    state = pin(state, mode="persist")
+    state = pin(state)
     prev = None
     for it in range(rounds):
         hop = state.select(

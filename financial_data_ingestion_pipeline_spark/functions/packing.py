@@ -343,7 +343,6 @@ def curriculum_order(
             F.col(id_col),
             F.col("avg_millibits").alias("difficulty_millibits"),
         ),
-        mode="persist",
     )
     banded = scored.withColumn(
         "_band", F.expr(f"difficulty_millibits div {band_width}")

@@ -1404,13 +1404,12 @@ def semantic_dedup(
     close = pin(
         _exact_block_pairs(assigned, threshold, "_id", "_v", dim, "cell")
         .select("id_a", "id_b"),
-        mode="persist",
     )
     # (id, cell) pinned narrow: the survivors branch needs only ids and
     # cells, and deriving them from `assigned` re-ran the Arrow
     # assignment pass over the whole corpus a second time (round-11 —
     # the vectors themselves are never cached, same rule as `close`)
-    cells = pin(assigned.select("_id", "cell"), mode="persist")
+    cells = pin(assigned.select("_id", "cell"))
     drops = close.select(F.col("id_b").alias("_drop")).distinct()
     survivors = cells.join(
         drops, cells["_id"] == drops["_drop"], "left_anti"
@@ -2251,7 +2250,6 @@ def margin_mining_pairs(
             "sim",
             F.round(F.col("sim") * F.lit(1_000_000)).cast("long").alias("sim6"),
         ),
-        mode="persist",
     )
     deg = nn.groupBy("query_id").agg(
         F.sum("sim6").alias("deg6"), F.count(F.lit(1)).alias("n")
@@ -2495,7 +2493,6 @@ def _margin_from_ranked(
         ranked.withColumn(
             "sim6", F.round(F.col("sim") * F.lit(1_000_000)).cast("long")
         ),
-        mode="persist",
     )
     fwd = s.filter(F.col("dir") == 0)
     bwd = s.filter(F.col("dir") == 1)

@@ -340,7 +340,6 @@ def bpe_encode(
         )
         .groupBy(*key_cols, "word")
         .agg(F.count(F.lit(1)).alias("cnt")),
-        mode="persist",
     )
     vocab = (
         word_counts.select("word")
@@ -1286,18 +1285,11 @@ def winnow_overlap_pairs(
     # corpus text, so DISK_ONLY-persist it (lineage kept, audit-visible,
     # CacheManager-deduped — the tfidf-index trade) and run the
     # CPU-dense pass once.
-    from pyspark import StorageLevel
+    from financial_data_ingestion_pipeline_spark.materialize import pin
 
-    from financial_data_ingestion_pipeline_spark.session import register_persisted
-
-    posting = (
-        register_persisted(
-            _winnow_posting(docs, k, w, id_col, text_col).persist(
-                StorageLevel.DISK_ONLY
-            )
-        )
-        .crossJoin(F.broadcast(n_row))
-    )
+    posting = pin(
+        _winnow_posting(docs, k, w, id_col, text_col), eager=False
+    ).crossJoin(F.broadcast(n_row))
     cap = F.greatest(
         F.lit(max_df_floor),
         F.least(
@@ -1775,7 +1767,6 @@ def unimax_sample(
                 F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string"))
             ).alias("__hk"),
         ),
-        mode="persist",
         eager=False,
     )
     alloc_rows = (
@@ -1912,11 +1903,9 @@ def dsir_weights(
     # consumer — same trade as the tfidf inverted index: lineage kept
     # (recomputable on executor loss), visible to the plan-budget
     # audit, deduped across calls by the CacheManager.
-    from pyspark import StorageLevel
+    from financial_data_ingestion_pipeline_spark.materialize import pin
 
-    from financial_data_ingestion_pipeline_spark.session import register_persisted
-
-    occ = register_persisted(occ.persist(StorageLevel.DISK_ONLY))
+    occ = pin(occ, eager=False)
     is_tgt = F.col("src").isin(list(target_sources))
     dists = occ.groupBy("b").agg(
         F.count(F.lit(1)).alias("r"),
@@ -2163,7 +2152,7 @@ def bm25_topk(
         F.size("__toks").cast("long").alias("__dl"),
         *[_tf(t).alias(f"__tf_{i}") for i, t in enumerate(query_terms)],
     )
-    per_doc = pin(per_doc, mode="persist", eager=False)
+    per_doc = pin(per_doc, eager=False)
     stats = per_doc.agg(
         F.count(F.lit(1)).alias("__n"),
         F.sum("__dl").alias("__total"),
@@ -2606,11 +2595,9 @@ def tfidf_cosine_pairs(
     # calls by canonicalized plan, so long sessions don't accumulate
     # copies; DISTINCT inputs do accumulate — registered for
     # session.evict_persisted() at the caller's job boundary.
-    from pyspark import StorageLevel
+    from financial_data_ingestion_pipeline_spark.materialize import pin
 
-    from financial_data_ingestion_pipeline_spark.session import register_persisted
-
-    weighted = register_persisted(weighted.persist(StorageLevel.DISK_ONLY))
+    weighted = pin(weighted, eager=False)
     # Norms are doc-count-sized and consumed twice (sq_a, sq_b): two
     # cheap aggregates over the cached index — not worth their own
     # materialization (round-6 A/B: eager localCheckpoint 2.37 s,

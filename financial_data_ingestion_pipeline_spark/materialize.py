@@ -28,16 +28,17 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 
 
-def pin(df: DataFrame, eager: bool = True, mode: str = "ckpt") -> DataFrame:
-    """Materialize a loop/reused frame under a chosen strategy.
+def pin(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Materialize a loop/reused frame: ``persist(DISK_ONLY)`` (+ a
+    count when ``eager``), registered in ``session.register_persisted``
+    so long-lived sessions evict it at job boundaries.
 
-    ``mode="ckpt"`` → ``localCheckpoint`` (lineage truncated: constant
-    plan size across loop iterations, but blocks die with their
-    executor — a loss restarts the whole query).  ``mode="persist"`` →
-    ``persist(DISK_ONLY)`` (+ a count when ``eager``): lineage KEPT, so
-    a lost partition recomputes instead of failing the query, and the
-    subtree stays visible to the plan-budget audit; the cost is plan
-    growth proportional to loop depth.
+    Lineage is KEPT, unlike ``localCheckpoint``: a lost partition
+    recomputes instead of failing the query, stale loop rounds can be
+    unpersisted immediately (a late reader recomputes instead of
+    crashing), and the subtree stays visible to the plan-budget audit;
+    the cost is plan growth proportional to loop depth (:class:`Pinned`
+    alternates in checkpoints where that growth must be bounded).
 
     Round-7 A/B — fresh sessions per variant, 3 reps with caches
     cleared between reps, two alternating session pairs (an
@@ -45,46 +46,38 @@ def pin(df: DataFrame, eager: bool = True, mode: str = "ckpt") -> DataFrame:
     silently reuse the persist runs' cached subtrees and measure
     30-50% too fast).  Medians of both session pairs, sf0.1:
 
-    ==================  ===========  ===========  ========
-    operator            ckpt         persist      default
-    ==================  ===========  ===========  ========
-    pagerank_items      2.94 / 3.39  0.94 / 1.22  persist
-    neardup_clusters    2.31 / 2.60  1.45 / 1.50  persist
-    canonical_docs      2.05 / 3.31  1.66 / 1.50  persist
-    triangle_counts     1.62 / 2.05  0.96 / 0.86  persist
-    semantic_dedup      1.32 / 1.53  0.98 / 0.85  persist
-    customer_hierarchy  1.02 / 1.00  0.89 / 1.23  persist
-    pack_sequences      0.53        0.50          persist
-    ==================  ===========  ===========  ========
+    ==================  ===========  ===========
+    operator            ckpt         persist
+    ==================  ===========  ===========
+    pagerank_items      2.94 / 3.39  0.94 / 1.22
+    neardup_clusters    2.31 / 2.60  1.45 / 1.50
+    canonical_docs      2.05 / 3.31  1.66 / 1.50
+    triangle_counts     1.62 / 2.05  0.96 / 0.86
+    semantic_dedup      1.32 / 1.53  0.98 / 0.85
+    customer_hierarchy  1.02 / 1.00  0.89 / 1.23
+    pack_sequences      0.53        0.50
+    ==================  ===========  ===========
 
-    Persist wins or ties everywhere measured — the checkpoint path
+    Persist wins or ties everywhere measured: the checkpoint path
     re-materializes its blocks on every run while persisted plans are
-    CacheManager-reusable across runs, and even cold first runs win —
-    AND it keeps lineage: stale loop rounds can be unpersisted
-    immediately (a late reader recomputes instead of crashing) and an
-    executor loss recomputes lost partitions instead of failing the
-    query.  ``mode="ckpt"`` remains for frames where lineage
-    truncation itself is the point (bounding plan growth in
-    deep unbounded loops).  The persist path auto-registers in
-    ``session.register_persisted`` so long-lived sessions evict at job
-    boundaries (safe: lineage is kept).
+    CacheManager-reusable across runs, and even cold first runs win.
     """
-    if mode == "persist":  # noqa: SIM108 - branch bodies differ below
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        from financial_data_ingestion_pipeline_spark.session import (
-            register_persisted,
-        )
+    from financial_data_ingestion_pipeline_spark.session import (
+        register_persisted,
+    )
 
-        out = register_persisted(df.persist(StorageLevel.DISK_ONLY))
-        if eager:
-            out.count()
-        return out
-    return df.localCheckpoint(eager=eager)
+    out = register_persisted(df.persist(StorageLevel.DISK_ONLY))
+    if eager:
+        out.count()
+    return out
 
 
 class Pinned:
-    """A :func:`pin`'d frame plus the handle needed to release it.
+    """A materialized frame plus the handle needed to release it:
+    ``mode="persist"`` is :func:`pin`, ``mode="ckpt"`` is
+    ``localCheckpoint``.
 
     Persist-mode frames release via ``DataFrame.unpersist`` (lineage
     kept — a later reader recomputes).  Ckpt-mode frames have no
@@ -103,11 +96,13 @@ class Pinned:
     def __init__(self, df: DataFrame, eager: bool = True,
                  mode: str = "ckpt") -> None:
         self._spark = df.sparkSession
-        pre = persistent_rdd_ids(self._spark) if mode == "ckpt" else None
-        self.df = pin(df, eager=eager, mode=mode)
-        self.ids = (
-            persistent_rdd_ids(self._spark) - pre if pre is not None else None
-        )
+        if mode == "ckpt":
+            pre = persistent_rdd_ids(self._spark)
+            self.df = df.localCheckpoint(eager=eager)
+            self.ids = persistent_rdd_ids(self._spark) - pre
+        else:
+            self.df = pin(df, eager=eager)
+            self.ids = None
 
     def release(self) -> None:
         try:
@@ -120,7 +115,7 @@ class Pinned:
 
 def persistent_rdd_ids(spark) -> set:
     """Ids of every persisted RDD in the context — diff around a
-    ``pin(mode="ckpt")`` to capture the checkpoint's block ids, the
+    ``localCheckpoint`` to capture the checkpoint's block ids, the
     only handle that can release them early (``DataFrame.unpersist``
     is a no-op for checkpointed frames; without release they wait for
     the ContextCleaner)."""

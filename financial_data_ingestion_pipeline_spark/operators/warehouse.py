@@ -241,9 +241,21 @@ def _manifest_path(table_dir: str, version: int) -> str:
 
 
 def list_snapshots(table_dir: str) -> list[int]:
-    """Committed snapshot versions, ascending (empty for a new table)."""
-    import os
+    """Committed snapshot versions, ascending (empty for a new table).
 
+    Every snapshot function reaches the manifests through here, so this
+    is where a ``table_dir`` with a URI scheme (``s3a://…``,
+    ``hdfs://…``, ``file://…``) is refused: manifests are listed,
+    written and hard-linked with local ``os`` calls, which would put
+    them in a relative directory named after the URI while Spark wrote
+    the data to the remote store."""
+    import os
+    import re
+
+    if re.match(r"[A-Za-z][A-Za-z0-9+.-]*://", table_dir):
+        raise ValueError(
+            f"snapshot tables need a local filesystem path, got {table_dir!r}"
+        )
     mdir = os.path.join(table_dir, _MANIFEST_DIR)
     if not os.path.isdir(mdir):
         return []
@@ -257,15 +269,14 @@ def snapshot_commit(
     table_dir: str,
     mode: str = "append",
     stats_col: str | None = None,
-    bloom_col: str | None = None,
 ) -> int:
     """Commit ``df`` to a snapshot table; returns the new version.
 
-    The Iceberg/Delta idea reduced to its core, for plain parquet on
-    any filesystem/object store: data files land under an immutable
+    The Iceberg/Delta idea reduced to its core, for plain parquet on a
+    local or mounted filesystem: data files land under an immutable
     per-commit directory, and the table state IS the newest manifest —
     a small JSON listing exactly the data directories visible in that
-    version.  The manifest is written to a temp name and renamed into
+    version.  The manifest is written to a temp name and linked into
     place, so readers either see the previous version or the complete
     new one; a writer that dies mid-job leaves an orphan data dir and
     NO manifest — invisible, not corrupt.  ``mode='append'`` carries
@@ -280,8 +291,7 @@ def snapshot_commit(
     With ``stats_col``, the manifest additionally records the new data
     directory's [min, max] of that column (one column-pruned footer
     read after the write) — the file-skipping index that lets
-    :func:`read_snapshot` prune whole directories against a predicate
-    and :func:`snapshot_merge` rewrite only the directories an update
+    :func:`snapshot_merge` rewrite only the directories an update
     batch actually touches.  Stats from the previous manifest are
     carried forward on append, so the index stays complete without
     ever rescanning old data.
@@ -290,6 +300,8 @@ def snapshot_commit(
     import os
     import uuid
 
+    if mode not in ("append", "overwrite"):
+        raise ValueError(f"mode must be 'append' or 'overwrite', got {mode!r}")
     versions = list_snapshots(table_dir)
     prev = versions[-1] if versions else None
     new_version = (prev + 1) if prev is not None else 0
@@ -299,23 +311,17 @@ def snapshot_commit(
 
     dirs = [data_dir]
     stats: dict[str, list] = {}
-    blooms: dict[str, dict] = {}
     if stats_col is not None:
         stats[data_dir] = _dir_stats(
             df.sparkSession, os.path.join(table_dir, data_dir), stats_col
-        )
-    if bloom_col is not None:
-        blooms[data_dir] = _dir_bloom(
-            df.sparkSession, os.path.join(table_dir, data_dir), bloom_col
         )
     if mode == "append" and prev is not None:
         with open(_manifest_path(table_dir, prev)) as f:
             prev_manifest = json.load(f)
         dirs = prev_manifest["data_dirs"] + dirs
         stats = {**prev_manifest.get("stats", {}), **stats}
-        blooms = {**prev_manifest.get("blooms", {}), **blooms}
 
-    _write_manifest(table_dir, new_version, dirs, stats, blooms)
+    _write_manifest(table_dir, new_version, dirs, stats)
     return new_version
 
 
@@ -329,11 +335,7 @@ def _dir_stats(spark: SparkSession, path: str, col: str) -> list:
 
 
 def _write_manifest(
-    table_dir: str,
-    version: int,
-    dirs: list[str],
-    stats: dict[str, list],
-    blooms: dict[str, dict] | None = None,
+    table_dir: str, version: int, dirs: list[str], stats: dict[str, list]
 ) -> None:
     import json
     import os
@@ -343,8 +345,6 @@ def _write_manifest(
     manifest = {"version": version, "data_dirs": dirs}
     if stats:
         manifest["stats"] = stats
-    if blooms:
-        manifest["blooms"] = blooms
     tmp = _manifest_path(table_dir, version) + f".tmp-{uuid.uuid4().hex[:8]}"
     with open(tmp, "w") as f:
         json.dump(manifest, f)
@@ -362,44 +362,6 @@ def _write_manifest(
             "re-read the table and retry"
         )
     os.remove(tmp)
-
-
-#: Bloom sizing for the per-directory manifest index: 2^14 bits keeps
-#: each entry ~a few KB of sparse JSON, ~1% false positives at 1.7k
-#: distinct keys per directory (fp ~ (1-e^(-kn/m))^k).
-_BLOOM_M_BITS = 1 << 14
-_BLOOM_K = 4
-
-
-def _dir_bloom(spark: SparkSession, path: str, col: str) -> dict:
-    """Sparse per-directory Bloom filter of one column's values,
-    recorded in the manifest: ``{"col", "words": {word: bits}}``.
-    Uses the portable md5 chains of ``functions.sketches.bloom_build``,
-    so a driver-side probe can recompute positions without Spark."""
-    from ..functions import sketches
-
-    rows = sketches.bloom_build(
-        spark.read.parquet(path).select(col),
-        col,
-        m_bits=_BLOOM_M_BITS,
-        k_hashes=_BLOOM_K,
-    ).collect()
-    return {"col": col, "words": {str(r.word): r.bits for r in rows}}
-
-
-def _bloom_maybe_contains(bloom: dict, value) -> bool:
-    """Driver-side probe with the same md5 chain as the Spark build.
-    True = maybe present (read the dir); False = definitely absent."""
-    import hashlib
-
-    s = "" if value is None else str(value)
-    for j in range(_BLOOM_K):
-        h = hashlib.md5(f"bloom{j}:{s}".encode()).hexdigest()
-        p = int(h[:15], 16) % _BLOOM_M_BITS
-        bits = bloom["words"].get(str(p // 32), 0)
-        if not (bits >> (p % 32)) & 1:
-            return False
-    return True
 
 
 def _load_manifest(table_dir: str, version: int | None) -> dict:
@@ -451,120 +413,21 @@ def _dirs_overlapping(
     return touched, untouched
 
 
-def _manifest_stats_col(manifest: dict) -> str | None:
-    """The single column every stats entry was recorded on, or None
-    when entries are absent or MIXED — inferring from a mixed manifest
-    would range-compare against the wrong column and turn pruning into
-    silent row loss."""
-    cols = {s[2] for s in manifest.get("stats", {}).values() if len(s) > 2}
-    return cols.pop() if len(cols) == 1 else None
-
-
-def _manifest_bloom_col(manifest: dict) -> str | None:
-    cols = {b["col"] for b in manifest.get("blooms", {}).values()}
-    return cols.pop() if len(cols) == 1 else None
-
-
-def _empty_scan(spark: SparkSession, table_dir: str, manifest: dict) -> DataFrame:
-    """Zero rows with the table's full EVOLVED schema (footer union
-    across every directory; no data pages read)."""
-    import os
-
-    return (
-        spark.read.option("mergeSchema", "true")
-        .parquet(
-            *[os.path.join(table_dir, d) for d in manifest["data_dirs"]]
-        )
-        .limit(0)
-    )
-
-
 def read_snapshot(
     spark: SparkSession,
     table_dir: str,
     version: int | None = None,
-    key_range: tuple | None = None,
-    key_col: str | None = None,
 ) -> DataFrame:
-    """Read a snapshot table at ``version`` (default: latest).
-
-    ``key_range=(lo, hi)`` prunes data directories whose manifest
-    [min, max] stats (recorded by ``snapshot_commit(stats_col=...)``)
-    cannot intersect the range — directory-level data skipping BEFORE
-    Spark ever lists a file, the manifest analog of partition pruning.
-    ``key_col`` names the column the range refers to (default: the
-    column the manifest's stats were recorded on); directories whose
-    stats are on a different column are conservatively read.  The
-    caller still applies its own row-level filter; pruning is an I/O
-    optimization, never a semantic one.
-    """
+    """Read a snapshot table at ``version`` (default: latest)."""
     import os
 
     manifest = _load_manifest(table_dir, version)
-    dirs = manifest["data_dirs"]
-    if key_range is not None:
-        if key_col is None:
-            # only infer when EVERY stats entry names the same column;
-            # a mixed manifest prunes nothing without an explicit col
-            key_col = _manifest_stats_col(manifest)
-            if key_col is None:
-                dirs = manifest["data_dirs"]
-                return spark.read.option("mergeSchema", "true").parquet(
-                    *[os.path.join(table_dir, d) for d in dirs]
-                )
-        dirs, skipped = _dirs_overlapping(
-            manifest, key_range[0], key_range[1], key_col
-        )
-        if not dirs:
-            return _empty_scan(spark, table_dir, manifest)
     # mergeSchema: additive schema evolution across commits — a column
     # added by a later commit reads as NULL in older directories
     # instead of silently vanishing (footer-union cost is per-dir, not
     # per-row, and only at planning time)
-    return (
-        spark.read.option("mergeSchema", "true")
-        .parquet(*[os.path.join(table_dir, d) for d in dirs])
-    )
-
-
-def read_snapshot_lookup(
-    spark: SparkSession,
-    table_dir: str,
-    value,
-    version: int | None = None,
-) -> DataFrame:
-    """Point lookup with manifest Bloom pruning: read ONLY the data
-    directories whose per-directory Bloom filter (recorded by
-    ``snapshot_commit(bloom_col=...)``) might contain ``value`` — a
-    driver-side probe over a few KB of manifest JSON, no Spark job —
-    then filter the survivors exactly.
-
-    This is the needle-in-100-TB path min/max stats can't serve: a
-    uniformly distributed key intersects every directory's [min, max],
-    but its Bloom bits appear in ~1 directory (+ the false-positive
-    tail), so the cluster reads one directory instead of the table.
-    Directories without a Bloom entry are conservatively read.
-    """
-    import os
-
-    manifest = _load_manifest(table_dir, version)
-    blooms = manifest.get("blooms", {})
-    col = _manifest_bloom_col(manifest)
-    candidates = [
-        d
-        for d in manifest["data_dirs"]
-        if d not in blooms or _bloom_maybe_contains(blooms[d], value)
-    ]
-    if col is None:
-        raise ValueError(
-            f"no bloom index recorded in {table_dir}; commit with bloom_col"
-        )
-    if not candidates:
-        return _empty_scan(spark, table_dir, manifest)
-    return (
-        spark.read.option("mergeSchema", "true")
-        .parquet(*[os.path.join(table_dir, d) for d in candidates])
-        .filter(F.col(col) == F.lit(value))
+    return spark.read.option("mergeSchema", "true").parquet(
+        *[os.path.join(table_dir, d) for d in manifest["data_dirs"]]
     )
 
 
@@ -591,7 +454,7 @@ def snapshot_merge(
     — no key set is ever collected to the driver.
 
     Commit protocol is unchanged: new data lands in a fresh directory,
-    the manifest rename is atomic, a crashed merge leaves an orphan
+    the manifest link is atomic, a crashed merge leaves an orphan
     dir and no new version.
     """
     import os
@@ -608,7 +471,6 @@ def snapshot_merge(
             new_version,
             manifest["data_dirs"],
             manifest.get("stats", {}),
-            manifest.get("blooms", {}),
         )
         return new_version
     touched, untouched = _dirs_overlapping(
@@ -620,9 +482,6 @@ def snapshot_merge(
         for d, s in manifest.get("stats", {}).items()
         if d in set(untouched)
     }
-    prev_blooms = manifest.get("blooms", {})
-    blooms = {d: b for d, b in prev_blooms.items() if d in set(untouched)}
-    bloom_col = _manifest_bloom_col(manifest)
     dirs = list(untouched)
 
     if touched or not delete:
@@ -647,114 +506,47 @@ def snapshot_merge(
             stats[data_dir] = _dir_stats(
                 spark, os.path.join(table_dir, data_dir), stats_col
             )
-            if bloom_col is not None:
-                blooms[data_dir] = _dir_bloom(
-                    spark, os.path.join(table_dir, data_dir), bloom_col
-                )
 
-    _write_manifest(table_dir, new_version, dirs, stats, blooms)
+    _write_manifest(table_dir, new_version, dirs, stats)
     return new_version
 
 
-def _ohlc_partial(
-    rows: DataFrame,
-    symbol_col: str = "source_symbol",
-    ts_col: str = "timestamp",
-    price_col: str = "ltp",
-) -> DataFrame:
-    """Mergeable hourly-OHLC partial: alongside open/high/low/close it
-    carries ``first_ts``/``last_ts``/``n_ticks``, which is exactly the
-    extra state that makes two partials combinable (open follows the
-    smaller first_ts, close the larger last_ts, high/low/n are plain
-    max/min/sum) — the same algebra Spark's partial aggregation uses
-    internally, lifted to the table level.  Ticks tied on the timestamp
-    are ordered by price inside the ordering key (lowest opens, highest
-    closes), so every merge order picks the same tick."""
-    hour = F.date_trunc("hour", F.col(ts_col))
-    return rows.groupBy(
-        F.col(symbol_col).alias("symbol"), hour.alias("bucket_start")
-    ).agg(
-        F.min_by(price_col, F.struct(ts_col, price_col)).alias("open"),
-        F.max(price_col).alias("high"),
-        F.min(price_col).alias("low"),
-        F.max_by(price_col, F.struct(ts_col, price_col)).alias("close"),
-        F.min(ts_col).alias("first_ts"),
-        F.max(ts_col).alias("last_ts"),
-        F.count(F.lit(1)).alias("n_ticks"),
-    )
+def vacuum_snapshots(table_dir: str, keep_last: int = 1) -> list[str]:
+    """Physically delete data directories referenced ONLY by snapshots
+    older than the ``keep_last`` newest (and their manifests), plus
+    orphan dirs no manifest ever referenced (failed jobs).  Returns
+    the removed directories.
 
-
-def _ohlc_merge(partials: DataFrame) -> DataFrame:
-    """Combine OHLC partials per (symbol, bucket): associative, so any
-    number of increments merge in any order."""
-    return partials.groupBy("symbol", "bucket_start").agg(
-        F.min_by("open", F.struct("first_ts", "open")).alias("open"),
-        F.max("high").alias("high"),
-        F.min("low").alias("low"),
-        F.max_by("close", F.struct("last_ts", "close")).alias("close"),
-        F.min("first_ts").alias("first_ts"),
-        F.max("last_ts").alias("last_ts"),
-        F.sum("n_ticks").alias("n_ticks"),
-    )
-
-
-def maintain_ohlc_mv(
-    spark: SparkSession,
-    table_dir: str,
-    mv_dir: str,
-    symbol_col: str = "source_symbol",
-    ts_col: str = "timestamp",
-    price_col: str = "ltp",
-) -> int | None:
-    """Incrementally maintain an hourly-OHLC materialized view over a
-    snapshot table: aggregate ONLY the data directories added since
-    the last maintained version, merge with the existing view via the
-    mergeable-partial algebra, and publish the new view as an atomic
-    snapshot commit of its own (so the MV is itself time-travelable
-    and a crashed refresh changes nothing).
-
-    This is the batch complement of the streaming keyed-merge sink:
-    the streaming path maintains the view continuously; this one
-    catches up after bulk backfills at the cost of reading only the
-    NEW data — O(increment), never O(table).
-
-    Returns the new MV version, or None if there was nothing new.
-    """
+    Safe by construction: the union of the surviving manifests' dirs
+    is computed first, and nothing in it is touched — concurrent
+    readers of surviving versions are unaffected (the discipline
+    Delta's VACUUM follows)."""
     import json
     import os
+    import shutil
 
+    if keep_last < 1:
+        raise ValueError(f"keep_last must be at least 1, got {keep_last}")
     versions = list_snapshots(table_dir)
     if not versions:
-        return None
-    latest = versions[-1]
-    state_path = os.path.join(mv_dir, "_last_table_version")
-    last = -1
-    if os.path.exists(state_path):
-        with open(state_path) as f:
-            last = json.load(f)["table_version"]
-    if latest == last:
-        return None
+        return []
+    keep_versions = versions[-keep_last:]
+    keep_dirs: set[str] = set()
+    for v in keep_versions:
+        with open(_manifest_path(table_dir, v)) as f:
+            keep_dirs |= set(json.load(f)["data_dirs"])
 
-    with open(_manifest_path(table_dir, latest)) as f:
-        new_dirs = set(json.load(f)["data_dirs"])
-    if last >= 0:
-        with open(_manifest_path(table_dir, last)) as f:
-            new_dirs -= set(json.load(f)["data_dirs"])
-    if not new_dirs:
-        return None
-    increment = spark.read.parquet(
-        *[os.path.join(table_dir, d) for d in sorted(new_dirs)]
-    )
-    partial = _ohlc_partial(increment, symbol_col, ts_col, price_col)
-    try:
-        current = read_snapshot(spark, mv_dir)
-        merged = _ohlc_merge(current.unionByName(partial))
-    except FileNotFoundError:
-        merged = _ohlc_merge(partial)
-    mv_version = snapshot_commit(merged, mv_dir, mode="overwrite")
-    with open(state_path, "w") as f:
-        json.dump({"table_version": latest}, f)
-    return mv_version
+    removed = []
+    data_root = os.path.join(table_dir, "data")
+    if os.path.isdir(data_root):
+        for d in sorted(os.listdir(data_root)):
+            rel = f"data/{d}"
+            if rel not in keep_dirs:
+                shutil.rmtree(os.path.join(data_root, d))
+                removed.append(rel)
+    for v in versions[:-keep_last]:
+        os.remove(_manifest_path(table_dir, v))
+    return removed
 
 
 # ---------------------------------------------------------------------------
@@ -881,112 +673,3 @@ def zorder_write(
         .partitionBy("__zb")
         .parquet(path)
     )
-
-
-def read_snapshot_changes(
-    spark: SparkSession,
-    table_dir: str,
-    since_version: int,
-    to_version: int | None = None,
-) -> DataFrame:
-    """CDC-style incremental read: the rows ADDED between two snapshot
-    versions, obtained by scanning only the data directories present
-    in ``to_version`` but not in ``since_version`` — O(increment)
-    regardless of table size.  This is the consumer-facing form of the
-    diff :func:`maintain_ohlc_mv` uses internally: a downstream job
-    that processed version N catches up to version M by reading the
-    delta, never the table.
-
-    Append-only semantics: directories retired by ``overwrite`` or
-    :func:`snapshot_merge` are NOT subtracted (parquet dirs can't
-    express deletions); merge consumers should treat the delta as an
-    upsert batch keyed like the merge.  Returns an empty, schema-
-    preserving frame when nothing changed.
-    """
-    import os
-
-    new_m = _load_manifest(table_dir, to_version)
-    old_m = _load_manifest(table_dir, since_version)
-    delta = [d for d in new_m["data_dirs"] if d not in set(old_m["data_dirs"])]
-    if not delta:
-        any_dir = new_m["data_dirs"][0]
-        return spark.read.parquet(os.path.join(table_dir, any_dir)).limit(0)
-    return spark.read.parquet(*[os.path.join(table_dir, d) for d in delta])
-
-
-def compact_snapshots(
-    spark: SparkSession,
-    table_dir: str,
-    max_dirs: int = 8,
-    stats_col: str | None = None,
-    bloom_col: str | None = None,
-) -> int | None:
-    """OPTIMIZE for snapshot tables: when the manifest references more
-    than ``max_dirs`` data directories (the small-files problem every
-    incremental ingest creates), rewrite them as ONE directory and
-    commit the result as a new version — readers never block, old
-    versions stay time-travelable until vacuumed, and a crashed
-    compaction leaves only an orphan dir.
-
-    With ``stats_col`` the compacted directory gets fresh manifest
-    stats; per-directory pruning resets to the single combined range,
-    which is the expected trade of compaction (fewer, bigger files) —
-    run :func:`zorder_write`-style clustering first when range
-    locality must survive.
-
-    Returns the new version, or None if already compact.
-    """
-    manifest = _load_manifest(table_dir, None)
-    if len(manifest["data_dirs"]) <= max_dirs:
-        return None
-    # preserve the table's index configuration across the rewrite:
-    # dropping the stats/bloom entries would silently break pruning
-    # and break read_snapshot_lookup outright
-    if stats_col is None:
-        stats_col = _manifest_stats_col(manifest)
-    if bloom_col is None:
-        bloom_col = _manifest_bloom_col(manifest)
-    full = read_snapshot(spark, table_dir)
-    return snapshot_commit(
-        full,
-        table_dir,
-        mode="overwrite",
-        stats_col=stats_col,
-        bloom_col=bloom_col,
-    )
-
-
-def vacuum_snapshots(table_dir: str, keep_last: int = 1) -> list[str]:
-    """Physically delete data directories referenced ONLY by snapshots
-    older than the ``keep_last`` newest (and their manifests), plus
-    orphan dirs no manifest ever referenced (failed jobs).  Returns
-    the removed directories.
-
-    Safe by construction: the union of the surviving manifests' dirs
-    is computed first, and nothing in it is touched — concurrent
-    readers of surviving versions are unaffected (the object-store
-    discipline Delta's VACUUM follows)."""
-    import json
-    import os
-    import shutil
-
-    versions = list_snapshots(table_dir)
-    if not versions:
-        return []
-    keep_versions = versions[-keep_last:]
-    keep_dirs: set[str] = set()
-    for v in keep_versions:
-        with open(_manifest_path(table_dir, v)) as f:
-            keep_dirs |= set(json.load(f)["data_dirs"])
-
-    removed = []
-    data_root = os.path.join(table_dir, "data")
-    if os.path.isdir(data_root):
-        for d in sorted(os.listdir(data_root)):
-            rel = f"data/{d}"
-            if rel not in keep_dirs:
-                shutil.rmtree(os.path.join(data_root, d))
-                removed.append(rel)
-    for v in versions[:-keep_last]:
-        os.remove(_manifest_path(table_dir, v))
-    return removed

@@ -332,7 +332,6 @@ def _span_contamination_probe_and_cut(
             gated, spark, span_index_dir,
             min_len=span_min_len, id_col=id_col, text_col=text_col,
         ),
-        mode="persist",
     )
     counts["span_contaminated_docs"] = spans.select(id_col).distinct().count()
     write_batch_partition(spans, f"{span_index_dir}/quarantine", batch_id)

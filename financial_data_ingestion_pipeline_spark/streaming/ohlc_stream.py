@@ -241,9 +241,7 @@ def write_snapshot_stream(
     manifest commit (``warehouse.snapshot_commit``), so downstream
     batch readers always see whole micro-batches — never a partially
     written file set — and can time-travel the ingest history
-    batch-by-batch.  Combined with ``warehouse.maintain_ohlc_mv`` this
-    closes the loop: continuous ingest with atomic visibility plus
-    O(increment) view refresh, no table format dependency.
+    batch-by-batch.
 
     Note the split of atomicity duties: Spark's checkpoint guarantees
     each micro-batch is processed once; the manifest rename guarantees

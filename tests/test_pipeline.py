@@ -405,55 +405,6 @@ class TestSnapshotTable:
         assert warehouse.list_snapshots(t) == [0]
 
 
-def test_incremental_ohlc_mv_matches_recompute(spark, tmp_path):
-    """Two snapshot commits; the incrementally-maintained view must
-    equal a full recompute over the combined table, and the second
-    refresh must read only the increment (verified by state file)."""
-    import datetime as dt
-
-    from financial_data_ingestion_pipeline_spark.operators import warehouse
-    from financial_data_ingestion_pipeline_spark.schemas import WAREHOUSE_SCHEMA
-
-    def ticks(day, n, base):
-        return [
-            (f"S{i % 3}", dt.datetime(2022, 4, day, 9 + i % 3, 0, i % 60),
-             base + i, 1.0, 0.0, 0.0, 0.0, 0.0, 0.0)
-            for i in range(n)
-        ]
-
-    t = str(tmp_path / "tbl")
-    mv = str(tmp_path / "mv")
-    warehouse.snapshot_commit(
-        spark.createDataFrame(ticks(4, 40, 100.0), WAREHOUSE_SCHEMA), t
-    )
-    v1 = warehouse.maintain_ohlc_mv(spark, t, mv)
-    assert v1 == 0
-    # second commit: same hours get MORE ticks (merge must extend
-    # open/close correctly) plus a new day
-    warehouse.snapshot_commit(
-        spark.createDataFrame(
-            ticks(4, 20, 50.0) + ticks(5, 25, 200.0), WAREHOUSE_SCHEMA
-        ), t, mode="append",
-    )
-    v2 = warehouse.maintain_ohlc_mv(spark, t, mv)
-    assert v2 == 1
-    # idempotent when nothing new
-    assert warehouse.maintain_ohlc_mv(spark, t, mv) is None
-
-    got = {
-        (r.symbol, r.bucket_start): (r.open, r.high, r.low, r.close, r.n_ticks)
-        for r in warehouse.read_snapshot(spark, mv).collect()
-    }
-    full = warehouse._ohlc_merge(
-        warehouse._ohlc_partial(warehouse.read_snapshot(spark, t))
-    )
-    want = {
-        (r.symbol, r.bucket_start): (r.open, r.high, r.low, r.close, r.n_ticks)
-        for r in full.collect()
-    }
-    assert got == want and got
-
-
 def test_vacuum_removes_only_unreferenced(spark, tmp_path):
     import os
 
@@ -475,6 +426,49 @@ def test_vacuum_removes_only_unreferenced(spark, tmp_path):
     assert len(removed) == 3
     assert warehouse.read_snapshot(spark, t).count() == 1
     assert warehouse.list_snapshots(t) == [2]
+
+
+def test_snapshot_rejects_bad_mode_and_keep_last(spark, tmp_path):
+    """A misspelled commit mode must fail before writing (falling
+    through to an overwrite would hide every earlier row from readers
+    of the latest version), and vacuum with keep_last < 1 must fail
+    instead of silently keeping everything."""
+    import os
+
+    from financial_data_ingestion_pipeline_spark.operators import warehouse
+
+    t = str(tmp_path / "tbl")
+    warehouse.snapshot_commit(spark.range(0, 3).withColumnRenamed("id", "k"), t)
+    with pytest.raises(ValueError, match="mode"):
+        warehouse.snapshot_commit(
+            spark.range(3, 5).withColumnRenamed("id", "k"), t, mode="apend"
+        )
+    assert warehouse.list_snapshots(t) == [0]
+    assert len(os.listdir(os.path.join(t, "data"))) == 1
+    assert warehouse.read_snapshot(spark, t).count() == 3
+    with pytest.raises(ValueError, match="keep_last"):
+        warehouse.vacuum_snapshots(t, keep_last=0)
+    assert warehouse.list_snapshots(t) == [0]
+
+
+def test_snapshot_rejects_uri_table_dir(spark, tmp_path, monkeypatch):
+    """Manifests are listed, written and linked with local os calls, so
+    a table_dir with a URI scheme must fail before any Spark job;
+    otherwise the data lands in the store while the manifests land in
+    a relative local directory named after the URI."""
+    from financial_data_ingestion_pipeline_spark.operators import warehouse
+
+    monkeypatch.chdir(tmp_path)  # any stray relative manifest dir stays here
+    df = spark.range(0, 3).withColumnRenamed("id", "k")
+    local = tmp_path / "tbl"
+    with pytest.raises(ValueError, match="local filesystem path"):
+        warehouse.snapshot_commit(df, f"file://{local}")
+    assert not local.exists()
+    for uri in ("s3a://bucket/tbl", f"file://{local}"):
+        with pytest.raises(ValueError, match="local filesystem path"):
+            warehouse.read_snapshot(spark, uri)
+        with pytest.raises(ValueError, match="local filesystem path"):
+            warehouse.snapshot_merge(spark, uri, df, ["k"])
 
 
 @pytest.mark.slow  # slow tier: two-batch e2e ingest (~16 s)
@@ -679,22 +673,6 @@ class TestSnapshotMerge:
         # prior version still reads the pre-delete table (time travel)
         assert warehouse.read_snapshot(spark, t, version=2).count() == 300
 
-    def test_stats_pruned_read(self, spark, tmp_path):
-        from financial_data_ingestion_pipeline_spark.operators import warehouse
-
-        t = str(tmp_path / "tbl")
-        self._seed(spark, t)
-        pruned = warehouse.read_snapshot(spark, t, key_range=(120, 130))
-        # only the middle directory's files are even listed
-        files = pruned.inputFiles()
-        assert files and all("data/000000000001-" in f for f in files)
-        assert pruned.count() == 100  # pruning is I/O-level, not a filter
-        # a range outside every dir reads nothing but keeps the schema
-        empty = warehouse.read_snapshot(spark, t, key_range=(900, 950))
-        assert empty.count() == 0
-        assert set(empty.columns) == {"k", "v"}
-
-
 def test_warehouse_orc_roundtrip_with_pushdown(spark, tmp_path):
     """The ORC sink must round-trip warehouse rows through the same
     date-partitioned layout AND feed predicates to the ORC reader
@@ -726,38 +704,6 @@ def test_warehouse_orc_roundtrip_with_pushdown(spark, tmp_path):
     # partition pruning + stripe-level predicate pushdown in the scan
     assert "PartitionFilters: [isnotnull(trade_date" in plan
     assert "PushedFilters: [IsNotNull(ltp), GreaterThan(ltp,104.0)]" in plan
-
-
-def test_snapshot_changes_and_compaction(spark, tmp_path):
-    """Incremental consumers read only the delta directories between
-    versions; compaction folds many small commits into one directory
-    without changing the data, and old versions stay readable."""
-    from pyspark.sql import functions as F
-
-    from financial_data_ingestion_pipeline_spark.operators import warehouse
-
-    t = str(tmp_path / "tbl")
-    for lo in range(0, 100, 10):  # ten 10-row commits
-        df = spark.range(lo, lo + 10).select(F.col("id").alias("k"))
-        warehouse.snapshot_commit(df, t, stats_col="k")
-
-    # CDC read: delta between v3 and v6 is exactly commits 4..6
-    delta = warehouse.read_snapshot_changes(spark, t, since_version=3,
-                                            to_version=6)
-    assert sorted(r.k for r in delta.collect()) == list(range(40, 70))
-    # no-change delta keeps the schema, yields zero rows
-    assert warehouse.read_snapshot_changes(spark, t, 6, 6).count() == 0
-
-    # compaction: one directory, same rows, prior versions intact
-    v = warehouse.compact_snapshots(spark, t, max_dirs=4, stats_col="k")
-    assert v == 10
-    m = warehouse._load_manifest(t, None)
-    assert len(m["data_dirs"]) == 1
-    assert m["stats"][m["data_dirs"][0]][:2] == [0, 99]
-    assert warehouse.read_snapshot(spark, t).count() == 100
-    assert warehouse.read_snapshot(spark, t, version=2).count() == 30
-    # already compact -> no-op
-    assert warehouse.compact_snapshots(spark, t, max_dirs=4) is None
 
 
 @pytest.mark.slow  # slow tier: python-datasource stream/batch drives (~15 s)
@@ -829,40 +775,6 @@ class TestTickGenDataSource:
         assert run_once() == 24
         got = spark.read.parquet(os.path.join(out, "data"))
         assert got.dropDuplicates(["symbol", "ts"]).count() == 24
-
-
-def test_snapshot_bloom_point_lookup(spark, tmp_path):
-    """The manifest Bloom index prunes point lookups to ~one directory
-    (min/max can't: uniform keys intersect every range), never loses a
-    present key, and survives a merge rewrite."""
-    from pyspark.sql import functions as F
-
-    from financial_data_ingestion_pipeline_spark.operators import warehouse
-
-    t = str(tmp_path / "tbl")
-    # keys striped across dirs: every dir's [min,max] covers everything
-    for stripe in range(4):
-        df = spark.range(0, 25).select(
-            (F.col("id") * 4 + stripe).alias("k"),
-            (F.col("id") * 4 + stripe).cast("double").alias("v"),
-        )
-        warehouse.snapshot_commit(df, t, stats_col="k", bloom_col="k")
-
-    hit = warehouse.read_snapshot_lookup(spark, t, 42)  # 42 = stripe 2
-    rows = hit.collect()
-    assert [(r.k, r.v) for r in rows] == [(42, 42.0)]
-    # bloom pruning actually pruned: candidate files < all files
-    all_files = warehouse.read_snapshot(spark, t).inputFiles()
-    assert len(hit.inputFiles()) < len(all_files)
-
-    # absent key: definitely-absent dirs pruned; exact filter seals it
-    assert warehouse.read_snapshot_lookup(spark, t, 10_001).count() == 0
-
-    # after a merge rewrite, the new directory gets a fresh bloom
-    upd = spark.createDataFrame([(42, -1.0)], "k long, v double")
-    warehouse.snapshot_merge(spark, t, upd, ["k"])
-    out = warehouse.read_snapshot_lookup(spark, t, 42).collect()
-    assert [(r.k, r.v) for r in out] == [(42, -1.0)]
 
 
 def test_snapshot_schema_evolution(spark, tmp_path):

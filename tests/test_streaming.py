@@ -589,61 +589,6 @@ def test_snapshot_stream_restart_is_exactly_once(spark, tmp_path_factory):
     assert warehouse.read_snapshot(spark, t).count() == 2
 
 
-def test_stream_ingest_plus_incremental_mv(spark, tmp_path_factory):
-    """The full continuous-ingest loop: micro-batches land as snapshot
-    commits, the MV refreshes O(increment) after each drain, and the
-    final view equals a recompute over everything ingested."""
-    from financial_data_ingestion_pipeline_spark.operators import warehouse
-    from financial_data_ingestion_pipeline_spark.streaming.ohlc_stream import (
-        write_snapshot_stream,
-    )
-
-    root = tmp_path_factory.mktemp("loop_landing")
-    out = tmp_path_factory.mktemp("loop_out")
-    t = os.path.join(str(out), "tbl")
-    mv = os.path.join(str(out), "mv")
-    ckpt = os.path.join(str(out), "ckpt")
-
-    def drain():
-        q = write_snapshot_stream(
-            stream_ticks(spark, str(root), schema=WAREHOUSE_SCHEMA), t, ckpt
-        )
-        q.awaitTermination()
-        warehouse.maintain_ohlc_mv(spark, t, mv)
-
-    rows1 = [
-        tick("A", f"2022-04-04 09:{i:02d}:00", 100.0 + i) for i in range(10)
-    ]
-    spark.createDataFrame(rows1, schema=WAREHOUSE_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(root))
-    drain()
-    # late batch extends the same hour (merge must fix open/close)
-    rows2 = [
-        tick("A", f"2022-04-04 09:{i:02d}:30", 50.0 + i) for i in range(10)
-    ]
-    spark.createDataFrame(rows2, schema=WAREHOUSE_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(root))
-    drain()
-
-    got = {
-        (r.symbol, r.bucket_start): (r.open, r.high, r.low, r.close, r.n_ticks)
-        for r in warehouse.read_snapshot(spark, mv).collect()
-    }
-    full = warehouse._ohlc_merge(
-        warehouse._ohlc_partial(warehouse.read_snapshot(spark, t))
-    )
-    want = {
-        (r.symbol, r.bucket_start): (r.open, r.high, r.low, r.close, r.n_ticks)
-        for r in full.collect()
-    }
-    assert got == want and got
-    # the late 09:00:30-tick run reopened the hour: open follows first_ts
-    (k,) = [k for k in got if str(k[1]).startswith("2022-04-04 09")]
-    assert got[k][0] == 100.0 and got[k][4] == 20
-
-
 def test_streaming_ewma_bit_exact_batch_parity(spark, tmp_path_factory):
     """The GroupState EWMA must equal the batch lag-ladder EWMA
     bit-for-bit on every row, across a forced multi-micro-batch run
@@ -700,64 +645,6 @@ def test_streaming_ewma_bit_exact_batch_parity(spark, tmp_path_factory):
     want = {r.event_id: (r.n_terms, r.ewma) for r in batch.collect()}
     assert len(got) == 120
     assert got == want  # float equality: parity must be exact, not close
-
-
-def test_streaming_upsert_merges_into_snapshot_table(spark, tmp_path_factory):
-    """Micro-batched CDC upserts land in the snapshot table with
-    last-writer-wins per key, and a batch whose keys touch only one
-    directory carries the other directories forward untouched."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from financial_data_ingestion_pipeline_spark.operators import warehouse
-    from financial_data_ingestion_pipeline_spark.streaming.merge_stream import (
-        upsert_stream,
-    )
-
-    t = str(tmp_path_factory.mktemp("merge_tbl") / "tbl")
-    # seed: two disjoint key ranges in two directories, stats on k
-    for lo in (0, 100):
-        seed = spark.range(lo, lo + 50).select(
-            F.col("id").alias("k"),
-            F.lit(dt.datetime(2024, 1, 1)).alias("ts"),
-            F.lit(0).cast("long").alias("v"),
-        )
-        warehouse.snapshot_commit(seed, t, stats_col="k")
-    seeded = warehouse._load_manifest(t, None)
-
-    # CDC stream: three chronological batches, keys 100-119 only
-    schema = "k long, ts timestamp, v long"
-    land = tmp_path_factory.mktemp("merge_landing")
-    for b in range(3):
-        rows = [
-            (100 + i, dt.datetime(2024, 1, 2 + b), b * 100 + i)
-            for i in range(20)
-        ]
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(land))
-
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(land))
-    )
-    q = upsert_stream(
-        src, t, ["k"],
-        str(tmp_path_factory.mktemp("merge_ckpt")), stats_col="k",
-    )
-    q.awaitTermination()
-
-    out = warehouse.read_snapshot(spark, t)
-    assert out.count() == 100  # same key set, values upserted
-    got = {r.k: r.v for r in out.filter(F.col("k") >= 100).collect()}
-    # last batch wins for the touched keys
-    assert all(got[100 + i] == 200 + i for i in range(20))
-    assert all(got[k] == 0 for k in range(120, 150))  # beyond the batch: untouched
-    final = warehouse._load_manifest(t, None)
-    # the low-range seed directory was never rewritten
-    assert seeded["data_dirs"][0] in final["data_dirs"]
 
 
 def test_streaming_drift_matches_batch(spark, sf_dir, tmp_path_factory):

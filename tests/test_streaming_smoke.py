@@ -3,8 +3,9 @@ dedup -> windowed-OHLC chain and of the arbitrary-state
 (``applyInPandasWithState``) operator, plus stream/batch parity for the
 sinks behind ``streaming/sink.py``: the keyed merge (current-state
 table, OHLC schema guard), the ``batch_id`` partition writer (span,
-overlap and winnow indexes) and the snapshot commit.  The rest of the
-stream/batch parity suite is ``test_streaming.py`` (slow tier)."""
+overlap and winnow indexes) and the snapshot commit and merge.  The
+rest of the stream/batch parity suite is ``test_streaming.py`` (slow
+tier)."""
 
 from __future__ import annotations
 
@@ -430,3 +431,61 @@ def test_snapshot_stream_commits_atomically(spark, tmp_path_factory):
         warehouse.read_snapshot(spark, t, version=v).count() for v in versions
     ]
     assert counts == sorted(counts)
+
+
+def test_streaming_upsert_merges_into_snapshot_table(spark, tmp_path_factory):
+    """Micro-batched CDC upserts land in the snapshot table with
+    last-writer-wins per key, and a batch whose keys touch only one
+    directory carries the other directories forward untouched."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from financial_data_ingestion_pipeline_spark.operators import warehouse
+    from financial_data_ingestion_pipeline_spark.streaming.merge_stream import (
+        upsert_stream,
+    )
+
+    t = str(tmp_path_factory.mktemp("merge_tbl") / "tbl")
+    # seed: two disjoint key ranges in two directories, stats on k
+    for lo in (0, 100):
+        seed = spark.range(lo, lo + 50).select(
+            F.col("id").alias("k"),
+            F.lit(dt.datetime(2024, 1, 1)).alias("ts"),
+            F.lit(0).cast("long").alias("v"),
+        )
+        warehouse.snapshot_commit(seed, t, stats_col="k")
+    seeded = warehouse._load_manifest(t, None)
+
+    # CDC stream: three chronological batches, keys 100-119 only
+    schema = "k long, ts timestamp, v long"
+    land = tmp_path_factory.mktemp("merge_landing")
+    for b in range(3):
+        rows = [
+            (100 + i, dt.datetime(2024, 1, 2 + b), b * 100 + i)
+            for i in range(20)
+        ]
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(str(land))
+
+    src = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(land))
+    )
+    q = upsert_stream(
+        src, t, ["k"],
+        str(tmp_path_factory.mktemp("merge_ckpt")), stats_col="k",
+    )
+    q.awaitTermination()
+
+    out = warehouse.read_snapshot(spark, t)
+    assert out.count() == 100  # same key set, values upserted
+    got = {r.k: r.v for r in out.filter(F.col("k") >= 100).collect()}
+    # last batch wins for the touched keys
+    assert all(got[100 + i] == 200 + i for i in range(20))
+    assert all(got[k] == 0 for k in range(120, 150))  # beyond the batch: untouched
+    final = warehouse._load_manifest(t, None)
+    # the low-range seed directory was never rewritten
+    assert seeded["data_dirs"][0] in final["data_dirs"]
