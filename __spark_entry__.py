@@ -1553,7 +1553,9 @@ def _q_heavy_hitters(spark, sf_dir):
     # commutativity): one corpus scan feeds both sketch and top-k, and
     # the md5 lane hashing runs per DISTINCT term instead of per
     # occurrence (round-11; the occurrence-stream form is
-    # countmin_sketch, kept for the streaming-parity story)
+    # countmin_sketch, kept as the reference that
+    # test_countmin_sketch_from_counts_matches_occurrence_form
+    # compares this form against)
     sk = sketches.countmin_sketch_from_counts(exact, "term", "n_exact")
     # bounded: global window over the distinct-term count frame
     # (vocab-sized), rank-filtered to 50

@@ -91,15 +91,6 @@ def _lit_vec(values: list[float]) -> Column:
     return F.expr("array(" + ",".join(_sql_double(v) for v in values) + ")")
 
 
-def _dot(a: Column, b: Column) -> Column:
-    """Sequential left-fold dot product in double precision."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _sqnorm(a: Column) -> Column:
     return F.aggregate(
         a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
@@ -113,20 +104,6 @@ def _py_sqnorm(vec: list[float]) -> float:
     for x in vec:
         acc += float(x) * float(x)
     return acc
-
-
-def cosine(a: Column, b: Column, decimals: int = 6) -> Column:
-    return F.round(_dot(a, b) / F.sqrt(_sqnorm(a) * _sqnorm(b)), decimals)
-
-
-def cosine_with_norms(
-    a: Column, b: Column, sq_a: Column, sq_b: Column, decimals: int = 6
-) -> Column:
-    """Cosine with precomputed squared norms — same arithmetic shape as
-    :func:`cosine` (``dot / sqrt(sq_a * sq_b)``, bit-identical), but the
-    norms are computed once per *vector* instead of once per *pair*:
-    per-pair work drops from three 64-element folds to one."""
-    return F.round(_dot(a, b) / F.sqrt(sq_a * sq_b), decimals)
 
 
 # ---------------------------------------------------------------------------

@@ -1929,42 +1929,6 @@ def dsir_weights(
     )
 
 
-def dsir_score_table(
-    docs: DataFrame,
-    target_sources: tuple[str, ...],
-    n: int = 2,
-    buckets: int = 1024,
-    text_col: str = "text",
-    source_col: str = "source",
-) -> dict[int, int]:
-    """FIT step of :func:`dsir_weights` alone: the per-bucket quantized
-    log importance ratios as a plain dict, collected to the driver —
-    legal because the result is bounded by ``buckets`` (a constant,
-    never data-sized), exactly like the trained BPE/PQ/IVF constant
-    tables.  The frozen table is what a streaming scorer
-    (``streaming/dsir_stream.py``) or a cross-cluster export consumes;
-    buckets absent from the fit corpus score 0 (the smoothed ratio of
-    two empty counts), which callers should use as the lookup default.
-    """
-    occ = docs.select(
-        F.col(source_col).alias("src"),
-        F.explode(
-            word_ngrams(F.coalesce(F.col(text_col), F.lit("")), n)
-        ).alias("g"),
-    ).select("src", F.pmod(hash64(F.col("g")), F.lit(buckets)).alias("b"))
-    is_tgt = F.col("src").isin(list(target_sources))
-    dists = occ.groupBy("b").agg(
-        F.count(F.lit(1)).alias("r"),
-        F.sum(F.when(is_tgt, F.lit(1)).otherwise(F.lit(0))).alias("t"),
-    )
-    scale = 1 << 20
-    ratio = F.greatest(F.expr(f"({scale} * (t + 1)) div (r + 1)"), F.lit(1))
-    score = dists.select(
-        "b", (F.length(F.bin(ratio)) - F.lit(21)).cast("long").alias("s")
-    )
-    return {int(r["b"]): int(r["s"]) for r in score.collect()}
-
-
 def lm_coverage(
     docs: DataFrame,
     min_count: int = 3,

@@ -88,10 +88,11 @@ def seq_matmul(matrix: list[list[float]]):
     """Column function: ``array<float>`` vector -> ``array<double>`` of
     its sequential-fold dot products against every row of ``matrix``.
 
-    Bit-identical to ``[_dot(vec, m) for m in matrix]`` from
-    ``similarity.py`` (products exact-ordered, additions left-to-right),
-    ~100x cheaper: one numpy sweep per Arrow batch, matrix in the UDF
-    closure instead of 10^3 plan literals.
+    Each dot is ``acc + double(vec[j]) * double(m[j])`` folded over
+    ``j`` ascending from ``acc = 0.0``: one IEEE double multiply and
+    one add per element, additions left-to-right.  One numpy sweep per
+    Arrow batch, with the matrix in the UDF closure instead of 10^3
+    plan literals.
     """
     mat = np.asarray(matrix, dtype=np.float64)
     width, dim = mat.shape
@@ -550,9 +551,11 @@ def fast_cosine_with_norms(
     a: Column, b: Column, sq_a: Column, sq_b: Column, dim: int,
     decimals: int = 6, single_eval: bool = False,
 ) -> Column:
-    """Drop-in for ``similarity.cosine_with_norms`` with the pair dot
-    vectorized; the division, sqrt and round stay single IEEE Column
-    ops, so the result is bit-identical.
+    """Cosine from precomputed squared norms:
+    ``round(dot(a, b) / sqrt(sq_a * sq_b), decimals)``.  The pair dot
+    is the sequential fold ``acc + double(a[j]) * double(b[j])`` over
+    ``j`` ascending (vectorized per Arrow batch); the multiply, sqrt,
+    division and round are single IEEE Column ops.
 
     ``single_eval=True`` marks the pair-dot UDF non-deterministic so a
     caller that FILTERS on the resulting column does not pay for the

@@ -14,11 +14,10 @@ equivalent is *layout*, not indexes:
   bounded (without it, every upstream task writes a file into every
   date partition — at 1000 executors that is millions of tiny files).
 
-``create_warehouse_table`` registers the path in the catalog so
-``spark.sql`` queries see ``second_level_data`` exactly like the
-reference's SQL does (D1); the 5x DDL retry loop (dp:190-212) has no
-Spark analog — writes are atomic per partition and tasks retry
-automatically.
+Readers load the path directly (``read_warehouse``), so the table
+needs no catalog DDL (D1, dp:193-206); the 5x DDL retry loop
+(dp:190-212) has no Spark analog either — writes are atomic per
+partition and tasks retry automatically.
 
 ``jdbc_append`` is the optional fidelity sink matching the reference's
 SQLAlchemy ``to_sql(if_exists='append')`` (S7, dp:249-250).
@@ -40,15 +39,11 @@ def write_warehouse(
     ts_col: str = "timestamp",
     symbol_col: str = "source_symbol",
     partition_col: str = "trade_date",
-    file_format: str = "parquet",
 ) -> None:
     """Land warehouse-schema rows as date-partitioned, symbol/time-sorted
-    columnar files (replaces INSERT dp:214-250 + indexes dp:253-256).
-
-    ``file_format`` accepts any Spark columnar sink with footer
-    statistics — ``parquet`` (default) or ``orc``; both get partition
-    pruning from the date directory and row-group/stripe skipping from
-    the within-partition sort.
+    parquet (replaces INSERT dp:214-250 + indexes dp:253-256): partition
+    pruning from the date directory, row-group skipping from the
+    within-partition sort.
     """
     df = warehouse_rows
     if partition_col not in df.columns:
@@ -58,24 +53,12 @@ def write_warehouse(
         .sortWithinPartitions(symbol_col, ts_col)
         .write.mode(mode)
         .partitionBy(partition_col)
-        .format(file_format)
-        .save(path)
+        .parquet(path)
     )
 
 
-def read_warehouse(
-    spark: SparkSession, path: str, file_format: str = "parquet"
-) -> DataFrame:
-    return spark.read.format(file_format).load(path)
-
-
-def create_warehouse_table(
-    spark: SparkSession, path: str, table: str = TABLE_NAME
-) -> None:
-    """CREATE TABLE IF NOT EXISTS over the parquet path (D1, dp:193-206)."""
-    spark.sql(
-        f"CREATE TABLE IF NOT EXISTS {table} USING PARQUET LOCATION '{path}'"
-    )
+def read_warehouse(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.parquet(path)
 
 
 def write_bucketed_warehouse(

@@ -1,17 +1,3 @@
-from . import (
-    dedup_stream,
-    join_stream,
-    ohlc_stream,
-    scd_stream,
-    sketch_stream,
-    stateful,
-)
+from . import ohlc_stream
 
-__all__ = [
-    "dedup_stream",
-    "join_stream",
-    "ohlc_stream",
-    "scd_stream",
-    "sketch_stream",
-    "stateful",
-]
+__all__ = ["ohlc_stream"]

@@ -123,47 +123,6 @@ def streaming_ohlc(
     )
 
 
-def streaming_sessions(
-    stream: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str | None = "10 minutes",
-    symbol_col: str = "source_symbol",
-    ts_col: str = "timestamp",
-    value_col: str = "ltp",
-) -> DataFrame:
-    """Session windows on the stream — the same ``F.session_window``
-    aggregate as the batch ``operators/analytics.py::sessionize``, run
-    incrementally: session state merges as events arrive and a session
-    finalizes (append-mode emit) once the watermark passes its end.
-    State is O(open sessions), bounded by the watermark.
-
-    Same output columns as the batch operator, so stream/batch parity
-    is a direct DataFrame comparison (see tests).
-    """
-    src = _as_event_time(stream, ts_col)
-    if watermark is not None:
-        src = src.withWatermark(ts_col, watermark)
-    return (
-        src.groupBy(
-            F.session_window(F.col(ts_col), gap).alias("w"),
-            F.col(symbol_col).alias("symbol"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col(value_col).cast("decimal(28,2)"))
-            .cast("double")
-            .alias("total_value"),
-        )
-        .select(
-            "symbol",
-            F.col("w.start").cast("timestamp_ntz").alias("session_start"),
-            F.col("w.end").cast("timestamp_ntz").alias("session_end"),
-            "n_events",
-            "total_value",
-        )
-    )
-
-
 def write_ohlc_table(
     ohlc_stream: DataFrame,
     out_path: str,

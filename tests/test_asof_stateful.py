@@ -1,24 +1,15 @@
-"""As-of join correctness (vs an explicit per-row expectation) and the
-applyInPandasWithState running-VWAP operator (vs batch truth)."""
+"""As-of join correctness: backward/forward, inclusive/exclusive and
+skew-bucketed joins against explicit per-row expectations."""
 
 from __future__ import annotations
 
 import datetime as dt
-import os
 
 import pytest
-
-from pyspark.sql import functions as F
 
 from financial_data_ingestion_pipeline_spark.operators.asof import (
     asof_join_backward,
     asof_join_forward,
-)
-from financial_data_ingestion_pipeline_spark.schemas import WAREHOUSE_SCHEMA
-from financial_data_ingestion_pipeline_spark.session import ensure_runtime_conf
-from financial_data_ingestion_pipeline_spark.streaming.ohlc_stream import stream_ticks
-from financial_data_ingestion_pipeline_spark.streaming.stateful import (
-    running_symbol_stats,
 )
 
 
@@ -152,66 +143,3 @@ def test_asof_skew_bucketed_matches_plain(spark, trades_quotes):
     assert p == b == {1: None, 2: 100.0, 3: 100.0, 4: 101.0, 5: 50.0}
     # plan shape: window partitioning includes the bucket key
     assert "__asof_bkt" in bucketed._jdf.queryExecution().executedPlan().toString()
-
-
-def test_running_vwap_across_microbatches(spark, tmp_path_factory):
-    ensure_runtime_conf(spark)
-    root = tmp_path_factory.mktemp("vwap_landing")
-    rows1, rows2 = [], []
-    for i in range(5):
-        rows1.append(("ALPHA", _ts(f"2022-04-04 09:00:{i:02d}"), 100.0 + i,
-                      10.0, 0.0, 0.0, 0.0, 0.0, 0.0))
-        rows2.append(("ALPHA", _ts(f"2022-04-04 09:01:{i:02d}"), 110.0 + i,
-                      20.0, 0.0, 0.0, 0.0, 0.0, 0.0))
-        rows2.append(("BETA", _ts(f"2022-04-04 09:01:{i:02d}"), 50.0 + i,
-                      5.0, 0.0, 0.0, 0.0, 0.0, 0.0))
-    cols = [f.name for f in WAREHOUSE_SCHEMA.fields]
-    order = ["source_symbol", "timestamp", "ltp", "ltq", "oi", "bid",
-             "bid_qty", "ask", "ask_qty"]
-    assert order == cols
-    spark.createDataFrame(rows1, WAREHOUSE_SCHEMA).coalesce(1).write.parquet(
-        str(root), mode="append")
-    spark.createDataFrame(rows2, WAREHOUSE_SCHEMA).coalesce(1).write.parquet(
-        str(root), mode="append")
-
-    stream = stream_ticks(spark, str(root), schema=WAREHOUSE_SCHEMA,
-                          max_files_per_trigger=1)
-    emitted: list = []
-
-    def sink(batch, batch_id):
-        emitted.extend(batch.collect())
-
-    ckpt = str(tmp_path_factory.mktemp("vwap_ckpt"))
-    q = (
-        running_symbol_stats(stream)
-        .writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    # state accumulated across >= 2 micro-batches (maxFilesPerTrigger=1)
-    assert len(emitted) >= 3
-    final = {}
-    for r in emitted:  # last emission per symbol wins
-        final[r.symbol] = r
-
-    batch_truth = {
-        r.symbol: r
-        for r in (
-            spark.read.parquet(str(root))
-            .groupBy(F.col("source_symbol").alias("symbol"))
-            .agg(
-                (F.sum(F.col("ltp") * F.col("ltq")) / F.sum("ltq")).alias("vwap"),
-                F.sum("ltq").alias("total_qty"),
-                F.count(F.lit(1)).alias("n_ticks"),
-            )
-            .collect()
-        )
-    }
-    for sym in ("ALPHA", "BETA"):
-        assert final[sym].n_ticks == batch_truth[sym].n_ticks
-        assert final[sym].total_qty == batch_truth[sym].total_qty
-        assert final[sym].vwap == pytest.approx(batch_truth[sym].vwap)

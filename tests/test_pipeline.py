@@ -673,38 +673,6 @@ class TestSnapshotMerge:
         # prior version still reads the pre-delete table (time travel)
         assert warehouse.read_snapshot(spark, t, version=2).count() == 300
 
-def test_warehouse_orc_roundtrip_with_pushdown(spark, tmp_path):
-    """The ORC sink must round-trip warehouse rows through the same
-    date-partitioned layout AND feed predicates to the ORC reader
-    (partition pruning + stripe-level pushdown in the scan plan)."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from financial_data_ingestion_pipeline_spark.operators import warehouse
-
-    rows = [
-        ("X", dt.datetime(2022, 4, 4 + d, 10, 0, 0), 100.0 + i)
-        for d in range(3)
-        for i in range(10)
-    ]
-    df = spark.createDataFrame(
-        rows, "source_symbol string, timestamp timestamp, ltp double"
-    )
-    out = str(tmp_path / "wh_orc")
-    warehouse.write_warehouse(df, out, mode="error", file_format="orc")
-    back = warehouse.read_warehouse(spark, out, file_format="orc")
-    assert back.count() == 30
-    q = back.filter(
-        (F.col("trade_date") == "2022-04-05") & (F.col("ltp") > 104)
-    )
-    assert q.count() == 5
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "Format: ORC" in plan
-    # partition pruning + stripe-level predicate pushdown in the scan
-    assert "PartitionFilters: [isnotnull(trade_date" in plan
-    assert "PushedFilters: [IsNotNull(ltp), GreaterThan(ltp,104.0)]" in plan
-
 
 @pytest.mark.slow  # slow tier: python-datasource stream/batch drives (~15 s)
 class TestTickGenDataSource:

@@ -1,11 +1,9 @@
-"""Default-tier streaming tests: one availableNow drive each of the
-dedup -> windowed-OHLC chain and of the arbitrary-state
-(``applyInPandasWithState``) operator, plus stream/batch parity for the
-sinks behind ``streaming/sink.py``: the keyed merge (current-state
-table, OHLC schema guard), the ``batch_id`` partition writer (span,
-overlap and winnow indexes) and the snapshot commit and merge.  The
-rest of the stream/batch parity suite is ``test_streaming.py`` (slow
-tier)."""
+"""Default-tier streaming tests: one availableNow drive of the
+dedup -> windowed-OHLC chain, plus stream/batch parity for the sinks
+behind ``streaming/sink.py``: the keyed merge (OHLC schema guard), the
+``batch_id`` partition writer (span, overlap and winnow indexes) and
+the snapshot commit and merge.  The rest of the stream/batch parity
+suite is ``test_streaming.py`` (slow tier)."""
 
 from __future__ import annotations
 
@@ -43,80 +41,6 @@ def test_streaming_dedup_then_ohlc(spark, landing, tmp_path_factory):
     alpha9 = rows[("ALPHA", "2022-04-04 09:00:00")]
     assert alpha9.n_ticks == 6
     assert alpha9.open == 109.0 and alpha9.close == 114.0
-
-
-def test_pattern_alerts_matches_batch(spark, tmp_path_factory):
-    """Streaming CEP-with-negation emits exactly the batch
-    pattern_match pairs across multiple micro-batches, and event-time
-    timeouts free expired state without emitting."""
-    import datetime as dt
-
-    from financial_data_ingestion_pipeline_spark.operators.analytics import (
-        pattern_match,
-    )
-    from financial_data_ingestion_pipeline_spark.streaming.stateful import (
-        pattern_alerts,
-    )
-
-    t = lambda h, m, s=0: dt.datetime(2024, 1, 1, h, m, s)  # noqa: E731
-    schema = "event_id long, user_id long, ts timestamp, kind string"
-    rows_b1 = [
-        (1, 1, t(9, 0), "click"),
-        (2, 1, t(9, 10), "purchase"),     # match (600 s)
-        (3, 2, t(9, 0), "click"),
-        (4, 2, t(9, 5), "error"),
-    ]
-    rows_b2 = [
-        (5, 2, t(9, 10), "purchase"),     # blocked by the error
-        (6, 3, t(9, 0), "click"),
-        (7, 1, t(9, 20), "purchase"),     # second match off the same click
-        (8, 99, t(11, 0), "click"),       # watermark carrier
-    ]
-    rows_b3 = [
-        (9, 3, t(12, 0), "purchase"),     # outside gap (state timed out)
-        (10, 99, t(13, 0), "click"),      # watermark carrier
-    ]
-    root = tmp_path_factory.mktemp("cep_landing")
-    for rows in (rows_b1, rows_b2, rows_b3):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(root))
-
-    out = tmp_path_factory.mktemp("cep_out")
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(root))
-        .withWatermark("ts", "10 minutes")
-    )
-    q = (
-        pattern_alerts(src, first="click", second="purchase",
-                       without="error", gap_seconds=3600)
-        .writeStream.format("parquet")
-        .option("path", os.path.join(str(out), "data"))
-        .option("checkpointLocation", os.path.join(str(out), "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    streamed = {
-        (r.user_id, str(r.first_ts), str(r.second_ts), r.wait_seconds)
-        for r in spark.read.parquet(os.path.join(str(out), "data")).collect()
-    }
-
-    batch_df = spark.createDataFrame(
-        rows_b1 + rows_b2 + rows_b3, schema
-    ).withColumnRenamed("kind", "event_type")
-    batch = {
-        (r.user_id, str(r.first_ts), str(r.second_ts), r.wait_seconds)
-        for r in pattern_match(
-            batch_df, first="click", second="purchase",
-            without="error", gap="1 hour",
-        ).collect()
-    }
-    assert streamed == batch
-    assert len(streamed) == 2  # user 1 twice; user 2 blocked; user 3 expired
 
 
 def test_ohlc_merge_schema_mismatch_fails_and_keeps_table(spark, tmp_path):
@@ -340,62 +264,6 @@ def test_streaming_winnow_index_matches_batch(spark, tmp_path_factory):
         for r in winnow_cross_pairs(batch, corpus).collect()
     }
     assert recompute == got
-
-
-def test_streaming_current_state_matches_batch_scd2(spark, tmp_path_factory):
-    """Multi-batch streamed current-state table == the batch SCD2
-    build's is_current rows — including a LATE update in a later
-    micro-batch that must not regress an already-newer key."""
-    import datetime as dt
-
-    from financial_data_ingestion_pipeline_spark.operators.analytics import (
-        scd2_history,
-    )
-    from financial_data_ingestion_pipeline_spark.streaming.scd_stream import (
-        streaming_current_state,
-        write_current_state,
-    )
-
-    t = lambda h, m=0: dt.datetime(2024, 1, 1, h, m)  # noqa: E731
-    schema = (
-        "event_id long, ts timestamp, user_id long, "
-        "event_type string, value double"
-    )
-    # file 1: initial values; file 2: one newer update for (price, 7)
-    # and one LATE (older-than-file-1) update for (price, 8)
-    f1 = [(1, t(9), 7, "price", 10.0), (2, t(10), 8, "price", 20.0)]
-    f2 = [(3, t(11), 7, "price", 11.0), (4, t(8), 8, "price", 19.0)]
-    root = tmp_path_factory.mktemp("scd_landing")
-    spark.createDataFrame(f1, schema).coalesce(1).write.mode("append").parquet(
-        str(root)
-    )
-    spark.createDataFrame(f2, schema).coalesce(1).write.mode("append").parquet(
-        str(root)
-    )
-
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)  # force >1 micro-batch
-        .parquet(str(root))
-    )
-    out = tmp_path_factory.mktemp("scd_out")
-    q = write_current_state(
-        streaming_current_state(src),
-        out_path=os.path.join(str(out), "data"),
-        checkpoint=os.path.join(str(out), "ckpt"),
-    )
-    q.awaitTermination()
-    got = {
-        (r.event_type, r.user_id): (r.value, str(r.updated_at))
-        for r in spark.read.parquet(os.path.join(str(out), "data")).collect()
-    }
-    batch = scd2_history(spark.createDataFrame(f1 + f2, schema))
-    want = {
-        (r.event_type, r.user_id): (r.value, str(r.valid_from))
-        for r in batch.filter(F.col("is_current")).collect()
-    }
-    assert got == want
-    assert got[("price", 8)][0] == 20.0  # late row did not regress
 
 
 def test_snapshot_stream_commits_atomically(spark, tmp_path_factory):
