@@ -775,9 +775,8 @@ def append_to_ivf_index(
     cells it touches, so probes keep pruning and no existing data is
     rewritten.  This is why the quantizer is frozen (the production
     IVF pattern): re-training would move cell boundaries and require a
-    full re-index.  Over many appends, compact hot cell directories
-    with ``operators.warehouse.compact_partition`` (``cell`` is the
-    partition column)."""
+    full re-index.  Many appends leave many small files in hot cell
+    directories; the package has no compaction step for them."""
     write_ivf_index(
         new_vectors, path, centroids, id_col=id_col, vec_col=vec_col,
         mode="append",

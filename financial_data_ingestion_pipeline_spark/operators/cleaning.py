@@ -17,21 +17,15 @@ from pyspark.sql import functions as F
 from ..schemas import TICK_MEASURES, TICK_TO_WAREHOUSE
 
 
-def clean_ticks(
-    raw: DataFrame,
-    symbol_suffix: str = r"\.NSE$",
-    keep: tuple[str, ...] = (),
-) -> DataFrame:
+def clean_ticks(raw: DataFrame, symbol_suffix: str = r"\.NSE$") -> DataFrame:
     """Raw tick CSV rows -> cleaned tick schema (dp:79-90).
 
     - ``Ticker``: strip the exchange suffix (dp:79).
     - ``Timestamp``: parse ``Date || ' ' || Time`` (dp:80); unparseable
       -> NULL (``try_to_timestamp``).
     - measures: string -> double, garbage -> NULL (dp:82-88).
-    - ``keep``: extra metadata columns passed through unchanged.
     """
     return raw.select(
-        *[F.col(c) for c in keep],
         F.regexp_replace(F.col("Ticker"), symbol_suffix, "").alias("Ticker"),
         F.try_to_timestamp(F.concat_ws(" ", "Date", "Time"))
         .cast("timestamp_ntz")

@@ -29,6 +29,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..schemas import WAREHOUSE_TABLE_SCHEMA
+
 TABLE_NAME = "second_level_data"
 
 
@@ -44,6 +46,12 @@ def write_warehouse(
     parquet (replaces INSERT dp:214-250 + indexes dp:253-256): partition
     pruning from the date directory, row-group skipping from the
     within-partition sort.
+
+    ``mode="overwrite"`` replaces only the dates present in
+    ``warehouse_rows`` (dynamic partition overwrite, set per write): a
+    daily load keeps the earlier days, as the reference's
+    ``to_sql(if_exists='append')`` does (dp:249-250), and re-running a
+    day rewrites just that day.
     """
     df = warehouse_rows
     if partition_col not in df.columns:
@@ -52,13 +60,16 @@ def write_warehouse(
         df.repartition(F.col(partition_col))
         .sortWithinPartitions(symbol_col, ts_col)
         .write.mode(mode)
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partition_col)
         .parquet(path)
     )
 
 
 def read_warehouse(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """The warehouse table read with its known schema, so Spark runs no
+    footer-inference job to learn it."""
+    return spark.read.schema(WAREHOUSE_TABLE_SCHEMA).parquet(path)
 
 
 def write_bucketed_warehouse(
@@ -87,54 +98,6 @@ def write_bucketed_warehouse(
         .format("parquet")
         .saveAsTable(table)
     )
-
-
-def compact_partition(
-    spark: SparkSession,
-    path: str,
-    partition_col: str,
-    partition_value: str,
-    target_rows_per_file: int = 5_000_000,
-    symbol_col: str = "source_symbol",
-    ts_col: str = "timestamp",
-) -> int:
-    """Compact one date partition's small files into few sorted files —
-    the maintenance job every streaming/append warehouse needs: each
-    micro-batch or daily ingest appends its own files, and after N
-    ingests a partition holds N× more files than optimal (scan cost and
-    namenode pressure grow with file COUNT, not bytes).
-
-    Reads only the target partition (partition pruning), coalesces to
-    ``ceil(rows / target_rows_per_file)`` files, restores the
-    (symbol, time) sort so row-group skipping keeps working, and swaps
-    JUST that partition directory — the compacted files land in a
-    sibling temp dir first, then replace the original in one rename
-    (never overwrite-while-reading: a failure mid-write leaves the old
-    partition intact, and a rerun is idempotent).  Other dates are
-    untouched.  Returns the file count written.  Run it against closed
-    partitions only (yesterday and older) so it never races an active
-    writer.
-    """
-    part_dir = f"{path}/{partition_col}={partition_value}"
-    # dot-prefixed dirs are invisible to Spark's file index, so a
-    # concurrent table reader never sees the in-flight copy as a
-    # (bogus) extra partition
-    tmp_dir = f"{path}/.compact_tmp/{partition_col}={partition_value}"
-    df = spark.read.parquet(part_dir)
-    n_rows = df.count()
-    n_files = max(1, -(-n_rows // target_rows_per_file))
-    (
-        df.repartition(n_files)
-        .sortWithinPartitions(symbol_col, ts_col)
-        .write.mode("overwrite")
-        .parquet(tmp_dir)
-    )
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(part_dir)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(hpath, True)
-    fs.rename(jvm.org.apache.hadoop.fs.Path(tmp_dir), hpath)
-    return n_files
 
 
 def is_missing_path(e: AnalysisException) -> bool:

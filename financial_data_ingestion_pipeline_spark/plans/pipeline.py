@@ -11,16 +11,27 @@ Reference task graph (dp:425-427)::
 Mapping here (orchestration collapses — several "tasks" are one
 distributed job or pure layout policy):
 
-- extract+transform  -> :func:`ingest` (S1-S4, one job over the tree)
-- data_quality_checks -> :func:`quality_reports` (three report tables,
-  computed per trading day — quirk Q5 fixed)
+- extract+transform  -> :func:`ingest` (S1-S2: a lazy, cleaned scan of
+  the CSV tree; it runs no job and writes nothing)
 - create_table+insert+indexes -> :func:`load_warehouse`
-  (date-partitioned sorted parquet; indexes are layout, D1-D2)
+  (date-partitioned sorted parquet; indexes are layout, D1-D2).  This
+  is the one landing of the ticks: the reference writes them twice, as
+  parquet (dp:60-94) and into Postgres (dp:214-256); here the cleaned
+  rows go straight into the warehouse, replacing only the run's days.
+- data_quality_checks -> :func:`quality_reports` (three report tables,
+  computed per trading day — quirk Q5 fixed) from the warehouse rows
+  the run landed.  The reference's quality task only writes reports
+  and never gates the load, so running it after the load changes no
+  output.
 - price_change_query -> :func:`analytics_outputs`
 - create_matview      -> hourly OHLC aggregate table (D3)
 - parametrized aggregation (dp:316-347) -> honored params incl.
   ``symbols`` (Q6 fixed) and a real ``agg_folder`` output path
   (the reference hardcodes '/path/to/save/...', dp:347)
+
+:func:`run_pipeline` runs them in this order: ``ingest`` ->
+``load_warehouse`` -> ``read_warehouse`` (known schema, no inference
+job) -> ``quality_reports`` -> ``analytics_outputs``.
 
 Airflow retries/scheduling are dropped: Spark retries tasks itself, and
 the `@daily` trigger belongs to whatever cron/driver invokes
@@ -32,13 +43,18 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import analytics, ohlc, quality, warehouse
-from ..operators.cleaning import to_warehouse
-from ..schemas import BHAVCOPY_SCHEMA, TICK_MEASURES, WAREHOUSE_MEASURES
-from ..sources.ingest import ingest_to_parquet, read_tick_csvs
+from ..operators.cleaning import clean_ticks, to_warehouse
+from ..schemas import (
+    BHAVCOPY_SCHEMA,
+    TICK_CLEAN_SCHEMA,
+    TICK_TO_WAREHOUSE,
+    WAREHOUSE_MEASURES,
+)
+from ..sources.ingest import read_tick_csvs
 
 
 @dataclass
@@ -58,13 +74,11 @@ class PipelineConfig:
 
 
 def ingest(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
-    """extract (S1) + transform-to-parquet (S2/S4) as one distributed job."""
-    raw = read_tick_csvs(spark, cfg.tick_root)
-    path = os.path.join(cfg.out_dir, "cleaned_parquet")
-    ingest_to_parquet(raw, path)
-    # read the landed parquet back: downstream stages then scan the
-    # columnar, date-partitioned copy instead of re-parsing CSV per action
-    return spark.read.parquet(path)
+    """extract (S1) + transform (S2): the cleaned ticks as a lazy frame.
+
+    No job runs here and nothing is written: :func:`load_warehouse` is
+    the one pass over the CSVs."""
+    return clean_ticks(read_tick_csvs(spark, cfg.tick_root))
 
 
 def read_bhavcopy(spark: SparkSession, path: str) -> DataFrame:
@@ -75,27 +89,30 @@ def read_bhavcopy(spark: SparkSession, path: str) -> DataFrame:
 def quality_reports(
     spark: SparkSession,
     cfg: PipelineConfig,
-    cleaned: DataFrame,
+    wh: DataFrame,
     bhavcopy: DataFrame | None,
 ) -> dict[str, DataFrame]:
     """The three quality report tables (dp:96-186), written as CSV (S6).
 
-    Per trading day, not per file (Q5): invalid rows, missing tickers
-    (golden universe anti-join), and OHLC-vs-golden reconciliation.
+    Read from the landed warehouse rows of the run's days.  Per trading
+    day, not per file (Q5): invalid rows, missing tickers (golden
+    universe anti-join), and OHLC-vs-golden reconciliation.  The
+    invalid-row report keeps the cleaned tick column names.
     """
+    invalid = quality.invalid_rows(wh, WAREHOUSE_MEASURES)
     reports: dict[str, DataFrame] = {
-        "invalid_values": quality.invalid_rows(cleaned, TICK_MEASURES)
+        "invalid_values": invalid.select(
+            *[F.col(TICK_TO_WAREHOUSE[c]).alias(c) for c in TICK_CLEAN_SCHEMA.names],
+            "trade_date",
+        )
     }
     if bhavcopy is not None:
         reports["missing_tickers"] = quality.missing_symbols(
-            bhavcopy.select("SYMBOL"), cleaned, "SYMBOL", "Ticker"
+            bhavcopy.select("SYMBOL"), wh, "SYMBOL", "source_symbol"
         )
         reports["ohlc_reconciliation"] = quality.ohlc_reconciliation(
-            cleaned,
+            wh,
             bhavcopy.select("SYMBOL", "OPEN", "HIGH", "LOW", "CLOSE"),
-            symbol_col="Ticker",
-            ts_col="Timestamp",
-            price_col="LTP",
             tie_cols=cfg.tie_cols,
         )
     for name, df in reports.items():
@@ -107,10 +124,12 @@ def quality_reports(
 
 
 def load_warehouse(spark: SparkSession, cfg: PipelineConfig, cleaned: DataFrame) -> str:
-    """create_table + insert + "indexes" (D1-D2, S7) -> partitioned parquet."""
+    """create_table + insert + "indexes" (D1-D2, S7) -> partitioned parquet.
+
+    Replaces only the trading days in ``cleaned``; earlier days stay.
+    """
     path = os.path.join(cfg.out_dir, "warehouse", warehouse.TABLE_NAME)
-    rows = to_warehouse(cleaned)
-    warehouse.write_warehouse(rows, path, mode="overwrite")
+    warehouse.write_warehouse(to_warehouse(cleaned), path, mode="overwrite")
     return path
 
 
@@ -149,13 +168,30 @@ def analytics_outputs(
     return out
 
 
+def _landed_days(landed: Observation) -> Column:
+    """Predicate on ``trade_date`` selecting the partitions the run's
+    load wrote.  The warehouse keeps earlier days, but the reports cover
+    the run's ticks only, as the reference's do.  Ticks without a
+    timestamp land in the NULL partition, which the load replaced only
+    if the run had such ticks."""
+    m = landed.get
+    pred = F.col("trade_date").isin(m["days"])
+    return pred | F.col("trade_date").isNull() if m["undated"] else pred
+
+
 def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, object]:
-    """The whole DAG, in dependency order (dp:425-427)."""
-    cleaned = ingest(spark, cfg)
-    bhav = read_bhavcopy(spark, cfg.bhavcopy_csv) if cfg.bhavcopy_csv else None
-    reports = quality_reports(spark, cfg, cleaned, bhav)
+    """The whole DAG: land the day once, then report and aggregate from
+    the warehouse."""
+    landed = Observation("landed_days")
+    cleaned = ingest(spark, cfg).observe(
+        landed,
+        F.collect_set(F.to_date("Timestamp")).alias("days"),
+        F.bool_or(F.col("Timestamp").isNull()).alias("undated"),
+    )
     wh_path = load_warehouse(spark, cfg, cleaned)
     wh = warehouse.read_warehouse(spark, wh_path)
+    bhav = read_bhavcopy(spark, cfg.bhavcopy_csv) if cfg.bhavcopy_csv else None
+    reports = quality_reports(spark, cfg, wh.filter(_landed_days(landed)), bhav)
     outputs = analytics_outputs(spark, cfg, wh)
     return {"warehouse_path": wh_path, "reports": reports, "outputs": outputs}
 

@@ -58,6 +58,12 @@ WAREHOUSE_SCHEMA = T.StructType(
     ]
 )
 
+#: The landed warehouse table as read back: the rows plus the
+#: ``trade_date`` partition column (``to_date(timestamp)``).
+WAREHOUSE_TABLE_SCHEMA = T.StructType(
+    WAREHOUSE_SCHEMA.fields + [T.StructField("trade_date", T.DateType())]
+)
+
 #: Column rename map, ingest names -> warehouse names (dp:228-238).
 TICK_TO_WAREHOUSE = {
     "Ticker": "source_symbol",

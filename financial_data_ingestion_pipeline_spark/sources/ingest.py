@@ -1,10 +1,11 @@
-"""Tick-data ingestion: zips -> CSV tree -> cleaned parquet (S1-S4, F8).
+"""Tick-data ingestion: zips -> CSV tree -> raw tick DataFrame (S1-S2, F8).
 
 The reference (``data_platform_final.py``) does this as two sequential
 Airflow tasks: ``extract_zip_files`` (dp:53-59) unzips every archive in
 a folder, then ``transform_data_to_parquet`` (dp:60-94) walks the
 extracted tree and converts one CSV at a time with pandas.  Here the
-whole tree is ONE distributed job:
+whole tree is ONE lazy scan, cleaned and landed straight into the
+warehouse by ``plans.pipeline`` (no intermediate parquet copy):
 
 - ``spark.read.csv`` over the directory tree (``recursiveFileLookup``)
   replaces the ``os.walk`` loop (dp:73-76) — every file split becomes a
@@ -12,7 +13,7 @@ whole tree is ONE distributed job:
 - the trading day is recovered from the folder name
   ``STOCK_TICK_DDMMYYYY`` (``convert_folder_name``, dp:15-32) as a
   *column* via ``input_file_name()`` + ``regexp_extract`` — no driver
-  loop, and it becomes the warehouse partition key.
+  loop.
 - zip handling has two paths: a driver-side ``extract_zip_files``
   mirroring dp:53-59 for small batches, and a fully distributed
   ``read_zipped_tick_csvs`` (``binaryFile`` scan + ``mapInPandas``
@@ -30,7 +31,6 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.cleaning import clean_ticks
 from ..schemas import TICK_RAW_SCHEMA
 
 #: folder convention STOCK_TICK_DDMMYYYY (dp:16); the regex also accepts
@@ -142,27 +142,3 @@ def read_zipped_tick_csvs(spark: SparkSession, zip_glob: str) -> DataFrame:
 
     archives = spark.read.format("binaryFile").load(zip_glob).select("path", "content")
     return archives.mapInPandas(unzip, schema=out_schema)
-
-
-def ingest_to_parquet(
-    raw: DataFrame,
-    out_path: str,
-    mode: str = "overwrite",
-) -> DataFrame:
-    """Clean raw ticks and land them as date-partitioned parquet (S4).
-
-    Replaces the one-parquet-file-per-CSV layout (dp:92-94) with
-    ``partitionBy(trade_date)`` — the partition unit the reference
-    encodes in folder names becomes a real pruning key.  Rows whose
-    folder name carries no date fall back to the tick's own date.
-    """
-    keep = ("trade_date",) if "trade_date" in raw.columns else ()
-    base = clean_ticks(raw, keep=keep)
-    base = base.withColumn(
-        "trade_date",
-        F.coalesce(F.col("trade_date"), F.to_date("Timestamp"))
-        if keep
-        else F.to_date("Timestamp"),
-    )
-    base.write.mode(mode).partitionBy("trade_date").parquet(out_path)
-    return base

@@ -17,8 +17,8 @@ unprobed cells inside every batch directory, and the extra
 
 This is the 100 TB ingestion shape for a vector store on plain
 parquet: encode-on-arrival (Arrow-batched, no driver involvement),
-append-only partitions, compaction as a separate offline concern
-(``operators.warehouse.compact_partition``).
+append-only partitions.  Compacting the small files that many batches
+leave is an offline concern the package does not implement.
 """
 
 from __future__ import annotations

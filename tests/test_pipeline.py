@@ -114,44 +114,58 @@ def test_warehouse_contents(spark, pipeline_result):
     assert wh.filter("ltp IS NULL").count() == 1
 
 
-def test_compact_partition_preserves_data(spark, tmp_path_factory):
-    """Compaction rewrites one date's many small appended files into
-    few sorted files: same rows, fewer files, other partitions
-    untouched."""
-    import datetime as dt
-    import glob
+def test_daily_runs_keep_earlier_days(spark, tmp_path_factory):
+    """Each run lands only its own days: a second day into the same
+    ``out_dir`` keeps the first (the reference appends, dp:249-250),
+    re-running a day replaces just that day, and the quality reports
+    cover only the days the run landed."""
+    root = str(tmp_path_factory.mktemp("daily"))
+    day1 = _write_day(os.path.join(root, "d1"), "04042022", "2022-04-04", dirty=True)
+    day2 = _write_day(os.path.join(root, "d2"), "05042022", "2022-04-05", dirty=False)
+    out = os.path.join(root, "out")
 
-    from financial_data_ingestion_pipeline_spark.operators.warehouse import (
-        compact_partition,
-        write_warehouse,
+    def run(tick_root):
+        cfg = PipelineConfig(tick_root=tick_root, bhavcopy_csv=None, out_dir=out)
+        res = run_pipeline(spark, cfg)
+        wh = spark.read.parquet(res["warehouse_path"])
+        days = {str(r.trade_date): r.n for r in wh.groupBy("trade_date").count()
+                .withColumnRenamed("count", "n").collect()}
+        return days, res["reports"]["invalid_values"].count()
+
+    assert run(day1) == ({"2022-04-04": 32}, 2)
+    assert run(day2) == ({"2022-04-04": 32, "2022-04-05": 30}, 0)
+    assert run(day1) == ({"2022-04-04": 32, "2022-04-05": 30}, 2)
+
+
+def test_pipeline_lands_ticks_once(spark, tick_drop, tmp_path_factory):
+    """The DAG writes no intermediate cleaned copy, keeps the cleaned
+    column names in the invalid-row report, and stays within the job
+    budget of landing the ticks once (13 jobs on this fixture; the
+    two-landing form took 16)."""
+    extracted = os.path.join(tick_drop["root"], "extracted_once")
+    extract_zip_files(tick_drop["zips"], extracted)
+    cfg = PipelineConfig(
+        tick_root=extracted,
+        bhavcopy_csv=tick_drop["bhavcopy"],
+        out_dir=str(tmp_path_factory.mktemp("once_out")),
     )
-    from financial_data_ingestion_pipeline_spark.schemas import WAREHOUSE_SCHEMA
-
-    path = str(tmp_path_factory.mktemp("wh_compact") / "wh")
-    # 6 small appends into the same date = many files
-    for batch in range(6):
-        rows = [
-            ("ALPHA", dt.datetime(2022, 4, 4, 9, batch, i), 100.0 + i,
-             5.0, 0.0, 99.5, 10.0, 100.5, 12.0)
-            for i in range(10)
-        ]
-        write_warehouse(
-            spark.createDataFrame(rows, WAREHOUSE_SCHEMA), path, mode="append"
-        )
-    # plus one other date that must remain untouched
-    other = [("BETA", dt.datetime(2022, 4, 5, 9, 0, 0), 1.0,
-              5.0, 0.0, 99.5, 10.0, 100.5, 12.0)]
-    write_warehouse(spark.createDataFrame(other, WAREHOUSE_SCHEMA), path,
-                    mode="append")
-
-    part = f"{path}/trade_date=2022-04-04"
-    before = spark.read.parquet(path).orderBy("timestamp").collect()
-    assert len(glob.glob(f"{part}/*.parquet")) >= 6
-    n_files = compact_partition(spark, path, "trade_date", "2022-04-04")
-    assert n_files == 1
-    assert len(glob.glob(f"{part}/*.parquet")) == 1
-    after = spark.read.parquet(path).orderBy("timestamp").collect()
-    assert after == before
+    sc = spark.sparkContext
+    group = "test-pipeline-lands-ticks-once"
+    sc.setJobGroup(group, group)
+    try:
+        run_pipeline(spark, cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert not os.path.exists(os.path.join(cfg.out_dir, "cleaned_parquet"))
+    (csv_path,) = glob.glob(os.path.join(cfg.out_dir, "reports", "invalid_values", "*.csv"))
+    with open(csv_path, newline="") as fh:
+        header = next(csv.reader(fh))
+    assert header == [
+        "Ticker", "Timestamp", "LTP", "BuyPrice", "BuyQty", "SellPrice",
+        "SellQty", "LTQ", "OpenInterest", "trade_date",
+    ]
+    assert n_jobs <= 13, n_jobs
 
 
 def test_quality_reports(spark, pipeline_result):

@@ -83,7 +83,6 @@ TEST_ONLY = frozenset(
         "streaming/ohlc_stream.py::run_ohlc_stream_once",
         "streaming/ohlc_stream.py::write_snapshot_stream",
         # alternative warehouse layouts and sinks
-        "operators/warehouse.py::compact_partition",
         "operators/warehouse.py::jdbc_append",
         "operators/warehouse.py::write_bucketed_warehouse",
         "operators/warehouse.py::zorder_write",
