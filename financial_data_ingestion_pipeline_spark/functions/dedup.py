@@ -2066,11 +2066,10 @@ def source_overlap_from_index(spark, path: str) -> DataFrame:
 
 def _compact_posting_table(
     spark, src_path: str, dst_path: str, subdir: str,
-    cols: tuple[str, ...], op_name: str, distinct: bool = True,
+    cols: tuple[str, ...], op_name: str,
 ) -> None:
     """Shared compaction core: union every ``batch_id`` partition of
-    ``{path}/{subdir}``, optionally de-duplicate across partitions,
-    and rewrite as a single ``batch_id=0`` partition at ``dst_path``.
+    ``{path}/{subdir}``, de-duplicate across partitions, and rewrite as a single ``batch_id=0`` partition at ``dst_path``.
 
     Compaction writes to a NEW path by design — an in-place overwrite
     would read and truncate the same files (the hazard class the
@@ -2082,9 +2081,7 @@ def _compact_posting_table(
     if src_path == dst_path:
         raise ValueError(f"{op_name} writes to a NEW path — an in-place "
                          "overwrite would truncate its own input")
-    df = spark.read.parquet(f"{src_path}/{subdir}").select(*cols)
-    if distinct:
-        df = df.distinct()
+    df = spark.read.parquet(f"{src_path}/{subdir}").select(*cols).distinct()
     write_batch_partition(df, f"{dst_path}/{subdir}", 0, rebuild=True)
 
 

@@ -34,17 +34,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: metadata struct carried alongside every media payload
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_type", T.StringType()),  # image|audio|video
-        T.StructField("format", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-    ]
-)
-
 IMAGE_FEATURES_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),

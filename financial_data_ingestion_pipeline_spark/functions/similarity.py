@@ -61,7 +61,6 @@ import hashlib
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
-from pyspark.sql.utils import AnalysisException
 
 from financial_data_ingestion_pipeline_spark.functions.vectorized import (
     fast_cosine_with_norms,
@@ -422,7 +421,7 @@ def ann_lsh_topk(
     re-ranks the candidates.  Output: (query_id, neighbor_id, rank, sim).
 
     ONE pass over the corpus: the query side (a handful of vectors —
-    the serving pattern, like :func:`ivf_index_topk`) is pulled to the
+    the serving pattern, like :func:`pq_index_topk`) is pulled to the
     driver, its probed buckets computed with the same numpy kernel the
     corpus UDF runs, and broadcast; the corpus scan computes each row's
     table keys, joins the broadcast probes map-side, scores candidates
@@ -704,131 +703,6 @@ def ivf_topk(
     )
     cands = embeddings.select(id_col, vec_col).mapInPandas(
         local_topk, "query_id long, neighbor_id long, sim double"
-    )
-    return _topk_single_shuffle(cands, k)
-
-
-def write_ivf_index(
-    embeddings: DataFrame,
-    path: str,
-    centroids: list[list[float]] | str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    mode: str = "overwrite",
-) -> None:
-    """Materialize the IVF inverted lists as ``partitionBy(cell)``
-    parquet — the "build once, query many" half of IVF.  Each coarse
-    cell becomes a physical partition, so a probe of ``n_probe`` cells
-    is PARTITION PRUNING at the scan: a query touches n_probe/n_cells
-    of the bytes no matter how large the corpus (the columnar analog of
-    an ANN library's inverted-list seek).  Squared norms are
-    precomputed into the index so queries pay zero norm folds.
-
-    ``centroids="auto"`` sizes the quantizer to the corpus
-    (:func:`ivf_cells_auto` + :func:`auto_seed_centroids`) and
-    PERSISTS it at ``{path}_quantizer`` so probes and appends reuse
-    the exact build-time quantizer (:func:`read_ivf_quantizer`) —
-    auto-sizing must happen at build time only; re-deriving at probe
-    time would move cell boundaries after appends."""
-    if isinstance(centroids, str):
-        if centroids != "auto":
-            raise ValueError(f"centroids: list or 'auto', got {centroids!r}")
-        centroids = auto_seed_centroids(
-            embeddings, None, id_col=id_col, vec_col=vec_col
-        )
-        spark = embeddings.sparkSession
-        spark.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-            "cell int, centroid array<double>",
-        ).coalesce(1).write.mode(mode).parquet(f"{path}_quantizer")
-    base = embeddings.withColumn(
-        _SQ, seq_sqnorm(len(centroids[0]))(F.col(vec_col))
-    ).select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.col(_SQ).alias("sq"),
-        _nearest_cell(F.col(vec_col), centroids, F.col(_SQ)).alias("cell"),
-    )
-    base.repartition("cell").write.mode(mode).partitionBy("cell").parquet(path)
-
-
-def read_ivf_quantizer(spark, path: str) -> list[list[float]]:
-    """Load the quantizer an auto-sized :func:`write_ivf_index` froze
-    at ``{path}_quantizer`` — the centroid list to pass to
-    :func:`ivf_index_topk` / :func:`append_to_ivf_index` so every
-    probe and append uses the build-time cell boundaries."""
-    rows = spark.read.parquet(f"{path}_quantizer").collect()
-    rows.sort(key=lambda r: r["cell"])
-    return [[float(x) for x in r["centroid"]] for r in rows]
-
-
-def append_to_ivf_index(
-    new_vectors: DataFrame,
-    path: str,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incremental maintenance for a :func:`write_ivf_index` layout:
-    assign the new vectors to their cells with the SAME frozen
-    quantizer and append — each batch lands as extra files inside the
-    cells it touches, so probes keep pruning and no existing data is
-    rewritten.  This is why the quantizer is frozen (the production
-    IVF pattern): re-training would move cell boundaries and require a
-    full re-index.  Many appends leave many small files in hot cell
-    directories; the package has no compaction step for them."""
-    write_ivf_index(
-        new_vectors, path, centroids, id_col=id_col, vec_col=vec_col,
-        mode="append",
-    )
-
-
-def ivf_index_topk(
-    spark,
-    path: str,
-    centroids: list[list[float]],
-    query_vecs: list[tuple[int, list[float]]],
-    k: int = 5,
-    n_probe: int = DEFAULT_N_PROBE,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Query a :func:`write_ivf_index` layout: per query, rank cells in
-    the DRIVER (n_cells x dim floats — tiny), push ``cell IN (...)``
-    into the scan so only the probed partitions are read, broadcast the
-    query vectors, re-rank exactly.  ``query_vecs`` is [(qid, vector)]
-    — at serving time queries arrive from outside the corpus."""
-    probe_rows = []
-    for qid, vec in query_vecs:
-        sq = _py_sqnorm(vec)
-        scored = []
-        for i, c in enumerate(centroids):
-            dot = 0.0
-            for x, y in zip(vec, c):
-                dot += float(x) * float(y)
-            scored.append((round(dot / (sq * _py_sqnorm(c)) ** 0.5, 6), i))
-        scored.sort(reverse=True)  # score desc, cell desc — engine ties
-        for s, cell in scored[:n_probe]:
-            probe_rows.append((qid, [float(x) for x in vec], sq, cell))
-    probes = F.broadcast(
-        spark.createDataFrame(
-            probe_rows,
-            f"query_id long, q_vec array<float>, q_sq double, cell int",
-        )
-    )
-    cells = sorted({r[3] for r in probe_rows})
-    index = spark.read.parquet(path).filter(F.col("cell").isin(cells))
-    cands = (
-        index.join(probes, "cell")
-        .filter(F.col("query_id") != F.col(id_col))
-        .withColumn(
-            "sim",
-            fast_cosine_with_norms(
-                F.col("q_vec"), F.col(vec_col), F.col("q_sq"), F.col("sq"),
-                len(centroids[0]),
-            ),
-        )
-        .select(F.col("query_id"), F.col(id_col).alias("neighbor_id"), "sim")
     )
     return _topk_single_shuffle(cands, k)
 
@@ -1435,8 +1309,8 @@ def _np_sq8_encode(V, mns, mxs, hi: int):
     """SQ8 codes as integral float64s, elementwise
     ``clamp(floor(((v - mn) * hi) / (mx - mn)), 0, hi)`` (0 where the
     dimension is constant) — the same IEEE expression, in the same
-    association, as the engine's Column form and the DuckDB oracle, so
-    codes agree bit-for-bit across all three."""
+    association, as :func:`quantize_embeddings`' Column form and the
+    DuckDB oracle, so codes agree bit-for-bit across all three."""
     import numpy as np
 
     mns = np.asarray(mns, dtype=np.float64)
@@ -1758,14 +1632,15 @@ def write_pq_index(
     codebooks: list[list[list[float]]] | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    mode: str = "overwrite",
 ) -> None:
     """Materialize the IVF-PQ index as ``partitionBy(cell)`` parquet of
     (id, nibble-packed code) rows — 12 bytes a vector instead of 256.
     Probes prune partitions at the scan AND the scanned bytes are the
     codes, not the floats: the two savings multiply, which is the whole
-    economics of PQ at 100 TB.  Frozen quantizer + codebooks make
-    appends safe (cell boundaries and codewords never move)."""
+    economics of PQ at 100 TB.  The quantizer and codebooks are
+    frozen, so the streaming maintainer
+    (``streaming/index_stream.py::maintain_pq_index``) encodes each
+    micro-batch into the same cells and codewords as this build."""
     from financial_data_ingestion_pipeline_spark.functions.vectorized import (
         pq_encode_local,
     )
@@ -1789,23 +1664,11 @@ def write_pq_index(
         ),
         "vec_id long, cell int, code long",
     )
-    rows.repartition("cell").write.mode(mode).partitionBy("cell").parquet(path)
-
-
-def append_to_pq_index(
-    new_vectors: DataFrame,
-    path: str,
-    centroids: list[list[float]] | None = None,
-    codebooks: list[list[list[float]]] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incremental maintenance: encode the new vectors with the SAME
-    frozen quantizer/codebooks and append into the cells they land in —
-    no existing files rewritten, probes keep pruning."""
-    write_pq_index(
-        new_vectors, path, centroids, codebooks,
-        id_col=id_col, vec_col=vec_col, mode="append",
+    (
+        rows.repartition("cell")
+        .write.mode("overwrite")
+        .partitionBy("cell")
+        .parquet(path)
     )
 
 
@@ -1946,155 +1809,6 @@ def ivfpq_topk(
     return exact_rerank_pool(
         embeddings, pool_pairs, query_rows, k, id_col, vec_col
     )
-
-
-def _sq8_code_col(
-    vec_col: Column, mns: list[float], mxs: list[float], hi: int
-) -> Column:
-    """SQ8 codes as an ``array<int>`` Column — the same
-    fixed-association IEEE expression as :func:`_np_sq8_encode`
-    (bit-identical codes), with the codebook as literal arrays."""
-    mns_c = _lit_vec(mns)
-    mxs_c = _lit_vec(mxs)
-
-    def code(v, i):
-        mn = F.element_at(mns_c, i + 1)
-        mx = F.element_at(mxs_c, i + 1)
-        raw = F.floor(((v.cast("double") - mn) * hi) / (mx - mn)).cast("int")
-        clamped = F.least(
-            F.greatest(raw, F.lit(0)), F.lit(hi)
-        )
-        return F.when(mx == mn, F.lit(0)).otherwise(clamped)
-
-    return F.transform(vec_col, code)
-
-
-def write_sq8_index(
-    embeddings: DataFrame,
-    path: str,
-    stats: tuple[list[float], list[float]],
-    n_levels: int = 256,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    mode: str = "overwrite",
-) -> None:
-    """Materialize the SQ8 code table: ``(id, code array<int>,
-    code_sq long)`` parquet — the compressed half of a two-tier vector
-    store.  The ranking scan then reads the code table (a fraction of
-    the float corpus' bytes; parquet dictionary/bit-packing squeezes
-    the 0..255 ints further) and the float table is touched only for
-    the per-query re-rank pool.  The codebook ``stats`` is FROZEN by
-    the caller (train once via :func:`sq8_stats`, reuse for appends —
-    the same frozen-quantizer pattern as the IVF index), so incremental
-    batches append codes without re-encoding the corpus."""
-    hi = n_levels - 1
-    mns, mxs = stats
-    codes = _sq8_code_col(F.col(vec_col), mns, mxs, hi)
-    (
-        embeddings.select(
-            F.col(id_col),
-            codes.alias("code"),
-            F.aggregate(
-                codes,
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + (x * x).cast("long"),
-            ).alias("code_sq"),
-        )
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-def sq8_index_topk(
-    embeddings: DataFrame,
-    index_path: str,
-    query_vecs: list[tuple[int, list[float]]],
-    stats: tuple[list[float], list[float]],
-    k: int = 5,
-    pool: int = 20,
-    n_levels: int = 256,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Query a :func:`write_sq8_index` layout: scan ONLY the code
-    table for the approximate ranking (codes + precomputed code
-    norms — no float vectors read, no encode work), then fetch the
-    per-query pool rows from the float table for the exact re-rank.
-    Same output contract as :func:`sq8_topk`."""
-    import numpy as np
-    import pandas as pd
-
-    spark = embeddings.sparkSession
-    hi = n_levels - 1
-    mns, mxs = stats
-    q_mat = np.stack(
-        [np.asarray(v, dtype=np.float64) for _, v in query_vecs]
-    )
-    qcodes = _np_sq8_encode(q_mat, mns, mxs, hi)
-    q_code_sqs = (qcodes * qcodes).sum(axis=1)
-    qids = np.array([int(q) for q, _ in query_vecs], dtype=np.int64)
-
-    def local_pool(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            C = np.stack(
-                [np.asarray(c, dtype=np.float64) for c in pdf["code"]]
-            )
-            c_sqs = pdf["code_sq"].to_numpy(dtype=np.float64)
-            dots = C @ qcodes.T
-            sims = np.round(
-                dots / np.sqrt(q_code_sqs[None, :] * c_sqs[:, None]), 6
-            )
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(qids)):
-                mask = ids != qids[qi]
-                s, nid = sims[mask, qi], ids[mask]
-                top = np.lexsort((nid, -s))[:pool]
-                out_q.append(np.full(len(top), qids[qi]))
-                out_n.append(nid[top])
-                out_s.append(s[top])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "sim": np.concatenate(out_s),
-                }
-            )
-
-    index = spark.read.parquet(index_path).select(id_col, "code", "code_sq")
-    approx = index.mapInPandas(
-        local_pool, "query_id long, neighbor_id long, sim double"
-    )
-    pool_pairs = _topk_single_shuffle(approx, pool).select(
-        "query_id", "neighbor_id"
-    )
-    dim = q_mat.shape[1]
-    qdf = spark.createDataFrame(
-        [
-            (int(q), [float(x) for x in v], _py_sqnorm([float(x) for x in v]))
-            for q, v in query_vecs
-        ],
-        "query_id long, q_vec array<double>, q_sq double",
-    )
-    sqn = seq_sqnorm(dim)
-    exact = (
-        embeddings.join(
-            F.broadcast(pool_pairs),
-            embeddings[id_col] == pool_pairs["neighbor_id"],
-        )
-        .join(F.broadcast(qdf), "query_id")
-        .withColumn(
-            "sim",
-            fast_cosine_with_norms(
-                F.col("q_vec"), F.col(vec_col), F.col("q_sq"),
-                sqn(F.col(vec_col)), dim,
-            ),
-        )
-        .select("query_id", "neighbor_id", "sim")
-    )
-    return _topk_single_shuffle(exact, k)
 
 
 def hard_negative_topk(
@@ -2521,10 +2235,7 @@ def margin_mining_cross(
     Distributed shape: ONE cell shuffle (both sides assigned with the
     same frozen/auto quantizer) feeding a block kernel that scores
     each A x B tile in both directions; integer ppm margins replay
-    bit-for-bit in the oracle.  This is the RECOMPUTE form; the
-    indexed form (:func:`margin_mining_cross_index`) probes a
-    persisted :func:`write_ivf_index` layout instead of re-assigning
-    the corpus — identical results by construction.
+    bit-for-bit in the oracle.
 
     Output: ``query_id (A), neighbor_id (B), sim, margin_ppm`` for
     pairs with ``margin_ppm >= min_margin_ppm``.
@@ -2538,60 +2249,6 @@ def margin_mining_cross(
     assigned = _assign_side(
         queries, centroids, 0, id_col, vec_col
     ).unionByName(_assign_side(corpus, centroids, 1, id_col, vec_col))
-    return _margin_from_ranked(
-        _cross_ranked(assigned, k, dim), min_margin_ppm
-    )
-
-
-def margin_mining_cross_index(
-    batch: DataFrame,
-    spark,
-    path: str,
-    k: int = 3,
-    min_margin_ppm: int = 1_000_000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    centroids: list[list[float]] | None = None,
-) -> DataFrame:
-    """:func:`margin_mining_cross` served from a persisted
-    :func:`write_ivf_index` layout: the corpus side's cell
-    assignments come from the INDEX (written once at build time — no
-    per-mining-run assignment pass over the standing corpus), the
-    batch side assigns itself with the frozen quantizer the index
-    persisted (:func:`read_ivf_quantizer`), and the margin tail is
-    shared.  Identical results to the recompute form by construction
-    — same quantizer, same kernel, same integer margins (the
-    ``winnow_probe_index`` relationship, for vectors).
-
-    ``{path}_quantizer`` exists only for indexes built with
-    ``centroids="auto"``; an index built with an EXPLICIT centroid
-    list must pass that same list as ``centroids`` here (the batch
-    side has to assign with the build-time quantizer or cell-blocked
-    candidates silently miss).
-    """
-    if centroids is None:
-        try:
-            centroids = read_ivf_quantizer(spark, path)
-        except AnalysisException as e:
-            raise ValueError(
-                f"no frozen quantizer at {path}_quantizer — only "
-                "centroids='auto' builds persist one; an index built "
-                "with an explicit centroid list must pass that list "
-                "via centroids="
-            ) from e
-    corpus_assigned = (
-        spark.read.parquet(path)
-        .select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).alias("_v"),
-            F.col("cell").cast("int").alias("cell"),
-        )
-        .withColumn("_side", F.lit(1).cast("int"))
-    )
-    assigned = _assign_side(
-        batch, centroids, 0, id_col, vec_col
-    ).unionByName(corpus_assigned)
     return _margin_from_ranked(
         _cross_ranked(assigned, k, dim), min_margin_ppm
     )

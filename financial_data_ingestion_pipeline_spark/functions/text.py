@@ -13,7 +13,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..operators.warehouse import write_batch_partition
 
 #: Tiny function-word profiles for the language-ID heuristic.  The
 #: point is a deterministic, vectorizable n-gram/stopword scorer with
@@ -1319,8 +1318,9 @@ def _winnow_posting(
     """Position-free winnow posting table ``(doc, fp)`` — one row per
     distinct selected hash per document, built entirely array-side
     (window minima + ``array_distinct``; no argmax since pair/probe
-    consumers never need positions).  Shared by the overlap self-join,
-    the index builder, and the streaming index maintainer."""
+    consumers never need positions).  Shared by the overlap self-join
+    (:func:`winnow_overlap_pairs`) and the batch x corpus join
+    (:func:`winnow_cross_pairs`)."""
     from financial_data_ingestion_pipeline_spark.session import fan_out
 
     txt = F.coalesce(F.col(text_col), F.lit(""))
@@ -1354,123 +1354,6 @@ def _winnow_posting(
     return base.select("doc", F.explode(fps).alias("fp"))
 
 
-def build_winnow_index(
-    corpus: DataFrame,
-    path: str,
-    k: int = 5,
-    w: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """Materialize the corpus-side winnow posting table that
-    :func:`winnow_overlap_pairs` derives on the fly — the MOSS member
-    of the build-once/probe-every-ingest index family
-    (exact → ``content_hashes``, MinHash → ``band_keys``,
-    vectors → the PQ code index).  Re-fingerprinting an unchanged
-    100 TB corpus per daily batch would be the dominant pure-waste
-    cost; the index is per-doc rows, so appending the postings of
-    kept batch docs keeps it valid — no rebuild.
-
-    Layout: ``{path}/fingerprints`` parquet ``(doc, fp, batch_id)``,
-    partitioned by ``batch_id`` so the streaming maintainer
-    (``streaming/winnow_stream.py``) can land each micro-batch as its
-    own idempotent partition; the batch builder writes batch_id=0.
-    ``{path}/meta`` records each partition's TOTAL document count
-    (``batch_id, n_docs``) — including docs too short to emit any
-    fingerprint — so :func:`winnow_probe_index`'s df cap uses the same
-    N as :func:`winnow_cross_pairs`' ``corpus.count()``; deriving N
-    from the postings instead would disagree at cap boundaries
-    whenever the corpus contains fingerprint-less docs.
-    """
-    _write_winnow_partition(corpus, path, 0, k, w, id_col, text_col, True)
-
-
-def append_to_winnow_index(
-    batch: DataFrame,
-    path: str,
-    batch_id: int,
-    k: int = 5,
-    w: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """Land one ingest batch's posting rows and document count as its
-    own idempotent ``batch_id`` partition of a
-    :func:`build_winnow_index` layout (dynamic partition overwrite: a
-    replay rewrites only its own partition, so posting rows never
-    duplicate — duplicates would inflate every pair's ``n_shared`` and
-    the probe cap's df counts).  The batch-mode sibling of the
-    streaming maintainer (``streaming/winnow_stream.py``)."""
-    _write_winnow_partition(batch, path, batch_id, k, w, id_col, text_col)
-
-
-def _write_winnow_partition(
-    docs: DataFrame, path: str, batch_id: int, k: int, w: int,
-    id_col: str, text_col: str, rebuild: bool = False,
-) -> None:
-    """Both halves of one winnow index partition, in lockstep: the
-    posting rows and the meta doc count (see :func:`build_winnow_index`)."""
-    write_batch_partition(
-        _winnow_posting(docs, k, w, id_col, text_col),
-        f"{path}/fingerprints", batch_id, rebuild,
-    )
-    write_batch_partition(
-        docs.select(F.count(F.lit(1)).alias("n_docs")),
-        f"{path}/meta", batch_id, rebuild,
-    )
-
-
-def winnow_probe_index(
-    batch: DataFrame,
-    spark,
-    path: str,
-    k: int = 5,
-    w: int = 8,
-    min_shared: int = 3,
-    max_df_permille: int = 10,
-    max_df_floor: int = 16,
-    max_df_ceiling: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Probe an ingest batch against a :func:`build_winnow_index`
-    layout: which (batch doc, corpus doc) pairs share at least
-    ``min_shared`` fingerprints — :func:`winnow_overlap_pairs`
-    restricted to batch x corpus, with NO fingerprint pass over
-    corpus text (only the batch side winnows itself; the corpus side
-    is an index scan).
-
-    The df cap is computed on the INDEX side (boilerplate lives in
-    the corpus) with the same data-derived integer formula, N being
-    the TOTAL number of indexed documents from the index's ``meta``
-    table — the identical N :func:`winnow_cross_pairs` gets from
-    ``corpus.count()``, including fingerprint-less docs, so the two
-    "identical by construction" paths agree even at cap boundaries.
-    (Pre-meta index layouts fall back to ``count_distinct(doc)`` over
-    the postings, which undercounts by the fingerprint-less docs.)
-
-    Output: batch_id_doc (batch side), corpus_doc, n_shared.
-    """
-    index = spark.read.parquet(f"{path}/fingerprints")
-    try:
-        n_row = (
-            spark.read.parquet(f"{path}/meta")
-            .select(F.sum("n_docs").cast("long").alias("__n"))
-        )
-    except Exception:  # pragma: no cover - pre-meta layout fallback
-        n_row = index.select(F.count_distinct(F.col("doc")).alias("__n"))
-    batch_posting = _winnow_posting(batch, k, w, id_col, text_col)
-    return _winnow_cross_from_postings(
-        batch_posting,
-        index.select("doc", "fp"),
-        n_row,
-        min_shared,
-        max_df_permille,
-        max_df_floor,
-        max_df_ceiling,
-    )
-
-
 def winnow_cross_pairs(
     batch: DataFrame,
     corpus: DataFrame,
@@ -1483,42 +1366,17 @@ def winnow_cross_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """The RECOMPUTE form of :func:`winnow_probe_index`: batch x
-    corpus winnow overlap with the corpus fingerprinted in-flight —
-    the same relationship :func:`...dedup.dedup_incremental` has to
-    its indexed variant.  An ingest pipeline materializes the corpus
-    posting once (:func:`build_winnow_index`) and probes; this form
-    exists for one-shot jobs and as the oracle-checkable contract
-    surface (identical results by construction — both call the shared
-    capped cross join).
+    """Batch x corpus winnow overlap: :func:`winnow_overlap_pairs`
+    restricted to (batch doc, corpus doc) pairs, with both sides
+    fingerprinted in-flight.  The df cap is computed on the CORPUS
+    side (boilerplate lives in the standing corpus) with the same
+    data-derived integer formula, N being ``corpus.count()`` from a
+    broadcast 1-row frame — every corpus doc counts, including those
+    too short to emit any fingerprint.
 
     Output: batch_doc, corpus_doc, n_shared.
     """
     n_row = corpus.select(F.count(F.lit(1)).alias("__n"))
-    return _winnow_cross_from_postings(
-        _winnow_posting(batch, k, w, id_col, text_col),
-        _winnow_posting(corpus, k, w, id_col, text_col),
-        n_row,
-        min_shared,
-        max_df_permille,
-        max_df_floor,
-        max_df_ceiling,
-    )
-
-
-def _winnow_cross_from_postings(
-    batch_posting: DataFrame,
-    corpus_posting: DataFrame,
-    n_row: DataFrame,
-    min_shared: int,
-    max_df_permille: int,
-    max_df_floor: int,
-    max_df_ceiling: int = 64,
-) -> DataFrame:
-    """Shared capped batch x corpus fingerprint join: the df cap is
-    computed on the CORPUS side (boilerplate lives in the standing
-    corpus) from the broadcast 1-row count frame, same data-derived
-    integer formula as :func:`winnow_overlap_pairs`."""
     cap = F.greatest(
         F.lit(max_df_floor),
         F.least(
@@ -1528,13 +1386,15 @@ def _winnow_cross_from_postings(
     )
     w_df = Window.partitionBy("fp")
     capped = (
-        corpus_posting.crossJoin(F.broadcast(n_row))
+        _winnow_posting(corpus, k, w, id_col, text_col)
+        .crossJoin(F.broadcast(n_row))
         .withColumn("__df", F.count(F.lit(1)).over(w_df))
         .filter(F.col("__df") <= cap)
         .select(F.col("doc").alias("corpus_doc"), "fp")
     )
     return (
-        batch_posting.select(F.col("doc").alias("batch_doc"), "fp")
+        _winnow_posting(batch, k, w, id_col, text_col)
+        .select(F.col("doc").alias("batch_doc"), "fp")
         .join(capped, "fp")
         .groupBy("batch_doc", "corpus_doc")
         .agg(F.count(F.lit(1)).alias("n_shared"))
@@ -2131,54 +1991,16 @@ def bm25_topk(
     return _bm25_score_wide(base, query_terms, top_k, id_col)
 
 
-def _bm25_rank(
-    dl: DataFrame,
-    tf: DataFrame,
-    totals: DataFrame,
-    query_terms: tuple[str, ...],
-    top_k: int,
-    id_col: str,
-) -> DataFrame:
-    """BM25 ranking from long-format tf: (doc lengths, per-(doc,
-    query-term) tf, 1-row corpus totals) -> top-k.  The inverted-index
-    path (:func:`bm25_index_topk`) pivots its pruned postings here and
-    ends in the same :func:`_bm25_score_wide` core as the corpus-scan
-    path (:func:`bm25_topk`), so the two produce identical rankings by
-    construction.  (Docs absent from ``tf`` carry NULL __tf_i/__df_i
-    after the left join — the scoring core zeroes them exactly as the
-    scan path's explicit 0 counts.)"""
-    dfreq = tf.groupBy("__term").agg(F.count(F.lit(1)).alias("__df"))
-    pivoted = (
-        tf.join(F.broadcast(dfreq), "__term")
-        .groupBy(id_col)
-        .agg(
-            *[
-                F.max(
-                    F.when(F.col("__term") == t, F.col("__tf"))
-                ).alias(f"__tf_{i}")
-                for i, t in enumerate(query_terms)
-            ],
-            *[
-                F.max(
-                    F.when(F.col("__term") == t, F.col("__df"))
-                ).alias(f"__df_{i}")
-                for i, t in enumerate(query_terms)
-            ],
-        )
-    )
-    base = dl.join(pivoted, id_col, "left").crossJoin(F.broadcast(totals))
-    return _bm25_score_wide(base, query_terms, top_k, id_col)
-
-
 def _bm25_score_wide(
     base: DataFrame,
     query_terms: tuple[str, ...],
     top_k: int,
     id_col: str,
 ) -> DataFrame:
-    """Shared BM25 scoring core over the wide per-doc frame
-    (``__dl, __n, __total, __tf_i, __df_i`` — tf/df may be NULL for
-    docs without that term; they coalesce to 0 and score 0.0)."""
+    """BM25 scoring core over the wide per-doc frame
+    (``__dl, __n, __total, __tf_i, __df_i``; :func:`bm25_topk` counts
+    every tf and df, so none is NULL, and a doc without a term scores
+    0.0 for it)."""
 
     def term_score(i: int) -> Column:
         tf_c = F.coalesce(F.col(f"__tf_{i}"), F.lit(0)).cast("long")
@@ -2344,136 +2166,6 @@ def hybrid_topk(
     # bounded: global window over the k-row fused frame (post-limit)
     w = Window.orderBy(F.desc("rrf_score"), F.asc(id_col))
     return fused.withColumn("rank", F.row_number().over(w).cast("long"))
-
-
-# ---------------------------------------------------------------------------
-# inverted text index
-# ---------------------------------------------------------------------------
-
-TEXT_INDEX_BUCKETS = 64
-
-
-def _term_bucket(term: str, n_buckets: int) -> int:
-    """Driver-side replica of the posting layout's bucket function
-    (``hash64(term) % n_buckets``) so queries can compute which
-    partitions to prune to without touching data."""
-    import hashlib
-
-    return int(hashlib.md5(term.encode()).hexdigest()[:15], 16) % n_buckets
-
-
-def build_text_index(
-    docs: DataFrame,
-    path: str,
-    n_buckets: int = TEXT_INDEX_BUCKETS,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    mode: str = "overwrite",
-) -> None:
-    """Materialize the inverted index a production retrieval stack
-    queries instead of re-scanning raw text: under ``path``,
-
-    - ``postings/`` — (doc_id, __term, __tf) parquet PARTITIONED BY the
-      term's hash bucket: every term's postings live wholly inside one
-      of ``n_buckets`` directories, so a query's scan prunes to
-      |query-term buckets| / n_buckets of the index bytes no matter how
-      large the corpus (the columnar analog of a posting-list seek, the
-      same layout trick as the IVF cell partitions).
-    - ``doclen/`` — (doc_id, __dl) document lengths.
-    - ``stats/``  — one row: (__n, __total) corpus totals.
-
-    Build cost is one tokenize + one (doc, term) count shuffle — the
-    same work ONE :func:`bm25_topk` call pays for its query terms,
-    amortized over every future query.  Raise ``n_buckets`` with corpus
-    size to keep per-bucket files task-sized."""
-    toks_arr = tokens(F.coalesce(F.col(text_col), F.lit("")))
-    tf = (
-        docs.select(F.col(id_col), F.explode(toks_arr).alias("__term"))
-        .groupBy(id_col, "__term")
-        .agg(F.count(F.lit(1)).alias("__tf"))
-        .withColumn(
-            "bucket", F.pmod(hash64(F.col("__term")), F.lit(n_buckets)).cast("int")
-        )
-    )
-    (
-        tf.repartition("bucket")
-        .write.mode(mode)
-        .partitionBy("bucket")
-        .parquet(path + "/postings")
-    )
-    dl = docs.select(
-        F.col(id_col), F.size(toks_arr).cast("long").alias("__dl")
-    )
-    dl.write.mode(mode).parquet(path + "/doclen")
-    dl.agg(
-        F.count(F.lit(1)).alias("__n"), F.sum("__dl").alias("__total")
-    ).write.mode(mode).parquet(path + "/stats")
-
-
-def bm25_index_topk(
-    spark,
-    path: str,
-    query_terms: tuple[str, ...],
-    top_k: int = 10,
-    n_buckets: int = TEXT_INDEX_BUCKETS,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """BM25 top-k served from a :func:`build_text_index` layout —
-    identical output to :func:`bm25_topk` (same ranking core, df/tf
-    read from postings instead of recomputed), but the raw text is
-    never touched: the postings scan prunes to the query terms'
-    buckets (partition pruning, computed driver-side from the same
-    hash), document lengths join only for scored candidates, and the
-    1-row stats frame broadcasts."""
-    buckets = sorted({_term_bucket(t, n_buckets) for t in query_terms})
-    tf = (
-        spark.read.parquet(path + "/postings")
-        .filter(F.col("bucket").isin(buckets))
-        .filter(F.col("__term").isin(*query_terms))
-        .select(id_col, "__term", "__tf")
-    )
-    dl = spark.read.parquet(path + "/doclen")
-    totals = spark.read.parquet(path + "/stats")
-    return _bm25_rank(dl, tf, totals, query_terms, top_k, id_col)
-
-
-def append_to_text_index(
-    new_docs: DataFrame,
-    path: str,
-    n_buckets: int = TEXT_INDEX_BUCKETS,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """Incremental maintenance: append the new batch's postings and
-    doc lengths into the bucketed layout (new files inside the buckets
-    they touch — nothing rewritten), then refresh the 1-row stats
-    frame from the doclen table.  df/tf stay correct because a term's
-    postings — old and new — share a bucket; queries aggregate df at
-    read time over the pruned scan."""
-    spark = new_docs.sparkSession
-    toks_arr = tokens(F.coalesce(F.col(text_col), F.lit("")))
-    tf = (
-        new_docs.select(F.col(id_col), F.explode(toks_arr).alias("__term"))
-        .groupBy(id_col, "__term")
-        .agg(F.count(F.lit(1)).alias("__tf"))
-        .withColumn(
-            "bucket", F.pmod(hash64(F.col("__term")), F.lit(n_buckets)).cast("int")
-        )
-    )
-    tf.repartition("bucket").write.mode("append").partitionBy("bucket").parquet(
-        path + "/postings"
-    )
-    new_docs.select(
-        F.col(id_col), F.size(toks_arr).cast("long").alias("__dl")
-    ).write.mode("append").parquet(path + "/doclen")
-    stats = (
-        spark.read.parquet(path + "/doclen")
-        .agg(F.count(F.lit(1)).alias("__n"), F.sum("__dl").alias("__total"))
-        .collect()[0]
-    )
-    spark.createDataFrame(
-        [(stats["__n"], stats["__total"])], "__n long, __total long"
-    ).write.mode("overwrite").parquet(path + "/stats")
 
 
 #: Integer idf scale for :func:`tfidf_cosine_pairs` — weights are
@@ -2651,27 +2343,4 @@ def bpe_fertility(
         F.expr(
             "CAST((1000 * alpha_chars) div greatest(n_bpe_pieces, 1) AS BIGINT)"
         ).alias("compression_permille"),
-    )
-
-
-def compact_winnow_index(spark, src_path: str, dst_path: str) -> None:
-    """Compact a :func:`build_winnow_index` layout into a fresh
-    single-partition index at ``dst_path``: posting rows union as-is
-    (they are per-doc, so no cross-batch dedup applies), the meta
-    doc-count partitions fold to one total row — the probe's df-cap N
-    is preserved exactly.  New-path discipline shared with the other
-    index compactions (``dedup._compact_posting_table``)."""
-    from financial_data_ingestion_pipeline_spark.functions.dedup import (
-        _compact_posting_table,
-    )
-
-    _compact_posting_table(
-        spark, src_path, dst_path, "fingerprints", ("doc", "fp"),
-        "compact_winnow_index", distinct=False,
-    )
-    write_batch_partition(
-        spark.read.parquet(f"{src_path}/meta")
-        .select(F.sum("n_docs").cast("long").alias("n_docs"))
-        .coalesce(1),
-        f"{dst_path}/meta", 0, rebuild=True,
     )

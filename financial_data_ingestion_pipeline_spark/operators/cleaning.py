@@ -18,26 +18,34 @@ from ..schemas import TICK_MEASURES, TICK_TO_WAREHOUSE
 
 
 def clean_ticks(raw: DataFrame, symbol_suffix: str = r"\.NSE$") -> DataFrame:
-    """Raw tick CSV rows -> cleaned tick schema (dp:79-90).
+    """Raw tick CSV rows (:func:`...sources.ingest.read_tick_csvs`) ->
+    cleaned tick schema (dp:79-90) plus the ``trade_date`` key.
 
     - ``Ticker``: strip the exchange suffix (dp:79).
     - ``Timestamp``: parse ``Date || ' ' || Time`` (dp:80); unparseable
       -> NULL (``try_to_timestamp``).
     - measures: string -> double, garbage -> NULL (dp:82-88).
+    - ``trade_date``: the tick's day, ``to_date(Timestamp)``, or the
+      folder's day when the timestamp does not parse — the warehouse
+      partition, so an undated tick lands with the rest of its day.
     """
+    ts = F.try_to_timestamp(F.concat_ws(" ", "Date", "Time")).cast(
+        "timestamp_ntz"
+    )
     return raw.select(
         F.regexp_replace(F.col("Ticker"), symbol_suffix, "").alias("Ticker"),
-        F.try_to_timestamp(F.concat_ws(" ", "Date", "Time"))
-        .cast("timestamp_ntz")
-        .alias("Timestamp"),
+        ts.alias("Timestamp"),
         *[F.expr(f"try_cast({c} AS double)").alias(c) for c in TICK_MEASURES],
+        F.coalesce(F.to_date(ts), F.col("trade_date")).alias("trade_date"),
     )
 
 
 def to_warehouse(clean: DataFrame) -> DataFrame:
-    """Cleaned tick schema -> warehouse column names (dp:228-238, P5)."""
+    """Cleaned tick schema -> warehouse column names (dp:228-238, P5),
+    keeping the ``trade_date`` partition key."""
     return clean.select(
-        *[F.col(src).alias(dst) for src, dst in TICK_TO_WAREHOUSE.items()]
+        *[F.col(src).alias(dst) for src, dst in TICK_TO_WAREHOUSE.items()],
+        "trade_date",
     )
 
 

@@ -40,12 +40,15 @@ def write_warehouse(
     mode: str = "append",
     ts_col: str = "timestamp",
     symbol_col: str = "source_symbol",
-    partition_col: str = "trade_date",
 ) -> None:
     """Land warehouse-schema rows as date-partitioned, symbol/time-sorted
     parquet (replaces INSERT dp:214-250 + indexes dp:253-256): partition
     pruning from the date directory, row-group skipping from the
     within-partition sort.
+
+    The rows must carry their ``trade_date`` partition key, defined once
+    by :func:`.cleaning.clean_ticks` (the tick's day, or its folder's day
+    when the timestamp does not parse).
 
     ``mode="overwrite"`` replaces only the dates present in
     ``warehouse_rows`` (dynamic partition overwrite, set per write): a
@@ -53,15 +56,12 @@ def write_warehouse(
     ``to_sql(if_exists='append')`` does (dp:249-250), and re-running a
     day rewrites just that day.
     """
-    df = warehouse_rows
-    if partition_col not in df.columns:
-        df = df.withColumn(partition_col, F.to_date(ts_col))
     (
-        df.repartition(F.col(partition_col))
+        warehouse_rows.repartition("trade_date")
         .sortWithinPartitions(symbol_col, ts_col)
         .write.mode(mode)
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
+        .partitionBy("trade_date")
         .parquet(path)
     )
 

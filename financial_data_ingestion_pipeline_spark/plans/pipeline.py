@@ -171,9 +171,9 @@ def analytics_outputs(
 def _landed_days(landed: Observation) -> Column:
     """Predicate on ``trade_date`` selecting the partitions the run's
     load wrote.  The warehouse keeps earlier days, but the reports cover
-    the run's ticks only, as the reference's do.  Ticks without a
-    timestamp land in the NULL partition, which the load replaced only
-    if the run had such ticks."""
+    the run's ticks only, as the reference's do.  A tick with neither a
+    timestamp nor a dated folder lands in the NULL partition, which the
+    load replaced only if the run had such ticks."""
     m = landed.get
     pred = F.col("trade_date").isin(m["days"])
     return pred | F.col("trade_date").isNull() if m["undated"] else pred
@@ -185,8 +185,8 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, object]:
     landed = Observation("landed_days")
     cleaned = ingest(spark, cfg).observe(
         landed,
-        F.collect_set(F.to_date("Timestamp")).alias("days"),
-        F.bool_or(F.col("Timestamp").isNull()).alias("undated"),
+        F.collect_set("trade_date").alias("days"),
+        F.bool_or(F.col("trade_date").isNull()).alias("undated"),
     )
     wh_path = load_warehouse(spark, cfg, cleaned)
     wh = warehouse.read_warehouse(spark, wh_path)

@@ -59,7 +59,8 @@ WAREHOUSE_SCHEMA = T.StructType(
 )
 
 #: The landed warehouse table as read back: the rows plus the
-#: ``trade_date`` partition column (``to_date(timestamp)``).
+#: ``trade_date`` partition column (the tick's day, see
+#: ``operators.cleaning.clean_ticks``).
 WAREHOUSE_TABLE_SCHEMA = T.StructType(
     WAREHOUSE_SCHEMA.fields + [T.StructField("trade_date", T.DateType())]
 )

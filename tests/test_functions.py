@@ -945,83 +945,6 @@ def test_sq8_topk_recall_vs_exact(emb):
         assert r.sim == full[(r.query_id, r.neighbor_id)]
 
 
-def test_sq8_index_roundtrip_matches_inline(emb, tmp_path_factory):
-    """write_sq8_index + sq8_index_topk (code-table scan, float fetch
-    only for the pool) returns exactly what the self-contained
-    sq8_topk computes, and the Column-side encoder agrees with the
-    numpy kernel code-for-code."""
-    import numpy as np
-
-    path = str(tmp_path_factory.mktemp("sq8") / "index")
-    stats = similarity.sq8_stats(emb)
-    similarity.write_sq8_index(emb, path, stats)
-
-    # Column-encoded codes == numpy-encoded codes (spot-check 25 rows)
-    spark = emb.sparkSession
-    idx = {r.vec_id: (r.code, r.code_sq)
-           for r in spark.read.parquet(path).limit(25).collect()}
-    rows = emb.filter(F.col("vec_id").isin(*idx)).collect()
-    for r in rows:
-        V = np.asarray([r.embedding], dtype=np.float64)
-        np_codes = similarity._np_sq8_encode(V, stats[0], stats[1], 255)[0]
-        assert [int(c) for c in np_codes] == list(idx[r.vec_id][0])
-        assert int((np_codes * np_codes).sum()) == idx[r.vec_id][1]
-
-    qvecs = [
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in emb.filter(F.col("vec_id") < 5).collect()
-    ]
-    via_index = {
-        (r.query_id, r.neighbor_id, r.rank, r.sim)
-        for r in similarity.sq8_index_topk(emb, path, qvecs, stats, k=5).collect()
-    }
-    inline = {
-        (r.query_id, r.neighbor_id, r.rank, r.sim)
-        for r in similarity.sq8_topk(
-            emb, [q for q, _ in qvecs], k=5, query_vecs=qvecs, stats=stats
-        ).collect()
-    }
-    assert via_index == inline
-
-
-def test_text_index_bm25_parity_and_append(spark, docs, tmp_path_factory):
-    """Inverted-index BM25 == corpus-scan BM25 (shared ranking core);
-    append maintenance keeps parity; the postings scan prunes to the
-    query terms' buckets."""
-    path = str(tmp_path_factory.mktemp("txtidx") / "index")
-    terms = ("merge", "window", "spark")
-
-    half_a = docs.filter(F.col("doc_id") % 2 == 0)
-    half_b = docs.filter(F.col("doc_id") % 2 == 1)
-    text.build_text_index(half_a, path)
-    text.append_to_text_index(half_b, path)
-
-    from_index = [
-        (r.doc_id, r.n_hits, r.rank, r.score)
-        for r in text.bm25_index_topk(spark, path, terms).collect()
-    ]
-    from_scan = [
-        (r.doc_id, r.n_hits, r.rank, r.score)
-        for r in text.bm25_topk(docs, terms).collect()
-    ]
-    assert from_index == from_scan
-
-    # partition pruning: the pruned scan must touch only the buckets of
-    # the query terms, not all TEXT_INDEX_BUCKETS
-    buckets = {text._term_bucket(t, text.TEXT_INDEX_BUCKETS) for t in terms}
-    plan = (
-        spark.read.parquet(path + "/postings")
-        .filter(F.col("bucket").isin(sorted(buckets)))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "bucket" in plan
-    import os
-    scanned = {
-        d for d in os.listdir(path + "/postings") if d.startswith("bucket=")
-    }
-    assert len(buckets) < len(scanned)  # index has more buckets than probed
-
-
 def test_hard_negatives_label_mismatch_and_ranking(emb):
     """Every mined negative has a different label from its anchor, and
     per-anchor results are the top-k of the label-mismatched candidate
@@ -1292,23 +1215,18 @@ def test_lsh_auto_bits_ladder_matches_oracle_case():
     assert lsh_auto_bits(500) == 4 and lsh_auto_bits(2000) == 4
 
 
-def test_winnow_probe_cap_counts_fingerprintless_docs(spark, tmp_path):
-    """The probe's df-cap N and winnow_cross_pairs' corpus.count()
-    must be the SAME N even when the corpus contains docs too short to
-    emit any fingerprint (round-6 advice): the index ``meta`` table
-    records total doc counts, so the two 'identical by construction'
-    paths agree at cap boundaries.
+def test_winnow_probe_cap_counts_fingerprintless_docs(spark):
+    """winnow_cross_pairs' df-cap N is ``corpus.count()``, the TOTAL
+    document count, fingerprint-less docs included.
 
     Construction pins the boundary exactly: 17 identical docs share
     one fingerprint (df=17) in a 1700-doc corpus of which 1683 are
     fingerprint-less.  N=1700 -> cap = max(16, 17) = 17 -> the pair
-    rows survive; the pre-fix posting-derived N=17 would give cap 16
-    and silently drop them in the indexed path only.
+    rows survive; a posting-derived N=17 would give cap 16 and
+    silently drop them.
     """
     from financial_data_ingestion_pipeline_spark.functions.text import (
-        build_winnow_index,
         winnow_cross_pairs,
-        winnow_probe_index,
     )
 
     shared = "abcdefghijkl"  # 12 chars, k=5/w=8 -> exactly 1 fingerprint
@@ -1317,20 +1235,10 @@ def test_winnow_probe_cap_counts_fingerprintless_docs(spark, tmp_path):
     corpus = spark.createDataFrame(rows, "doc_id long, text string")
     batch = spark.createDataFrame([(9000, shared)], "doc_id long, text string")
 
-    path = str(tmp_path / "widx")
-    build_winnow_index(corpus, path)
-    meta = spark.read.parquet(f"{path}/meta").collect()
-    assert sum(r.n_docs for r in meta) == 1700
-
     got = {
-        (r.batch_doc, r.corpus_doc): r.n_shared
-        for r in winnow_probe_index(batch, spark, path, min_shared=1).collect()
-    }
-    want = {
         (r.batch_doc, r.corpus_doc): r.n_shared
         for r in winnow_cross_pairs(batch, corpus, min_shared=1).collect()
     }
-    assert got == want
     assert got == {(9000, i): 1 for i in range(17)}, (
         "cap must be 17 (total docs), not 16 (posting docs)"
     )
@@ -1418,13 +1326,10 @@ def test_ivf_cells_auto_ladder_matches_oracle_formula():
 
 def test_knn_join_auto_matches_explicit_seed_centroids(spark, sf_dir):
     """centroids='auto' == knn_join with the explicitly derived seed
-    quantizer (same ladder, same stride seeds), and the auto-built
-    IVF index persists a loadable quantizer."""
+    quantizer (same ladder, same stride seeds)."""
     from financial_data_ingestion_pipeline_spark.functions.similarity import (
         auto_seed_centroids,
         knn_join,
-        read_ivf_quantizer,
-        write_ivf_index,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -1438,14 +1343,6 @@ def test_knn_join_auto_matches_explicit_seed_centroids(spark, sf_dir):
         for r in knn_join(emb, seeds, k=2).collect()
     }
     assert got == want and got
-
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as td:
-        path = f"{td}/ivf"
-        write_ivf_index(emb, path, "auto")
-        loaded = read_ivf_quantizer(spark, path)
-        assert loaded == seeds
 
 
 def test_repeated_spans_matches_python_reference(spark):
@@ -1648,53 +1545,6 @@ def test_overlap_index_append_matches_recompute(spark, tmp_path):
     assert got == want and len(got) == 3
 
 
-def test_margin_mining_cross_index_matches_recompute(spark, tmp_path):
-    """margin_mining_cross_index over a persisted auto-quantized IVF
-    layout == margin_mining_cross recomputed (same frozen quantizer,
-    same bidirectional kernel, same integer margins) — no per-run
-    assignment pass over the standing corpus."""
-    import numpy as np
-
-    from financial_data_ingestion_pipeline_spark.functions.similarity import (
-        margin_mining_cross,
-        margin_mining_cross_index,
-        write_ivf_index,
-    )
-
-    rng = np.random.default_rng(7)
-    dim = 8
-    corpus_rows = [
-        (i, [float(x) for x in rng.standard_normal(dim)]) for i in range(64)
-    ]
-    batch_rows = [
-        (1000 + i, [float(x) for x in rng.standard_normal(dim)])
-        for i in range(12)
-    ]
-    schema = "vec_id long, embedding array<float>"
-    corpus = spark.createDataFrame(corpus_rows, schema)
-    batch = spark.createDataFrame(batch_rows, schema)
-
-    path = str(tmp_path / "ivf_idx")
-    write_ivf_index(corpus, path, "auto")
-
-    key = lambda df: {  # noqa: E731
-        (r.query_id, r.neighbor_id, r.sim, r.margin_ppm)
-        for r in df.collect()
-    }
-    got = key(
-        margin_mining_cross_index(
-            batch, spark, path, k=3, min_margin_ppm=0, dim=dim
-        )
-    )
-    want = key(
-        margin_mining_cross(
-            batch, corpus, "auto", k=3, min_margin_ppm=0, dim=dim
-        )
-    )
-    assert got == want and len(got) > 0
-    assert all(1000 <= q < 1012 and n < 64 for q, n, _s, _m in got)
-
-
 def test_knn_cross_join_matches_bruteforce_in_cell(spark):
     """knn_cross_join's forward top-k equals a numpy brute force when
     one cell holds everything (single-centroid quantizer): the cell
@@ -1738,10 +1588,10 @@ def test_knn_cross_join_matches_bruteforce_in_cell(spark):
 
 @pytest.mark.slow  # slow tier: disk-index write/compact/probe e2e (~9 s)
 def test_index_compaction_preserves_probe_results(spark, tmp_path):
-    """Compacting the span / overlap / winnow indexes to a fresh path
-    (cross-partition dedup, meta fold) changes NOTHING a probe can
-    observe, and in-place compaction is refused (it would truncate its
-    own input)."""
+    """Compacting the span / overlap indexes to a fresh path
+    (cross-partition dedup) changes NOTHING a probe can observe, and
+    in-place compaction is refused (it would truncate its own
+    input)."""
     import pytest as _pytest
 
     from financial_data_ingestion_pipeline_spark.functions.dedup import (
@@ -1752,11 +1602,6 @@ def test_index_compaction_preserves_probe_results(spark, tmp_path):
         compact_span_index,
         source_overlap_from_index,
         span_probe_index,
-    )
-    from financial_data_ingestion_pipeline_spark.functions.text import (
-        build_winnow_index,
-        compact_winnow_index,
-        winnow_probe_index,
     )
     from financial_data_ingestion_pipeline_spark.streaming.span_stream import (
         maintain_span_index,
@@ -1812,19 +1657,6 @@ def test_index_compaction_preserves_probe_results(spark, tmp_path):
     )
     with _pytest.raises(ValueError):
         compact_overlap_index(spark, ovl_src, ovl_src)
-
-    # winnow index: meta folds to one row, probe results identical
-    win_src = str(tmp_path / "win_src")
-    build_winnow_index(corpus, win_src)
-    win_dst = str(tmp_path / "win_dst")
-    compact_winnow_index(spark, win_src, win_dst)
-    assert key(
-        winnow_probe_index(probe, spark, win_dst, min_shared=1)
-    ) == key(winnow_probe_index(probe, spark, win_src, min_shared=1))
-    meta = spark.read.parquet(f"{win_dst}/meta").collect()
-    assert len(meta) == 1 and meta[0].n_docs == 6
-    with _pytest.raises(ValueError):
-        compact_winnow_index(spark, win_src, win_src)
 
 
 def test_cut_spans_edge_positions(spark):

@@ -118,10 +118,15 @@ def test_daily_runs_keep_earlier_days(spark, tmp_path_factory):
     """Each run lands only its own days: a second day into the same
     ``out_dir`` keeps the first (the reference appends, dp:249-250),
     re-running a day replaces just that day, and the quality reports
-    cover only the days the run landed."""
+    cover only the days the run landed.  A tick whose timestamp does
+    not parse lands under its folder's day, so a later run keeps it."""
     root = str(tmp_path_factory.mktemp("daily"))
     day1 = _write_day(os.path.join(root, "d1"), "04042022", "2022-04-04", dirty=True)
     day2 = _write_day(os.path.join(root, "d2"), "05042022", "2022-04-05", dirty=False)
+    for day in (day1, day2):
+        with open(os.path.join(day, "BETA.csv"), "a", newline="") as fh:
+            csv.writer(fh).writerow(["BETA.NSE", "not-a-date", "09:15:30",
+                                     "50", "49.5", "10", "50.5", "12", "5", "1000"])
     out = os.path.join(root, "out")
 
     def run(tick_root):
@@ -132,9 +137,9 @@ def test_daily_runs_keep_earlier_days(spark, tmp_path_factory):
                 .withColumnRenamed("count", "n").collect()}
         return days, res["reports"]["invalid_values"].count()
 
-    assert run(day1) == ({"2022-04-04": 32}, 2)
-    assert run(day2) == ({"2022-04-04": 32, "2022-04-05": 30}, 0)
-    assert run(day1) == ({"2022-04-04": 32, "2022-04-05": 30}, 2)
+    assert run(day1) == ({"2022-04-04": 33}, 2)
+    assert run(day2) == ({"2022-04-04": 33, "2022-04-05": 31}, 0)
+    assert run(day1) == ({"2022-04-04": 33, "2022-04-05": 31}, 2)
 
 
 def test_pipeline_lands_ticks_once(spark, tick_drop, tmp_path_factory):

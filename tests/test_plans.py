@@ -33,7 +33,9 @@ def wh_path(spark, tmp_path_factory):
                 ("ALPHA", dt.datetime(2022, 4, d, 9, 0, i), 100.0 + i,
                  5.0, 0.0, 99.5, 10.0, 100.5, 12.0)
             )
-    df = spark.createDataFrame(rows, WAREHOUSE_SCHEMA)
+    df = spark.createDataFrame(rows, WAREHOUSE_SCHEMA).withColumn(
+        "trade_date", F.to_date("timestamp")
+    )
     path = str(tmp_path_factory.mktemp("wh") / "second_level_data")
     warehouse.write_warehouse(df, path, mode="overwrite")
     return path
@@ -138,60 +140,6 @@ def test_dedup_self_joins_reuse_exchanges(spark, sf_dir):
             or plan.count("TableCacheQueryStage") >= 2
         )
         assert shared_once, f"{name}: signature subplan not shared"
-
-
-def test_ivf_index_partition_pruning(spark, sf_dir, tmp_path_factory):
-    """The persisted IVF layout must turn cell probes into partition
-    pruning (the columnar analog of an inverted-list seek), and the
-    pruned query must return exactly the same top-k as the in-memory
-    operator with the same quantizer."""
-    from financial_data_ingestion_pipeline_spark.functions import similarity
-    from financial_data_ingestion_pipeline_spark.functions.ivf_pretrained import (
-        CENTROIDS,
-    )
-    from financial_data_ingestion_pipeline_spark.sources import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = str(tmp_path_factory.mktemp("ivf") / "index")
-    similarity.write_ivf_index(emb, path, CENTROIDS)
-    qids = list(range(5))
-    qvecs = [
-        (r.vec_id, [float(x) for x in r.embedding])
-        for r in emb.filter(F.col("vec_id").isin(qids)).collect()
-    ]
-    out = similarity.ivf_index_topk(spark, path, CENTROIDS, qvecs, k=5)
-    plan = _formatted_plan(out)
-    scan_line = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert scan_line and "cell" in scan_line[0]  # probes prune at the scan
-    got = {(r.query_id, r.neighbor_id, r.rank) for r in out.collect()}
-    want = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in similarity.ivf_topk(emb, qids, k=5, centroids=CENTROIDS).collect()
-    }
-    assert got == want
-    # incremental maintenance: append new vectors with the frozen
-    # quantizer; a query against the grown index == the in-memory
-    # operator over the grown corpus
-    shifted = emb.filter(F.col("vec_id") < 50).select(
-        (F.col("vec_id") + 100000).alias("vec_id"), "embedding", "label"
-    )
-    similarity.append_to_ivf_index(shifted, path, CENTROIDS)
-    grown = emb.select("vec_id", "embedding").unionByName(
-        shifted.select("vec_id", "embedding")
-    )
-    got2 = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in similarity.ivf_index_topk(
-            spark, path, CENTROIDS, qvecs, k=5
-        ).collect()
-    }
-    want2 = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in similarity.ivf_topk(
-            grown, qids, k=5, centroids=CENTROIDS
-        ).collect()
-    }
-    assert got2 == want2
 
 
 def test_bucketed_table_aggregates_without_shuffle(spark, wh_path):
@@ -457,8 +405,7 @@ def test_no_unintended_cartesian_in_any_contract_query(spark):
 def test_pq_index_partition_pruning(spark, sf_dir, tmp_path_factory):
     """The persisted PQ code index must prune probed cells at the scan
     AND return exactly the in-memory IVF-PQ operator's top-k (the index
-    changes bytes read, never results); appends with the frozen
-    quantizer/codebooks keep both properties."""
+    changes bytes read, never results)."""
     from financial_data_ingestion_pipeline_spark.functions import similarity
     from financial_data_ingestion_pipeline_spark.sources import load_table
 
@@ -480,28 +427,6 @@ def test_pq_index_partition_pruning(spark, sf_dir, tmp_path_factory):
         for r in similarity.ivfpq_topk(emb, qids, k=5, pool=50).collect()
     }
     assert got == want
-    # incremental append: grown index == in-memory operator over the
-    # grown corpus
-    shifted = emb.filter(F.col("vec_id") < 50).select(
-        (F.col("vec_id") + 100000).alias("vec_id"), "embedding", "label"
-    )
-    similarity.append_to_pq_index(shifted, path)
-    grown = emb.select("vec_id", "embedding").unionByName(
-        shifted.select("vec_id", "embedding")
-    )
-    got2 = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in similarity.pq_index_topk(
-            spark, path, grown, qvecs, k=5, pool=50
-        ).collect()
-    }
-    want2 = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in similarity.ivfpq_topk(
-            grown, qids, k=5, pool=50, query_vecs=qvecs
-        ).collect()
-    }
-    assert got2 == want2
 
 
 def test_plan_budgets_hold_for_every_contract_query(spark):

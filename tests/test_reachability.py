@@ -42,28 +42,9 @@ TEST_ONLY = frozenset(
         "functions/dedup.py::dedup_incremental",
         "functions/dedup.py::dedup_incremental_indexed",
         "functions/dedup.py::source_overlap_from_index",
-        "functions/similarity.py::_sq8_code_col",
-        "functions/similarity.py::append_to_ivf_index",
-        "functions/similarity.py::append_to_pq_index",
-        "functions/similarity.py::ivf_index_topk",
-        "functions/similarity.py::read_ivf_quantizer",
-        "functions/similarity.py::sq8_index_topk",
-        "functions/similarity.py::write_ivf_index",
-        "functions/similarity.py::write_sq8_index",
-        "functions/text.py::_bm25_rank",
-        "functions/text.py::_term_bucket",
-        "functions/text.py::_write_winnow_partition",
-        "functions/text.py::append_to_text_index",
-        "functions/text.py::append_to_winnow_index",
-        "functions/text.py::bm25_index_topk",
-        "functions/text.py::build_text_index",
-        "functions/text.py::build_winnow_index",
-        "functions/text.py::compact_winnow_index",
-        "functions/text.py::winnow_probe_index",
         # streaming index maintainers
         "streaming/overlap_stream.py::maintain_overlap_index",
         "streaming/span_stream.py::probe_and_maintain_span_index",
-        "streaming/winnow_stream.py::maintain_winnow_index",
         # snapshot tables and their callers
         "operators/warehouse.py::ConcurrentCommitError",
         "operators/warehouse.py::_dir_stats",
@@ -99,7 +80,6 @@ TEST_ONLY = frozenset(
         # single helpers
         "functions/multimodal.py::set_image_decoder",
         "functions/similarity.py::lsh_candidate_pairs",
-        "functions/similarity.py::margin_mining_cross_index",
         "functions/sketches.py::countmin_sketch",
     }
 )

@@ -175,97 +175,6 @@ def test_streaming_span_index_matches_batch(spark, tmp_path_factory):
     assert {d for d, _s, _l in got} == {100}
 
 
-def test_streaming_winnow_index_matches_batch(spark, tmp_path_factory):
-    """The stream-maintained winnow index holds exactly the posting
-    rows the batch builder writes for the same documents, and probing
-    it equals the direct batch-side batch x corpus overlap."""
-    from financial_data_ingestion_pipeline_spark.functions.text import (
-        _winnow_posting,
-        build_winnow_index,
-        winnow_probe_index,
-    )
-    from financial_data_ingestion_pipeline_spark.streaming.winnow_stream import (
-        maintain_winnow_index,
-    )
-
-    corpus_rows = [
-        (i, f"shared boilerplate run {i % 3} plus unique tail {i} " * 3)
-        for i in range(18)
-    ]
-    corpus = spark.createDataFrame(corpus_rows, "doc_id long, text string")
-
-    landing = tmp_path_factory.mktemp("winnow_landing")
-    corpus.coalesce(1).write.mode("overwrite").parquet(str(landing))
-    streamed_path = tmp_path_factory.mktemp("winnow_idx_stream")
-    q = maintain_winnow_index(
-        spark.readStream.schema("doc_id long, text string").parquet(
-            str(landing)
-        ),
-        str(streamed_path),
-        os.path.join(str(streamed_path), "ckpt"),
-    )
-    q.awaitTermination()
-
-    batch_path = tmp_path_factory.mktemp("winnow_idx_batch")
-    build_winnow_index(corpus, str(batch_path))
-
-    read = lambda p: {  # noqa: E731
-        (r.doc, r.fp)
-        for r in spark.read.parquet(f"{p}/fingerprints").collect()
-    }
-    assert read(str(streamed_path)) == read(str(batch_path))
-
-    # Probe parity: a fresh batch (2 near-copies of corpus docs + 1
-    # novel) against the streamed index == the direct cross overlap
-    # computed from postings, same data-derived cap.
-    batch_rows = [
-        (100, corpus_rows[0][1]),
-        (101, corpus_rows[4][1] + " with a small edit"),
-        (102, "entirely novel text with no corpus overlap at all here"),
-    ]
-    batch = spark.createDataFrame(batch_rows, "doc_id long, text string")
-    got = {
-        (r.batch_doc, r.corpus_doc): r.n_shared
-        for r in winnow_probe_index(
-            batch, spark, str(streamed_path)
-        ).collect()
-    }
-
-    bp = {
-        (r.doc, r.fp) for r in _winnow_posting(
-            batch, 5, 8, "doc_id", "text"
-        ).collect()
-    }
-    cp = read(str(batch_path))
-    n_corpus_docs = len({d for d, _ in cp})
-    cap = max(16, min(64, (10 * n_corpus_docs) // 1000))
-    from collections import Counter
-
-    df = Counter(fp for _d, fp in cp)
-    cp_capped = {(d, fp) for d, fp in cp if df[fp] <= cap}
-    want = Counter()
-    for bd, fp in bp:
-        for cd, cfp in cp_capped:
-            if cfp == fp:
-                want[(bd, cd)] += 1
-    want = {k: v for k, v in want.items() if v >= 3}
-    assert got == want
-    assert any(k[0] == 100 for k in got), "near-copy must collide"
-    assert not any(k[0] == 102 for k in got), "novel doc must not"
-
-    # Indexed probe == recompute form (the dedup_incremental
-    # relationship): same rows, corpus fingerprinted in-flight.
-    from financial_data_ingestion_pipeline_spark.functions.text import (
-        winnow_cross_pairs,
-    )
-
-    recompute = {
-        (r.batch_doc, r.corpus_doc): r.n_shared
-        for r in winnow_cross_pairs(batch, corpus).collect()
-    }
-    assert recompute == got
-
-
 def test_snapshot_stream_commits_atomically(spark, tmp_path_factory):
     """Each micro-batch becomes one manifest commit; the latest
     snapshot equals the full input and history is readable."""
