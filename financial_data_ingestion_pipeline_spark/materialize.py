@@ -105,11 +105,17 @@ class Pinned:
             self.ids = None
 
     def release(self) -> None:
+        from financial_data_ingestion_pipeline_spark.session import (
+            forget_persisted,
+        )
+
         try:
             self.df.unpersist(False)
         except Exception:  # pragma: no cover - session already stopped
             pass
-        if self.ids:
+        if self.ids is None:
+            forget_persisted(self.df)
+        elif self.ids:
             release_rdd_ids(self._spark, self.ids)
 
 

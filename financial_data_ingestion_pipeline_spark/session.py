@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import threading
 import zipfile
 
 from pyspark.sql import SparkSession
@@ -175,11 +176,26 @@ def register_persisted(df):
     between queries' lifecycles; corpus_pipeline does after its final
     write).  Weak-free by design: entries are dropped on eviction.
     """
-    _PERSISTED.append(df)
+    with _PERSISTED_LOCK:
+        _PERSISTED.append(df)
     return df
 
 
 _PERSISTED: list = []
+# streaming sinks register and release from Spark's callback thread
+_PERSISTED_LOCK = threading.Lock()
+
+
+def forget_persisted(df) -> None:
+    """Drop ``df`` from the registry once its owner has unpersisted it,
+    so a long-lived session that pins one frame per unit of work (a
+    stream's micro-batches) does not hold every released frame, and
+    the shuffle files under it, until the next eviction."""
+    with _PERSISTED_LOCK:
+        for i, d in enumerate(_PERSISTED):
+            if d is df:
+                del _PERSISTED[i]
+                return
 
 
 def evict_persisted(blocking: bool = False) -> int:
@@ -197,9 +213,11 @@ def evict_persisted(blocking: bool = False) -> int:
     of recomputing.  Evict-then-re-read is therefore not supported;
     re-run the operator instead (bench.py and corpus_pipeline both
     evict only once a query/batch lifecycle is fully consumed)."""
+    with _PERSISTED_LOCK:
+        frames = _PERSISTED[::-1]
+        _PERSISTED.clear()
     n = 0
-    while _PERSISTED:
-        df = _PERSISTED.pop()
+    for df in frames:
         try:
             df.unpersist(blocking=blocking)
             n += 1

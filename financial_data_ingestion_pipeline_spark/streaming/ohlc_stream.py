@@ -146,7 +146,10 @@ def write_ohlc_table(
             out_path, key_cols, partition_col="trade_date",
         )
 
-    return start_batch_sink(ohlc_stream, upsert, checkpoint)
+    # the merge runs four actions on the batch (touched-dates collect,
+    # anti-join broadcast, checkpoint, write): pinned, the stateful
+    # dedup and window aggregation run once per micro-batch
+    return start_batch_sink(ohlc_stream, upsert, checkpoint, pin=True)
 
 
 def run_ohlc_stream_once(

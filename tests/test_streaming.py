@@ -71,46 +71,6 @@ def test_streaming_dedup_bounded_state(spark, landing, tmp_path_factory):
     )
 
 
-def test_multi_batch_backfill_keeps_all_windows(spark, tmp_path_factory):
-    """Regression: the MV sink must MERGE, not overwrite, the touched
-    date partition.  Two landing files with disjoint hours of the SAME
-    trading day are drained one file per micro-batch — update-mode batch
-    2 contains only hour-10 windows, so a dynamic-partition overwrite
-    would silently delete hour 9.  The keyed merge keeps all 4 windows.
-    """
-    root = tmp_path_factory.mktemp("multibatch_landing")
-    for h in (9, 10):
-        rows = [
-            tick(sym, f"2022-04-04 {h:02d}:{i*7:02d}:00", base + h + i)
-            for sym, base in (("ALPHA", 100.0), ("BETA", 50.0))
-            for i in range(6)
-        ]
-        df = spark.createDataFrame(rows, schema=WAREHOUSE_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(str(root))
-    out = tmp_path_factory.mktemp("multibatch_out")
-    run_ohlc_stream_once(
-        spark,
-        str(root),
-        os.path.join(str(out), "ohlc"),
-        os.path.join(str(out), "ckpt"),
-        freq="hour",
-        # generous watermark so neither file's rows are late regardless
-        # of which file the source lists first
-        watermark="2 hours",
-        schema=WAREHOUSE_SCHEMA,
-        dedup=False,
-        max_files_per_trigger=1,
-    )
-    streamed = spark.read.parquet(os.path.join(str(out), "ohlc"))
-    got = {(r.symbol, str(r.bucket_start)): (r.open, r.close, r.n_ticks)
-           for r in streamed.collect()}
-    batch = bucketed_ohlc(spark.read.parquet(str(root)), "hour")
-    want = {(r.symbol, str(r.bucket_start)): (r.open, r.close, r.n_ticks)
-            for r in batch.collect()}
-    assert got == want
-    assert len(got) == 4  # 2 symbols x 2 hours — nothing overwritten away
-
-
 def test_snapshot_stream_restart_is_exactly_once(spark, tmp_path_factory):
     """Re-running the drained query over the same landing dir must add
     NO new commits (the checkpoint already covers the input); new files

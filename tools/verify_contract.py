@@ -1,18 +1,26 @@
 """Simulate the grading driver: entry() smoke + queries() vs oracle_sql() via DuckDB.
 
-Usage: python tools/verify_contract.py [sf_dir] [query_name ...]
+Usage: python tools/verify_contract.py [sf_dir] [--record] [query_name ...]
 Defaults to /root/testdata/sf0.01 and all queries.
+
+``--record`` (full sweeps only) writes the result into this checkout's
+committed record for the fixture dir (``CORRECTNESS_FULL*.json``);
+without it a run leaves the tree untouched.
 """
 import sys, os, json, time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 and os.path.isdir(sys.argv[1]) else "/root/testdata/sf0.01"
-    only = [a for a in sys.argv[1:] if not os.path.isdir(a)]
+    # a flag may come first (`--record <dir>`): take the first directory
+    sf_dir = next((a for a in sys.argv[1:] if os.path.isdir(a)), sf_dir)
+    record_run = "--record" in sys.argv[1:]
+    only = [a for a in sys.argv[1:] if not os.path.isdir(a) and a != "--record"]
 
     from pyspark.sql import SparkSession
     # FDIP_VERIFY_SHUFFLE_PARTITIONS: the 8-partition default is sized
@@ -104,12 +112,12 @@ def main():
 
     bad = {k: v for k, v in results.items() if not (v.startswith("ok") or v.startswith("no_oracle"))}
     print(json.dumps({"total": len(results), "ok": len(results) - len(bad), "bad": list(bad)}))
-    if not only:  # full sweep → persist the committed record the judge reads
+    if record_run and not only:  # full sweep → the committed record
         # drift-normalize the record (round-9 verdict task #4): the
         # frozen CPU probe stamps this session so timings in records
         # from different sessions compare in calibrated seconds
         try:
-            sys.path.insert(0, os.path.join("/root/repo", "tools"))
+            sys.path.insert(0, os.path.join(REPO, "tools"))
             from calibration import drift
             calibration = drift(spark, "local8")
         except Exception as e:  # never fail the sweep over the probe
@@ -118,11 +126,12 @@ def main():
         # scale must never clobber the committed record of another
         base = os.path.basename(sf_dir.rstrip("/"))
         if base == "sf0.1":
-            record = "/root/repo/CORRECTNESS_FULL_SF01.json"
+            name = "CORRECTNESS_FULL_SF01.json"
         elif base == "sf0.01":
-            record = "/root/repo/CORRECTNESS_FULL.json"
+            name = "CORRECTNESS_FULL.json"
         else:
-            record = f"/root/repo/CORRECTNESS_FULL_{base.upper()}.json"
+            name = f"CORRECTNESS_FULL_{base.upper()}.json"
+        record = os.path.join(REPO, name)
         with open(record, "w") as fh:
             json.dump(
                 {"sf_dir": sf_dir, "total": len(results), "ok": len(results) - len(bad),
