@@ -1815,9 +1815,9 @@ def build_span_index(
 ) -> None:
     """Materialize the corpus's DISTINCT ExactSubstr anchor hashes —
     the standing index :func:`span_probe_index` semi-joins each ingest
-    batch against, completing the build-once/probe-incremental family
-    (exact → ``content_hashes``, MinHash → ``band_keys``, winnow →
-    fingerprint postings, vectors → IVF/PQ/SQ8).  Re-anchoring an
+    batch against, the span member of the build-once/probe-incremental
+    family (exact and MinHash keys → :func:`build_dedup_index`,
+    vectors → ``similarity.write_pq_index``).  Re-anchoring an
     unchanged 100 TB corpus per daily batch is the dominant pure-waste
     cost this index removes.
 
@@ -1919,10 +1919,10 @@ def _source_posting(
     docs: DataFrame, n: int, text_col: str, source_col: str
 ) -> DataFrame:
     """DISTINCT ``(src, gram)`` posting — the per-source shingle SET.
-    Shared by :func:`source_overlap`, the index builder, the merge
-    operator and the streaming maintainer: the set-union property
-    (distinct of a union == union of distincts, re-distincted) is what
-    makes the index appendable without recomputing history."""
+    Shared by :func:`source_overlap` and :func:`merge_overlap_postings`:
+    the set-union property (distinct of a union == union of distincts,
+    re-distincted) is what lets a batch fold into a standing posting
+    without recomputing history."""
     return (
         docs.select(
             F.col(source_col).alias("src"),
@@ -1944,9 +1944,8 @@ def _overlap_matrix(posting: DataFrame) -> DataFrame:
     the gram join's build side and OOM'd the driver at the heaps1
     decade (round 9).  Post-pin the optimizer sees the ACTUAL posting
     size: small postings still broadcast, corpus-vocab-sized ones get
-    the shuffled join.  The pinned frame is the per-source shingle SET
-    — exactly what :func:`build_overlap_index` persists as the serving
-    index, so caching it is the intended working set, not a leak."""
+    the shuffled join.  The pinned frame is the per-source shingle SET,
+    the query's own working set, so caching it is not a leak."""
     from financial_data_ingestion_pipeline_spark.materialize import pin
 
     posting = pin(posting.select("src", "gram"))
@@ -2005,108 +2004,4 @@ def merge_overlap_postings(
         posting.select("src", "gram")
         .unionByName(_source_posting(batch, n, text_col, source_col))
         .distinct()
-    )
-
-
-def build_overlap_index(
-    corpus: DataFrame,
-    path: str,
-    n: int = SHINGLE_N,
-    text_col: str = "text",
-    source_col: str = "source",
-) -> None:
-    """Materialize the per-source distinct shingle sets that
-    :func:`source_overlap` derives on the fly, so a daily-ingest user
-    pays one shingle pass per BATCH — not per overlap question.  Each
-    batch lands as its own ``batch_id`` partition (streaming
-    maintainer: ``streaming/overlap_stream.py``); the batch builder
-    writes batch_id=0.  Cross-partition duplicate (src, gram) rows are
-    expected after appends — :func:`source_overlap_from_index`
-    re-distincts at read, an index-sized (never corpus-sized) pass.
-
-    Layout: ``{path}/postings`` parquet ``(src, gram, batch_id)``.
-    """
-    write_batch_partition(
-        _source_posting(corpus, n, text_col, source_col),
-        f"{path}/postings", 0, rebuild=True,
-    )
-
-
-def append_to_overlap_index(
-    batch: DataFrame,
-    path: str,
-    batch_id: int,
-    n: int = SHINGLE_N,
-    text_col: str = "text",
-    source_col: str = "source",
-) -> None:
-    """Land one ingest batch's distinct ``(src, gram)`` posting as its
-    own idempotent ``batch_id`` partition of a
-    :func:`build_overlap_index` layout (dynamic partition overwrite: a
-    replay rewrites only its own partition, so at-least-once delivery
-    never inflates set sizes beyond the read-time re-distinct)."""
-    write_batch_partition(
-        _source_posting(batch, n, text_col, source_col),
-        f"{path}/postings", batch_id,
-    )
-
-
-def source_overlap_from_index(spark, path: str) -> DataFrame:
-    """The cross-dump contamination matrix served from a
-    :func:`build_overlap_index` layout: re-distinct the unioned batch
-    partitions (set union) and run the same inclusion-exclusion tail
-    as :func:`source_overlap` — no document text is touched, so the
-    answer costs O(index), independent of corpus size or batch count.
-    """
-    posting = (
-        spark.read.parquet(f"{path}/postings").select("src", "gram").distinct()
-    )
-    return _overlap_matrix(posting)
-
-
-def _compact_posting_table(
-    spark, src_path: str, dst_path: str, subdir: str,
-    cols: tuple[str, ...], op_name: str,
-) -> None:
-    """Shared compaction core: union every ``batch_id`` partition of
-    ``{path}/{subdir}``, de-duplicate across partitions, and rewrite as a single ``batch_id=0`` partition at ``dst_path``.
-
-    Compaction writes to a NEW path by design — an in-place overwrite
-    would read and truncate the same files (the hazard class the
-    streaming merge sinks checkpoint around), and at 100 TB an index
-    is corpus-order-sized, so the rewrite must stream scan->shuffle->
-    write with nothing pinned.  The caller swaps paths (or repoints
-    the probe job) once the write commits; until then every probe
-    keeps hitting the intact source index."""
-    if src_path == dst_path:
-        raise ValueError(f"{op_name} writes to a NEW path — an in-place "
-                         "overwrite would truncate its own input")
-    df = spark.read.parquet(f"{src_path}/{subdir}").select(*cols).distinct()
-    write_batch_partition(df, f"{dst_path}/{subdir}", 0, rebuild=True)
-
-
-def compact_span_index(spark, src_path: str, dst_path: str) -> None:
-    """Compact a :func:`build_span_index` layout into a fresh
-    single-partition index: union every ``batch_id`` partition,
-    de-duplicate hashes ACROSS partitions (appends only guarantee
-    within-batch distinctness), and write the result as ``batch_id=0``
-    at ``dst_path`` (new-path discipline: see
-    :func:`_compact_posting_table`).  Run it when the partition count
-    (one per ingest batch) starts to dominate scan planning, or after
-    heavy cross-batch duplication."""
-    _compact_posting_table(
-        spark, src_path, dst_path, "anchors", ("h",), "compact_span_index"
-    )
-
-
-def compact_overlap_index(spark, src_path: str, dst_path: str) -> None:
-    """Compact a :func:`build_overlap_index` layout into a fresh
-    single-partition index at ``dst_path``: the cross-partition
-    re-distinct that :func:`source_overlap_from_index` performs at
-    every read happens once and is persisted, so subsequent reads'
-    distinct passes over exact per-source sets with no cross-batch
-    duplicates left to collapse.  Same new-path discipline."""
-    _compact_posting_table(
-        spark, src_path, dst_path, "postings", ("src", "gram"),
-        "compact_overlap_index",
     )

@@ -214,7 +214,6 @@ def snapshot_commit(
     df: DataFrame,
     table_dir: str,
     mode: str = "append",
-    stats_col: str | None = None,
 ) -> int:
     """Commit ``df`` to a snapshot table; returns the new version.
 
@@ -233,14 +232,6 @@ def snapshot_commit(
     At 100 TB this is the difference between "a failed backfill left
     the table half-overwritten" and "nothing happened": jobs become
     atomic, and time travel / audit reads are free.
-
-    With ``stats_col``, the manifest additionally records the new data
-    directory's [min, max] of that column (one column-pruned footer
-    read after the write) — the file-skipping index that lets
-    :func:`snapshot_merge` rewrite only the directories an update
-    batch actually touches.  Stats from the previous manifest are
-    carried forward on append, so the index stays complete without
-    ever rescanning old data.
     """
     import json
     import os
@@ -256,41 +247,21 @@ def snapshot_commit(
     df.write.mode("error").parquet(os.path.join(table_dir, data_dir))
 
     dirs = [data_dir]
-    stats: dict[str, list] = {}
-    if stats_col is not None:
-        stats[data_dir] = _dir_stats(
-            df.sparkSession, os.path.join(table_dir, data_dir), stats_col
-        )
     if mode == "append" and prev is not None:
         with open(_manifest_path(table_dir, prev)) as f:
-            prev_manifest = json.load(f)
-        dirs = prev_manifest["data_dirs"] + dirs
-        stats = {**prev_manifest.get("stats", {}), **stats}
+            dirs = json.load(f)["data_dirs"] + dirs
 
-    _write_manifest(table_dir, new_version, dirs, stats)
+    _write_manifest(table_dir, new_version, dirs)
     return new_version
 
 
-def _dir_stats(spark: SparkSession, path: str, col: str) -> list:
-    """[min, max, col] of one column in one data directory — a
-    column-pruned scan that reads only that column's pages.  Bounds
-    are stored JSON-normalized (temporal types as ISO strings, which
-    compare lexicographically == chronologically)."""
-    row = spark.read.parquet(path).agg(F.min(col), F.max(col)).first()
-    return [_stat_key(row[0]), _stat_key(row[1]), col]
-
-
-def _write_manifest(
-    table_dir: str, version: int, dirs: list[str], stats: dict[str, list]
-) -> None:
+def _write_manifest(table_dir: str, version: int, dirs: list[str]) -> None:
     import json
     import os
     import uuid
 
     os.makedirs(os.path.join(table_dir, _MANIFEST_DIR), exist_ok=True)
     manifest = {"version": version, "data_dirs": dirs}
-    if stats:
-        manifest["stats"] = stats
     tmp = _manifest_path(table_dir, version) + f".tmp-{uuid.uuid4().hex[:8]}"
     with open(tmp, "w") as f:
         json.dump(manifest, f)
@@ -321,44 +292,6 @@ def _load_manifest(table_dir: str, version: int | None) -> dict:
         return json.load(f)
 
 
-def _stat_key(v):
-    """Normalize a stats bound for comparison: numbers compare as-is,
-    temporal types via ISO strings (lexicographic == chronological)."""
-    import datetime as _dt
-
-    if isinstance(v, (_dt.datetime, _dt.date)):
-        return v.isoformat()
-    return v
-
-
-def _dirs_overlapping(
-    manifest: dict, key_min, key_max, col: str | None = None
-) -> tuple[list[str], list[str]]:
-    """Split the manifest's data dirs into (touched, untouched) by
-    intersecting each dir's recorded [min, max] with [key_min,
-    key_max].  Dirs without stats — or whose stats were recorded on a
-    DIFFERENT column than ``col`` — are conservatively touched:
-    comparing key bounds against another column's range would prune
-    directories that do contain matching keys."""
-    stats = manifest.get("stats", {})
-    lo, hi = _stat_key(key_min), _stat_key(key_max)
-    touched, untouched = [], []
-    for d in manifest["data_dirs"]:
-        s = stats.get(d)
-        if (
-            s is None
-            or s[0] is None
-            or s[1] is None
-            or (col is not None and len(s) > 2 and s[2] != col)
-        ):
-            touched.append(d)
-        elif _stat_key(s[1]) < lo or _stat_key(s[0]) > hi:
-            untouched.append(d)
-        else:
-            touched.append(d)
-    return touched, untouched
-
-
 def read_snapshot(
     spark: SparkSession,
     table_dir: str,
@@ -375,86 +308,6 @@ def read_snapshot(
     return spark.read.option("mergeSchema", "true").parquet(
         *[os.path.join(table_dir, d) for d in manifest["data_dirs"]]
     )
-
-
-def snapshot_merge(
-    spark: SparkSession,
-    table_dir: str,
-    updates: DataFrame,
-    key_cols: list[str],
-    stats_col: str | None = None,
-    delete: bool = False,
-) -> int:
-    """Keyed copy-on-write MERGE into a snapshot table: rows in
-    ``updates`` replace same-key rows (upsert), or remove them with
-    ``delete=True``.  Returns the new committed version.
-
-    The scale property is what it does NOT do: directories whose
-    manifest [min, max] on ``stats_col`` (default ``key_cols[0]``)
-    cannot contain any update key are **carried forward by reference**
-    — not read, not rewritten, not even listed for file sizes.  Only
-    the touched directories pay the anti-join + rewrite, so a 1%-key
-    update batch against a 100 TB table costs ~1% of a full rewrite
-    (Delta/Iceberg MERGE's file-pruning behavior on plain parquet).
-    The update batch's own key bounds come from one 2-value aggregate
-    — no key set is ever collected to the driver.
-
-    Commit protocol is unchanged: new data lands in a fresh directory,
-    the manifest link is atomic, a crashed merge leaves an orphan
-    dir and no new version.
-    """
-    import os
-    import uuid
-
-    stats_col = stats_col or key_cols[0]
-    manifest = _load_manifest(table_dir, None)
-    new_version = manifest["version"] + 1
-
-    bounds = updates.agg(F.min(stats_col), F.max(stats_col)).first()
-    if bounds[0] is None:  # empty update batch: carry everything forward
-        _write_manifest(
-            table_dir,
-            new_version,
-            manifest["data_dirs"],
-            manifest.get("stats", {}),
-        )
-        return new_version
-    touched, untouched = _dirs_overlapping(
-        manifest, bounds[0], bounds[1], stats_col
-    )
-
-    stats = {
-        d: s
-        for d, s in manifest.get("stats", {}).items()
-        if d in set(untouched)
-    }
-    dirs = list(untouched)
-
-    if touched or not delete:
-        survivors = None
-        if touched:
-            current = spark.read.parquet(
-                *[os.path.join(table_dir, d) for d in touched]
-            )
-            survivors = current.join(
-                updates.select(*key_cols).distinct(), on=key_cols, how="left_anti"
-            )
-        merged = survivors
-        if not delete:
-            upserts = updates if survivors is None else survivors.unionByName(
-                updates
-            )
-            merged = upserts
-        if merged is not None:
-            data_dir = f"data/{new_version:012d}-{uuid.uuid4().hex[:8]}"
-            merged.write.mode("error").parquet(os.path.join(table_dir, data_dir))
-            dirs.append(data_dir)
-            stats[data_dir] = _dir_stats(
-                spark, os.path.join(table_dir, data_dir), stats_col
-            )
-
-    _write_manifest(table_dir, new_version, dirs, stats)
-    return new_version
 
 
 def vacuum_snapshots(table_dir: str, keep_last: int = 1) -> list[str]:

@@ -180,7 +180,7 @@ def run_incremental_ingest(
     With ``span_index_dir`` set, the batch ALSO runs the ExactSubstr
     contamination loop against the standing span index
     (``dedup.build_span_index`` layout — the batch sibling of
-    ``streaming/span_stream.py::probe_and_maintain_span_index``):
+    ``streaming/span_stream.py::cut_and_maintain_span_index``):
     probe first (which spans of today's arrivals copy the corpus
     verbatim), QUARANTINE the span table under the batch's own
     idempotent partition at ``{span_index_dir}/quarantine``, CUT the

@@ -61,7 +61,8 @@ def start_batch_sink(
     alternating runs at 10x sf0.1 on 4 cores the PQ-index and drift
     maintainers (one write each) drained about 10% slower pinned, and
     the span cut loop about 18% slower, since its repeated work is the
-    index probe, which the pin does not cover, not the source read.
+    index probe, not the source read; that loop pins its probe output
+    itself (``span_stream.cut_and_maintain_span_index``).
 
     Persist, not ``localCheckpoint``: ``unpersist`` releases exactly
     this frame, while a checkpoint's blocks can only be released by

@@ -18,10 +18,14 @@ one.
 
 Idempotence: a replayed micro-batch overwrites ONLY its own
 ``batch_id`` partition, so at-least-once delivery never grows the
-index beyond one partition per batch.  This is the contamination
-guard at ingest: anchor the arrivals in-flight, probe them against
-the standing index (which spans of today's batch copy the corpus
-verbatim), append the keepers.
+index beyond one partition per batch.
+
+Two maintainers: :func:`maintain_span_index` only appends each
+batch's anchors; :func:`cut_and_maintain_span_index` is the
+contamination guard at ingest — probe the arrivals against the
+standing index (which spans of today's batch copy the corpus
+verbatim), quarantine and cut those spans, and append the anchors of
+the text that landed.
 """
 
 from __future__ import annotations
@@ -31,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from financial_data_ingestion_pipeline_spark.materialize import Pinned
 from financial_data_ingestion_pipeline_spark.operators.warehouse import (
     is_missing_path,
     write_batch_partition,
@@ -39,11 +44,7 @@ from financial_data_ingestion_pipeline_spark.streaming.sink import (
     start_batch_sink,
 )
 
-__all__ = [
-    "maintain_span_index",
-    "probe_and_maintain_span_index",
-    "cut_and_maintain_span_index",
-]
+__all__ = ["maintain_span_index", "cut_and_maintain_span_index"]
 
 
 def _probe_or_bootstrap(
@@ -132,6 +133,10 @@ def cut_and_maintain_span_index(
     ``partition_base``: see :func:`maintain_span_index`.  A missing
     index is the first-batch bootstrap (nothing to probe; anchors
     still land).
+
+    The probe output feeds both the quarantine write and the cut, so
+    it is persisted once and released after the cleaned write, before
+    the anchor append changes the index it read.
     """
     from financial_data_ingestion_pipeline_spark.functions.dedup import (
         append_to_span_index,
@@ -140,8 +145,11 @@ def cut_and_maintain_span_index(
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         pid = partition_base + batch_id
-        spans = _probe_or_bootstrap(batch, index_path, min_len, id_col, text_col)
-        write_batch_partition(spans, spans_out, pid)
+        pinned = Pinned(
+            _probe_or_bootstrap(batch, index_path, min_len, id_col, text_col),
+            eager=False, mode="persist",
+        )
+        spans = pinned.df
         cut = cut_spans(batch, spans, id_col=id_col, text_col=text_col)
         cols = batch.columns
         cleaned = (
@@ -154,7 +162,11 @@ def cut_and_maintain_span_index(
             )
             .select(*cols, "n_cut")
         )
-        write_batch_partition(cleaned, clean_out, pid)
+        try:
+            write_batch_partition(spans, spans_out, pid)
+            write_batch_partition(cleaned, clean_out, pid)
+        finally:
+            pinned.release()
         # anchors of the CLEAN text (read back from the committed
         # partition — lineage through the pre-cut batch would re-read
         # the index this very function appends to below, the
@@ -169,45 +181,3 @@ def cut_and_maintain_span_index(
 
     return start_batch_sink(doc_stream, write_batch, checkpoint)
 
-
-def probe_and_maintain_span_index(
-    doc_stream: DataFrame,
-    index_path: str,
-    spans_out: str,
-    checkpoint: str,
-    min_len: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    partition_base: int = 1,
-) -> StreamingQuery:
-    """The full contamination loop at ingest: each micro-batch is
-    PROBED against the standing anchor index first (which spans of the
-    arrivals copy the corpus verbatim — written to ``spans_out`` under
-    the batch's own idempotent partition, ready for span-cut or
-    quarantine downstream), THEN its own distinct anchors are appended
-    so later batches see it as corpus.  Probe-before-append means a
-    batch never matches itself — the same batch-vs-standing semantics
-    as ``span_cross_spans``, day over day.
-
-    Replay safety: both writes replace only the replayed ``batch_id``
-    partition, and the probe re-run sees exactly the
-    pre-append index for that batch only if replay happens before the
-    append committed — if the anchors landed but the span write did
-    not, the re-probe ALSO matches the batch's own anchors, adding
-    whole-document self-spans to the quarantine column.  Downstream
-    span-cut treats them as harmless over-marking (the doc equals the
-    corpus copy of itself); exactly-once consumers needing the strict
-    pre-append answer should key on span length < document length.
-    ``partition_base``: see :func:`maintain_span_index`.
-    """
-    from financial_data_ingestion_pipeline_spark.functions.dedup import (
-        append_to_span_index,
-    )
-
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        pid = partition_base + batch_id
-        spans = _probe_or_bootstrap(batch, index_path, min_len, id_col, text_col)
-        write_batch_partition(spans, spans_out, pid)
-        append_to_span_index(batch, index_path, pid, min_len, id_col, text_col)
-
-    return start_batch_sink(doc_stream, write_batch, checkpoint)

@@ -1503,48 +1503,6 @@ def test_span_index_probe_matches_recompute(spark, tmp_path):
                                  "with no repeats"))]
 
 
-def test_overlap_index_append_matches_recompute(spark, tmp_path):
-    """build + append on the overlap index == source_overlap over the
-    full corpus: per-source shingle sets are unions, so folding a
-    batch in as its own partition and re-distincting at read is exact
-    (never re-shingles history)."""
-    from financial_data_ingestion_pipeline_spark.functions.dedup import (
-        append_to_overlap_index,
-        build_overlap_index,
-        source_overlap,
-        source_overlap_from_index,
-    )
-
-    corpus = spark.createDataFrame(
-        [
-            (0, "alpha beta gamma delta epsilon", "srcA"),
-            (1, "beta gamma delta epsilon zeta", "srcB"),
-            (2, "unrelated words entirely here now", "srcC"),
-        ],
-        "doc_id long, text string, source string",
-    )
-    batch = spark.createDataFrame(
-        [
-            (10, "alpha beta gamma delta epsilon", "srcB"),  # dup grams
-            (11, "gamma delta epsilon zeta eta", "srcC"),
-        ],
-        "doc_id long, text string, source string",
-    )
-    path = str(tmp_path / "ovl_idx")
-    build_overlap_index(corpus, path)
-    append_to_overlap_index(batch, path, batch_id=1)
-    # idempotent replay: rewriting batch 1 must change nothing
-    append_to_overlap_index(batch, path, batch_id=1)
-
-    key = lambda df: {  # noqa: E731
-        (r.src_a, r.src_b, r.n_inter, r.n_a, r.n_b, r.jaccard)
-        for r in df.collect()
-    }
-    got = key(source_overlap_from_index(spark, path))
-    want = key(source_overlap(corpus.unionByName(batch)))
-    assert got == want and len(got) == 3
-
-
 def test_knn_cross_join_matches_bruteforce_in_cell(spark):
     """knn_cross_join's forward top-k equals a numpy brute force when
     one cell holds everything (single-centroid quantizer): the cell
@@ -1584,79 +1542,6 @@ def test_knn_cross_join_matches_bruteforce_in_cell(spark):
         )
         for rk, j in enumerate(order[:3], start=1):
             assert got[(i, rk)] == 100 + j
-
-
-@pytest.mark.slow  # slow tier: disk-index write/compact/probe e2e (~9 s)
-def test_index_compaction_preserves_probe_results(spark, tmp_path):
-    """Compacting the span / overlap indexes to a fresh path
-    (cross-partition dedup) changes NOTHING a probe can observe, and
-    in-place compaction is refused (it would truncate its own
-    input)."""
-    import pytest as _pytest
-
-    from financial_data_ingestion_pipeline_spark.functions.dedup import (
-        append_to_overlap_index,
-        build_overlap_index,
-        build_span_index,
-        compact_overlap_index,
-        compact_span_index,
-        source_overlap_from_index,
-        span_probe_index,
-    )
-    from financial_data_ingestion_pipeline_spark.streaming.span_stream import (
-        maintain_span_index,
-    )
-
-    boiler = "a shared boilerplate sentence that repeats everywhere"
-    corpus = spark.createDataFrame(
-        [(i, f"doc number {i} body {boiler}", f"src{i % 2}")
-         for i in range(6)],
-        "doc_id long, text string, source string",
-    )
-    extra = spark.createDataFrame(
-        [(10, f"late arrival with {boiler} too", "src0")],
-        "doc_id long, text string, source string",
-    )
-    probe = spark.createDataFrame(
-        [(99, f"fresh text quoting {boiler} verbatim")],
-        "doc_id long, text string",
-    )
-
-    # span index: bootstrap + a streamed batch -> 2 partitions
-    span_src = str(tmp_path / "span_src")
-    build_span_index(corpus, span_src)
-    landing = str(tmp_path / "landing")
-    extra.coalesce(1).write.parquet(landing)
-    maintain_span_index(
-        spark.readStream.schema(
-            "doc_id long, text string, source string"
-        ).parquet(landing),
-        span_src,
-        str(tmp_path / "ckpt"),
-    ).awaitTermination()
-    span_dst = str(tmp_path / "span_dst")
-    compact_span_index(spark, span_src, span_dst)
-    key = lambda df: {tuple(r) for r in df.collect()}  # noqa: E731
-    assert key(span_probe_index(probe, spark, span_dst)) == key(
-        span_probe_index(probe, spark, span_src)
-    )
-    n_src = spark.read.parquet(f"{span_src}/anchors").count()
-    n_dst = spark.read.parquet(f"{span_dst}/anchors").count()
-    assert n_dst < n_src, "cross-batch duplicate hashes must collapse"
-    with _pytest.raises(ValueError):
-        compact_span_index(spark, span_src, span_src)
-
-    # overlap index: build + append -> compact == from_index either way
-    ovl_src = str(tmp_path / "ovl_src")
-    build_overlap_index(corpus, ovl_src)
-    append_to_overlap_index(extra, ovl_src, batch_id=1)
-    ovl_dst = str(tmp_path / "ovl_dst")
-    compact_overlap_index(spark, ovl_src, ovl_dst)
-    assert key(source_overlap_from_index(spark, ovl_dst)) == key(
-        source_overlap_from_index(spark, ovl_src)
-    )
-    with _pytest.raises(ValueError):
-        compact_overlap_index(spark, ovl_src, ovl_src)
 
 
 def test_cut_spans_edge_positions(spark):

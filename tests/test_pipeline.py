@@ -486,8 +486,6 @@ def test_snapshot_rejects_uri_table_dir(spark, tmp_path, monkeypatch):
     for uri in ("s3a://bucket/tbl", f"file://{local}"):
         with pytest.raises(ValueError, match="local filesystem path"):
             warehouse.read_snapshot(spark, uri)
-        with pytest.raises(ValueError, match="local filesystem path"):
-            warehouse.snapshot_merge(spark, uri, df, ["k"])
 
 
 @pytest.mark.slow  # slow tier: two-batch e2e ingest (~16 s)
@@ -619,80 +617,6 @@ class TestZOrderLayout:
         assert all(r.xs <= 16 and r.ys <= 16 for r in spans)
 
 
-class TestSnapshotMerge:
-    def _seed(self, spark, t):
-        """Three commits with disjoint key ranges, stats indexed on k."""
-        from pyspark.sql import functions as F
-
-        from financial_data_ingestion_pipeline_spark.operators import warehouse
-
-        for lo in (0, 100, 200):
-            df = spark.range(lo, lo + 100).select(
-                F.col("id").alias("k"), (F.col("id") * 10).alias("v")
-            )
-            warehouse.snapshot_commit(df, t, stats_col="k")
-        return warehouse
-
-    def test_upsert_rewrites_only_touched_dirs(self, spark, tmp_path):
-        from pyspark.sql import functions as F
-
-        from financial_data_ingestion_pipeline_spark.operators import warehouse
-
-        t = str(tmp_path / "tbl")
-        self._seed(spark, t)
-        before = warehouse._load_manifest(t, None)
-        upd = spark.range(110, 120).select(
-            F.col("id").alias("k"), F.lit(-1).cast("long").alias("v")
-        )
-        v = warehouse.snapshot_merge(spark, t, upd, ["k"])
-        after = warehouse._load_manifest(t, None)
-        assert after["version"] == v
-        # dirs covering [0,99] and [200,299] carried forward by reference
-        carried = set(before["data_dirs"]) & set(after["data_dirs"])
-        assert len(carried) == 2
-        assert len(after["data_dirs"]) == 3
-        # merged table: same 300 keys, ten values replaced
-        out = warehouse.read_snapshot(spark, t)
-        assert out.count() == 300
-        assert out.filter(F.col("v") == -1).count() == 10
-        assert out.filter((F.col("k") == 115) & (F.col("v") == -1)).count() == 1
-        # untouched rows intact
-        assert out.filter((F.col("k") == 5) & (F.col("v") == 50)).count() == 1
-
-    def test_upsert_inserts_unseen_keys(self, spark, tmp_path):
-        from pyspark.sql import functions as F
-
-        from financial_data_ingestion_pipeline_spark.operators import warehouse
-
-        t = str(tmp_path / "tbl")
-        self._seed(spark, t)
-        upd = spark.range(250, 350).select(
-            F.col("id").alias("k"), F.lit(7).cast("long").alias("v")
-        )
-        warehouse.snapshot_merge(spark, t, upd, ["k"])
-        out = warehouse.read_snapshot(spark, t)
-        assert out.count() == 350
-        assert out.filter(F.col("v") == 7).count() == 100
-
-    def test_delete_only_touches_overlapping_dirs(self, spark, tmp_path):
-        from pyspark.sql import functions as F
-
-        from financial_data_ingestion_pipeline_spark.operators import warehouse
-
-        t = str(tmp_path / "tbl")
-        self._seed(spark, t)
-        before = warehouse._load_manifest(t, None)
-        dels = spark.range(100, 150).select(F.col("id").alias("k"))
-        warehouse.snapshot_merge(spark, t, dels, ["k"], delete=True)
-        after = warehouse._load_manifest(t, None)
-        assert len(set(before["data_dirs"]) & set(after["data_dirs"])) == 2
-        out = warehouse.read_snapshot(spark, t)
-        assert out.count() == 250
-        assert out.filter((F.col("k") >= 100) & (F.col("k") < 150)).count() == 0
-        # prior version still reads the pre-delete table (time travel)
-        assert warehouse.read_snapshot(spark, t, version=2).count() == 300
-
-
 @pytest.mark.slow  # slow tier: python-datasource stream/batch drives (~15 s)
 class TestTickGenDataSource:
     def test_batch_read_parallel_and_deterministic(self, spark):
@@ -810,7 +734,7 @@ def test_snapshot_concurrent_commit_conflict(spark, tmp_path):
     import pytest as _pytest
 
     with _pytest.raises(warehouse.ConcurrentCommitError):
-        warehouse._write_manifest(t, 1, ["data/bogus"], {})
+        warehouse._write_manifest(t, 1, ["data/bogus"])
     # winner's state intact; loser retries against the new latest
     assert warehouse.read_snapshot(spark, t).count() == 10
     v = warehouse.snapshot_commit(

@@ -31,36 +31,22 @@ _IMPORTS = (ast.Import, ast.ImportFrom)
 
 TEST_ONLY = frozenset(
     {
-        # disk index builders, appenders and compactors
-        "functions/dedup.py::_compact_posting_table",
+        # the dedup key index and its probes
         "functions/dedup.py::_dedup_against_keysets",
-        "functions/dedup.py::append_to_overlap_index",
         "functions/dedup.py::build_dedup_index",
-        "functions/dedup.py::build_overlap_index",
-        "functions/dedup.py::compact_overlap_index",
-        "functions/dedup.py::compact_span_index",
         "functions/dedup.py::dedup_incremental",
         "functions/dedup.py::dedup_incremental_indexed",
-        "functions/dedup.py::source_overlap_from_index",
-        # streaming index maintainers
-        "streaming/overlap_stream.py::maintain_overlap_index",
-        "streaming/span_stream.py::probe_and_maintain_span_index",
         # snapshot tables and their callers
         "operators/warehouse.py::ConcurrentCommitError",
-        "operators/warehouse.py::_dir_stats",
-        "operators/warehouse.py::_dirs_overlapping",
         "operators/warehouse.py::_load_manifest",
         "operators/warehouse.py::_manifest_path",
-        "operators/warehouse.py::_stat_key",
         "operators/warehouse.py::_write_manifest",
         "operators/warehouse.py::list_snapshots",
         "operators/warehouse.py::read_snapshot",
         "operators/warehouse.py::snapshot_commit",
-        "operators/warehouse.py::snapshot_merge",
         "operators/warehouse.py::vacuum_snapshots",
         "plans/corpus_pipeline.py::_span_contamination_probe_and_cut",
         "plans/corpus_pipeline.py::run_incremental_ingest",
-        "streaming/merge_stream.py::upsert_stream",
         "streaming/ohlc_stream.py::run_ohlc_stream_once",
         "streaming/ohlc_stream.py::write_snapshot_stream",
         # alternative warehouse layouts and sinks

@@ -214,125 +214,3 @@ def test_streaming_pq_index_matches_batch(spark, sf_dir, tmp_path_factory):
         for r in ivfpq_topk(emb, qids, k=5, pool=50).collect()
     }
     assert got == want
-
-
-def test_streaming_span_probe_and_maintain_loop(spark, tmp_path_factory):
-    """The ingest contamination loop: batch 1 is probed against the
-    bootstrap corpus index (matches its copied sentence), then its
-    anchors are appended so batch 2's copy OF BATCH 1 is caught too —
-    probe-before-append, batch-vs-standing semantics day over day."""
-    from financial_data_ingestion_pipeline_spark.functions.dedup import (
-        build_span_index,
-    )
-    from financial_data_ingestion_pipeline_spark.streaming.span_stream import (
-        probe_and_maintain_span_index,
-    )
-
-    corpus_sent = "the original corpus sentence that will be copied"
-    batch1_sent = "a brand new sentence first seen in batch one here"
-    corpus = spark.createDataFrame(
-        [(0, f"corpus doc saying {corpus_sent} and more")],
-        "doc_id long, text string",
-    )
-    index_path = str(tmp_path_factory.mktemp("span_loop_idx"))
-    build_span_index(corpus, index_path)
-
-    landing = tmp_path_factory.mktemp("span_loop_landing")
-    b1 = spark.createDataFrame(
-        [(10, f"arrival quoting {corpus_sent} verbatim"),
-         (11, f"also new: {batch1_sent}")],
-        "doc_id long, text string",
-    )
-    b2 = spark.createDataFrame(
-        [(20, f"later arrival quoting {batch1_sent} from batch one"),
-         (21, "wholly original text matching nothing at all here")],
-        "doc_id long, text string",
-    )
-    b1.coalesce(1).write.parquet(str(landing / "f1"))
-    b2.coalesce(1).write.parquet(str(landing / "f2"))
-
-    spans_out = str(tmp_path_factory.mktemp("span_loop_out"))
-    q = probe_and_maintain_span_index(
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{landing}/*/"),
-        index_path,
-        spans_out,
-        str(tmp_path_factory.mktemp("span_loop_ckpt")),
-    )
-    q.awaitTermination()
-
-    got = spark.read.parquet(spans_out).collect()
-    contaminated = {r.doc_id for r in got}
-    # 10 copies the corpus; 20 copies batch 1 (visible because batch
-    # 1's anchors were appended before batch 2 probed); 11 and 21 are
-    # clean at probe time
-    assert contaminated == {10, 20}
-
-
-def test_streaming_span_cut_and_maintain_loop(spark, tmp_path_factory):
-    """The streaming ingest-with-cut loop: batch 1's verbatim corpus
-    quote is cut before its documents land; batch 2's copy of batch
-    1's CLEAN text is caught (anchors of the landed text were
-    appended), while a copy of the text batch 1 had CUT is NOT caught
-    — the index reflects what landed, not what arrived."""
-    from financial_data_ingestion_pipeline_spark.functions.dedup import (
-        build_span_index,
-    )
-    from financial_data_ingestion_pipeline_spark.streaming.span_stream import (
-        cut_and_maintain_span_index,
-    )
-
-    corpus_sent = "the original corpus sentence that will be copied"
-    batch1_sent = "a brand new sentence first seen in batch one here"
-    corpus = spark.createDataFrame(
-        [(0, f"corpus doc saying {corpus_sent} and more")],
-        "doc_id long, text string",
-    )
-    index_path = str(tmp_path_factory.mktemp("span_cut_idx"))
-    build_span_index(corpus, index_path)
-
-    landing = tmp_path_factory.mktemp("span_cut_landing")
-    b1 = spark.createDataFrame(
-        [(10, f"arrival quoting {corpus_sent} verbatim"),
-         (11, f"also new: {batch1_sent}")],
-        "doc_id long, text string",
-    )
-    # 20 copies batch 1's surviving text -> caught; 22 copies the
-    # sentence batch 1 CUT -> caught only via the CORPUS index (it was
-    # there all along), proving the cut text itself never re-anchored
-    b2 = spark.createDataFrame(
-        [(20, f"later arrival quoting {batch1_sent} from batch one"),
-         (21, "wholly original text matching nothing at all here")],
-        "doc_id long, text string",
-    )
-    b1.coalesce(1).write.parquet(str(landing / "f1"))
-    b2.coalesce(1).write.parquet(str(landing / "f2"))
-
-    clean_out = str(tmp_path_factory.mktemp("span_cut_clean"))
-    spans_out = str(tmp_path_factory.mktemp("span_cut_spans"))
-    q = cut_and_maintain_span_index(
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{landing}/*/"),
-        index_path,
-        clean_out,
-        spans_out,
-        str(tmp_path_factory.mktemp("span_cut_ckpt")),
-    )
-    q.awaitTermination()
-
-    clean = {r.doc_id: (r.text, r.n_cut)
-             for r in spark.read.parquet(clean_out).collect()}
-    assert set(clean) == {10, 11, 20, 21}
-    # batch 1: the corpus quote was cut from doc 10; doc 11 untouched
-    assert corpus_sent not in clean[10][0] and clean[10][1] == 1
-    assert clean[11] == (f"also new: {batch1_sent}", 0)
-    # batch 2: doc 20's copy of batch 1's CLEAN text was cut
-    assert batch1_sent not in clean[20][0] and clean[20][1] == 1
-    assert clean[21][1] == 0
-
-    spans = spark.read.parquet(spans_out)
-    assert {r.doc_id for r in spans.collect()} == {10, 20}
-    # quarantine partitions are per-batch idempotent landings
-    assert {r.batch_id for r in spans.collect()} == {1, 2}

@@ -2,9 +2,10 @@
 dedup -> windowed-OHLC chain, plus stream/batch parity for the sinks
 behind ``streaming/sink.py``: the once-per-batch evaluation, the keyed
 merge (multi-batch carry path and OHLC schema guard), the ``batch_id``
-partition writer (span and overlap indexes) and the snapshot commit
-and merge.  The rest of the stream/batch parity suite is
-``test_streaming.py`` (slow tier)."""
+partition writer (span index maintenance and the span probe-and-cut
+loop, whose probe runs once per micro-batch) and the snapshot commit.
+The rest of the stream/batch parity suite is ``test_streaming.py``
+(slow tier)."""
 
 from __future__ import annotations
 
@@ -161,57 +162,6 @@ def test_ohlc_merge_schema_mismatch_fails_and_keeps_table(spark, tmp_path):
     assert kept == ["2022-04-04 09:00:00"]
 
 
-def test_streaming_overlap_index_matches_batch(spark, tmp_path_factory):
-    """The stream-maintained overlap postings reproduce the batch
-    builder's per-source sets, and the matrix served from the index
-    equals the full recompute over the same documents."""
-    from financial_data_ingestion_pipeline_spark.functions.dedup import (
-        build_overlap_index,
-        source_overlap,
-        source_overlap_from_index,
-    )
-    from financial_data_ingestion_pipeline_spark.streaming.overlap_stream import (
-        maintain_overlap_index,
-    )
-
-    rows = [
-        (0, "alpha beta gamma delta epsilon zeta", "srcA"),
-        (1, "beta gamma delta epsilon zeta eta", "srcB"),
-        (2, "alpha beta gamma delta epsilon zeta", "srcB"),
-        (3, "totally different vocabulary in this one", "srcC"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-
-    landing = tmp_path_factory.mktemp("ovl_landing")
-    docs.coalesce(1).write.mode("overwrite").parquet(str(landing))
-    streamed_path = tmp_path_factory.mktemp("ovl_idx_stream")
-    q = maintain_overlap_index(
-        spark.readStream.schema(
-            "doc_id long, text string, source string"
-        ).parquet(str(landing)),
-        str(streamed_path),
-        os.path.join(str(streamed_path), "ckpt"),
-    )
-    q.awaitTermination()
-
-    batch_path = tmp_path_factory.mktemp("ovl_idx_batch")
-    build_overlap_index(docs, str(batch_path))
-
-    read_p = lambda p: {  # noqa: E731
-        (r.src, r.gram)
-        for r in spark.read.parquet(f"{p}/postings").collect()
-    }
-    assert read_p(str(streamed_path)) == read_p(str(batch_path))
-
-    key = lambda df: {  # noqa: E731
-        (r.src_a, r.src_b, r.n_inter, r.n_a, r.n_b, r.jaccard)
-        for r in df.collect()
-    }
-    assert key(source_overlap_from_index(spark, str(streamed_path))) == key(
-        source_overlap(docs)
-    )
-
-
 def test_streaming_span_index_matches_batch(spark, tmp_path_factory):
     """The stream-maintained ExactSubstr anchor index holds exactly
     the distinct hashes the batch builder writes for the same
@@ -300,59 +250,133 @@ def test_snapshot_stream_commits_atomically(spark, tmp_path_factory):
     assert counts == sorted(counts)
 
 
-def test_streaming_upsert_merges_into_snapshot_table(spark, tmp_path_factory):
-    """Micro-batched CDC upserts land in the snapshot table with
-    last-writer-wins per key, and a batch whose keys touch only one
-    directory carries the other directories forward untouched."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from financial_data_ingestion_pipeline_spark.operators import warehouse
-    from financial_data_ingestion_pipeline_spark.streaming.merge_stream import (
-        upsert_stream,
+def test_streaming_span_cut_and_maintain_loop(spark, tmp_path_factory):
+    """The streaming ingest-with-cut loop: batch 1's verbatim corpus
+    quote is cut before its documents land; batch 2's copy of batch
+    1's CLEAN text is caught (anchors of the landed text were
+    appended), while a copy of the text batch 1 had CUT is NOT caught
+    — the index reflects what landed, not what arrived."""
+    from financial_data_ingestion_pipeline_spark.functions.dedup import (
+        build_span_index,
+    )
+    from financial_data_ingestion_pipeline_spark.streaming.span_stream import (
+        cut_and_maintain_span_index,
     )
 
-    t = str(tmp_path_factory.mktemp("merge_tbl") / "tbl")
-    # seed: two disjoint key ranges in two directories, stats on k
-    for lo in (0, 100):
-        seed = spark.range(lo, lo + 50).select(
-            F.col("id").alias("k"),
-            F.lit(dt.datetime(2024, 1, 1)).alias("ts"),
-            F.lit(0).cast("long").alias("v"),
-        )
-        warehouse.snapshot_commit(seed, t, stats_col="k")
-    seeded = warehouse._load_manifest(t, None)
+    corpus_sent = "the original corpus sentence that will be copied"
+    batch1_sent = "a brand new sentence first seen in batch one here"
+    corpus = spark.createDataFrame(
+        [(0, f"corpus doc saying {corpus_sent} and more")],
+        "doc_id long, text string",
+    )
+    index_path = str(tmp_path_factory.mktemp("span_cut_idx"))
+    build_span_index(corpus, index_path)
 
-    # CDC stream: three chronological batches, keys 100-119 only
-    schema = "k long, ts timestamp, v long"
-    land = tmp_path_factory.mktemp("merge_landing")
-    for b in range(3):
-        rows = [
-            (100 + i, dt.datetime(2024, 1, 2 + b), b * 100 + i)
-            for i in range(20)
-        ]
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(land))
+    landing = tmp_path_factory.mktemp("span_cut_landing")
+    b1 = spark.createDataFrame(
+        [(10, f"arrival quoting {corpus_sent} verbatim"),
+         (11, f"also new: {batch1_sent}")],
+        "doc_id long, text string",
+    )
+    # 20 copies batch 1's surviving text -> caught; 22 copies the
+    # sentence batch 1 CUT -> caught only via the CORPUS index (it was
+    # there all along), proving the cut text itself never re-anchored
+    b2 = spark.createDataFrame(
+        [(20, f"later arrival quoting {batch1_sent} from batch one"),
+         (21, "wholly original text matching nothing at all here")],
+        "doc_id long, text string",
+    )
+    b1.coalesce(1).write.parquet(str(landing / "f1"))
+    b2.coalesce(1).write.parquet(str(landing / "f2"))
 
-    src = (
-        spark.readStream.schema(schema)
+    clean_out = str(tmp_path_factory.mktemp("span_cut_clean"))
+    spans_out = str(tmp_path_factory.mktemp("span_cut_spans"))
+    q = cut_and_maintain_span_index(
+        spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
-        .parquet(str(land))
-    )
-    q = upsert_stream(
-        src, t, ["k"],
-        str(tmp_path_factory.mktemp("merge_ckpt")), stats_col="k",
+        .parquet(f"{landing}/*/"),
+        index_path,
+        clean_out,
+        spans_out,
+        str(tmp_path_factory.mktemp("span_cut_ckpt")),
     )
     q.awaitTermination()
 
-    out = warehouse.read_snapshot(spark, t)
-    assert out.count() == 100  # same key set, values upserted
-    got = {r.k: r.v for r in out.filter(F.col("k") >= 100).collect()}
-    # last batch wins for the touched keys
-    assert all(got[100 + i] == 200 + i for i in range(20))
-    assert all(got[k] == 0 for k in range(120, 150))  # beyond the batch: untouched
-    final = warehouse._load_manifest(t, None)
-    # the low-range seed directory was never rewritten
-    assert seeded["data_dirs"][0] in final["data_dirs"]
+    clean = {r.doc_id: (r.text, r.n_cut)
+             for r in spark.read.parquet(clean_out).collect()}
+    assert set(clean) == {10, 11, 20, 21}
+    # batch 1: the corpus quote was cut from doc 10; doc 11 untouched
+    assert corpus_sent not in clean[10][0] and clean[10][1] == 1
+    assert clean[11] == (f"also new: {batch1_sent}", 0)
+    # batch 2: doc 20's copy of batch 1's CLEAN text was cut
+    assert batch1_sent not in clean[20][0] and clean[20][1] == 1
+    assert clean[21][1] == 0
+
+    spans = spark.read.parquet(spans_out)
+    assert {r.doc_id for r in spans.collect()} == {10, 20}
+    # quarantine partitions are per-batch idempotent landings
+    assert {r.batch_id for r in spans.collect()} == {1, 2}
+
+
+def test_span_cut_loop_probes_each_micro_batch_once(
+    spark, tmp_path, monkeypatch
+):
+    """The cut loop's index probe feeds both the quarantine write and
+    the cut, so it must be evaluated once per micro-batch, not once
+    per consumer.  A counting UDF filter on the probe output adds one
+    to an accumulator per span row it evaluates, so over the stream it
+    must end at the number of quarantined span rows.  The probe's pin
+    is released, leaving the persisted-frame registry as it was."""
+    from financial_data_ingestion_pipeline_spark import session as S
+    from financial_data_ingestion_pipeline_spark.functions import dedup
+    from financial_data_ingestion_pipeline_spark.streaming.span_stream import (
+        cut_and_maintain_span_index,
+    )
+
+    quote = "the original corpus sentence that will be copied"
+    index_path = str(tmp_path / "idx")
+    dedup.build_span_index(
+        spark.createDataFrame(
+            [(0, f"corpus doc saying {quote} and more")],
+            "doc_id long, text string",
+        ),
+        index_path,
+    )
+    landing = tmp_path / "landing"
+    clean_text = ["alpha bravo charlie delta echo", "kilo lima mike november"]
+    for b in range(2):
+        spark.createDataFrame(
+            [(10 * b + 10, f"arrival {b} quoting {quote} verbatim"),
+             (10 * b + 11, clean_text[b])],
+            "doc_id long, text string",
+        ).coalesce(1).write.parquet(str(landing / f"f{b}"))
+
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def count_row(v):
+        evaluated.add(1)
+        return True
+
+    counted = F.udf(count_row, "boolean").asNondeterministic()
+    probe = dedup.span_probe_index
+    monkeypatch.setattr(
+        dedup, "span_probe_index",
+        lambda *a, **k: probe(*a, **k).filter(counted("span_start")),
+    )
+    registered = len(S._PERSISTED)
+
+    spans_out = str(tmp_path / "spans")
+    cut_and_maintain_span_index(
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{landing}/*/"),
+        index_path,
+        str(tmp_path / "clean"),
+        spans_out,
+        str(tmp_path / "ckpt"),
+    ).awaitTermination()
+
+    spans = spark.read.parquet(spans_out).collect()
+    assert {(r.doc_id, r.batch_id) for r in spans} == {(10, 1), (20, 2)}
+    assert evaluated.value == len(spans)
+    assert len(S._PERSISTED) == registered

@@ -26,12 +26,16 @@ asserted three ways:
    files) and the rolled-up report must equal a batch
    ``embedding_drift`` over the extended corpus.
 
-Writes DRIFT_STREAM_HEAPS.md (runtimes + parity verdicts + drift
-stamp) — the committed record.  The pytest twin
-(test_streaming.py::test_streaming_drift_matches_batch) covers the
-same semantics at sf-tiny; this tool is the scale evidence.
+Prints the markdown record (runtimes + parity verdicts + drift
+stamp) to stdout; DRIFT_STREAM_HEAPS.md is the committed copy.  The
+pytest twin (test_streaming.py::test_streaming_drift_matches_batch)
+covers the same semantics at sf-tiny; this tool is the scale evidence.
 
 Usage: python tools/drift_stream_heaps.py [--emb PATH] [--batches N]
+
+Runs on local[$SPARK_GRAFT_CPUS] (default: every core).  The default
+corpus is ``testdata_heaps1/`` in this checkout, made by
+``python tools/gen_sf.py testdata_heaps1 --scale 10 --heaps``.
 """
 from __future__ import annotations
 
@@ -45,7 +49,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tools"))
 
-EMB = "/root/repo/testdata_heaps1/embeddings.parquet"
+EMB = os.path.join(REPO, "testdata_heaps1", "embeddings.parquet")
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 
 
 def main() -> None:
@@ -74,7 +79,7 @@ def main() -> None:
 
     spark = get_spark(
         app_name="fdip-drift-stream-heaps",
-        master="local[32]",
+        master=f"local[{CPUS}]",
         shuffle_partitions=32,
         extra_conf={"spark.ui.enabled": "false",
                     "spark.driver.memory": "16g"},
@@ -168,24 +173,22 @@ def main() -> None:
         f"{t_incr}s |")
 
     ok = parity_ok and replay_ok and incr_ok
-    with open(os.path.join(REPO, "DRIFT_STREAM_HEAPS.md"), "w") as fh:
-        fh.write("# DRIFT_STREAM_HEAPS — streaming drift monitor at "
-                 "the heaps1 decade\n\n")
-        fh.write(
-            f"Corpus: `{emb_path}` ({n_vecs} 64-d vectors, 10x sf0.1), "
-            f"initial load {n_batches - 1} file-stream batches + a full "
-            "checkpoint-wipe replay + 1 incremental drop "
-            "(`maxFilesPerTrigger=1`), local[32], 16g.  Stream == "
-            "batch == replay semantics asserted three ways (exact "
-            "integer parity, no float tolerance); generated by "
-            "`tools/drift_stream_heaps.py`.  Drift probe: "
-            f"{cal['probe_s']} s vs ref {cal['probe_ref_s']} s "
-            f"(drift_factor {cal['drift_factor']}).\n\n")
-        fh.write("| assertion | verdict | detail |\n|---|---|---|\n")
-        fh.write("\n".join(report) + "\n")
-        fh.write(f"\n**Overall: {'PASS' if ok else 'FAIL'}.**\n")
-    print("\n".join(report))
-    print("overall:", "PASS" if ok else "FAIL")
+    fh = sys.stdout
+    fh.write("# DRIFT_STREAM_HEAPS — streaming drift monitor at "
+             "the heaps1 decade\n\n")
+    fh.write(
+        f"Corpus: `{emb_path}` ({n_vecs} 64-d vectors, 10x sf0.1), "
+        f"initial load {n_batches - 1} file-stream batches + a full "
+        "checkpoint-wipe replay + 1 incremental drop "
+        f"(`maxFilesPerTrigger=1`), local[{CPUS}], 16g.  Stream == "
+        "batch == replay semantics asserted three ways (exact "
+        "integer parity, no float tolerance); generated by "
+        "`tools/drift_stream_heaps.py`.  Drift probe: "
+        f"{cal['probe_s']} s vs ref {cal['probe_ref_s']} s "
+        f"(drift_factor {cal['drift_factor']}).\n\n")
+    fh.write("| assertion | verdict | detail |\n|---|---|---|\n")
+    fh.write("\n".join(report) + "\n")
+    fh.write(f"\n**Overall: {'PASS' if ok else 'FAIL'}.**\n")
     shutil.rmtree(work, ignore_errors=True)
     spark.stop()
     sys.exit(0 if ok else 1)

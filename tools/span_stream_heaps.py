@@ -14,11 +14,16 @@ multi-batch file stream over the heaps1 decade corpus (50k docs,
    land -> anchor-append per batch, same order), and probing both
    indexes with a fresh batch must return identical span tables.
 
-Writes SPAN_STREAM_HEAPS.md (runtime + parity verdicts) — the
-committed record.  The pytest twin (test_streaming.py) covers the
-same semantics at sf-tiny; this tool is the scale evidence.
+Prints the markdown record (runtime + parity verdicts) to stdout;
+SPAN_STREAM_HEAPS.md is the committed copy.  The pytest twins
+(test_streaming_smoke.py) cover the same semantics at sf-tiny; this
+tool is the scale evidence.
 
 Usage: python tools/span_stream_heaps.py [--docs-dir D] [--batches N]
+
+Runs on local[$SPARK_GRAFT_CPUS] (default: every core).  The default
+corpus is ``testdata_heaps1/`` in this checkout, made by
+``python tools/gen_sf.py testdata_heaps1 --scale 10 --heaps``.
 """
 from __future__ import annotations
 
@@ -32,7 +37,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tools"))
 
-DOCS = "/root/repo/testdata_heaps1/documents.parquet"
+DOCS = os.path.join(REPO, "testdata_heaps1", "documents.parquet")
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 
 
 def main() -> None:
@@ -64,7 +70,7 @@ def main() -> None:
 
     spark = get_spark(
         app_name="fdip-span-stream-heaps",
-        master="local[32]",
+        master=f"local[{CPUS}]",
         shuffle_partitions=32,
         extra_conf={"spark.ui.enabled": "false",
                     "spark.driver.memory": "16g"},
@@ -200,22 +206,20 @@ def main() -> None:
         f"corpus-copy batch (must be > 0), diff {probe_diff} |")
 
     ok = maintain_ok and cut_ok and probe_ok
-    with open(os.path.join(REPO, "SPAN_STREAM_HEAPS.md"), "w") as fh:
-        fh.write("# SPAN_STREAM_HEAPS — streaming span loop at the "
-                 "heaps1 decade\n\n")
-        fh.write(
-            f"Corpus: `{docs_path}` ({n_docs} docs, 10x sf0.1), split "
-            f"into {n_batches} file-stream batches "
-            "(`maxFilesPerTrigger=1`), local[32], 16g.  Stream == "
-            "batch semantics asserted three ways; generated by "
-            "`tools/span_stream_heaps.py`.  Drift probe: "
-            f"{cal['probe_s']} s vs ref {cal['probe_ref_s']} s "
-            f"(drift_factor {cal['drift_factor']}).\n\n")
-        fh.write("| assertion | verdict | detail |\n|---|---|---|\n")
-        fh.write("\n".join(report) + "\n")
-        fh.write(f"\n**Overall: {'PASS' if ok else 'FAIL'}.**\n")
-    print("\n".join(report))
-    print("overall:", "PASS" if ok else "FAIL")
+    fh = sys.stdout
+    fh.write("# SPAN_STREAM_HEAPS — streaming span loop at the "
+             "heaps1 decade\n\n")
+    fh.write(
+        f"Corpus: `{docs_path}` ({n_docs} docs, 10x sf0.1), split "
+        f"into {n_batches} file-stream batches "
+        f"(`maxFilesPerTrigger=1`), local[{CPUS}], 16g.  Stream == "
+        "batch semantics asserted three ways; generated by "
+        "`tools/span_stream_heaps.py`.  Drift probe: "
+        f"{cal['probe_s']} s vs ref {cal['probe_ref_s']} s "
+        f"(drift_factor {cal['drift_factor']}).\n\n")
+    fh.write("| assertion | verdict | detail |\n|---|---|---|\n")
+    fh.write("\n".join(report) + "\n")
+    fh.write(f"\n**Overall: {'PASS' if ok else 'FAIL'}.**\n")
     shutil.rmtree(work, ignore_errors=True)
     spark.stop()
     sys.exit(0 if ok else 1)
