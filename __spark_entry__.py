@@ -2134,11 +2134,9 @@ def _q_unimax_sample(spark, sf_dir):
 def _q_span_cut_probe(spark, sf_dir):
     """The ingest-time ACTION shape: cut from TODAY'S batch (doc_id %
     10 == 7) every span whose text occurs verbatim in the standing
-    corpus (the rest) — span_cross_spans detection (identical to
-    span_probe_index by construction: same kernel, same membership
-    semi-join) feeding cut_spans.  Completes oracle coverage of the
-    span family's serve path: detect (span_probe), act (this), index
-    maintenance (pytest parity)."""
+    corpus (the rest) — span_cross_spans detection feeding cut_spans.
+    Completes oracle coverage of the span family's serve path: detect
+    (span_probe) and act (this)."""
     from pyspark.sql import functions as F
 
     from financial_data_ingestion_pipeline_spark.materialize import pin

@@ -27,7 +27,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .text import hash64, tokens, word_ngrams
-from ..operators.warehouse import write_batch_partition
 from ..session import fan_out
 
 DEFAULT_NUM_PERM = 12
@@ -1033,79 +1032,45 @@ def decontaminate(
     )
 
 
-def build_dedup_index(
+def dedup_incremental(
+    batch: DataFrame,
     corpus: DataFrame,
-    path: str,
     id_col: str = "doc_id",
     text_col: str = "text",
     num_perm: int = DEFAULT_NUM_PERM,
     bands: int = DEFAULT_BANDS,
-    mode: str = "overwrite",
-) -> None:
-    """Materialize the corpus-side dedup key sets that
-    :func:`dedup_incremental` derives on the fly — the "build once,
-    probe every ingest" half of production incremental dedup, where
-    re-shingling an unchanged 100-TB corpus per daily batch would be
-    the dominant (and pure-waste) cost.
+) -> DataFrame:
+    """Deduplicate a NEW ingest batch against an EXISTING corpus — the
+    daily production path, where re-pairing the whole corpus against
+    itself (as :func:`minhash_lsh_pairs` does) would redo work that
+    never changes.
 
-    Two parquet tables under ``path``:
+    Two checks, both expressed as joins against corpus-side key sets
+    that an ingest pipeline would materialize once and reuse:
 
-    * ``content_hashes/`` — distinct ``h`` (md5 of text, 16 bytes/doc);
-    * ``band_keys/`` — distinct MinHash LSH ``band_key`` strings.
+    * ``exact_dup`` — md5(text) semi-join against the corpus's distinct
+      content hashes (16 bytes per corpus doc);
+    * ``near_dup`` — MinHash LSH band keys (same signature construction
+      as the intra-corpus pass) semi-joined against the corpus's
+      distinct band-key set.  A batch doc sharing ANY band with any
+      corpus doc is flagged.
 
-    Both are distinct-key sets: appending a new ingest's keys keeps
-    them valid (set union), so maintenance is an append of the keys of
-    kept batch docs — no rebuild.
+    Both joins key on short hashes, never text; the batch side is
+    typically orders of magnitude smaller than the corpus, so AQE
+    broadcasts the batch-derived sides while the corpus key sets
+    stream.  Output: one row per batch doc —
+    ``doc_id, exact_dup, near_dup, keep``
+    (``keep = NOT (exact_dup OR near_dup)``).
     """
-    corpus.select(F.md5(F.col(text_col)).alias("h")).distinct().write.mode(
-        mode
-    ).parquet(f"{path}/content_hashes")
-    posting = corpus.select(
+    corpus_hashes = corpus.select(F.md5(F.col(text_col)).alias("h")).distinct()
+    corpus_posting = corpus.select(
         F.col(id_col).alias("doc"), F.explode(shingles(text_col)).alias("gram")
     )
-    minhash_signatures(posting, num_perm).select(
-        F.explode(minhash_band_keys(num_perm, bands)).alias("band_key")
-    ).distinct().write.mode(mode).parquet(f"{path}/band_keys")
-
-
-def dedup_incremental_indexed(
-    batch: DataFrame,
-    spark,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = DEFAULT_NUM_PERM,
-    bands: int = DEFAULT_BANDS,
-) -> DataFrame:
-    """:func:`dedup_incremental` against a :func:`build_dedup_index`
-    layout: the batch side shingles/hashes itself (it's the small side),
-    the corpus side is two pre-built key-set scans — per-ingest cost is
-    O(|batch| + |index|) with NO pass over corpus text, which is what
-    makes daily dedup-at-ingest viable at 100 TB.  Results are
-    row-for-row identical to the recompute form (parity-tested)."""
-    return _dedup_against_keysets(
-        batch,
-        spark.read.parquet(f"{path}/content_hashes"),
-        spark.read.parquet(f"{path}/band_keys"),
-        id_col,
-        text_col,
-        num_perm,
-        bands,
+    corpus_bands = (
+        minhash_signatures(corpus_posting, num_perm)
+        .select(F.explode(minhash_band_keys(num_perm, bands)).alias("band_key"))
+        .distinct()
     )
-
-
-def _dedup_against_keysets(
-    batch: DataFrame,
-    corpus_hashes: DataFrame,
-    corpus_bands: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_perm: int,
-    bands: int,
-) -> DataFrame:
-    """Shared core of the recompute and indexed incremental-dedup paths:
-    semi-join the batch's content hashes and band keys against the
-    corpus key sets and flag each batch doc."""
     batch_keyed = batch.select(
         F.col(id_col).alias("doc"), F.md5(F.col(text_col)).alias("h")
     )
@@ -1138,53 +1103,6 @@ def _dedup_against_keysets(
         exact.alias("exact_dup"),
         near.alias("near_dup"),
         (~(exact | near)).alias("keep"),
-    )
-
-
-def dedup_incremental(
-    batch: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = DEFAULT_NUM_PERM,
-    bands: int = DEFAULT_BANDS,
-) -> DataFrame:
-    """Deduplicate a NEW ingest batch against an EXISTING corpus — the
-    daily production path, where re-pairing the whole corpus against
-    itself (as :func:`minhash_lsh_pairs` does) would redo work that
-    never changes.
-
-    Two checks, both expressed as joins against corpus-side key sets
-    that an ingest pipeline would materialize once and reuse:
-
-    * ``exact_dup`` — md5(text) semi-join against the corpus's distinct
-      content hashes (16 bytes per corpus doc);
-    * ``near_dup`` — MinHash LSH band keys (same signature construction
-      as the intra-corpus pass) semi-joined against the corpus's
-      distinct band-key set.  A batch doc sharing ANY band with any
-      corpus doc is flagged.
-
-    Both joins key on short hashes, never text; the batch side is
-    typically orders of magnitude smaller than the corpus, so AQE
-    broadcasts the batch-derived sides while the corpus key sets
-    stream.  For the production path that skips the corpus pass
-    entirely, materialize the key sets once with
-    :func:`build_dedup_index` and probe with
-    :func:`dedup_incremental_indexed`.  Output: one row per batch doc —
-    ``doc_id, exact_dup, near_dup, keep``
-    (``keep = NOT (exact_dup OR near_dup)``).
-    """
-    corpus_hashes = corpus.select(F.md5(F.col(text_col)).alias("h")).distinct()
-    corpus_posting = corpus.select(
-        F.col(id_col).alias("doc"), F.explode(shingles(text_col)).alias("gram")
-    )
-    corpus_bands = (
-        minhash_signatures(corpus_posting, num_perm)
-        .select(F.explode(minhash_band_keys(num_perm, bands)).alias("band_key"))
-        .distinct()
-    )
-    return _dedup_against_keysets(
-        batch, corpus_hashes, corpus_bands, id_col, text_col, num_perm, bands
     )
 
 
@@ -1426,10 +1344,9 @@ def _span_anchors(
 ) -> DataFrame:
     """The ExactSubstr anchor table ``(doc, pos, h)``: xxhash64 of the
     ``min_len``-char substring at every 1-based char position.  Shared
-    by :func:`repeated_spans` (within-corpus), :func:`span_cross_spans`
-    / :func:`span_probe_index` (batch-vs-corpus), the index builder and
-    the streaming maintainer — all four MUST hash identically or a
-    probe silently misses index anchors."""
+    by :func:`repeated_spans` (within-corpus) and
+    :func:`span_cross_spans` (batch-vs-corpus) — both MUST hash
+    identically or a probe silently misses corpus anchors."""
     from financial_data_ingestion_pipeline_spark.session import fan_out
 
     txt = F.coalesce(F.col(text_col), F.lit(""))
@@ -1515,8 +1432,8 @@ def cut_spans(
     spans pass through unchanged via the left join.
 
     CONTRACT: spans must be non-overlapping and duplicate-free per
-    doc — what :func:`repeated_spans` / :func:`span_cross_spans` /
-    :func:`span_probe_index` emit by construction.  Hand-built spans
+    doc — what :func:`repeated_spans` / :func:`span_cross_spans`
+    emit by construction.  Hand-built spans
     that violate it produce UNDEFINED output (an overlapping span's
     preceding segment goes negative and is silently dropped; a
     duplicated span row emits its preceding segment twice).  Pass
@@ -1551,8 +1468,7 @@ def cut_spans(
             raise ValueError(
                 f"cut_spans: overlapping or duplicate spans in {bad} "
                 "doc(s) — spans must be the non-overlapping maximal "
-                "output of repeated_spans/span_cross_spans/"
-                "span_probe_index"
+                "output of repeated_spans/span_cross_spans"
             )
     # segment BEFORE each span: (prev span end + 1) .. (span start - 1)
     pre = sp.withColumn(
@@ -1771,11 +1687,8 @@ def span_cross_spans(
     answering "which parts of today's arrivals are verbatim copies of
     the standing corpus" without scoring batch-internal repeats.
 
-    This is the RECOMPUTE form (the corpus side is anchored in-flight)
-    and the oracle-checkable contract surface; an ingest pipeline
-    materializes the corpus anchor set once (:func:`build_span_index`)
-    and calls :func:`span_probe_index` — identical results by
-    construction (both semi-join the same distinct anchor-hash set).
+    The corpus side is anchored in-flight; this is the
+    oracle-checkable contract surface.
 
     Membership, not df, decides: the corpus side reduces to its
     DISTINCT anchor hashes (map-side combined; boilerplate costs one
@@ -1795,95 +1708,12 @@ def span_cross_spans(
     # (one distinct hash per distinct min_len-gram — same order as the
     # corpus), yet the planner estimates the distinct-over-posexplode
     # at rows(corpus docs) and broadcasts it, OOMing the driver at the
-    # heaps1 decade (round 9).  Unlike :func:`span_probe_index` —
-    # whose parquet-backed index side carries REAL stats and correctly
-    # plans SMJ — the in-flight side can never be safely broadcast, so
-    # force the AQE-skew-splittable sort-merge join.
+    # heaps1 decade (round 9).  The in-flight side can never be safely
+    # broadcast, so force the AQE-skew-splittable sort-merge join.
     kept = (
         batch_occ.join(corpus_h.hint("merge"), "h", "left_semi")
         .select("doc", "pos")
     )
-    return _anchor_spans(kept, min_len, id_col)
-
-
-def build_span_index(
-    corpus: DataFrame,
-    path: str,
-    min_len: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """Materialize the corpus's DISTINCT ExactSubstr anchor hashes —
-    the standing index :func:`span_probe_index` semi-joins each ingest
-    batch against, the span member of the build-once/probe-incremental
-    family (exact and MinHash keys → :func:`build_dedup_index`,
-    vectors → ``similarity.write_pq_index``).  Re-anchoring an
-    unchanged 100 TB corpus per daily batch is the dominant pure-waste
-    cost this index removes.
-
-    Honest sizing: ExactSubstr needs an anchor at EVERY character
-    position, so the index is ~8 bytes per distinct corpus
-    ``min_len``-gram — the same order as the corpus itself (Lee et
-    al.'s suffix array is ~8x corpus bytes for the same reason).
-    Membership is all a probe needs, so only the hash column is
-    stored (no doc/pos — a 3x saving over the occurrence table), and
-    duplicates ACROSS batch partitions are harmless (the probe is a
-    semi-join), so appends never re-deduplicate history.
-
-    Layout: ``{path}/anchors`` parquet ``(h, batch_id)`` partitioned
-    by ``batch_id`` so the streaming maintainer
-    (``streaming/span_stream.py``) lands each micro-batch as its own
-    idempotent partition; the batch builder writes batch_id=0.
-    """
-    write_batch_partition(
-        _span_anchors(corpus, min_len, id_col, text_col).select("h").distinct(),
-        f"{path}/anchors", 0, rebuild=True,
-    )
-
-
-def append_to_span_index(
-    batch: DataFrame,
-    path: str,
-    batch_id: int,
-    min_len: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """Land one ingest batch's distinct anchor hashes as its own
-    idempotent ``batch_id`` partition of a :func:`build_span_index`
-    layout (dynamic partition overwrite: a replay rewrites only its
-    own partition) — the batch-mode sibling of the streaming
-    maintainer (``streaming/span_stream.py``), same xxhash64 kernel,
-    same layout.  Duplicate hashes ACROSS partitions are harmless
-    (the probe is a semi-join); pick ``batch_id`` above the index's
-    current max when appending to prior history."""
-    write_batch_partition(
-        _span_anchors(batch, min_len, id_col, text_col).select("h").distinct(),
-        f"{path}/anchors", batch_id,
-    )
-
-
-def span_probe_index(
-    batch: DataFrame,
-    spark,
-    path: str,
-    min_len: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Probe an ingest batch against a :func:`build_span_index`
-    layout: :func:`span_cross_spans` with NO anchor pass over corpus
-    text — the corpus side is an index scan of pre-hashed anchors.
-    The batch side anchors itself in-flight; results are identical to
-    the recompute form by construction (same xxhash64 kernel, same
-    membership semi-join — which, being a semi-join, also absorbs any
-    cross-partition duplicate hashes appends left behind).
-
-    Output: ``doc_id (batch), span_start, span_len``.
-    """
-    index_h = spark.read.parquet(f"{path}/anchors").select("h")
-    batch_occ = _span_anchors(batch, min_len, id_col, text_col)
-    kept = batch_occ.join(index_h, "h", "left_semi").select("doc", "pos")
     return _anchor_spans(kept, min_len, id_col)
 
 

@@ -421,9 +421,9 @@ def ann_lsh_topk(
     re-ranks the candidates.  Output: (query_id, neighbor_id, rank, sim).
 
     ONE pass over the corpus: the query side (a handful of vectors —
-    the serving pattern, like :func:`pq_index_topk`) is pulled to the
-    driver, its probed buckets computed with the same numpy kernel the
-    corpus UDF runs, and broadcast; the corpus scan computes each row's
+    the serving pattern) is pulled to the driver, its probed buckets
+    computed with the same numpy kernel the corpus UDF runs, and
+    broadcast; the corpus scan computes each row's
     table keys, joins the broadcast probes map-side, scores candidates
     in place, and a single groupBy dedups multi-table matches and ranks
     (:func:`_topk_single_shuffle`).  Corpus vectors are read once and
@@ -1501,32 +1501,6 @@ def embedding_drift(
     Output: (pos, n_a, n_b, sum_a, sum_b, shift_abs_ppm, shift_sign),
     one row per dimension.
     """
-    return drift_metrics(
-        drift_partial_stats(
-            embeddings, split_a, split_b, grid_bits, seed,
-            train_pct, val_pct, buckets, id_col, vec_col,
-        )
-    )
-
-
-def drift_partial_stats(
-    embeddings: DataFrame,
-    split_a: str = "train",
-    split_b: str = "val",
-    grid_bits: int = 20,
-    seed: str = "split",
-    train_pct: int = 90,
-    val_pct: int = 5,
-    buckets: int = 100,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-dimension integer drift partials (n_a, n_b, sum_a, sum_b)
-    for a slice of the corpus.  Pure integer sums/counts — ASSOCIATIVE,
-    so partials from disjoint slices (micro-batches, partitions, days)
-    merge by plain addition and :func:`drift_metrics` over the merged
-    sums equals the single-pass answer exactly.  This is what makes the
-    monitor maintainable incrementally by a stream."""
     from financial_data_ingestion_pipeline_spark.functions.text import split_expr
 
     split = split_expr(id_col, train_pct, val_pct, buckets, seed)
@@ -1540,21 +1514,15 @@ def drift_partial_stats(
     )
     is_a = F.col("split") == split_a
     is_b = F.col("split") == split_b
-    return exploded.groupBy("pos").agg(
+    agg = exploded.groupBy("pos").agg(
         F.sum(F.when(is_a, 1).otherwise(0)).alias("n_a"),
         F.sum(F.when(is_b, 1).otherwise(0)).alias("n_b"),
         F.sum(F.when(is_a, F.col("qv")).otherwise(0)).alias("sum_a"),
         F.sum(F.when(is_b, F.col("qv")).otherwise(0)).alias("sum_b"),
     )
-
-
-def drift_metrics(agg: DataFrame) -> DataFrame:
-    """Final drift report from (pos, n_a, n_b, sum_a, sum_b) integer
-    stats: exact cross-multiplied shift in ppm of a grid unit plus its
-    sign — DECIMAL(38,0) intermediates, BIGINT/INT out.  A dimension
-    with an EMPTY split population has no defined mean shift: both
-    metrics are explicitly NULL (rather than a non-ANSI div-by-zero
-    NULL in one engine and an error in another)."""
+    # a dimension with an EMPTY split population has no defined mean
+    # shift: both metrics are explicitly NULL (rather than a non-ANSI
+    # div-by-zero NULL in one engine and an error in another)
     delta = (
         "CAST(sum_a AS DECIMAL(38,0)) * n_b - CAST(sum_b AS DECIMAL(38,0)) * n_a"
     )
@@ -1583,11 +1551,11 @@ def _pq_query_prep(
     codebooks: list[list[list[float]]],
     n_probe: int,
 ):
-    """Driver-side IVF-PQ query preparation, shared by the in-memory
-    operator and the materialized-index path: probe-cell ranking with
-    the corpus kernel's exact arithmetic (rounded cosine, score desc /
-    cell desc ties) and the per-query ADC lookup tables (fold-exact
-    dot of each query subvector against every codeword)."""
+    """Driver-side IVF-PQ query preparation for :func:`ivfpq_topk`:
+    probe-cell ranking with the corpus kernel's exact arithmetic
+    (rounded cosine, score desc / cell desc ties) and the per-query ADC
+    lookup tables (fold-exact dot of each query subvector against every
+    codeword)."""
     import numpy as np
 
     from financial_data_ingestion_pipeline_spark.functions.vectorized import (
@@ -1623,110 +1591,6 @@ def _pq_query_prep(
         ]
         luts.append(lut)
     return probe_map, qids, q_sqs, luts
-
-
-def write_pq_index(
-    embeddings: DataFrame,
-    path: str,
-    centroids: list[list[float]] | None = None,
-    codebooks: list[list[list[float]]] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the IVF-PQ index as ``partitionBy(cell)`` parquet of
-    (id, nibble-packed code) rows — 12 bytes a vector instead of 256.
-    Probes prune partitions at the scan AND the scanned bytes are the
-    codes, not the floats: the two savings multiply, which is the whole
-    economics of PQ at 100 TB.  The quantizer and codebooks are
-    frozen, so the streaming maintainer
-    (``streaming/index_stream.py::maintain_pq_index``) encodes each
-    micro-batch into the same cells and codewords as this build."""
-    from financial_data_ingestion_pipeline_spark.functions.vectorized import (
-        pq_encode_local,
-    )
-
-    if centroids is None:
-        from financial_data_ingestion_pipeline_spark.functions.ivf_pretrained import (
-            CENTROIDS,
-        )
-
-        centroids = CENTROIDS
-    if codebooks is None:
-        from financial_data_ingestion_pipeline_spark.functions.pq_pretrained import (
-            CODEBOOKS,
-        )
-
-        codebooks = CODEBOOKS
-    rows = embeddings.select(id_col, vec_col).mapInPandas(
-        pq_encode_local(
-            [list(map(float, c)) for c in centroids], codebooks,
-            id_col, vec_col,
-        ),
-        "vec_id long, cell int, code long",
-    )
-    (
-        rows.repartition("cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(path)
-    )
-
-
-def pq_index_topk(
-    spark,
-    path: str,
-    embeddings: DataFrame,
-    query_vecs: list[tuple[int, list[float]]],
-    k: int = 5,
-    pool: int = 100,
-    n_probe: int = DEFAULT_N_PROBE,
-    centroids: list[list[float]] | None = None,
-    codebooks: list[list[list[float]]] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Query a :func:`write_pq_index` layout: rank cells in the driver,
-    push ``cell IN (...)`` into the code scan (partition pruning), ADC-
-    score the codes, then re-rank the per-query pool with exact cosine
-    against the FLOAT corpus (``embeddings``) — the float vectors are
-    touched for only |queries| x pool rows.  Identical output contract
-    (and values) to :func:`ivfpq_topk`."""
-    from financial_data_ingestion_pipeline_spark.functions.vectorized import (
-        pq_adc_local,
-    )
-
-    if centroids is None:
-        from financial_data_ingestion_pipeline_spark.functions.ivf_pretrained import (
-            CENTROIDS,
-        )
-
-        centroids = CENTROIDS
-    if codebooks is None:
-        from financial_data_ingestion_pipeline_spark.functions.pq_pretrained import (
-            CODEBOOKS,
-        )
-
-        codebooks = CODEBOOKS
-    probe_map, qids, q_sqs, luts = _pq_query_prep(
-        [(qid, [float(x) for x in v]) for qid, v in query_vecs],
-        centroids, codebooks, n_probe,
-    )
-    cells = sorted(probe_map)
-    index = spark.read.parquet(path).filter(F.col("cell").isin(cells))
-    approx = index.mapInPandas(
-        pq_adc_local(codebooks, luts, probe_map, qids, q_sqs, pool),
-        "query_id long, neighbor_id long, sim double",
-    )
-    pool_pairs = _topk_single_shuffle(approx, pool).select(
-        "query_id", "neighbor_id"
-    )
-    query_rows = [
-        {id_col: int(qid), vec_col: [float(x) for x in v]}
-        for qid, v in query_vecs
-    ]
-    return exact_rerank_pool(
-        embeddings, pool_pairs, query_rows, k, id_col, vec_col
-    )
 
 
 def ivfpq_topk(

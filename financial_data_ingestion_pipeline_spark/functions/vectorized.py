@@ -424,129 +424,6 @@ def ivfpq_topk_local(
     return local_topk
 
 
-def pq_encode_local(
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    id_col: str,
-    vec_col: str,
-):
-    """mapInPandas function that builds PQ index rows: per Arrow batch,
-    assign each vector its coarse cell (identical arithmetic to
-    :func:`ivf_topk_local`) and its packed PQ code — per-subspace L2
-    argmin against the frozen codebooks (ties -> lowest codeword, same
-    as :func:`ivfpq_topk_local`), nibble-packed into one long
-    (``code_m`` in bits ``4m..4m+3``; requires K <= 16).  Emits
-    (id, cell, code) — 12 bytes of index payload per vector instead of
-    256 bytes of floats."""
-    C = np.asarray(centroids, dtype=np.float64)
-    CB = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    assert all(b.shape[0] <= 16 for b in CB), "nibble packing needs K <= 16"
-    CBSQ = [np_seq_sqnorm(b) for b in CB]
-    dim = C.shape[1]
-    n_sub = len(CB)
-    subdim = CB[0].shape[1]
-    cnorms = np_seq_sqnorm(C)
-    n_cells = C.shape[0]
-
-    def encode(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rid = pdf[id_col].to_numpy(dtype=np.int64)
-            mask, vals = _stack(pdf[vec_col], dim)
-            if not mask.any():
-                continue
-            c_sqs = np_seq_sqnorm(vals)
-            cdots = np_seq_matmul(vals, C)
-            scores = np.round(
-                cdots / np.sqrt(c_sqs[:, None] * cnorms[None, :]), 6
-            )
-            cells = n_cells - 1 - np.argmax(scores[:, ::-1], axis=1)
-            packed = np.zeros(len(vals), np.int64)
-            for m in range(n_sub):
-                sub = vals[:, m * subdim:(m + 1) * subdim]
-                enc = CBSQ[m][None, :] - 2.0 * np_seq_matmul(sub, CB[m])
-                packed |= enc.argmin(axis=1).astype(np.int64) << (4 * m)
-            yield pd.DataFrame(
-                {
-                    "vec_id": rid[np.flatnonzero(mask)],
-                    "cell": cells.astype(np.int32),
-                    "code": packed,
-                }
-            )
-
-    return encode
-
-
-def pq_adc_local(
-    codebooks: list[list[list[float]]],
-    luts: list[list[list[float]]],
-    probe_map: dict[int, list[int]],
-    qids: list[int],
-    q_sqs: list[float],
-    pool: int,
-):
-    """mapInPandas function for the ADC scan over a PQ code index: per
-    Arrow batch of (vec_id, cell, code) rows, unpack nibbles, score the
-    queries probing each row's cell via LUT lookups + the
-    codebook-norm reconstruction, emit per-query local top-``pool``.
-    Same arithmetic contract as :func:`ivfpq_topk_local` — the index
-    path returns identical results, it just reads ~20x fewer bytes."""
-    CB = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    CBSQ = [np_seq_sqnorm(b) for b in CB]
-    LUT = np.asarray(luts, dtype=np.float64)
-    sqs = np.asarray(q_sqs, dtype=np.float64)
-    ids_arr = np.asarray(qids, dtype=np.int64)
-    n_sub = len(CB)
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rid = pdf["vec_id"].to_numpy(dtype=np.int64)
-            cells = pdf["cell"].to_numpy(dtype=np.int64)
-            packed = pdf["code"].to_numpy(dtype=np.int64)
-            codes = np.stack(
-                [(packed >> (4 * m)) & 0xF for m in range(n_sub)], axis=1
-            )
-            recon = np.zeros(len(rid), np.float64)
-            for m in range(n_sub):
-                recon += CBSQ[m][codes[:, m]]
-            cand_rows: list[list[int]] = [[] for _ in range(len(ids_arr))]
-            for i, cell in enumerate(cells):
-                for qix in probe_map.get(int(cell), ()):
-                    cand_rows[qix].append(i)
-            out_q, out_n, out_s = [], [], []
-            for qix, rows in enumerate(cand_rows):
-                if not rows:
-                    continue
-                pos = np.asarray(rows, dtype=np.int64)
-                nid = rid[pos]
-                keep = nid != ids_arr[qix]
-                pos, nid = pos[keep], nid[keep]
-                if len(pos) == 0:
-                    continue
-                adc = np.zeros(len(pos), np.float64)
-                for m in range(n_sub):
-                    adc += LUT[qix, m][codes[pos, m]]
-                sims = np.round(adc / np.sqrt(sqs[qix] * recon[pos]), 6)
-                top = np.lexsort((nid, -sims))[:pool]
-                out_q.append(np.full(len(top), ids_arr[qix]))
-                out_n.append(nid[top])
-                out_s.append(sims[top])
-            if not out_q:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "sim": np.concatenate(out_s),
-                }
-            )
-
-    return score
-
-
 def fast_cosine_with_norms(
     a: Column, b: Column, sq_a: Column, sq_b: Column, dim: int,
     decimals: int = 6, single_eval: bool = False,

@@ -119,37 +119,6 @@ def is_missing_path(e: AnalysisException) -> bool:
     return "PATH_NOT_FOUND" in msg or "Path does not exist" in msg
 
 
-def write_batch_partition(
-    df: DataFrame, path: str, batch_id: int, rebuild: bool = False
-) -> None:
-    """Land ``df`` as the ``batch_id=N`` partition of a batch-partitioned
-    parquet table — the one layout every incrementally maintained index
-    here shares (span anchors, overlap postings, winnow fingerprints,
-    drift partials, span quarantine).
-
-    By default only this batch's partition is replaced (dynamic
-    partition overwrite, set per write so it never leaks into other
-    writes on the session): a replayed batch rewrites the same files,
-    so at-least-once delivery stays idempotent.  ``rebuild=True`` is
-    the builders' full static overwrite — every existing partition is
-    dropped and ``df`` becomes the whole table.
-
-    Streaming maintainers pass ``partition_base + batch_id``.  Spark
-    restarts batch ids at 0 for a NEW checkpoint, so a fresh stream
-    attached to prior history must raise ``partition_base`` above the
-    table's current max ``batch_id``; otherwise its dynamic overwrites
-    replace the old stream's partitions.  The default base of 1 keeps
-    streamed batches clear of the builders' ``batch_id=0``.
-    """
-    (
-        df.withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static" if rebuild else "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
-    )
-
-
 def jdbc_append(
     df: DataFrame,
     url: str,
@@ -166,186 +135,6 @@ def jdbc_append(
     for k, v in (properties or {}).items():
         writer = writer.option(k, v)
     writer.jdbc(url, table, mode="append")
-
-
-# ---------------------------------------------------------------------------
-# Snapshot layer: manifest-based atomic commits + time travel
-# ---------------------------------------------------------------------------
-
-_MANIFEST_DIR = "_manifests"
-
-
-class ConcurrentCommitError(RuntimeError):
-    """Another writer committed the same snapshot version first; the
-    caller should re-read the latest version and retry its commit."""
-
-
-def _manifest_path(table_dir: str, version: int) -> str:
-    import os
-
-    return os.path.join(table_dir, _MANIFEST_DIR, f"{version:012d}.json")
-
-
-def list_snapshots(table_dir: str) -> list[int]:
-    """Committed snapshot versions, ascending (empty for a new table).
-
-    Every snapshot function reaches the manifests through here, so this
-    is where a ``table_dir`` with a URI scheme (``s3a://…``,
-    ``hdfs://…``, ``file://…``) is refused: manifests are listed,
-    written and hard-linked with local ``os`` calls, which would put
-    them in a relative directory named after the URI while Spark wrote
-    the data to the remote store."""
-    import os
-    import re
-
-    if re.match(r"[A-Za-z][A-Za-z0-9+.-]*://", table_dir):
-        raise ValueError(
-            f"snapshot tables need a local filesystem path, got {table_dir!r}"
-        )
-    mdir = os.path.join(table_dir, _MANIFEST_DIR)
-    if not os.path.isdir(mdir):
-        return []
-    return sorted(
-        int(f[:-5]) for f in os.listdir(mdir) if f.endswith(".json")
-    )
-
-
-def snapshot_commit(
-    df: DataFrame,
-    table_dir: str,
-    mode: str = "append",
-) -> int:
-    """Commit ``df`` to a snapshot table; returns the new version.
-
-    The Iceberg/Delta idea reduced to its core, for plain parquet on a
-    local or mounted filesystem: data files land under an immutable
-    per-commit directory, and the table state IS the newest manifest —
-    a small JSON listing exactly the data directories visible in that
-    version.  The manifest is written to a temp name and linked into
-    place, so readers either see the previous version or the complete
-    new one; a writer that dies mid-job leaves an orphan data dir and
-    NO manifest — invisible, not corrupt.  ``mode='append'`` carries
-    the previous manifest's dirs forward; ``mode='overwrite'``
-    replaces them logically while old versions stay readable
-    (:func:`read_snapshot` with ``version=``) until vacuumed.
-
-    At 100 TB this is the difference between "a failed backfill left
-    the table half-overwritten" and "nothing happened": jobs become
-    atomic, and time travel / audit reads are free.
-    """
-    import json
-    import os
-    import uuid
-
-    if mode not in ("append", "overwrite"):
-        raise ValueError(f"mode must be 'append' or 'overwrite', got {mode!r}")
-    versions = list_snapshots(table_dir)
-    prev = versions[-1] if versions else None
-    new_version = (prev + 1) if prev is not None else 0
-
-    data_dir = f"data/{new_version:012d}-{uuid.uuid4().hex[:8]}"
-    df.write.mode("error").parquet(os.path.join(table_dir, data_dir))
-
-    dirs = [data_dir]
-    if mode == "append" and prev is not None:
-        with open(_manifest_path(table_dir, prev)) as f:
-            dirs = json.load(f)["data_dirs"] + dirs
-
-    _write_manifest(table_dir, new_version, dirs)
-    return new_version
-
-
-def _write_manifest(table_dir: str, version: int, dirs: list[str]) -> None:
-    import json
-    import os
-    import uuid
-
-    os.makedirs(os.path.join(table_dir, _MANIFEST_DIR), exist_ok=True)
-    manifest = {"version": version, "data_dirs": dirs}
-    tmp = _manifest_path(table_dir, version) + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    # Optimistic concurrency: link() fails with EEXIST if another
-    # writer already committed this version (rename() would silently
-    # OVERWRITE the winner's manifest and lose its commit) — the loser
-    # gets a clean conflict to retry against the new latest, Delta's
-    # mutual-exclusion protocol on a filesystem.
-    try:
-        os.link(tmp, _manifest_path(table_dir, version))
-    except FileExistsError:
-        os.remove(tmp)
-        raise ConcurrentCommitError(
-            f"version {version} of {table_dir} was committed concurrently; "
-            "re-read the table and retry"
-        )
-    os.remove(tmp)
-
-
-def _load_manifest(table_dir: str, version: int | None) -> dict:
-    import json
-
-    versions = list_snapshots(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {table_dir}")
-    v = versions[-1] if version is None else version
-    with open(_manifest_path(table_dir, v)) as f:
-        return json.load(f)
-
-
-def read_snapshot(
-    spark: SparkSession,
-    table_dir: str,
-    version: int | None = None,
-) -> DataFrame:
-    """Read a snapshot table at ``version`` (default: latest)."""
-    import os
-
-    manifest = _load_manifest(table_dir, version)
-    # mergeSchema: additive schema evolution across commits — a column
-    # added by a later commit reads as NULL in older directories
-    # instead of silently vanishing (footer-union cost is per-dir, not
-    # per-row, and only at planning time)
-    return spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(table_dir, d) for d in manifest["data_dirs"]]
-    )
-
-
-def vacuum_snapshots(table_dir: str, keep_last: int = 1) -> list[str]:
-    """Physically delete data directories referenced ONLY by snapshots
-    older than the ``keep_last`` newest (and their manifests), plus
-    orphan dirs no manifest ever referenced (failed jobs).  Returns
-    the removed directories.
-
-    Safe by construction: the union of the surviving manifests' dirs
-    is computed first, and nothing in it is touched — concurrent
-    readers of surviving versions are unaffected (the discipline
-    Delta's VACUUM follows)."""
-    import json
-    import os
-    import shutil
-
-    if keep_last < 1:
-        raise ValueError(f"keep_last must be at least 1, got {keep_last}")
-    versions = list_snapshots(table_dir)
-    if not versions:
-        return []
-    keep_versions = versions[-keep_last:]
-    keep_dirs: set[str] = set()
-    for v in keep_versions:
-        with open(_manifest_path(table_dir, v)) as f:
-            keep_dirs |= set(json.load(f)["data_dirs"])
-
-    removed = []
-    data_root = os.path.join(table_dir, "data")
-    if os.path.isdir(data_root):
-        for d in sorted(os.listdir(data_root)):
-            rel = f"data/{d}"
-            if rel not in keep_dirs:
-                shutil.rmtree(os.path.join(data_root, d))
-                removed.append(rel)
-    for v in versions[:-keep_last]:
-        os.remove(_manifest_path(table_dir, v))
-    return removed
 
 
 # ---------------------------------------------------------------------------

@@ -160,191 +160,6 @@ def run_corpus_pipeline(
     return counts
 
 
-def run_incremental_ingest(
-    spark: SparkSession,
-    batch: DataFrame,
-    corpus_table: str,
-    index_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_tokens: int = 5,
-    span_index_dir: str | None = None,
-    span_min_len: int = 16,
-) -> dict[str, int]:
-    """The DAILY path the batch pipeline bootstraps: gate a new ingest
-    batch, dedup it against the MATERIALIZED corpus key index (no pass
-    over corpus text — O(|batch| + |index|)), append survivors to the
-    corpus as ONE atomic snapshot commit, and append their keys to the
-    index so tomorrow's batch probes today's docs too.
-
-    With ``span_index_dir`` set, the batch ALSO runs the ExactSubstr
-    contamination loop against the standing span index
-    (``dedup.build_span_index`` layout — the batch sibling of
-    ``streaming/span_stream.py::cut_and_maintain_span_index``):
-    probe first (which spans of today's arrivals copy the corpus
-    verbatim), QUARANTINE the span table under the batch's own
-    idempotent partition at ``{span_index_dir}/quarantine``, CUT the
-    contaminated spans out of the batch text, and — after the corpus
-    commit — append the survivors' anchors so tomorrow's batch probes
-    today's docs.  Probe-before-append means a batch never matches
-    itself.  A missing index is the clean first-day bootstrap (probe
-    skipped, anchors still appended).
-
-    Crash-safety note: the snapshot commit lands before every index
-    append, so a crash between them leaves an index MISSING some keys
-    — which can only re-admit a future duplicate, never lose data; the
-    next full ``build_dedup_index`` / ``build_span_index`` rebuild
-    reconciles.  (The opposite order could drop documents forever.)
-
-    Returns stage counts: ``batch, gated, unique, appended_version``
-    (+ ``span_contaminated_docs, span_batch_id`` when the span loop
-    runs).
-    """
-    from ..functions.dedup import build_dedup_index, dedup_incremental_indexed
-    from ..operators.warehouse import snapshot_commit
-
-    counts: dict[str, int] = {"batch": batch.count()}
-
-    qf = text.quality_flags(batch, id_col=id_col, text_col=text_col,
-                            min_tokens=min_tokens)
-    gated = batch.join(
-        qf.filter(F.col("passes_quality")).select(id_col), id_col, "left_semi"
-    )
-    lid = text.lang_id(gated, id_col=id_col, text_col=text_col)
-    gated = gated.join(
-        lid.filter(F.col("lang_pred").isNotNull()).select(id_col),
-        id_col, "left_semi",
-    )
-    counts["gated"] = gated.count()
-
-    span_batch_id: int | None = None
-    if span_index_dir is not None:
-        gated, span_batch_id = _span_contamination_probe_and_cut(
-            spark, gated, span_index_dir, counts,
-            span_min_len, id_col, text_col,
-        )
-
-    flags = dedup_incremental_indexed(
-        gated, spark, index_dir, id_col=id_col, text_col=text_col
-    )
-    from financial_data_ingestion_pipeline_spark.materialize import Pinned
-
-    # commit + index append(s) all read survivors: materialize it so the
-    # gate + dedup pipeline runs once.  Two regimes:
-    #
-    # * no span loop — DISK_ONLY persist (recomputable on executor loss
-    #   mid-commit; the only consumer after an index write is that
-    #   write itself, so cache invalidation is harmless);
-    # * span loop ON — localCheckpoint, REQUIRED for correctness, not
-    #   perf: survivors' lineage reads BOTH index paths (the content
-    #   index via the dedup flags, the span index via the probe/cut),
-    #   and the content-index append triggers Spark's path refresh,
-    #   which uncaches the persisted frame — the span-anchor append
-    #   that follows would silently re-derive survivors AGAINST THE
-    #   POST-APPEND INDEX (keep=False everywhere -> an EMPTY anchor
-    #   partition, tomorrow's probes blind to today's docs).  Lineage
-    #   truncation makes the later consumers immune; an executor loss
-    #   mid-commit now fail-stops the batch instead — the idempotent
-    #   dynamic-overwrite partitions and snapshot versioning make the
-    #   rerun safe (the same fail-stop-over-silent-corruption trade as
-    #   the streaming keyed-merge sink, streaming/sink.py).
-    survivors = gated.join(
-        flags.filter(F.col("keep")).select(id_col), id_col, "left_semi"
-    )
-    survivors_pin = Pinned(
-        survivors, mode="ckpt" if span_index_dir is not None else "persist"
-    )
-    survivors = survivors_pin.df
-    counts["unique"] = survivors.count()
-
-    counts["appended_version"] = snapshot_commit(
-        survivors, corpus_table, mode="append"
-    )
-    build_dedup_index(
-        survivors, index_dir, id_col=id_col, text_col=text_col, mode="append"
-    )
-    if span_index_dir is not None:
-        # append AFTER the corpus commit (crash between = missing keys,
-        # re-admittable duplicates only — never lost documents)
-        from ..functions.dedup import append_to_span_index
-
-        append_to_span_index(
-            survivors, span_index_dir, span_batch_id,
-            min_len=span_min_len, id_col=id_col, text_col=text_col,
-        )
-    survivors_pin.release()  # ckpt: frees the RDD blocks; persist:
-    # unpersist (all consumers done; lineage remains)
-    # batch boundary: drop any operator-registered DISK_ONLY caches
-    # (gate/dedup internals) so a long-lived ingest session doesn't
-    # accumulate cache entries across batches — all recomputable
-    from financial_data_ingestion_pipeline_spark.session import evict_persisted
-
-    evict_persisted()
-    return counts
-
-
-def _span_contamination_probe_and_cut(
-    spark: SparkSession,
-    gated: DataFrame,
-    span_index_dir: str,
-    counts: dict[str, int],
-    span_min_len: int,
-    id_col: str,
-    text_col: str,
-) -> tuple[DataFrame, int]:
-    """One batch turn of the ExactSubstr contamination loop (see
-    :func:`run_incremental_ingest`): allocate the next ``batch_id``
-    above the index's current max (the batch-mode analog of the
-    streaming maintainer's ``partition_base`` rule — a re-attached
-    ingest can never dynamic-overwrite history), probe the gated batch
-    against the standing anchors, quarantine the span table under the
-    batch's own idempotent partition, and return the batch with the
-    contaminated spans CUT out of its text (schema/column order
-    preserved).  Missing index = first-day bootstrap: nothing to probe
-    yet, ``batch_id=0``."""
-    from pyspark.sql.utils import AnalysisException
-
-    from ..functions.dedup import cut_spans, span_probe_index
-    from ..materialize import pin
-    from ..operators.warehouse import is_missing_path, write_batch_partition
-
-    try:
-        existing_max = (
-            spark.read.parquet(f"{span_index_dir}/anchors")
-            .agg(F.max("batch_id"))
-            .first()[0]
-        )
-    except AnalysisException as e:
-        if not is_missing_path(e):
-            raise
-        existing_max = None
-    batch_id = 0 if existing_max is None else int(existing_max) + 1
-    counts["span_batch_id"] = batch_id
-    if existing_max is None:
-        counts["span_contaminated_docs"] = 0
-        return gated, batch_id
-
-    # pin: the probe feeds three consumers (count, quarantine write,
-    # cut) — DISK_ONLY persist, evicted at the batch boundary by
-    # evict_persisted(), recomputable on executor loss
-    spans = pin(
-        span_probe_index(
-            gated, spark, span_index_dir,
-            min_len=span_min_len, id_col=id_col, text_col=text_col,
-        ),
-    )
-    counts["span_contaminated_docs"] = spans.select(id_col).distinct().count()
-    write_batch_partition(spans, f"{span_index_dir}/quarantine", batch_id)
-    cols = gated.columns
-    cut = cut_spans(gated, spans, id_col=id_col, text_col=text_col)
-    gated = (
-        gated.drop(text_col)
-        .join(cut.select(id_col, F.col("clean_text").alias(text_col)), id_col)
-        .select(*cols)
-    )
-    return gated, batch_id
-
-
 def main(argv: list[str] | None = None) -> None:
     """CLI: ``python -m financial_data_ingestion_pipeline_spark.plans.corpus_pipeline \
     <docs_parquet_or_jsonl> <out_dir> [--jsonl] [--cap N] [--threshold T]``"""

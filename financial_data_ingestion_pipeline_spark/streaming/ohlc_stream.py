@@ -33,7 +33,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.ohlc import FREQ_MAP, ohlc_aggs
-from ..operators.warehouse import snapshot_commit
 from ..schemas import TICK_CLEAN_SCHEMA, WAREHOUSE_SCHEMA
 from .sink import merge_by_keys, start_batch_sink
 
@@ -149,7 +148,7 @@ def write_ohlc_table(
     # the merge runs four actions on the batch (touched-dates collect,
     # anti-join broadcast, checkpoint, write): pinned, the stateful
     # dedup and window aggregation run once per micro-batch
-    return start_batch_sink(ohlc_stream, upsert, checkpoint, pin=True)
+    return start_batch_sink(ohlc_stream, upsert, checkpoint)
 
 
 def run_ohlc_stream_once(
@@ -193,27 +192,3 @@ def run_ohlc_stream_once(
     q = write_ohlc_table(agg, out_path, checkpoint)
     q.awaitTermination()
 
-
-def write_snapshot_stream(
-    stream: DataFrame,
-    table_dir: str,
-    checkpoint: str,
-) -> StreamingQuery:
-    """Stream -> snapshot table: every micro-batch lands as ONE atomic
-    manifest commit (``warehouse.snapshot_commit``), so downstream
-    batch readers always see whole micro-batches — never a partially
-    written file set — and can time-travel the ingest history
-    batch-by-batch.
-
-    Note the split of atomicity duties: Spark's checkpoint guarantees
-    each micro-batch is processed once; the manifest rename guarantees
-    readers never observe a half-commit.  A crash between the parquet
-    write and the manifest rename leaves an orphan dir that
-    ``vacuum_snapshots`` reclaims and a batch the restarted query
-    simply re-commits.
-    """
-
-    def commit(batch: DataFrame, batch_id: int) -> None:
-        snapshot_commit(batch, table_dir, mode="append")
-
-    return start_batch_sink(stream, commit, checkpoint)

@@ -1,20 +1,10 @@
-"""Crash-resume proof (round-5 verdict #6, carried from round 3):
-failure injection at every seam the snapshot layer and the corpus
-pipeline claim to be atomic/reproducible across.
+"""Crash-resume proof: failure injection at the seams the corpus
+pipeline claims to be reproducible across.
 
-The claims under test (docstrings at `operators/warehouse.py`
-``snapshot_commit``/``_write_manifest`` and
-`plans/corpus_pipeline.py`):
-
-1. a writer that dies between the data write and the manifest commit
-   leaves an orphan data dir and NO new version — invisible, not
-   corrupt — and a straight retry succeeds;
-2. an ingest that dies between the corpus commit and the index append
-   can re-admit a future duplicate but never loses data, and a full
-   index rebuild reconciles;
-3. a corpus build that dies between stages (or leaves a partial
-   output) reproduces the exact same corpus when re-run — the
-   reproducible-data-release contract.
+The claim under test (docstring of `plans/corpus_pipeline.py`): a
+corpus build that dies between stages (or leaves a partial output)
+reproduces the exact same corpus when re-run — the reproducible
+data-release contract.
 """
 
 from __future__ import annotations
@@ -23,8 +13,6 @@ import glob
 import os
 
 import pytest
-
-from pyspark.sql import functions as F
 
 # slow tier (round 12): every test here re-runs a multi-stage corpus
 # build around an injected crash (the two biggest are ~280 s and
@@ -39,160 +27,6 @@ class Boom(RuntimeError):
 def _rows(df, cols=None):
     cols = cols or df.columns
     return sorted(tuple(r[c] for c in cols) for r in df.select(cols).collect())
-
-
-class TestSnapshotCommitCrash:
-    def test_crash_before_manifest_then_retry(self, spark, tmp_path, monkeypatch):
-        """Die after the data files land but before the manifest
-        commits: readers still see the old version, the orphan dir is
-        invisible, and retrying the same commit works."""
-        from financial_data_ingestion_pipeline_spark.operators import warehouse
-
-        t = str(tmp_path / "tbl")
-        warehouse.snapshot_commit(
-            spark.range(0, 5).withColumnRenamed("id", "k"), t
-        )
-
-        real = warehouse._write_manifest
-
-        def dying_write_manifest(*args, **kwargs):
-            raise Boom("killed before manifest commit")
-
-        monkeypatch.setattr(warehouse, "_write_manifest", dying_write_manifest)
-        with pytest.raises(Boom):
-            warehouse.snapshot_commit(
-                spark.range(10, 15).withColumnRenamed("id", "k"), t,
-                mode="append",
-            )
-        monkeypatch.setattr(warehouse, "_write_manifest", real)
-
-        # table state: exactly the pre-crash version; orphan on disk
-        assert warehouse.list_snapshots(t) == [0]
-        assert _rows(warehouse.read_snapshot(spark, t)) == [(i,) for i in range(5)]
-        data_dirs = os.listdir(os.path.join(t, "data"))
-        assert len(data_dirs) == 2  # committed + orphan
-
-        # straight retry commits version 1 with the full row set
-        v = warehouse.snapshot_commit(
-            spark.range(10, 15).withColumnRenamed("id", "k"), t, mode="append"
-        )
-        assert v == 1
-        assert _rows(warehouse.read_snapshot(spark, t)) == [
-            (i,) for i in list(range(5)) + list(range(10, 15))
-        ]
-        # the orphan dir is still unreferenced by the new manifest
-        manifest = warehouse._load_manifest(t, None)
-        assert len(manifest["data_dirs"]) == 2
-        assert len(os.listdir(os.path.join(t, "data"))) == 3
-
-    def test_crash_between_tmp_write_and_link(self, spark, tmp_path, monkeypatch):
-        """Die INSIDE the manifest commit, after the temp file is
-        written but before the hard-link publishes it: the version is
-        still invisible (temp manifests are never listed), and retry
-        succeeds."""
-        from financial_data_ingestion_pipeline_spark.operators import warehouse
-
-        t = str(tmp_path / "tbl")
-        warehouse.snapshot_commit(
-            spark.range(0, 3).withColumnRenamed("id", "k"), t
-        )
-
-        real_link = os.link
-        calls = {"n": 0}
-
-        def dying_link(src, dst, **kw):
-            if "manifests" in dst and calls["n"] == 0:
-                calls["n"] += 1
-                raise Boom("killed before manifest publish")
-            return real_link(src, dst, **kw)
-
-        monkeypatch.setattr(os, "link", dying_link)
-        with pytest.raises(Boom):
-            warehouse.snapshot_commit(
-                spark.range(3, 6).withColumnRenamed("id", "k"), t,
-                mode="append",
-            )
-        monkeypatch.setattr(os, "link", real_link)
-
-        assert warehouse.list_snapshots(t) == [0]
-        assert warehouse.read_snapshot(spark, t).count() == 3
-        v = warehouse.snapshot_commit(
-            spark.range(3, 6).withColumnRenamed("id", "k"), t, mode="append"
-        )
-        assert v == 1
-        assert warehouse.read_snapshot(spark, t).count() == 6
-
-
-def test_ingest_crash_between_commit_and_index_append(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """Kill the daily ingest between the corpus snapshot commit and the
-    dedup-index append.  Documented semantics (corpus_pipeline
-    docstring): the index is missing the new keys, which can only
-    re-admit a future duplicate — never lose data — and a full
-    `build_dedup_index` rebuild reconciles."""
-    from financial_data_ingestion_pipeline_spark.functions import dedup
-    from financial_data_ingestion_pipeline_spark.operators import warehouse
-    from financial_data_ingestion_pipeline_spark.plans.corpus_pipeline import (
-        run_incremental_ingest,
-    )
-    from financial_data_ingestion_pipeline_spark.sources import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    corpus_tbl = str(tmp_path / "corpus_tbl")
-    index = str(tmp_path / "index")
-    warehouse.snapshot_commit(docs, corpus_tbl)
-    dedup.build_dedup_index(docs, index)
-    n0 = docs.count()
-
-    fresh = spark.createDataFrame(
-        [
-            (800_000 + i,
-             f"entirely new document number {i} with plenty of fresh and "
-             f"distinctive tokens to pass the quality gate {i}",
-             "en", "inj", 100)
-            for i in range(4)
-        ],
-        docs.schema,
-    )
-
-    real_build = dedup.build_dedup_index
-
-    def dying_build(df, index_dir, **kwargs):
-        if kwargs.get("mode") == "append":
-            raise Boom("killed before index append")
-        return real_build(df, index_dir, **kwargs)
-
-    monkeypatch.setattr(dedup, "build_dedup_index", dying_build)
-    with pytest.raises(Boom):
-        run_incremental_ingest(spark, fresh, corpus_tbl, index)
-    monkeypatch.setattr(dedup, "build_dedup_index", real_build)
-
-    # the snapshot commit landed BEFORE the crash: no data loss
-    assert warehouse.read_snapshot(spark, corpus_tbl).count() == n0 + 4
-
-    # the index missed the keys -> the same content (new ids) is
-    # re-admitted: a duplicate, the documented lossy-duplicate outcome
-    again = fresh.select(
-        (F.col("doc_id") + 50).alias("doc_id"), "text", "lang", "source",
-        "n_chars",
-    )
-    counts = run_incremental_ingest(spark, again, corpus_tbl, index)
-    assert counts["unique"] == 4  # would be 0 had the append survived
-    assert warehouse.read_snapshot(spark, corpus_tbl).count() == n0 + 8
-
-    # reconcile: full rebuild from the corpus table, then the same
-    # content is rejected again
-    real_build(
-        warehouse.read_snapshot(spark, corpus_tbl), index, mode="overwrite"
-    )
-    third = fresh.select(
-        (F.col("doc_id") + 77).alias("doc_id"), "text", "lang", "source",
-        "n_chars",
-    )
-    counts3 = run_incremental_ingest(spark, third, corpus_tbl, index)
-    assert counts3["unique"] == 0
-    assert warehouse.read_snapshot(spark, corpus_tbl).count() == n0 + 8
 
 
 def test_corpus_pipeline_crash_between_stages_then_rerun(

@@ -757,44 +757,6 @@ def test_dedup_incremental_split_parity(spark):
     assert rows[12][3] and rows[13][3]
 
 
-def test_dedup_index_parity_and_append_maintenance(spark, tmp_path_factory):
-    """The materialized-index path returns row-for-row what the
-    recompute path returns, and appending a new ingest's keys keeps the
-    index valid (set-union maintenance, no rebuild)."""
-    from financial_data_ingestion_pipeline_spark.functions.dedup import (
-        build_dedup_index,
-        dedup_incremental,
-        dedup_incremental_indexed,
-    )
-
-    base = "the quick brown fox jumps over the lazy dog again and again " * 4
-    corpus = spark.createDataFrame(
-        [(1, base), (2, "completely different corpus text here")],
-        "doc_id long, text string",
-    )
-    batch = spark.createDataFrame(
-        [(10, base), (11, base.replace("lazy", "sleepy", 1)),
-         (12, "brand new content nothing alike")],
-        "doc_id long, text string",
-    )
-    path = str(tmp_path_factory.mktemp("dedup_index"))
-    build_dedup_index(corpus, path)
-    want = sorted(map(tuple, dedup_incremental(batch, corpus).collect()))
-    got = sorted(
-        map(tuple, dedup_incremental_indexed(batch, spark, path).collect())
-    )
-    assert got == want
-    # append maintenance: add batch-doc 12's keys; it now reads as dup
-    kept = batch.filter(F.col("doc_id") == 12)
-    build_dedup_index(kept, path, mode="append")
-    again = {
-        r.doc_id: r
-        for r in dedup_incremental_indexed(batch, spark, path).collect()
-    }
-    assert again[12].exact_dup and not again[12].keep
-    assert again[11].near_dup  # prior corpus keys still present
-
-
 def test_lm_coverage_bounds_and_known_floor(docs):
     """Every bigram occurring >= min_count corpus-wide is 'known', so
     coverage is a ratio in [0, 1e6]; a doc duplicated >= min_count
@@ -1455,52 +1417,6 @@ def test_margin_mining_matches_python_reference(spark):
             continue
         want[(q, n)] = (2_000_000 * s6 * nq * nn_) // den
     assert got == want and got
-
-
-def test_span_index_probe_matches_recompute(spark, tmp_path):
-    """build_span_index + span_probe_index == span_cross_spans (the
-    winnow_probe relationship for ExactSubstr): same xxhash64 anchor
-    kernel, same membership semi-join, so the indexed probe never
-    re-anchors corpus text yet returns identical spans."""
-    from financial_data_ingestion_pipeline_spark.functions.dedup import (
-        build_span_index,
-        span_cross_spans,
-        span_probe_index,
-    )
-
-    boiler = "the quick brown fox jumps over the lazy dog again"
-    corpus = spark.createDataFrame(
-        [
-            (0, f"unique alpha text one {boiler} and a unique coda"),
-            (1, "completely different corpus content with no repeats"),
-            (2, f"another document carrying {boiler} in the middle"),
-        ],
-        "doc_id long, text string",
-    )
-    batch = spark.createDataFrame(
-        [
-            (100, f"fresh arrival that copies {boiler} verbatim"),
-            (101, "novel arrival sharing nothing with the corpus"),
-            (102, "completely different corpus content with no repeats"),
-        ],
-        "doc_id long, text string",
-    )
-    path = str(tmp_path / "span_idx")
-    build_span_index(corpus, path)
-
-    key = lambda df: {  # noqa: E731
-        (r.doc_id, r.span_start, r.span_len) for r in df.collect()
-    }
-    got = key(span_probe_index(batch, spark, path))
-    want = key(span_cross_spans(batch, corpus))
-    assert got == want
-    # doc 100 copies the boilerplate, doc 102 copies doc 1 wholesale,
-    # doc 101 contaminates nothing
-    assert {d for d, _s, _l in got} == {100, 102}
-    # doc 102 is a verbatim copy: one maximal span covering everything
-    spans_102 = [(s, ln) for d, s, ln in got if d == 102]
-    assert spans_102 == [(1, len("completely different corpus content "
-                                 "with no repeats"))]
 
 
 def test_knn_cross_join_matches_bruteforce_in_cell(spark):

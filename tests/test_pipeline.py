@@ -388,162 +388,6 @@ def test_zipped_jsonl_distributed_ingest(spark, tmp_path):
     assert ".zip!shard" in src
 
 
-class TestSnapshotTable:
-    def test_commit_append_overwrite_time_travel(self, spark, tmp_path):
-        from financial_data_ingestion_pipeline_spark.operators import warehouse
-
-        t = str(tmp_path / "tbl")
-        d1 = spark.range(0, 5).withColumnRenamed("id", "k")
-        d2 = spark.range(5, 8).withColumnRenamed("id", "k")
-        v0 = warehouse.snapshot_commit(d1, t)
-        v1 = warehouse.snapshot_commit(d2, t, mode="append")
-        assert (v0, v1) == (0, 1)
-        assert warehouse.read_snapshot(spark, t).count() == 8
-        # time travel: version 0 still sees only the first commit
-        assert warehouse.read_snapshot(spark, t, version=0).count() == 5
-        # logical overwrite: new version replaces, old stays readable
-        d3 = spark.range(100, 102).withColumnRenamed("id", "k")
-        v2 = warehouse.snapshot_commit(d3, t, mode="overwrite")
-        assert v2 == 2
-        assert warehouse.read_snapshot(spark, t).count() == 2
-        assert warehouse.read_snapshot(spark, t, version=1).count() == 8
-        assert warehouse.list_snapshots(t) == [0, 1, 2]
-
-    def test_failed_write_leaves_table_unchanged(self, spark, tmp_path):
-        from financial_data_ingestion_pipeline_spark.operators import warehouse
-
-        t = str(tmp_path / "tbl")
-        warehouse.snapshot_commit(
-            spark.range(0, 3).withColumnRenamed("id", "k"), t
-        )
-        # a job that dies before the manifest rename: orphan data dir only
-        import os
-        orphan = os.path.join(t, "data", "999999999999-deadbeef")
-        spark.range(50, 60).write.parquet(orphan)
-        assert warehouse.read_snapshot(spark, t).count() == 3
-        assert warehouse.list_snapshots(t) == [0]
-
-
-def test_vacuum_removes_only_unreferenced(spark, tmp_path):
-    import os
-
-    from financial_data_ingestion_pipeline_spark.operators import warehouse
-
-    t = str(tmp_path / "tbl")
-    warehouse.snapshot_commit(spark.range(0, 3).withColumnRenamed("id", "k"), t)
-    warehouse.snapshot_commit(
-        spark.range(3, 5).withColumnRenamed("id", "k"), t, mode="append"
-    )
-    warehouse.snapshot_commit(
-        spark.range(9, 10).withColumnRenamed("id", "k"), t, mode="overwrite"
-    )
-    # orphan from a failed job
-    spark.range(77, 79).write.parquet(os.path.join(t, "data", "zz-orphan"))
-    removed = warehouse.vacuum_snapshots(t, keep_last=1)
-    # versions 0-1's dirs + orphan gone; latest still reads fine
-    assert any("zz-orphan" in r for r in removed)
-    assert len(removed) == 3
-    assert warehouse.read_snapshot(spark, t).count() == 1
-    assert warehouse.list_snapshots(t) == [2]
-
-
-def test_snapshot_rejects_bad_mode_and_keep_last(spark, tmp_path):
-    """A misspelled commit mode must fail before writing (falling
-    through to an overwrite would hide every earlier row from readers
-    of the latest version), and vacuum with keep_last < 1 must fail
-    instead of silently keeping everything."""
-    import os
-
-    from financial_data_ingestion_pipeline_spark.operators import warehouse
-
-    t = str(tmp_path / "tbl")
-    warehouse.snapshot_commit(spark.range(0, 3).withColumnRenamed("id", "k"), t)
-    with pytest.raises(ValueError, match="mode"):
-        warehouse.snapshot_commit(
-            spark.range(3, 5).withColumnRenamed("id", "k"), t, mode="apend"
-        )
-    assert warehouse.list_snapshots(t) == [0]
-    assert len(os.listdir(os.path.join(t, "data"))) == 1
-    assert warehouse.read_snapshot(spark, t).count() == 3
-    with pytest.raises(ValueError, match="keep_last"):
-        warehouse.vacuum_snapshots(t, keep_last=0)
-    assert warehouse.list_snapshots(t) == [0]
-
-
-def test_snapshot_rejects_uri_table_dir(spark, tmp_path, monkeypatch):
-    """Manifests are listed, written and linked with local os calls, so
-    a table_dir with a URI scheme must fail before any Spark job;
-    otherwise the data lands in the store while the manifests land in
-    a relative local directory named after the URI."""
-    from financial_data_ingestion_pipeline_spark.operators import warehouse
-
-    monkeypatch.chdir(tmp_path)  # any stray relative manifest dir stays here
-    df = spark.range(0, 3).withColumnRenamed("id", "k")
-    local = tmp_path / "tbl"
-    with pytest.raises(ValueError, match="local filesystem path"):
-        warehouse.snapshot_commit(df, f"file://{local}")
-    assert not local.exists()
-    for uri in ("s3a://bucket/tbl", f"file://{local}"):
-        with pytest.raises(ValueError, match="local filesystem path"):
-            warehouse.read_snapshot(spark, uri)
-
-
-@pytest.mark.slow  # slow tier: two-batch e2e ingest (~16 s)
-def test_incremental_ingest_rejects_known_and_appends(spark, sf_dir, tmp_path):
-    """Bootstrap an index from the corpus, then ingest a batch that is
-    half exact-duplicates of corpus docs and half genuinely new: dups
-    are rejected, survivors land as a new snapshot version, and a
-    SECOND ingest of the same new docs is fully rejected (the index
-    learned them)."""
-    from pyspark.sql import functions as F
-
-    from financial_data_ingestion_pipeline_spark.functions.dedup import (
-        build_dedup_index,
-    )
-    from financial_data_ingestion_pipeline_spark.operators import warehouse
-    from financial_data_ingestion_pipeline_spark.plans.corpus_pipeline import (
-        run_incremental_ingest,
-    )
-    from financial_data_ingestion_pipeline_spark.sources import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    corpus_tbl = str(tmp_path / "corpus_tbl")
-    index = str(tmp_path / "index")
-    warehouse.snapshot_commit(docs, corpus_tbl)
-    build_dedup_index(docs, index)
-
-    dups = docs.limit(5).select(
-        (F.col("doc_id") + 900_000).alias("doc_id"), "text", "lang",
-        "source", "n_chars",
-    )
-    fresh = spark.createDataFrame(
-        [
-            (800_000 + i,
-             f"entirely new document number {i} with plenty of fresh and "
-             f"distinctive tokens to pass the quality gate {i}",
-             "en", "inj", 100)
-            for i in range(4)
-        ],
-        docs.schema,
-    )
-    batch = dups.unionByName(fresh)
-    counts = run_incremental_ingest(spark, batch, corpus_tbl, index)
-    assert counts["batch"] == 9
-    assert counts["unique"] == 4  # the 5 dups rejected
-    assert counts["appended_version"] == 1
-    n_docs = docs.count()
-    assert warehouse.read_snapshot(spark, corpus_tbl).count() == n_docs + 4
-
-    # same fresh docs again (new ids): index now knows their content
-    again = fresh.select(
-        (F.col("doc_id") + 50).alias("doc_id"), "text", "lang", "source",
-        "n_chars",
-    )
-    counts2 = run_incremental_ingest(spark, again, corpus_tbl, index)
-    assert counts2["unique"] == 0
-    assert warehouse.read_snapshot(spark, corpus_tbl).count() == n_docs + 4
-
-
 def test_jsonl_dropmalformed_and_gzip(spark, tmp_path):
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -688,62 +532,6 @@ class TestTickGenDataSource:
         assert got.dropDuplicates(["symbol", "ts"]).count() == 24
 
 
-def test_snapshot_schema_evolution(spark, tmp_path):
-    """A column added by a later commit must surface across the whole
-    table (NULL in older directories), and old versions keep their
-    original schema."""
-    from pyspark.sql import functions as F
-
-    from financial_data_ingestion_pipeline_spark.operators import warehouse
-
-    t = str(tmp_path / "tbl")
-    warehouse.snapshot_commit(
-        spark.range(0, 5).select(F.col("id").alias("k")), t
-    )
-    warehouse.snapshot_commit(
-        spark.range(5, 8).select(
-            F.col("id").alias("k"), F.lit("x").alias("tag")
-        ),
-        t,
-    )
-    out = warehouse.read_snapshot(spark, t)
-    assert set(out.columns) == {"k", "tag"}
-    assert out.filter(F.col("tag").isNull()).count() == 5
-    assert out.filter(F.col("tag") == "x").count() == 3
-    assert set(warehouse.read_snapshot(spark, t, version=0).columns) == {"k"}
-
-
-def test_snapshot_concurrent_commit_conflict(spark, tmp_path):
-    """Two writers racing to the same version: the first commit wins,
-    the second gets a clean ConcurrentCommitError (rename() semantics
-    would silently overwrite the winner), and a retry lands on the
-    next version with both commits' data preserved."""
-    from pyspark.sql import functions as F
-
-    from financial_data_ingestion_pipeline_spark.operators import warehouse
-
-    t = str(tmp_path / "tbl")
-    warehouse.snapshot_commit(
-        spark.range(0, 5).select(F.col("id").alias("k")), t
-    )
-    # simulate the race: writer B computed version 1's manifest while
-    # writer A committed version 1 first
-    warehouse.snapshot_commit(
-        spark.range(5, 10).select(F.col("id").alias("k")), t
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(warehouse.ConcurrentCommitError):
-        warehouse._write_manifest(t, 1, ["data/bogus"])
-    # winner's state intact; loser retries against the new latest
-    assert warehouse.read_snapshot(spark, t).count() == 10
-    v = warehouse.snapshot_commit(
-        spark.range(10, 12).select(F.col("id").alias("k")), t
-    )
-    assert v == 2
-    assert warehouse.read_snapshot(spark, t).count() == 12
-
-
 def test_load_table_memoizes_per_context(spark):
     """The fixture loader is a catalog: one footer read per (session,
     dir, table), after which the SAME immutable lazy plan is returned
@@ -853,137 +641,3 @@ class TestSpanPipelineWiring:
         corpus3 = {r.doc_id: r.text
                    for r in spark.read.parquet(out3 + "/corpus").collect()}
         assert shared in corpus3[1] and shared in corpus3[2]
-
-    # slow tier: three-batch contamination loop (~33 s)
-    @pytest.mark.slow
-    def test_incremental_ingest_span_contamination_loop(self, spark, tmp_path):
-        """The full batch contamination loop (probe -> quarantine ->
-        cut -> commit -> anchor append) across three days, plus the
-        byte-reproducibility contract: replaying the same day sequence
-        into fresh dirs reproduces corpus AND quarantine row-for-row."""
-        from financial_data_ingestion_pipeline_spark.functions import dedup
-        from financial_data_ingestion_pipeline_spark.operators import warehouse
-        from financial_data_ingestion_pipeline_spark.plans.corpus_pipeline import (
-            run_incremental_ingest,
-        )
-
-        schema = "doc_id long, text string, lang string, source string, n_chars long"
-        s1 = "the quick brown fox jumps over the lazy dog repeatedly"
-        day1 = spark.createDataFrame(
-            [(1, f"an original article where {s1} concludes the story "
-                 "with plenty of other distinctive tokens", "en", "a", 90),
-             (2, "a perfectly ordinary second document about the weather "
-                 "in the mountains during spring", "en", "a", 80)],
-            schema,
-        )
-        s2_prefix = "today we report fresh news with many new tokens and"
-        day2 = spark.createDataFrame(
-            [(10, f"{s2_prefix} then quotes {s1} in the middle of the "
-                  "piece before wrapping up", "en", "b", 95),
-             (11, "an uncontaminated report on harvest yields with its "
-                  "own distinctive vocabulary and phrasing", "en", "b", 85)],
-            schema,
-        )
-
-        seed = spark.createDataFrame(
-            [(0, "a seed corpus document that simply exists to bootstrap "
-                 "the content index with one entry", "en", "seed", 70)],
-            schema,
-        )
-
-        def run_days(tag):
-            corpus_tbl = str(tmp_path / f"corpus_{tag}")
-            index = str(tmp_path / f"index_{tag}")
-            span_index = str(tmp_path / f"span_{tag}")
-            warehouse.snapshot_commit(seed, corpus_tbl)
-            dedup.build_dedup_index(seed, index)
-            c1 = run_incremental_ingest(
-                spark, day1, corpus_tbl, index, span_index_dir=span_index)
-            c2 = run_incremental_ingest(
-                spark, day2, corpus_tbl, index, span_index_dir=span_index)
-            return corpus_tbl, span_index, c1, c2
-
-        corpus_tbl, span_index, c1, c2 = run_days("a")
-
-        # day 1: bootstrap — nothing to probe, anchors land as batch 0
-        assert c1["span_batch_id"] == 0
-        assert c1["span_contaminated_docs"] == 0
-        assert c1["unique"] == 2
-        # day 2: doc 10's verbatim quote detected, quarantined, cut
-        assert c2["span_batch_id"] == 1
-        assert c2["span_contaminated_docs"] == 1
-        committed = {r.doc_id: r.text
-                     for r in warehouse.read_snapshot(spark, corpus_tbl)
-                     .filter("doc_id >= 10").collect()}
-        assert s1 not in committed[10]          # contamination cut
-        assert s2_prefix in committed[10]       # the rest survived
-        assert "harvest yields" in committed[11]
-        q = spark.read.parquet(span_index + "/quarantine")
-        assert q.filter("batch_id = 1").count() >= 1
-        assert set(r.doc_id for r in q.collect()) == {10}
-
-        # day 3: a copy of DAY-2 committed text is caught -> the
-        # anchor append after day 2 worked
-        day3 = spark.createDataFrame(
-            [(20, "entirely different framing here yet it copies "
-                  f"{committed[11]} word for word today", "en", "c", 99)],
-            schema,
-        )
-        c3 = run_incremental_ingest(
-            spark, day3, corpus_tbl,
-            str(tmp_path / "index_a"), span_index_dir=span_index)
-        assert c3["span_batch_id"] == 2
-        assert c3["span_contaminated_docs"] == 1
-
-        # byte-reproducibility: the same two-day sequence into fresh
-        # dirs reproduces corpus and quarantine row-for-row
-        corpus_b, span_b, _, _ = run_days("b")
-        rows_a = sorted(map(tuple, warehouse.read_snapshot(
-            spark, corpus_tbl).filter("doc_id < 20").collect()))
-        rows_b = sorted(map(tuple, warehouse.read_snapshot(
-            spark, corpus_b).collect()))
-        assert rows_a == rows_b
-        qa = sorted(map(tuple, spark.read.parquet(
-            span_index + "/quarantine").filter("batch_id <= 1").collect()))
-        qb = sorted(map(tuple, spark.read.parquet(
-            span_b + "/quarantine").collect()))
-        assert qa == qb
-
-    @pytest.mark.slow  # slow tier: e2e ingest resource check (~12 s)
-    def test_incremental_ingest_releases_checkpoint_blocks(
-            self, spark, tmp_path):
-        """Span-loop regime pins survivors via localCheckpoint — whose
-        blocks DataFrame.unpersist cannot free.  The batch boundary
-        must release them explicitly (Pinned.release), or a long-lived
-        daily-ingest session accumulates checkpoint blocks per batch."""
-        from financial_data_ingestion_pipeline_spark.functions import dedup
-        from financial_data_ingestion_pipeline_spark.materialize import (
-            persistent_rdd_ids,
-        )
-        from financial_data_ingestion_pipeline_spark.operators import warehouse
-        from financial_data_ingestion_pipeline_spark.plans.corpus_pipeline import (
-            run_incremental_ingest,
-        )
-
-        schema = ("doc_id long, text string, lang string, source string,"
-                  " n_chars long")
-        seed = spark.createDataFrame(
-            [(0, "a bootstrap seed document with enough distinctive "
-                 "words to pass the gates", "en", "seed", 70)], schema)
-        corpus_tbl = str(tmp_path / "corpus")
-        index = str(tmp_path / "index")
-        span_index = str(tmp_path / "span")
-        warehouse.snapshot_commit(seed, corpus_tbl)
-        dedup.build_dedup_index(seed, index)
-
-        before = persistent_rdd_ids(spark)
-        for day in (1, 2):
-            batch = spark.createDataFrame(
-                [(10 * day, f"fresh day {day} arrival with plenty of "
-                            "unique vocabulary and phrasing to keep",
-                  "en", "a", 80)], schema)
-            run_incremental_ingest(spark, batch, corpus_tbl, index,
-                                   span_index_dir=span_index)
-            leaked = persistent_rdd_ids(spark) - before
-            assert not leaked, (
-                f"batch {day} left persistent RDD blocks: {leaked}")

@@ -402,33 +402,6 @@ def test_no_unintended_cartesian_in_any_contract_query(spark):
     assert not offenders, f"unintended cross joins: {offenders}"
 
 
-def test_pq_index_partition_pruning(spark, sf_dir, tmp_path_factory):
-    """The persisted PQ code index must prune probed cells at the scan
-    AND return exactly the in-memory IVF-PQ operator's top-k (the index
-    changes bytes read, never results)."""
-    from financial_data_ingestion_pipeline_spark.functions import similarity
-    from financial_data_ingestion_pipeline_spark.sources import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = str(tmp_path_factory.mktemp("pq") / "index")
-    similarity.write_pq_index(emb, path)
-    qids = list(range(5))
-    qvecs = [
-        (r.vec_id, [float(x) for x in r.embedding])
-        for r in emb.filter(F.col("vec_id").isin(qids)).collect()
-    ]
-    out = similarity.pq_index_topk(spark, path, emb, qvecs, k=5, pool=50)
-    plan = _formatted_plan(out)
-    scan_lines = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert any("cell" in ln for ln in scan_lines)  # probes prune at the scan
-    got = {(r.query_id, r.neighbor_id, r.rank) for r in out.collect()}
-    want = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in similarity.ivfpq_topk(emb, qids, k=5, pool=50).collect()
-    }
-    assert got == want
-
-
 def test_plan_budgets_hold_for_every_contract_query(spark):
     """Plan-regression gate (round-4 verdict #1/#3, round-5 #2): every
     contract query must stay within the budget committed in

@@ -14,7 +14,9 @@ test-only def; it never flags a live one (lookups by string aside).
 
 ``TEST_ONLY`` lists the defs that only ``tests/`` reach today.  It may
 only shrink: a new test-only def fails here, and so does a listed def
-that was deleted or gained a caller, so the list stays exact.
+that was deleted or gained a caller, so the list stays exact.  A tool
+whose only job is to time a package def is not a reason to keep that
+def: delete both rather than let the tool make the def a root.
 """
 
 from __future__ import annotations
@@ -31,24 +33,11 @@ _IMPORTS = (ast.Import, ast.ImportFrom)
 
 TEST_ONLY = frozenset(
     {
-        # the dedup key index and its probes
-        "functions/dedup.py::_dedup_against_keysets",
-        "functions/dedup.py::build_dedup_index",
+        # the oracle of dedup_incremental_split's parity test
         "functions/dedup.py::dedup_incremental",
-        "functions/dedup.py::dedup_incremental_indexed",
-        # snapshot tables and their callers
-        "operators/warehouse.py::ConcurrentCommitError",
-        "operators/warehouse.py::_load_manifest",
-        "operators/warehouse.py::_manifest_path",
-        "operators/warehouse.py::_write_manifest",
-        "operators/warehouse.py::list_snapshots",
-        "operators/warehouse.py::read_snapshot",
-        "operators/warehouse.py::snapshot_commit",
-        "operators/warehouse.py::vacuum_snapshots",
-        "plans/corpus_pipeline.py::_span_contamination_probe_and_cut",
-        "plans/corpus_pipeline.py::run_incremental_ingest",
+        # the one-call drive of the dedup -> OHLC -> keyed-merge chain
+        # perfbench builds by hand; the stream tests run it
         "streaming/ohlc_stream.py::run_ohlc_stream_once",
-        "streaming/ohlc_stream.py::write_snapshot_stream",
         # alternative warehouse layouts and sinks
         "operators/warehouse.py::jdbc_append",
         "operators/warehouse.py::write_bucketed_warehouse",
