@@ -1,18 +1,14 @@
 """Pure-numpy JPEG codec — no external imaging library.
 
-Round-6 verdict "What's missing" #3: JPEG decode required wiring
-Pillow through ``multimodal.set_image_decoder`` and that path had
-never run in this environment (no pip).  This module removes the
-external-codec seam for Huffman-coded JPEGs, BASELINE (SOF0/SOF1)
+Decodes Huffman-coded JPEGs with numpy alone, BASELINE (SOF0/SOF1)
 and, since round 8, PROGRESSIVE (SOF2): markers, DQT/DHT parsing,
 canonical Huffman decode with byte-stuffing and restart markers,
 multi-scan coefficient accumulation with spectral selection and
 successive approximation (DC/AC first + refinement passes, EOBRUN),
 dequantize + zigzag, 8x8 IDCT as two numpy matmuls, chroma
-upsampling for any 1-2x sampling factors, BT.601 YCbCr->RGB.  Only
-the coding processes that genuinely need an external codec still
-raise — lossless, hierarchical, and arithmetic entropy coding —
-installable via the same ``set_image_decoder`` seam.
+upsampling for any 1-2x sampling factors, BT.601 YCbCr->RGB.  The
+coding processes it does not implement — lossless, hierarchical, and
+arithmetic entropy coding — raise ``ValueError``.
 
 The encoder exists to GENERATE test vectors (grayscale / 4:4:4 /
 4:2:0, Annex-K quantization scaled by quality, the spec's typical
@@ -295,8 +291,7 @@ def _decode_jpeg(buf: bytes) -> tuple[int, int, int, np.ndarray]:
             if nc not in (1, 3):
                 raise ValueError(
                     f"unsupported JPEG component count {nc} (CMYK/YCCK "
-                    "need an external codec via "
-                    "multimodal.set_image_decoder)"
+                    "are not decoded; only 1 or 3 components)"
                 )
             if w * h * nc > MAX_DECODE_PIXELS:
                 raise ValueError(
@@ -324,16 +319,15 @@ def _decode_jpeg(buf: bytes) -> tuple[int, int, int, np.ndarray]:
                     # instead of dying in a numpy broadcast later
                     raise ValueError(
                         "unsupported JPEG chroma sampling (non-integer "
-                        "upsample ratio) — install an external codec "
-                        "via multimodal.set_image_decoder"
+                        "upsample ratio); only integer ratios decode"
                     )
             frame = (w, h, nc)
         elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
                         0xCB, 0xCD, 0xCE, 0xCF):
             raise ValueError(
                 "unsupported JPEG coding process (lossless/hierarchical/"
-                "arithmetic) — install an external codec via "
-                "multimodal.set_image_decoder"
+                "arithmetic); only baseline and progressive Huffman "
+                "decode"
             )
         elif marker == 0xC4:  # DHT (possibly several tables)
             i = 0

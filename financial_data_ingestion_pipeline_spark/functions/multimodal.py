@@ -9,12 +9,10 @@ codec, :mod:`.jpeg_codec` — Huffman, dequantize, IDCT, 4:2:0
 upsampling, restart markers), falling back to the deterministic fake
 byte model for test fixtures.  Features, perceptual hashes, and
 resizes therefore run decode → integer-luma → math on actual encoded
-images with no external library.  Only exotic JPEG coding processes
-(lossless/hierarchical/arithmetic — baseline and progressive decode
-natively) and video/audio codecs (Pillow, torchaudio,
-ffmpeg) still need a real library, dropped into the same
-``set_image_decoder`` seam — return ``(w, h, luma_bytes)`` and every
-downstream operator follows.
+images with no external library.  The JPEG coding processes the
+codec does not implement (lossless/hierarchical/arithmetic — baseline
+and progressive decode natively) raise ``ValueError``; the engine has
+no pluggable image codec.  Video and audio stay byte-level models.
 
 Scale notes: binary payloads ride in Arrow record batches (zero-copy
 into pandas); decode parallelism is the scan's partitioning, so sizing
@@ -26,7 +24,7 @@ filter/project before any join.
 from __future__ import annotations
 
 import struct
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
 
@@ -67,9 +65,8 @@ def _stub_decode(buf: bytes) -> tuple[int, int, bytes]:
     payload.  Returns ``(w, h, luma_bytes)`` like every decoder."""
     if buf is None or len(buf) < 8:
         raise NotImplementedError(
-            "unrecognized image payload: not PNG and lacks the "
-            "fake-decoder header (JPEG et al. need an external codec "
-            "via set_image_decoder)"
+            "unrecognized image payload: not PNG or JPEG and lacks "
+            "the fake-decoder header"
         )
     w, h = struct.unpack_from("<II", buf, 0)
     return int(w), int(h), buf[8:]
@@ -81,18 +78,17 @@ def _default_decode(buf: bytes) -> tuple[int, int, bytes]:
     BT.601 luma; anything else through the fake-model header parser.
     Either way the contract is ``(width, height, luma_bytes)`` — dims
     plus the flat grayscale plane every downstream feature/hash
-    operator consumes.  Only the JPEG coding processes the pure
-    codec rejects (lossless / hierarchical / arithmetic entropy
-    coding) still need an external codec via
-    :func:`set_image_decoder`; baseline AND progressive Huffman
-    streams decode natively.  Round-10 decision: arithmetic-coded
-    decode (T.81 Annex D — the QM-coder state machine plus per-mode
-    conditioning) stays external; it is rare in the wild (libjpeg
-    shipped patent-disabled for decades), not cheap to implement
-    bit-exactly, and the typed ValueError routes such blobs to
-    quarantine rather than killing a worker.  The cap-sized decode's
-    worker RSS budget is pinned by test_jpeg.py (~55 B/component-
-    pixel, asserted < 4.5 GiB in a mapInPandas worker)."""
+    operator consumes.  Baseline AND progressive Huffman streams
+    decode natively; the JPEG coding processes the pure codec rejects
+    (lossless / hierarchical / arithmetic entropy coding) raise
+    ``ValueError``.  Arithmetic-coded decode (T.81 Annex D — the
+    QM-coder state machine plus per-mode conditioning) is left out:
+    it is rare in the wild (libjpeg shipped patent-disabled for
+    decades), not cheap to implement bit-exactly, and the typed
+    ValueError routes such blobs to quarantine rather than killing a
+    worker.  The cap-sized decode's worker RSS budget is pinned by
+    test_jpeg.py (~55 B/component-pixel, asserted < 4.5 GiB in a
+    mapInPandas worker)."""
     from financial_data_ingestion_pipeline_spark.functions import (
         jpeg_codec,
         png_codec,
@@ -110,16 +106,6 @@ def _default_decode(buf: bytes) -> tuple[int, int, bytes]:
     return _stub_decode(buf)
 
 
-_image_decoder: Callable[[bytes], tuple[int, int, bytes]] = _default_decode
-
-
-def set_image_decoder(fn: Callable[[bytes], tuple[int, int, bytes]]) -> None:
-    """Install a replacement codec (e.g. Pillow JPEG): it receives the
-    raw payload and must return ``(width, height, luma_bytes)``."""
-    global _image_decoder
-    _image_decoder = fn
-
-
 def extract_image_features(
     media: DataFrame, id_col: str = "media_id", content_col: str = "content"
 ) -> DataFrame:
@@ -130,15 +116,12 @@ def extract_image_features(
     """
     id_name, content_name = id_col, content_col
 
-    decoder = _image_decoder  # captured NOW: ships to executors by
-    # value in the closure, so set_image_decoder() works distributed
-
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, widths, heights, sizes, means = [], [], [], [], []
             for mid, buf in zip(pdf[id_name], pdf[content_name]):
                 buf = bytes(buf)
-                w, h, body = decoder(buf)
+                w, h, body = _default_decode(buf)
                 ids.append(int(mid))
                 widths.append(w)
                 heights.append(h)
@@ -392,8 +375,8 @@ def image_phash(
 ) -> DataFrame:
     """Perceptual average-hash over decoded image bytes — the visual
     near-duplicate signature a multimodal training pipeline computes
-    at ingest (aHash family; swap the stub decoder for a real one and
-    the same cell/bit logic applies to downsampled luma).
+    at ingest (aHash family, over the luma plane that
+    :func:`_default_decode` yields).
 
     Per image: the payload is split into ``n_cells`` contiguous cells
     (cell of byte ``j`` = ``j*n_cells // plen``), and bit ``c`` is set
@@ -414,15 +397,12 @@ def image_phash(
 
     id_name, content_name = id_col, content_col
 
-    decoder = _image_decoder  # captured at construction (see
-    # extract_image_features): driver-installed codecs reach executors
-
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, plens, hashes, ones = [], [], [], []
             for mid, buf in zip(pdf[id_name], pdf[content_name]):
                 buf = bytes(buf)
-                _w, _h, lum = decoder(buf)
+                _w, _h, lum = _default_decode(buf)
                 body = np.frombuffer(lum, dtype=np.uint8).astype(np.int64)
                 plen = len(body)
                 if plen == 0:

@@ -126,8 +126,8 @@ def decode_png(buf: bytes) -> tuple[int, int, int, np.ndarray]:
             # sequential; run it over plain Python ints (lists), ~5x
             # cheaper per byte than numpy scalar indexing.  Throughput
             # ceiling: ~1-2 MB/s/core of filtered scanline — fine for
-            # thumbnail/tile-scale media, wire a native codec via
-            # set_image_decoder for photo-scale corpora.
+            # thumbnail/tile-scale media, too slow for photo-scale
+            # corpora.
             ln = line.tolist()
             pv = prev.tolist()
             rec = ln[:ch]

@@ -122,6 +122,26 @@ def bucketed_ohlc(
     )
 
 
+def check_time_bounds(from_ts: str | None, to_ts: str | None) -> None:
+    """The time filter is a BETWEEN (dp:336-337): it needs both bounds.
+    One bound alone raises here, on the driver, rather than being
+    silently ignored."""
+    if (from_ts is None) != (to_ts is None):
+        raise ValueError(
+            "from_ts and to_ts must be given together or not at all "
+            f"(got from_ts={from_ts!r}, to_ts={to_ts!r})"
+        )
+
+
+def filter_symbols(
+    df: DataFrame, symbols: Sequence[str] | None, symbol_col: str
+) -> DataFrame:
+    """Keep ``symbols`` only; ``["ALL"]``/None = no filter (Q6)."""
+    if symbols and list(symbols) != ["ALL"]:
+        return df.filter(F.col(symbol_col).isin(list(symbols)))
+    return df
+
+
 def resample(
     ticks: DataFrame,
     freq: str,
@@ -142,12 +162,13 @@ def resample(
 
     The time filter is a plain BETWEEN on the timestamp column, which
     Catalyst pushes into the parquet scan (row-group min/max skipping)
-    and, on a date-partitioned warehouse, prunes partitions.
+    and, on a date-partitioned warehouse, prunes partitions.  Give both
+    bounds or neither (:func:`check_time_bounds`).
     """
+    check_time_bounds(from_ts, to_ts)
     df = ticks
-    if from_ts is not None and to_ts is not None:
+    if from_ts is not None:
         df = df.filter(F.col(ts_col).between(F.lit(from_ts).cast("timestamp_ntz"),
                                              F.lit(to_ts).cast("timestamp_ntz")))
-    if symbols and list(symbols) != ["ALL"]:
-        df = df.filter(F.col(symbol_col).isin(list(symbols)))
+    df = filter_symbols(df, symbols, symbol_col)
     return bucketed_ohlc(df, freq, symbol_col, ts_col, price_col, volume_col, tie_cols)

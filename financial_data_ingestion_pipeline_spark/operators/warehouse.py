@@ -18,9 +18,6 @@ Readers load the path directly (``read_warehouse``), so the table
 needs no catalog DDL (D1, dp:193-206); the 5x DDL retry loop
 (dp:190-212) has no Spark analog either — writes are atomic per
 partition and tasks retry automatically.
-
-``jdbc_append`` is the optional fidelity sink matching the reference's
-SQLAlchemy ``to_sql(if_exists='append')`` (S7, dp:249-250).
 """
 
 from __future__ import annotations
@@ -72,34 +69,6 @@ def read_warehouse(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(WAREHOUSE_TABLE_SCHEMA).parquet(path)
 
 
-def write_bucketed_warehouse(
-    warehouse_rows: DataFrame,
-    table: str = f"{TABLE_NAME}_bucketed",
-    buckets: int = 8,
-    ts_col: str = "timestamp",
-    symbol_col: str = "source_symbol",
-    mode: str = "overwrite",
-) -> None:
-    """Symbol-bucketed variant of the warehouse (D2's optional layout).
-
-    ``bucketBy(N, source_symbol)`` pre-shuffles the hot groupBy/join key
-    at write time: every per-symbol aggregation or symbol-keyed join
-    over the table then runs with NO exchange — the physical plan reads
-    bucketed files straight into the aggregate.  Pay one shuffle at
-    ingest, skip one per downstream query; at 100 TB with dozens of
-    daily OHLC/VWAP queries over the same warehouse, this is the
-    dominant saving.  ``sortBy(timestamp)`` keeps each bucket
-    time-ordered for row-group skipping.
-    """
-    (
-        warehouse_rows.write.mode(mode)
-        .bucketBy(buckets, symbol_col)
-        .sortBy(ts_col)
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
 def is_missing_path(e: AnalysisException) -> bool:
     """True iff the AnalysisException is the missing-input-path case.
 
@@ -117,24 +86,6 @@ def is_missing_path(e: AnalysisException) -> bool:
             return "PATH_NOT_FOUND" in cond
     msg = str(e)
     return "PATH_NOT_FOUND" in msg or "Path does not exist" in msg
-
-
-def jdbc_append(
-    df: DataFrame,
-    url: str,
-    table: str = TABLE_NAME,
-    properties: dict[str, str] | None = None,
-) -> None:
-    """Optional fidelity mode: append into an RDBMS over JDBC (S7).
-
-    Matches ``df.to_sql(..., if_exists='append')`` (dp:249-250) but
-    writes from every executor in parallel instead of one driver-side
-    SQLAlchemy connection.
-    """
-    writer = df.write.mode("append")
-    for k, v in (properties or {}).items():
-        writer = writer.option(k, v)
-    writer.jdbc(url, table, mode="append")
 
 
 # ---------------------------------------------------------------------------
@@ -218,46 +169,4 @@ def zorder_stats(
             (F.max("__ys") - F.min("__ys") + 1).alias("y_grid_span"),
         )
         .orderBy("bucket")
-    )
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    x_col: str,
-    y_col: str,
-    x_range: tuple[int, int],
-    y_range: tuple[int, int],
-    bits: int = 8,
-    n_files: int = 16,
-    mode: str = "error",
-) -> None:
-    """Write ``df`` clustered by the Morton key of (x, y): the key's
-    top bits become a ``zb`` partition directory (every FILE then
-    holds exactly one contiguous z-range — a bounded rectangle in both
-    dimensions), one exchange on ``zb`` keeps file counts bounded at
-    1000 executors (hash collisions between buckets merely co-locate
-    two rectangles in one task; files stay single-bucket because the
-    directory split happens at write), and a within-partition sort by
-    the full key makes parquet row-group min/max stats tight.  Ranges
-    are passed explicitly — at scale they come from table-level stats,
-    not a per-write scan.
-    """
-    bucket_bits = max(1, (n_files - 1).bit_length())
-    (minx, maxx), (miny, maxy) = x_range, y_range
-    z = zorder_key(
-        F.expr(f"(({x_col} - {minx}) * {1 << bits}) div ({maxx - minx + 1})"),
-        F.expr(f"(({y_col} - {miny}) * {1 << bits}) div ({maxy - miny + 1})"),
-        bits,
-    )
-    clustered = df.withColumn("__z", z).withColumn(
-        "__zb", F.shiftright(F.col("__z"), 2 * bits - bucket_bits)
-    )
-    (
-        clustered.repartition(n_files, F.col("__zb"))
-        .sortWithinPartitions("__zb", "__z")
-        .drop("__z")
-        .write.mode(mode)
-        .partitionBy("__zb")
-        .parquet(path)
     )

@@ -1,4 +1,4 @@
-from . import ingest, jsonl, tickgen
-from .fixtures import load_fixture_tables, load_table
+from . import ingest, jsonl
+from .fixtures import load_table
 
-__all__ = ["ingest", "jsonl", "load_fixture_tables", "load_table", "tickgen"]
+__all__ = ["ingest", "jsonl", "load_table"]

@@ -11,7 +11,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import FIXTURE_TABLES
 from ..session import ensure_runtime_conf
 
 
@@ -39,7 +38,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         )
     _TABLE_CACHE[key] = df
     return df
-
-
-def load_fixture_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in FIXTURE_TABLES}

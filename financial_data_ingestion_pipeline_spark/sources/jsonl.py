@@ -1,4 +1,4 @@
-"""JSONL corpus source/sink — the interchange format of LLM training
+"""JSONL corpus source — the interchange format of LLM training
 data (one JSON document per line, typically gzip'd, sharded across
 thousands of files).
 
@@ -34,14 +34,13 @@ def read_jsonl(
     spark: SparkSession,
     path: str,
     schema: StructType,
-    quarantine: bool = True,
 ) -> DataFrame:
     """Read a JSONL file/tree with a fixed schema.
 
-    With ``quarantine=True`` the returned frame carries an extra
-    ``_corrupt_record`` string column: NULL for clean rows, the raw
-    line for unparseable ones.  Pass the result to
-    :func:`quarantine_split` to separate the dead letters.
+    The returned frame carries an extra ``_corrupt_record`` string
+    column: NULL for clean rows, the raw line for unparseable ones.
+    Pass the result to :func:`quarantine_split` to separate the dead
+    letters.
 
     Implementation note: this reads the tree as *text* and parses with
     ``from_json`` instead of ``spark.read.json``.  Spark forbids
@@ -52,21 +51,18 @@ def read_jsonl(
     the same single pass over the bytes, and keeps the raw line
     available for the dead-letter sink for free.
     """
-    if quarantine:
-        parse_schema = StructType(
-            [f for f in schema.fields if f.name != CORRUPT_COL]
-            + [StructField(CORRUPT_COL, StringType())]
-        )
-        raw = spark.read.text(path)
-        parsed = raw.select(
-            F.from_json(
-                F.col("value"),
-                parse_schema,
-                {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL},
-            ).alias("_r")
-        )
-        return parsed.select("_r.*")
-    return spark.read.schema(schema).option("mode", "DROPMALFORMED").json(path)
+    parse_schema = StructType(
+        [f for f in schema.fields if f.name != CORRUPT_COL]
+        + [StructField(CORRUPT_COL, StringType())]
+    )
+    parsed = spark.read.text(path).select(
+        F.from_json(
+            F.col("value"),
+            parse_schema,
+            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL},
+        ).alias("_r")
+    )
+    return parsed.select("_r.*")
 
 
 def quarantine_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -78,88 +74,3 @@ def quarantine_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     good = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     bad = df.filter(F.col(CORRUPT_COL).isNotNull()).select(CORRUPT_COL)
     return good, bad
-
-
-def write_jsonl(
-    df: DataFrame,
-    path: str,
-    partition_by: tuple[str, ...] = (),
-    compression: str = "gzip",
-    mode: str = "overwrite",
-) -> None:
-    """Write a JSONL tree, optionally hive-partitioned.
-
-    gzip by default: JSONL compresses 5-10x and downstream re-reads
-    are still parallel across *files* (one task per shard) even though
-    gzip itself isn't splittable — shard count, not block size, sets
-    the read parallelism, which is how training corpora are laid out
-    in practice.
-    """
-    writer = df.write.mode(mode).option("compression", compression)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.json(path)
-
-
-def read_zipped_jsonl(
-    spark: SparkSession,
-    zip_glob: str,
-    schema: StructType,
-) -> DataFrame:
-    """Distributed ingest of zipped JSONL archives — the web-crawl-dump
-    shape (thousands of .zip/.jsonl shards): ``binaryFile`` scan of the
-    archives + per-executor unzip via ``mapInPandas``, then the same
-    ``from_json`` + quarantine parse as :func:`read_jsonl`.
-
-    Each archive is one input row (path, bytes); the Arrow-batched
-    worker opens it and emits raw lines tagged with
-    ``source_file`` (``archive!member``).  Throughput scales with the
-    archive count — no driver-side extraction, and the parse stage is
-    the identical fixed-schema path as flat JSONL, so corrupt lines
-    land in the quarantine column instead of failing tasks.
-    """
-    import io
-    import zipfile
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def unzip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            for _, row in batch.iterrows():
-                srcs, lines = [], []
-                try:
-                    zf = zipfile.ZipFile(io.BytesIO(row["content"]))
-                except zipfile.BadZipFile:
-                    continue  # one corrupt archive must not fail the job
-                with zf:
-                    for member in zf.namelist():
-                        if not member.endswith((".jsonl", ".json")):
-                            continue
-                        for line in zf.read(member).decode(
-                            "utf-8", errors="replace"
-                        ).splitlines():
-                            if line.strip():
-                                srcs.append(f"{row['path']}!{member}")
-                                lines.append(line)
-                yield pd.DataFrame({"source_file": srcs, "value": lines})
-
-    raw = (
-        spark.read.format("binaryFile")
-        .load(zip_glob)
-        .select("path", "content")
-        .mapInPandas(unzip, "source_file STRING, value STRING")
-    )
-    parse_schema = StructType(
-        [f for f in schema.fields if f.name != CORRUPT_COL]
-        + [StructField(CORRUPT_COL, StringType())]
-    )
-    parsed = raw.select(
-        F.col("source_file"),
-        F.from_json(
-            F.col("value"),
-            parse_schema,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL},
-        ).alias("_r"),
-    )
-    return parsed.select("source_file", "_r.*")

@@ -117,13 +117,13 @@ def test_color_444_and_420_roundtrip_close_and_odd_dims():
 
 def test_arithmetic_jpeg_rejected_with_guidance():
     """Progressive (SOF2) decodes natively since round 8; the coding
-    processes that genuinely need an external codec — arithmetic
-    entropy coding, lossless — still raise with the seam pointer."""
+    processes the codec does not implement — arithmetic entropy
+    coding, lossless — raise a ValueError naming the process."""
     for sof in (0xC9, 0xC3):  # arithmetic sequential, lossless
         buf = bytearray(_handmade_dc_only())
         i = buf.find(b"\xff\xc0")
         buf[i + 1] = sof
-        with pytest.raises(ValueError, match="set_image_decoder"):
+        with pytest.raises(ValueError, match="unsupported JPEG coding process"):
             J.decode_jpeg(bytes(buf))
 
 
@@ -155,8 +155,7 @@ def test_byte_stuffing_roundtrip():
 
 def test_extract_image_features_over_jpeg_payloads(spark):
     """The Spark-side feature extractor consumes real JPEG binaries
-    through the default decoder — no set_image_decoder call, no
-    external codec (round-6 verdict: the JPEG seam had never run)."""
+    through the default decoder, with no external codec."""
     import pandas as pd
 
     from financial_data_ingestion_pipeline_spark.functions.multimodal import (
@@ -305,7 +304,7 @@ def test_progressive_truncation_fails_fast():
 
 def test_extract_image_features_over_progressive_payloads(spark):
     """Progressive JPEG binaries flow through the same default-decoder
-    Spark path as baseline — no set_image_decoder call."""
+    Spark path as baseline."""
     import pandas as pd
 
     from financial_data_ingestion_pipeline_spark.functions.multimodal import (

@@ -16,10 +16,7 @@ from financial_data_ingestion_pipeline_spark.plans.pipeline import (
     PipelineConfig,
     run_pipeline,
 )
-from financial_data_ingestion_pipeline_spark.sources.ingest import (
-    extract_zip_files,
-    read_zipped_tick_csvs,
-)
+from financial_data_ingestion_pipeline_spark.sources.ingest import extract_zip_files
 
 TICKERS = {"ALPHA": 100.0, "BETA": 50.0, "GAMMA": 200.0}
 HEADER = [
@@ -145,8 +142,10 @@ def test_daily_runs_keep_earlier_days(spark, tmp_path_factory):
 def test_pipeline_lands_ticks_once(spark, tick_drop, tmp_path_factory):
     """The DAG writes no intermediate cleaned copy, keeps the cleaned
     column names in the invalid-row report, and stays within the job
-    budget of landing the ticks once (13 jobs on this fixture; the
-    two-landing form took 16)."""
+    budget of landing the ticks once.  With the default config (hourly,
+    no time bounds) the parametrized aggregation is the hourly MV read
+    back, not a second aggregate (12 jobs on this fixture; 13 with the
+    second aggregate, 16 in the two-landing form)."""
     extracted = os.path.join(tick_drop["root"], "extracted_once")
     extract_zip_files(tick_drop["zips"], extracted)
     cfg = PipelineConfig(
@@ -158,10 +157,13 @@ def test_pipeline_lands_ticks_once(spark, tick_drop, tmp_path_factory):
     group = "test-pipeline-lands-ticks-once"
     sc.setJobGroup(group, group)
     try:
-        run_pipeline(spark, cfg)
+        res = run_pipeline(spark, cfg)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    agg, hourly = res["outputs"]["aggregated"], res["outputs"]["hourly_ohlc"]
+    assert "Aggregate" not in agg._jdf.queryExecution().optimizedPlan().toString()
+    assert sorted(map(tuple, agg.collect())) == sorted(map(tuple, hourly.collect()))
     assert not os.path.exists(os.path.join(cfg.out_dir, "cleaned_parquet"))
     (csv_path,) = glob.glob(os.path.join(cfg.out_dir, "reports", "invalid_values", "*.csv"))
     with open(csv_path, newline="") as fh:
@@ -170,7 +172,32 @@ def test_pipeline_lands_ticks_once(spark, tick_drop, tmp_path_factory):
         "Ticker", "Timestamp", "LTP", "BuyPrice", "BuyQty", "SellPrice",
         "SellQty", "LTQ", "OpenInterest", "trade_date",
     ]
-    assert n_jobs <= 13, n_jobs
+    assert n_jobs <= 12, n_jobs
+
+
+def test_half_open_time_range_rejected(spark):
+    """The time filter is a BETWEEN, so one bound alone is an error,
+    raised on the driver (no job), not a silently unfiltered history."""
+    import datetime as dt
+
+    from financial_data_ingestion_pipeline_spark.operators import ohlc
+
+    ticks = spark.createDataFrame(
+        [("ALPHA", dt.datetime(2022, 4, 4, 9, 15), 100.0)],
+        "source_symbol string, timestamp timestamp_ntz, ltp double",
+    )
+    sc = spark.sparkContext
+    group = "test-half-open-time-range"
+    sc.setJobGroup(group, group)
+    try:
+        for bound in ({"from_ts": "2022-04-04 09:00:00"}, {"to_ts": "2022-04-05 00:00:00"}):
+            with pytest.raises(ValueError, match="from_ts and to_ts"):
+                ohlc.resample(ticks, "hour", **bound)
+            with pytest.raises(ValueError, match="from_ts and to_ts"):
+                PipelineConfig(tick_root="ticks", bhavcopy_csv=None, out_dir="out", **bound)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup(group)
 
 
 def test_quality_reports(spark, pipeline_result):
@@ -201,31 +228,6 @@ def test_analytics_outputs(spark, pipeline_result):
     agg_syms = {r.symbol for r in agg.select("symbol").distinct().collect()}
     assert agg_syms == {"ALPHA", "GAMMA"}
     assert glob.glob(os.path.join(cfg.out_dir, "aggregated_ticks", "*.csv"))
-
-
-def test_distributed_zip_ingest(spark, tick_drop):
-    df = read_zipped_tick_csvs(spark, os.path.join(tick_drop["zips"], "*.zip"))
-    rows = df.collect()
-    assert len(rows) == 32
-    assert all(str(r.trade_date) == "2022-04-04" for r in rows)
-    assert {r.Ticker.split(".")[0] for r in rows} == set(TICKERS)
-    assert all(r.source_file.endswith(".csv") for r in rows)
-
-
-def test_distributed_zip_ingest_skips_empty_members(spark, tmp_path_factory):
-    """A zero-byte (or garbled) CSV inside one archive must not fail the
-    task — bad members are skipped, good members still land."""
-    root = tmp_path_factory.mktemp("badzip")
-    day_dir = _write_day(str(root / "staging"), "05042022", "2022-04-05", dirty=False)
-    zpath = root / "STOCK_TICK_05042022.zip"
-    with zipfile.ZipFile(zpath, "w") as zf:
-        for f in os.listdir(day_dir):
-            zf.write(os.path.join(day_dir, f), f"STOCK_TICK_05042022/{f}")
-        zf.writestr("STOCK_TICK_05042022/EMPTY.csv", "")
-    df = read_zipped_tick_csvs(spark, str(zpath))
-    rows = df.collect()
-    assert len(rows) == 30  # 3 tickers x 10 clean rows; empty member skipped
-    assert {r.Ticker.split(".")[0] for r in rows} == set(TICKERS)
 
 
 def test_price_change_query(spark, tick_drop, tmp_path_factory):
@@ -284,29 +286,6 @@ class TestJsonlSource:
         assert len(dead) == 1
         assert "not json" in dead[0][0]
 
-    def test_partitioned_write_rereads(self, spark, tmp_path):
-        from pyspark.sql.types import (
-            LongType, StringType, StructField, StructType,
-        )
-
-        from financial_data_ingestion_pipeline_spark.sources import jsonl
-
-        schema = StructType([
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("lang", StringType()),
-        ])
-        df = spark.createDataFrame(
-            [(1, "a", "en"), (2, "b", "en"), (3, "c", "de")], schema
-        )
-        out = str(tmp_path / "out")
-        jsonl.write_jsonl(df, out, partition_by=("lang",))
-        back = spark.read.schema(schema).json(out)
-        assert back.count() == 3
-        # hive partitioning materialized: lang=… directories exist and
-        # a partition predicate prunes to one directory's rows
-        assert back.filter("lang = 'de'").count() == 1
-
 
 class TestCorpusPipeline:
     # slow tier: full corpus build twice for determinism (~230 s)
@@ -353,62 +332,6 @@ class TestCorpusPipeline:
         assert files
 
 
-def test_zipped_jsonl_distributed_ingest(spark, tmp_path):
-    import io
-    import zipfile
-
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from financial_data_ingestion_pipeline_spark.sources import jsonl
-
-    zdir = tmp_path / "dumps"
-    zdir.mkdir()
-    for z in range(2):
-        buf = io.BytesIO()
-        with zipfile.ZipFile(buf, "w") as zf:
-            zf.writestr(
-                f"shard{z}.jsonl",
-                f'{{"doc_id": {z * 10 + 1}, "text": "aa"}}\n'
-                "garbage line\n"
-                f'{{"doc_id": {z * 10 + 2}, "text": "bb"}}\n',
-            )
-            zf.writestr("ignore.txt", "not jsonl")
-        (zdir / f"dump{z}.zip").write_bytes(buf.getvalue())
-
-    schema = StructType(
-        [StructField("doc_id", LongType()), StructField("text", StringType())]
-    )
-    df = jsonl.read_zipped_jsonl(spark, str(zdir / "*.zip"), schema)
-    good, bad = jsonl.quarantine_split(df.drop("source_file"))
-    assert good.count() == 4
-    assert bad.count() == 2
-    assert sorted(r.doc_id for r in good.collect()) == [1, 2, 11, 12]
-    # provenance column present and member-qualified
-    src = df.select("source_file").first()[0]
-    assert ".zip!shard" in src
-
-
-def test_jsonl_dropmalformed_and_gzip(spark, tmp_path):
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from financial_data_ingestion_pipeline_spark.sources import jsonl
-
-    src = tmp_path / "c.jsonl"
-    src.write_text('{"doc_id": 1, "text": "a"}\nnot json\n{"doc_id": 2, "text": "b"}\n')
-    schema = StructType(
-        [StructField("doc_id", LongType()), StructField("text", StringType())]
-    )
-    df = jsonl.read_jsonl(spark, str(src), schema, quarantine=False)
-    assert sorted(r.doc_id for r in df.collect()) == [1, 2]
-
-    out = str(tmp_path / "gz")
-    jsonl.write_jsonl(df, out)
-    import glob
-    assert glob.glob(out + "/*.json.gz"), "gzip shards expected"
-    back = spark.read.schema(schema).json(out)
-    assert back.count() == 2
-
-
 class TestZOrderLayout:
     def test_buckets_are_rectangles_partitioning_rows(self, spark, sf_dir):
         """Top-4 z bits pin the 2 high bits of EACH scaled dimension, so
@@ -426,110 +349,6 @@ class TestZOrderLayout:
         assert 0 < len(rows) <= 16
         assert all(r.x_grid_span <= 64 and r.y_grid_span <= 64 for r in rows)
         assert sum(r.n_rows for r in rows) == li.count()
-
-    def test_zorder_write_clusters_files_in_both_dims(self, spark, tmp_path):
-        """The clustered write must preserve rows exactly AND every
-        output file must span at most ~a quarter of each dimension's
-        range (16 z-range tasks -> 2 pinned high bits per dim), which
-        is what makes parquet footer min/max prune on either column."""
-        from pyspark.sql import functions as F
-
-        from financial_data_ingestion_pipeline_spark.operators import warehouse
-
-        df = spark.range(0, 4096).select(
-            (F.col("id") % 64).alias("x"),
-            (F.col("id") / 64).cast("long").alias("y"),
-        )
-        out = str(tmp_path / "zorder")
-        warehouse.zorder_write(
-            df, out, "x", "y", x_range=(0, 63), y_range=(0, 63), n_files=16
-        )
-        back = spark.read.parquet(out)
-        assert back.count() == 4096
-        assert back.select(F.sum("x"), F.sum("y")).first() == df.select(
-            F.sum("x"), F.sum("y")
-        ).first()
-        spans = (
-            back.groupBy(F.input_file_name().alias("f"))
-            .agg(
-                (F.max("x") - F.min("x")).alias("xs"),
-                (F.max("y") - F.min("y")).alias("ys"),
-            )
-            .collect()
-        )
-        assert len(spans) > 1
-        assert all(r.xs <= 16 and r.ys <= 16 for r in spans)
-
-
-@pytest.mark.slow  # slow tier: python-datasource stream/batch drives (~15 s)
-class TestTickGenDataSource:
-    def test_batch_read_parallel_and_deterministic(self, spark):
-        """One input partition per symbol; two reads with the same seed
-        are identical, a different seed diverges."""
-        from financial_data_ingestion_pipeline_spark.sources.tickgen import (
-            TickGenDataSource,
-        )
-
-        spark.dataSource.register(TickGenDataSource)
-        rd = (
-            spark.read.format("tickgen")
-            .option("symbols", "ALPHA,BETA,GAMMA")
-            .option("ticks_per_symbol", 50)
-        )
-        df = rd.load()
-        assert df.count() == 150
-        assert df.rdd.getNumPartitions() == 3
-        a = sorted(map(tuple, df.collect()))
-        b = sorted(map(tuple, rd.load().collect()))
-        assert a == b
-        c = sorted(map(tuple, rd.option("seed", "other").load().collect()))
-        assert a != c
-        # generated rows feed the normal engine surface
-        from pyspark.sql import functions as F
-        per_sym = {
-            r.symbol: r.n
-            for r in df.groupBy("symbol").agg(F.count("*").alias("n")).collect()
-        }
-        assert per_sym == {"ALPHA": 50, "BETA": 50, "GAMMA": 50}
-
-    def test_stream_read_advances_offsets(self, spark, tmp_path):
-        """The streaming reader emits ticks_per_batch new ticks per
-        symbol per micro-batch with exactly-once offsets."""
-        import os
-
-        from financial_data_ingestion_pipeline_spark.sources.tickgen import (
-            TickGenDataSource,
-        )
-
-        spark.dataSource.register(TickGenDataSource)
-        src = (
-            spark.readStream.format("tickgen")
-            .option("symbols", "ALPHA,BETA")
-            .option("ticks_per_batch", 5)
-            .option("max_ticks", 12)
-            .load()
-        )
-        out = str(tmp_path / "out")
-
-        def run_once():
-            q = (
-                src.writeStream.format("parquet")
-                .option("path", os.path.join(out, "data"))
-                .option("checkpointLocation", os.path.join(out, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            return spark.read.parquet(os.path.join(out, "data")).count()
-
-        # each restart resumes from the committed offset: 5-tick
-        # batches per symbol until the 12-tick cap, then no-ops
-        assert run_once() == 10
-        assert run_once() == 20
-        assert run_once() == 24
-        assert run_once() == 24
-        got = spark.read.parquet(os.path.join(out, "data"))
-        assert got.dropDuplicates(["symbol", "ts"]).count() == 24
 
 
 def test_load_table_memoizes_per_context(spark):

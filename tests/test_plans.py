@@ -142,24 +142,6 @@ def test_dedup_self_joins_reuse_exchanges(spark, sf_dir):
         assert shared_once, f"{name}: signature subplan not shared"
 
 
-def test_bucketed_table_aggregates_without_shuffle(spark, wh_path):
-    """bucketBy(symbol) must eliminate the exchange from per-symbol
-    aggregation (the pay-once-at-write layout for the hot key)."""
-    wh = warehouse.read_warehouse(spark, wh_path)
-    warehouse.write_bucketed_warehouse(wh, table="wh_bucketed_test", buckets=4)
-    try:
-        agg = (
-            spark.table("wh_bucketed_test")
-            .groupBy("source_symbol")
-            .agg(F.max("ltp").alias("high"))
-        )
-        plan = _formatted_plan(agg)
-        assert "Exchange" not in plan
-        assert agg.count() == 1  # single symbol in fixture
-    finally:
-        spark.sql("DROP TABLE IF EXISTS wh_bucketed_test")
-
-
 def test_partitioned_topk_uses_window_group_limit(spark, sf_dir):
     """The rank<=k filter must compile to WindowGroupLimit (per-group
     top-k pushed below the shuffle) — the scalable form of per-customer

@@ -210,71 +210,6 @@ def test_png_truncation_raises_typed_error():
             decode_png(buf[:cut])
 
 
-def test_external_decoder_seam_through_spark(spark):
-    """The documented external-codec seam (set_image_decoder): a
-    REPLACEMENT decoder — here a deterministic toy codec for a format
-    the engine does not know — is picked up by the distributed
-    mapInPandas path and its pixels drive the features.  (Until
-    round 9 this only ran under Pillow, which this environment cannot
-    install, so the seam was a permanent skip; the toy codec tests the
-    same wiring unconditionally, and the INDEPENDENT-decoder validation
-    Pillow would have provided now comes from the committed
-    javax.imageio conformance vectors below.)  Where Pillow happens to
-    exist, a bonus branch also drives a real Pillow decode through the
-    same seam."""
-    # toy format: b"RAW0" | u8 width | u8 height | width*height bytes
-    w0, h0 = 9, 12
-    body = bytes((i * 13) % 256 for i in range(w0 * h0))
-    payload = b"RAW0" + bytes([w0, h0]) + body
-
-    def raw_decode(buf: bytes):
-        buf = bytes(buf)
-        if buf[:4] != b"RAW0":
-            raise ValueError("not RAW0")
-        return buf[4], buf[5], buf[6:]
-
-    prev = multimodal._image_decoder
-    multimodal.set_image_decoder(raw_decode)
-    try:
-        df = spark.createDataFrame(
-            [(1, bytearray(payload))], "media_id long, content binary"
-        )
-        r = multimodal.extract_image_features(df).collect()[0]
-        assert (r.width, r.height) == (w0, h0)
-        assert r.n_bytes == len(payload)
-        assert r.mean_byte == pytest.approx(
-            sum(body) / len(body)
-        )
-    finally:
-        multimodal.set_image_decoder(prev)
-
-    try:
-        import io
-
-        from PIL import Image as PIL_Image
-    except ImportError:
-        return  # seam covered above; Pillow is an optional bonus
-
-    px = _gradient(12, 9, 3, seed=11)
-    bio = io.BytesIO()
-    PIL_Image.fromarray(px, "RGB").save(bio, format="JPEG", quality=95)
-    payload = bio.getvalue()
-
-    def pillow_decode(buf: bytes):
-        img = PIL_Image.open(io.BytesIO(bytes(buf))).convert("L")
-        return img.width, img.height, img.tobytes()
-
-    multimodal.set_image_decoder(pillow_decode)
-    try:
-        df = spark.createDataFrame(
-            [(1, bytearray(payload))], "media_id long, content binary"
-        )
-        r = multimodal.extract_image_features(df).collect()[0]
-        assert (r.width, r.height) == (9, 12)
-    finally:
-        multimodal.set_image_decoder(prev)
-
-
 def test_png_conformance_vs_independent_codec():
     """Committed PNG conformance vectors made with javax.imageio (the
     JVM's independent PNG plugin; scripts/make_codec_conformance.py).
